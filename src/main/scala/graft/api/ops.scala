@@ -1387,9 +1387,10 @@ object ops {
     * Vassilvitskii — "Connected Components in MapReduce and Beyond",
     * SoCC'14) over the canonical (min, max) edge set. The round-10
     * engine was min-label propagation with a pointer jump
-    * (l(u) <- l(l(u))); the round-11 A/B (graft.CcAb) measured why
-    * that loses: a pointer jump only doubles reach along label
-    * CHAINS, which branchy graphs do not form, so the q161 graph at
+    * (l(u) <- l(l(u))); the round-11 A/B (SURVEY.md §7.16; its dev
+    * harness is in git history) measured why that loses:
+    * a pointer jump only doubles reach along label CHAINS, which
+    * branchy graphs do not form, so the q161 graph at
     * sf0.1 needs 9 label-prop rounds where star contraction needs 5
     * — and at this scale wall = rounds x per-job floor (bench_detail
     * r10: cc task-time is a third of loop wall across 32 cores), so

@@ -1,26 +1,16 @@
 package graft.sources
 
-import java.util
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 batch source generating deterministic sensor
-  * readings with the reference heater physics (reference:
+/** The deterministic sensor stream the DataSource V2 source
+  * ([[PushdownSensorProvider]]) generates, with the reference heater
+  * physics (reference:
   * heater/src/main/scala/com/lightbend/streams/heater/Heater.scala:
   * 49-66 — linear integrator, always-heating here since no controller
   * closes the loop inside the source). One input partition per
   * sensor shard: generation is embarrassingly parallel and
   * deterministic, so the source is replayable — the property Kafka
   * offsets give the reference's pipeline.
-  *
-  * Usage:
-  *   spark.read.format("graft.sources.SensorSourceProvider")
-  *     .option("sensors", "8").option("readings", "100").load()
   */
 object SensorSource {
   val schema: StructType = StructType(Seq(
@@ -30,51 +20,4 @@ object SensorSource {
 
   val StartTemp = 42.0 // Heater.scala:49
   val HeatStep = 0.8
-}
-
-class SensorSourceProvider extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SensorSource.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new SensorTable(
-      properties.getOrDefault("sensors", "4").toInt,
-      properties.getOrDefault("readings", "100").toLong)
-}
-
-class SensorTable(sensors: Int, readings: Long) extends Table with SupportsRead {
-  override def name(): String = s"sensors($sensors x $readings)"
-  override def schema(): StructType = SensorSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = SensorSource.schema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        (0 until sensors).map(sid => SensorPartition(sid, readings): InputPartition).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        (p: InputPartition) => new SensorReader(p.asInstanceOf[SensorPartition])
-    }
-}
-
-case class SensorPartition(sensorID: Int, readings: Long) extends InputPartition
-
-class SensorReader(p: SensorPartition) extends PartitionReader[InternalRow] {
-  private var i = 0L
-  private var temp = SensorSource.StartTemp + p.sensorID // per-sensor offset
-
-  override def next(): Boolean = {
-    i += 1
-    temp += SensorSource.HeatStep
-    i <= p.readings
-  }
-
-  override def get(): InternalRow =
-    InternalRow(p.sensorID, i, temp)
-
-  override def close(): Unit = ()
 }

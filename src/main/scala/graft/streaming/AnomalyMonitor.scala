@@ -16,7 +16,7 @@ final case class ScoredObservation(key: Long, seq: Long, cents: Long,
   * the same pure-int64 z² test — and the trailing window lives in
   * transformWithState LIST STATE, bounded at `lookback` entries per
   * key (the third state shape the repo exercises, after ValueState in
-  * ThermostatStream/TwsTimerSpec and timer state in TimeoutSession).
+  * DedupStream/TwsTimerSpec and timer state in TimeoutSession).
   * AnomalyMonitorSpec pins stream/batch equivalence on the same input.
   *
   * ORDERING CONTRACT: scoring is defined over the per-key seq order.

@@ -32,43 +32,7 @@ object StreamDemo {
     val out = spark.table("demo").as[HeaterCommand].collect().sortBy(_.seq)
     out.foreach(c => println(s"[demo] sensor=${c.sensorID} seq=${c.seq} " +
       s"action=${if (c.action == 0) "On" else "Off"}"))
-    println(s"[demo] ${out.length} transitions emitted (flatMapGroupsWithState)")
-
-    // same loop through the transformWithState variant (RocksDB store)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms2 = MemoryStream[graft.model.ControlEvent]
-    val q2 = ThermostatStream.pipelineTws(ms2.toDS())
-      .writeStream.format("memory").queryName("demo_tws").outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("chk").toString)
-      .start()
-    events.grouped(10).foreach { b => ms2.addData(b); q2.processAllAvailable() }
-    q2.stop()
-    val out2 = spark.table("demo_tws").as[HeaterCommand].collect().sortBy(_.seq)
-    println(s"[demo] ${out2.length} transitions emitted (transformWithState); " +
-      s"variants agree = ${out.toSeq == out2.toSeq}")
-
-    // throughput: one large micro-batch through the stateful pipeline
-    // (reference design point is 0.1 events/sec/sensor — heater
-    // publishes every 10s, Heater.scala:26,65)
-    val nSensors = 200
-    val perSensor = 500
-    val bulk = (0 until nSensors).flatMap { sid =>
-      HeaterSim.eventsOf(HeaterSim.closedLoop(perSensor))
-        .map(e => e.copy(sensorID = sid.toLong))
-    }
-    val ms3 = MemoryStream[graft.model.ControlEvent]
-    val q3 = ThermostatStream.pipeline(ms3.toDS())
-      .writeStream.format("memory").queryName("demo_tp").outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("chk").toString)
-      .start()
-    val t0 = System.nanoTime()
-    ms3.addData(bulk)
-    q3.processAllAvailable()
-    val dt = (System.nanoTime() - t0) / 1e9
-    q3.stop()
-    println(f"[demo] throughput: ${bulk.size} events, ${nSensors} keys in $dt%.2f s " +
-      f"= ${bulk.size / dt}%.0f events/s")
+    println(s"[demo] ${out.length} transitions emitted")
 
     // multi-query lifecycle (reference A13,
     // SparkStructuredController.scala:89): two concurrent queries on
@@ -99,6 +63,6 @@ object StreamDemo {
     qB.stop()
     spark.stop()
     if (!bStillActive) sys.exit(1)
-    if (out.isEmpty || out.toSeq != out2.toSeq) sys.exit(1)
+    if (out.isEmpty) sys.exit(1)
   }
 }

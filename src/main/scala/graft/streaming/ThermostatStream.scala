@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{ControlEvent, ControlState, Hysteresis, SensorData, TemperatureControl}
 
@@ -32,9 +32,39 @@ final case class HeaterCommand(sensorID: Long, seq: Long, action: Int)
   *    Flink variant keeps it operator-local and loses it on rescale,
   *    flinkcontroller/.../TemperatureControlProcessor.scala:18).
   *
-  * Scale: state is O(1) per key (~40 bytes); throughput scales with
-  * shuffle partitions; the state store partitions by the same key
-  * hash, so no extra exchange beyond the groupByKey shuffle.
+  * Scale: state is O(1) per key; throughput scales with shuffle
+  * partitions; the state store partitions by the same key hash, so no
+  * extra exchange beyond the groupByKey shuffle. The state store is
+  * Spark's choice, not the pipeline's: setting
+  * `spark.sql.streaming.stateStore.providerClass` to
+  * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
+  * trades CPU per batch for a smaller state footprint, with the same
+  * output (ThermostatStreamSpec runs both stores).
+  *
+  * Kafka wiring (shape mirrors the reference,
+  * SparkStructuredController.scala:42-86; KafkaIntegrationSpec runs
+  * exactly this against a live broker when the spark-sql-kafka
+  * connector is on the classpath):
+  *
+  * {{{
+  * def topic(name: String, startingOffsets: String) =
+  *   spark.readStream.format("kafka")
+  *     .option("kafka.bootstrap.servers", servers)
+  *     .option("subscribe", name)
+  *     .option("startingOffsets", startingOffsets)
+  *     .option("failOnDataLoss", "false")
+  *     .load()
+  *     .select(col("offset").as("_1"), col("value").as("_2")) // seq := offset
+  *     .as[(Long, Array[Byte])]
+  * // data skips stale readings, controls replay (they are state)
+  * val events = fromWireProto(topic("sensor", "latest"), topic("tempset", "earliest"))
+  * toWireProto(pipeline(events))       // proto3 HeaterControl bytes
+  *   .toDF("value").writeStream.format("kafka")
+  *   .option("kafka.bootstrap.servers", servers)
+  *   .option("topic", "heatercontrol")
+  *   .outputMode("update").trigger(Trigger.ProcessingTime("1 second"))
+  *   .start()
+  * }}}
   */
 object ThermostatStream {
 
@@ -80,48 +110,6 @@ object ThermostatStream {
         OutputMode.Update, GroupStateTimeout.NoTimeout)(stateFunc)
   }
 
-  /** The same state machine on Spark 4's transformWithState (the
-    * successor API: named state variables, timers, TTL; requires the
-    * RocksDB state store provider). Kept alongside the
-    * flatMapGroupsWithState form — identical semantics, see
-    * ThermostatStreamSpec's equivalence test.
-    */
-  class ThermostatProcessor
-      extends StatefulProcessor[Long, ControlEvent, HeaterCommand] {
-    @transient private var state: ValueState[ControlState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[ControlState](
-        "ctl", Encoders.product[ControlState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[ControlEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[HeaterCommand] = {
-      var st = if (state.exists()) state.get() else ControlState.empty
-      val out = rows.toSeq.sortBy(seqOrder).flatMap { ev =>
-        val (st2, emitted) = Hysteresis.step(st, ev)
-        st = st2
-        emitted.map(a => HeaterCommand(key, ev.seq, a))
-      }
-      state.update(st)
-      out.iterator
-    }
-  }
-
-  /** transformWithState flavor of [[pipeline]] (streaming only; needs
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider).
-    */
-  def pipelineTws(events: Dataset[ControlEvent]): Dataset[HeaterCommand] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.sensorID)
-      .transformWithState(new ThermostatProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
-
   /** Merge the two typed input streams into the tagged union the
     * state machine consumes (the Spark-4 shape of the reference's
     * null-tagged UnifiedDataModel,
@@ -144,38 +132,13 @@ object ThermostatStream {
 
   /** The inbound wire boundary Kafka would carry (reference A3:
     * SparkStructuredController.scala:38-39): (offset, value-bytes)
-    * records per topic → decode (malformed payloads dropped, mirroring
-    * the reference's bad-data handler) → tagged union. The offset
-    * doubles as the per-key ordering seq, as in the Kafka wiring
-    * below. Works on streaming and batch Datasets alike.
-    */
-  def fromWire(
-      sensorBytes: Dataset[(Long, Array[Byte])],
-      controlBytes: Dataset[(Long, Array[Byte])]): Dataset[ControlEvent] = {
-    val spark = sensorBytes.sparkSession
-    import spark.implicits._
-    val data = sensorBytes.flatMap { case (seq, b) =>
-      Codec.decodeSensor(b).map(sd => (sd, seq))
-    }
-    val ctl = controlBytes.flatMap { case (seq, b) =>
-      Codec.decodeControl(b).map(tc => (tc, seq))
-    }
-    unify(data, ctl)
-  }
-
-  /** The outbound wire boundary (reference A11:
-    * SparkStructuredController.scala:78): commands → value bytes.
-    */
-  def toWire(cmds: Dataset[HeaterCommand]): Dataset[Array[Byte]] = {
-    val spark = cmds.sparkSession
-    import spark.implicits._
-    cmds.map(Codec.encodeCommand)
-  }
-
-  /** [[fromWire]] with the REAL proto3 wire format (ProtoCodec) —
-    * the bytes ScalaPB writes in the reference's Heater
-    * (heater/.../Heater.scala:58-61,76-79). Same drop-on-malformed
-    * contract.
+    * records per topic, each value a proto3 message in the bytes
+    * ScalaPB writes in the reference's Heater
+    * (heater/.../Heater.scala:58-61,76-79) → decode with [[ProtoCodec]]
+    * (malformed payloads dropped, mirroring the reference's bad-data
+    * handler) → tagged union. The offset doubles as the per-key
+    * ordering seq, as in the Kafka wiring above. Works on streaming and
+    * batch Datasets alike.
     */
   def fromWireProto(
       sensorBytes: Dataset[(Long, Array[Byte])],
@@ -191,10 +154,12 @@ object ThermostatStream {
     unify(data, ctl)
   }
 
-  /** [[toWire]] in the reference's actual output message: proto3
-    * HeaterControl(sensorID, command) (messages.proto:12-15) — the
-    * wire message carries NO seq, exactly like the reference's
-    * InternalHeaterControl → HeaterControl serialization
+  /** The outbound wire boundary (reference A11:
+    * SparkStructuredController.scala:78): commands → the reference's
+    * output message, proto3 HeaterControl(sensorID, command)
+    * (messages.proto:12-15). The wire message carries NO seq, exactly
+    * like the reference's InternalHeaterControl → HeaterControl
+    * serialization
     * (sparkcontroller/.../DataModelTransform.scala:34-36).
     */
   def toWireProto(cmds: Dataset[HeaterCommand]): Dataset[Array[Byte]] = {
@@ -213,69 +178,4 @@ object ThermostatStream {
         graft.model.HeaterControl(c.sensorID.toInt, c.action))
     }
   }
-
-  /** Kafka wiring (NOT exercised offline — no Kafka connector jar in
-    * /opt/spark/jars and zero egress; shape mirrors the reference,
-    * SparkStructuredController.scala:42-86):
-    *
-    * {{{
-    * val raw = spark.readStream.format("kafka")
-    *   .option("kafka.bootstrap.servers", servers)
-    *   .option("subscribe", "sensor")
-    *   .option("startingOffsets", "latest")   // control topic: "earliest"
-    *   .option("failOnDataLoss", "false")     //   (replay settings, skip
-    *   .load()                                //    stale data — the Flink
-    * // value: binary -> Codec.decodeSensor   //    variant's asymmetry)
-    * // seq := offset (per-partition monotone)
-    * // ... unify -> pipeline -> Codec.encodeCommand ->
-    * // writeStream.format("kafka").option("topic", "heatercontrol")
-    * //   .outputMode("update").trigger(Trigger.ProcessingTime("1 second"))
-    * }}}
-    */
-  def kafkaWiringDoc: String = "see scaladoc"
-}
-
-/** Fixed-layout binary codecs — the offline stand-in for the
-  * reference's protobuf wire format (no ScalaPB in this environment;
-  * with the spark-protobuf connector present, from_protobuf/
-  * to_protobuf replace these). Decode failures return None and are
-  * dropped upstream, mirroring the reference's bad-data handling
-  * (flinkcontroller/.../BadDataHandler.scala:13-19).
-  */
-object Codec {
-  import java.nio.ByteBuffer
-
-  def encodeSensor(s: SensorData): Array[Byte] =
-    ByteBuffer.allocate(12).putInt(s.sensorID).putDouble(s.temperature).array()
-
-  def decodeSensor(b: Array[Byte]): Option[SensorData] =
-    if (b == null || b.length != 12) None
-    else {
-      val bb = ByteBuffer.wrap(b)
-      Some(SensorData(bb.getInt, bb.getDouble))
-    }
-
-  def encodeControl(c: TemperatureControl): Array[Byte] =
-    ByteBuffer.allocate(28).putInt(c.sensorID).putDouble(c.desired)
-      .putDouble(c.upDelta).putDouble(c.downDelta).array()
-
-  def decodeControl(b: Array[Byte]): Option[TemperatureControl] =
-    if (b == null || b.length != 28) None
-    else {
-      val bb = ByteBuffer.wrap(b)
-      Some(TemperatureControl(bb.getInt, bb.getDouble, bb.getDouble, bb.getDouble))
-    }
-
-  // seq is a full Long on the wire — it carries the source offset,
-  // and Kafka offsets exceed Int range at scale
-  def encodeCommand(h: HeaterCommand): Array[Byte] =
-    ByteBuffer.allocate(20).putLong(h.sensorID).putLong(h.seq)
-      .putInt(h.action).array()
-
-  def decodeCommand(b: Array[Byte]): Option[HeaterCommand] =
-    if (b == null || b.length != 20) None
-    else {
-      val bb = ByteBuffer.wrap(b)
-      Some(HeaterCommand(bb.getLong, bb.getLong, bb.getInt))
-    }
 }

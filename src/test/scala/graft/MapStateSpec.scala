@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, 
 /** The third transformWithState state shape: MAP state — a per-key
   * live categorical histogram (category -> count) updated in place,
   * emitting the changed cells per micro-batch. With ValueState
-  * (ThermostatStream), ListState (AnomalyMonitor) and timers
+  * (DedupStream), ListState (AnomalyMonitor) and timers
   * (TwsTimerSpec) this completes the stateful-API surface; the final
   * counts are pinned against the batch groupBy of the same events.
   */

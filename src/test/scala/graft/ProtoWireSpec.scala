@@ -6,7 +6,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.model.{ControlEvent, ControlState, HeaterControl, Hysteresis, SensorData, TemperatureControl}
-import graft.streaming.{HeaterSim, ProtoCodec, ThermostatStream}
+import graft.streaming.{HeaterCommand, HeaterSim, ProtoCodec, ThermostatStream}
 
 /** The REAL proto3 wire boundary (reference:
   * protobufs/src/main/protobuf/messages.proto:1-29): byte-level golden
@@ -96,6 +96,26 @@ class ProtoWireSpec extends SparkSpec {
     // length-delimited length past end of buffer
     assert(ProtoCodec.decodeSensor(Array[Byte](0x5a, 0x7f, 1)).isEmpty)
     assert(ProtoCodec.decodeSensor(null).isEmpty)
+  }
+
+  test("toWireProto fails the query for a sensorID outside int32") {
+    val s = spark
+    import s.implicits._
+    // messages.proto:13 types sensorID int32; the boundary keys encode
+    val edges = Seq(HeaterCommand(Int.MaxValue.toLong, 1L, 1),
+      HeaterCommand(Int.MinValue.toLong, 2L, 1))
+    val wire = ThermostatStream.toWireProto(edges.toDS()).collect()
+      .map(b => ProtoCodec.decodeHeater(b).get).toSeq
+    assert(wire == Seq(HeaterControl(Int.MaxValue, 1), HeaterControl(Int.MinValue, 1)))
+    // one past either edge must fail, not wrap to another sensor's id
+    Seq(Int.MaxValue.toLong + 1, Int.MinValue.toLong - 1).foreach { id =>
+      val e = intercept[Exception] {
+        ThermostatStream.toWireProto(Seq(HeaterCommand(id, 3L, 1)).toDS()).collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains(s"sensorID $id does not fit")), e)
+    }
   }
 
   test("proto bytes -> decode -> pipeline -> encode -> proto bytes, golden per micro-batch") {

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.model.ControlEvent
 import graft.streaming.{HeaterCommand, ThermostatStream}
 
-/** The DataSource V2 sensor source: schema, partitioning,
-  * deterministic replay, and feeding the thermostat pipeline.
+/** The DataSource V2 sensor source with nothing pushed: schema,
+  * partitioning, deterministic replay, and feeding the thermostat
+  * pipeline.
   */
 class SensorSourceSpec extends SparkSpec {
 
   private def source(sensors: Int, readings: Int) =
-    spark.read.format("graft.sources.SensorSourceProvider")
+    spark.read.format("graft.sources.PushdownSensorProvider")
       .option("sensors", sensors.toString)
       .option("readings", readings.toString)
       .load()

@@ -2,11 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 
 import graft.model.{ControlEvent, Hysteresis, SensorData, TemperatureControl}
-import graft.streaming.{Codec, HeaterCommand, HeaterSim, ThermostatStream}
+import graft.streaming.{HeaterCommand, HeaterSim, ThermostatStream}
 
 /** End-to-end streaming semantics (SURVEY.md §5.2-3): MemoryStream →
   * flatMapGroupsWithState pipeline → memory sink, checked against the
@@ -15,21 +17,37 @@ import graft.streaming.{Codec, HeaterCommand, HeaterSim, ThermostatStream}
   */
 class ThermostatStreamSpec extends SparkSpec {
 
-  private def runStream(batches: Seq[Seq[ControlEvent]]): Seq[HeaterCommand] = {
+  private val StoreKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDb = Some(
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Runs the pipeline over MemoryStream micro-batches; `provider`
+    * swaps Spark's state store for this query only.
+    */
+  private def runStream(
+      batches: Seq[Seq[ControlEvent]],
+      provider: Option[String] = None): Seq[HeaterCommand] = {
     val s = spark
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = MemoryStream[ControlEvent]
-    val sink = s"thermo_${System.nanoTime()}"
-    val q = ThermostatStream.pipeline(ms.toDS())
-      .writeStream.format("memory").queryName(sink).outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("chk").toString)
-      .start()
+    provider.foreach(s.conf.set(StoreKey, _))
     try {
-      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-    } finally q.stop()
-    s.table(sink).as[HeaterCommand].collect().toSeq
-      .sortBy(c => (c.sensorID, c.seq))
+      val ms = MemoryStream[ControlEvent]
+      val sink = s"thermo_${System.nanoTime()}"
+      val q = ThermostatStream.pipeline(ms.toDS())
+        .writeStream.format("memory").queryName(sink).outputMode("update")
+        .option("checkpointLocation", Files.createTempDirectory("chk").toString)
+        .start()
+      try {
+        batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+        // the swap took effect: only the RocksDB store reports rocksdb* metrics
+        val metrics = q.recentProgress.flatMap(_.stateOperators)
+          .flatMap(_.customMetrics.keySet.asScala).toSet
+        assert(metrics.exists(_.startsWith("rocksdb")) == provider.isDefined, metrics)
+      } finally q.stop()
+      s.table(sink).as[HeaterCommand].collect().toSeq
+        .sortBy(c => (c.sensorID, c.seq))
+    } finally if (provider.isDefined) s.conf.unset(StoreKey)
   }
 
   private def goldenFold(events: Seq[ControlEvent]): Seq[HeaterCommand] =
@@ -76,44 +94,6 @@ class ThermostatStreamSpec extends SparkSpec {
     }
   }
 
-  test("transformWithState variant matches flatMapGroupsWithState") {
-    val s = spark
-    import s.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val evs = HeaterSim.eventsOf(HeaterSim.closedLoop(30))
-      val ms = MemoryStream[ControlEvent]
-      val sink = s"tws_${System.nanoTime()}"
-      val q = ThermostatStream.pipelineTws(ms.toDS())
-        .writeStream.format("memory").queryName(sink).outputMode("update")
-        .option("checkpointLocation", Files.createTempDirectory("chk").toString)
-        .start()
-      try {
-        evs.grouped(7).foreach { b => ms.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-      val got = s.table(sink).as[HeaterCommand].collect().toSeq
-        .sortBy(c => (c.sensorID, c.seq))
-      assert(got == goldenFold(evs))
-    } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("binary codecs round-trip and reject malformed payloads") {
-    val sd = SensorData(42, 36.6)
-    val tc = TemperatureControl(42, 45.0, 1.0, 1.5)
-    assert(Codec.decodeSensor(Codec.encodeSensor(sd)).contains(sd))
-    assert(Codec.decodeControl(Codec.encodeControl(tc)).contains(tc))
-    assert(Codec.decodeSensor(Array[Byte](1, 2, 3)).isEmpty)
-    assert(Codec.decodeControl(null).isEmpty)
-    assert(Codec.encodeCommand(HeaterCommand(1L, 7L, 1)).length == 20)
-    // full-Long seq round-trip (Kafka offsets exceed Int range)
-    val big = HeaterCommand(42L, Long.MaxValue - 5, 2)
-    assert(Codec.decodeCommand(Codec.encodeCommand(big)).contains(big))
-    assert(Codec.decodeCommand(Array[Byte](1, 2, 3)).isEmpty)
-    assert(Codec.decodeCommand(null).isEmpty)
-  }
-
   test("unify merges typed data and control streams by seq") {
     val s = spark
     import s.implicits._
@@ -122,27 +102,6 @@ class ThermostatStreamSpec extends SparkSpec {
     val unified = ThermostatStream.unify(data, ctl)
     val out = ThermostatStream.pipeline(unified).collect().sortBy(_.seq)
     assert(out.toSeq == Seq(HeaterCommand(1L, 2L, 1), HeaterCommand(1L, 4L, 0)))
-  }
-
-  private def runStreamTws(batches: Seq[Seq[ControlEvent]]): Seq[HeaterCommand] = {
-    val s = spark
-    import s.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms = MemoryStream[ControlEvent]
-      val sink = s"twsr_${System.nanoTime()}"
-      val q = ThermostatStream.pipelineTws(ms.toDS())
-        .writeStream.format("memory").queryName(sink).outputMode("update")
-        .option("checkpointLocation", Files.createTempDirectory("chk").toString)
-        .start()
-      try {
-        batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(sink).as[HeaterCommand].collect().toSeq
-        .sortBy(c => (c.sensorID, c.seq))
-    } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("a control and data event sharing a seq apply control-first, deterministically") {
@@ -174,8 +133,9 @@ class ThermostatStreamSpec extends SparkSpec {
     assert(golden.exists(_.seq > controls(1).seq),
       "no transitions after the first control change")
     val batches = evs.grouped(7).toSeq // controls land in several batches
+    // the same pipeline on both state stores: the default and RocksDB
     assert(runStream(batches) == golden)
-    assert(runStreamTws(batches) == golden)
+    assert(runStream(batches, RocksDb) == golden)
   }
 
   test("per-key state isolation: three sensors interleaved in one stream") {
@@ -193,6 +153,6 @@ class ThermostatStreamSpec extends SparkSpec {
     // every sensor produced transitions (non-vacuous isolation check)
     assert(golden.map(_.sensorID).distinct.sorted == Seq(1L, 2L, 3L))
     assert(runStream(interleaved.grouped(10).toSeq) == golden)
-    assert(runStreamTws(interleaved.grouped(10).toSeq) == golden)
+    assert(runStream(interleaved.grouped(10).toSeq, RocksDb) == golden)
   }
 }
