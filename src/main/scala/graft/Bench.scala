@@ -278,7 +278,7 @@ object Bench {
     // warmup: JVM/codegen/parquet-footer init lands here, not in the
     // first timed query
     spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()
+    Tables.lineitem(spark, sfDir).limit(1000).count()
     // sorted key order: a deterministic run sequence makes per-round
     // per-query deltas comparable (Map order varies with hashing).
     // min of THREE runs (two until round 6): a single sample in a
@@ -572,19 +572,21 @@ object Bench {
     // eventually traced (by mtime archaeology) to a testdata
     // regeneration hours before the bench — record the data identity
     // IN the artifact so BenchDiff can separate "plan regressed" from
-    // "data changed" mechanically. Size+mtime per table is enough to
-    // detect regeneration; the md5 collapses it to one comparable id.
+    // "data changed" mechanically. The hash covers each table's NAME
+    // and BYTES (SHA-256), not its mtime: byte-identical data copied or
+    // regenerated in place keeps its id (~17 MB at sf0.1 — cheap).
     val dataFp = {
       val files = new java.io.File(sfDir).listFiles()
       if (files == null) """{"hash":"missing","bytes":0}"""
       else {
-        val rows = files.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .map(f => s"${f.getName}:${f.length}:${f.lastModified / 1000}")
-        val md5 = java.security.MessageDigest.getInstance("MD5")
-          .digest(rows.mkString("\n").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        val bytes = files.filter(_.getName.endsWith(".parquet")).map(_.length).sum
-        s"""{"hash":"$md5","bytes":$bytes}"""
+        val tables = files.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        val sha = java.security.MessageDigest.getInstance("SHA-256")
+        tables.foreach { f =>
+          sha.update(s"${f.getName}:${f.length}\n".getBytes("UTF-8"))
+          sha.update(java.nio.file.Files.readAllBytes(f.toPath))
+        }
+        val hash = sha.digest().map("%02x".format(_)).mkString
+        s"""{"hash":"$hash","bytes":${tables.map(_.length).sum}}"""
       }
     }
     def meta = {

@@ -1,15 +1,51 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table access for the driver-provided testdata
-  * (/root/repo/TESTDATA.md). All reads go through here so scans stay
+  * (TESTDATA.md). All reads go through here so scans stay
   * declarative: Catalyst pushes filters and prunes columns into the
-  * parquet scan (verify with .explain — PushedFilters / ReadSchema).
+  * parquet scan (verify with .explain — PushedFilters / ReadSchema),
+  * and so each file's schema is inferred once per JVM (see `read`).
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** Every path read: `spark.read.parquet(path)` with the schema
+    * inferred ONCE per file per JVM. A bare path read makes Spark
+    * infer the schema with a footer-merge job, and on small data that
+    * job's fixed cost (closure cleaning, task serialization,
+    * scheduling) is several times the driver CPU of the read given
+    * its schema. The memo hands the inferred StructType to
+    * `spark.read.schema(..)`, so every later read of the same file
+    * launches no job.
+    *
+    * CONTRACT: keyed on (path, size, mtime in ms, the session's
+    * explicitly set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+    * confs) — the confs change what inference returns (events() sets
+    * nanosAsLong; inferTimestampNTZ picks NTZ vs LTZ), and a file
+    * rewritten under the same path gets a fresh inference. JVM-global
+    * like `spreadCopies`: keyed by file identity, not by session. Each
+    * read still builds a fresh relation with fresh expression ids, and
+    * file sources make the data schema nullable either way, so the
+    * analysed plan has the same shape as a bare path read.
+    */
+  private def read(s: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path)
+    val confs = s.conf.getAll.toSeq
+      .filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+      .sorted.mkString(",")
+    val schema = schemas.computeIfAbsent(s"$path@${f.length}:${f.lastModified}@$confs",
+      _ => s.read.parquet(path).schema)
+    s.read.schema(schema).parquet(path)
+  }
+
+  // (path@size:mtime@confs -> inferred schema); see `read`
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
@@ -87,7 +123,7 @@ object Tables {
         dir
       }
     })
-    if (copy.isEmpty) df else s.read.parquet(copy)
+    if (copy.isEmpty) df else read(s, copy)
   }
 
   // (memoKey -> copy dir, "" = layout already fine). JVM-global on
