@@ -19,6 +19,10 @@ import scala.jdk.CollectionConverters._
   * `BENCH_ADJUDICATIONS.json` ({"q115_triangle_count": "cause..."}).
   * A drift with no entry reports "unadjudicated" — the loud default.
   *
+  * Refuses the comparison (`"comparable": false` with a
+  * `comparable_reason`, no drift rows) when either side lacks
+  * `meta.cpus` or the two differ in CPU count or scale factor.
+  *
   * Also compares the `meta.data` fingerprint Bench records, so a
   * testdata regeneration between the two benches is named in the
   * artifact instead of inferred from file mtimes after the fact.
@@ -63,8 +67,32 @@ object BenchDiff {
     def runsOf(n: JsonNode, q: String): Option[JsonNode] =
       Option(n.at(s"/runs/$q")).filterNot(_.isMissingNode)
 
+    // like with like: a drift row is only a finding when both runs
+    // used the same CPU count and scale factor (an 8-CPU bench diffed
+    // against a 32-CPU pin reads as dozens of false drifts). A side
+    // that does not record its CPU count cannot be shown comparable,
+    // so it is refused too; the refusal names its reason and emits
+    // no drift rows. Intra-session spreads need no baseline and stay.
+    def cpusOf(n: JsonNode): Option[Int] =
+      Option(n.at("/meta/cpus")).filter(_.canConvertToInt).map(_.asInt())
+    def sfOf(n: JsonNode): String =
+      Option(n.at("/sf")).filter(_.isTextual).map(_.asText()).getOrElse("unrecorded")
+    val refusal: Option[String] = base.flatMap { b =>
+      (cpusOf(b), cpusOf(cur)) match {
+        case (None, _) => Some(s"baseline $basePath records no cpus")
+        case (_, None) => Some(s"current $curPath records no cpus")
+        case (Some(bc), Some(cc)) if bc != cc =>
+          Some(s"cpus differ: baseline $bc, current $cc")
+        case _ if sfOf(b) != sfOf(cur) =>
+          Some(s"scale factor differs: baseline ${sfOf(b)}, current ${sfOf(cur)}")
+        case _ => None
+      }
+    }
+
     val curQ = qmap(cur)
-    val baseQ = base.map(qmap).getOrElse(Map.empty)
+    val baseQ =
+      if (refusal.isDefined) Map.empty[String, Double]
+      else base.map(qmap).getOrElse(Map.empty)
     // Adjudication-staleness rule (round-15, verdict item 5): r7-era
     // blanket texts were still silencing drift rows seven rounds and
     // two baseline re-pins later — evidence measured against a
@@ -145,7 +173,7 @@ object BenchDiff {
         }
     }
     val missing = baseQ.keySet -- curQ.keySet
-    val added = curQ.keySet -- baseQ.keySet
+    val added = if (refusal.isDefined) Set.empty[String] else curQ.keySet -- baseQ.keySet
     // prefix match: a STALE adjudication reports as "unadjudicated
     // (stale adjudication: ...)" and must count as dirty
     val unadjudicated = drifts.count(_.contains("\"status\":\"unadjudicated"))
@@ -154,6 +182,8 @@ object BenchDiff {
       s"""{
          |"baseline":"${esc(basePath)}",
          |"baseline_present":${base.isDefined},
+         |"comparable":${refusal.isEmpty},
+         |"comparable_reason":${refusal.map(r => "\"" + esc(r) + "\"").getOrElse("null")},
          |"data_changed":$dataChanged,
          |"data_fingerprint":{"baseline":"${base.map(fp).getOrElse("none")}","current":"${fp(cur)}"},
          |"threshold_ratio":$Threshold,
@@ -177,6 +207,7 @@ object BenchDiff {
     Files.writeString(Paths.get(outPath), out)
     println(s"[benchdiff] ${drifts.size} drifts (${unadjudicated} unadjudicated), " +
       s"${spreads.size} spreads (${spreadUnadj} unadjudicated), " +
-      s"data_changed=$dataChanged -> $outPath")
+      s"data_changed=$dataChanged" +
+      refusal.map(r => s", NOT COMPARABLE ($r)").getOrElse("") + s" -> $outPath")
   }
 }

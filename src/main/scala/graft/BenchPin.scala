@@ -23,9 +23,10 @@ import scala.jdk.CollectionConverters._
   * exists).
   *
   * Usage: BenchPin <out> <pin_round> <session1.json> <session2.json> [...]
-  * Sessions must agree on the data fingerprint — a pin across a
-  * testdata regeneration would compare incomparable numbers, so that
-  * is a hard error.
+  * Sessions must agree on the data fingerprint, the CPU count and
+  * the scale factor — a pin across a testdata regeneration or two
+  * machine shapes would compare incomparable numbers, so that is a
+  * hard error. The pin's meta records `cpus` and `sf`.
   */
 object BenchPin {
   def main(args: Array[String]): Unit = {
@@ -46,6 +47,16 @@ object BenchPin {
     }
     if (fps.map(_._2).distinct.size != 1 || fps.head._2 == "unrecorded") {
       System.err.println(s"[benchpin] data fingerprints disagree or unrecorded: $fps")
+      sys.exit(1)
+    }
+    // one pin = one CPU count and one scale factor (BenchDiff refuses
+    // to compare across either); a session that records neither pins
+    // them as null, which BenchDiff then refuses as unrecorded
+    val conds = sessions.map { case (p, n) =>
+      p -> (n.at("/meta/cpus").toString, n.at("/sf").toString)
+    }
+    if (conds.map(_._2).distinct.size != 1) {
+      System.err.println(s"[benchpin] sessions disagree on cpus or sf: $conds")
       sys.exit(1)
     }
     def qmap(n: JsonNode): Map[String, Double] =
@@ -93,9 +104,11 @@ object BenchPin {
     }
     val dataNode = topG("/meta/data")
     val sf = topG("/sf")
+    val cpus = topG("/meta/cpus")
     val body =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$queries,""" +
-        s""""sf":$sf,"meta":{"pin_round":$pinRound,"agg":"median-of-session-minima",""" +
+        s""""sf":$sf,"meta":{"pin_round":$pinRound,"cpus":$cpus,"sf":$sf,""" +
+        s""""agg":"median-of-session-minima",""" +
         s""""n_sessions":${sessions.size},"sessions":$sessMeta,"data":$dataNode}}"""
     Files.writeString(Paths.get(out), body)
     println(s"[benchpin] pinned ${pinned.size} queries (total ${f3(total)} s) " +

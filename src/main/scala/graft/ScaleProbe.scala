@@ -14,7 +14,8 @@ import graft.api.ops
   * count and per-round wall times — evidence that round count grows
   * with the graph's STRUCTURE, not its size (measured at sf0.1:
   * BFS hops 11/20/110 — linear in the chain by construction; cc
-  * rounds 9/9/9 — pointer jumping absorbs the 100x diameter;
+  * alternations 5/6/8 — star contraction's O(log n) absorbs the
+  * 100x diameter;
   * PageRank rounds 11/14/32 — the chain mixes slower) while
   * per-round cost grows sub-linearly in edges at these sizes
   * (overhead-dominated below ~1M edges), i.e. the loops scale the

@@ -275,36 +275,32 @@ object SqlSurface {
       |UNION ALL SELECT b AS u, a AS v FROM cc_edges""".stripMargin
 
   private val ccLargeSub: String =
-    s"""SELECT a, b, MAX(c) AS cl FROM (
-       |  SELECT m AS a, v AS b, (m <> u) AS c
+    s"""SELECT m AS a, v AS b, (m <> u) AS c FROM (
+       |  SELECT u, v, least(MIN(v) OVER (PARTITION BY u), u) AS m
        |  FROM ($ccNbrSub)
-       |  JOIN (
-       |    SELECT u, least(mn, u) AS m FROM (
-       |      SELECT u, MIN(v) AS mn FROM ($ccNbrSub) GROUP BY u)
-       |  ) USING (u)
-       |  WHERE v > u
-       |) GROUP BY a, b""".stripMargin
+       |) WHERE v > u""".stripMargin
 
-  private val ccGSub: String =
-    s"""SELECT b, m, (mc OR cnt > 1) AS gc FROM (
-       |  SELECT b, MIN(a) AS m, MAX(cl) AS mc, COUNT(1) AS cnt
-       |  FROM ($ccLargeSub) GROUP BY b
-       |)""".stripMargin
+  private val ccSmallSub: String =
+    s"""SELECT a, b, MIN(a) OVER (PARTITION BY b) AS m,
+       |  (MAX(c) OVER (PARTITION BY b)
+       |    OR MAX(a) OVER (PARTITION BY b) > MIN(a) OVER (PARTITION BY b)) AS gc
+       |FROM ($ccLargeSub)""".stripMargin
 
   /** One ops.star2Round over the `cc_edges` view: a large-star +
     * small-star alternation with its conservative changed-edge
-    * flags, plan-equal to the DataFrame round (pinned in
+    * flags — one window pass per phase, then one aggregation, no
+    * joins — plan-equal to the DataFrame round (pinned in
     * SqlSurfaceSpec).
     */
   val ccRoundSql: String =
     s"""SELECT sa AS a, sb AS b, chg FROM (
-       |  SELECT sa, sb, MAX(gc) AS chg FROM (
-       |    SELECT g.m AS sa, l.a AS sb, g.gc
-       |    FROM ($ccLargeSub) l JOIN ($ccGSub) g ON l.b = g.b
-       |    WHERE l.a <> g.m
-       |    UNION ALL
-       |    SELECT m AS sa, b AS sb, gc FROM ($ccGSub)
-       |  ) GROUP BY sa, sb
+       |  SELECT r.sa AS sa, r.sb AS sb, MAX(r.gc) AS chg FROM (
+       |    SELECT explode(array(
+       |      named_struct('sa', m, 'sb', a, 'gc', gc, 'keep', a <> m),
+       |      named_struct('sa', m, 'sb', b, 'gc', gc, 'keep', true))) AS r
+       |    FROM ($ccSmallSub)
+       |  ) WHERE r.keep
+       |  GROUP BY r.sa, r.sb
        |)""".stripMargin
 
   /** The final star forest read back as labels over the converged

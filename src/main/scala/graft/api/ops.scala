@@ -1415,12 +1415,12 @@ object ops {
     * round — and the plan a round builds on never grows (swap for
     * reliable checkpoint() on a cluster so a lost executor never
     * replays earlier rounds). Bounded-round guard fails loudly,
-    * never spins. Scale shape per alternation: two node-keyed
-    * aggregations + two co-keyed joins, every frame edge-bounded and
-    * shrinking; the per-node min table reuses the neighbor exchange
-    * (or broadcasts when it fits). Returns the (id, component) frame
-    * — component is the smallest member node id — and the
-    * alternation count.
+    * never spins. Scale shape per alternation: two window passes +
+    * one aggregation, no joins — three edge-bounded exchanges (on u,
+    * on b, on the output pair), every frame shrinking round over
+    * round; a hub's whole neighbourhood sits in one window task (see
+    * [[star2Round]]). Returns the (id, component) frame — component
+    * is the smallest member node id — and the alternation count.
     *
     * Guard tuning: `maxRounds = 50` is a FAILURE bound, not a stop
     * rule — star contraction needs O(log n) alternations (5-7
@@ -1480,7 +1480,8 @@ object ops {
     * yesterday's corpus) converges in fewer, near-empty alternations
     * — CcLoopSpec asserts the advantage on the same delta graph.
     * Returns (labels, movement curve). Scale shape per alternation
-    * is exactly [[connectedComponents]]'s; the init costs one
+    * is [[connectedComponents]]'s: two window passes + one
+    * aggregation, no joins; the init costs one
     * node-keyed join + one broadcast of the DISTINCT
     * affected-component list (changelog-sized, not corpus-sized),
     * plus one node-sized guard job (below). Shortcut edges are
@@ -1576,26 +1577,42 @@ object ops {
     * regrouping). Canonicality is preserved by construction: a
     * large-star emission pairs m <= u < v; a small-star emission
     * pairs the group minimum against a strictly larger partner.
+    *
+    * Shape: the reducer form of Kiveris et al. — each phase is ONE
+    * window pass whose partition sees the node's whole neighbourhood
+    * (large-star over `u`, small-star over `b`), then one
+    * aggregation on (sa, sb); no joins, three exchanges. The large
+    * phase keeps duplicate (m, v) emissions instead of deduplicating
+    * them: `max(a) > min(a)` over a group is exactly "more than one
+    * distinct smaller partner", and the final max(gc) per (sa, sb)
+    * absorbs the duplicates, so the rows equal the older
+    * aggregate-then-join-back round (CcPropertySpec keeps that body
+    * as its reference). Cost: a hub's whole neighbourhood lands in
+    * one window task, where the older round pre-aggregated it
+    * map-side.
     */
   private[graft] def star2Round(e: DataFrame): DataFrame = {
     val nbr = e.select(col("a").as("u"), col("b").as("v"))
       .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-    val mins = nbr.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
-    val large = nbr.join(mins, "u").filter(col("v") > col("u"))
-      .select(col("m").as("a"), col("v").as("b"),
-        (col("m") =!= col("u")).as("c"))
-      .groupBy(col("a"), col("b")).agg(max(col("c")).as("cl"))
-    val g = large.groupBy(col("b"))
-      .agg(min(col("a")).as("m"), max(col("cl")).as("mc"),
-        count(lit(1)).as("cnt"))
-      .select(col("b"), col("m"), (col("mc") || (col("cnt") > 1L)).as("gc"))
-    val rewired = large.join(g, "b")
-      .filter(col("a") =!= col("m"))
-      .select(col("m").as("sa"), col("a").as("sb"), col("gc"))
-    val selfE = g.select(col("m").as("sa"), col("b").as("sb"), col("gc"))
-    rewired.unionByName(selfE)
-      .groupBy(col("sa"), col("sb")).agg(max(col("gc")).as("chg"))
+    val byU = Window.partitionBy(col("u"))
+    val large = nbr
+      .select(col("u"), col("v"), least(min(col("v")).over(byU), col("u")).as("m"))
+      .filter(col("v") > col("u"))
+      .select(col("m").as("a"), col("v").as("b"), (col("m") =!= col("u")).as("c"))
+    val byB = Window.partitionBy(col("b"))
+    val small = large.select(col("a"), col("b"),
+      min(col("a")).over(byB).as("m"),
+      (max(col("c")).over(byB) ||
+        (max(col("a")).over(byB) > min(col("a")).over(byB))).as("gc"))
+    small
+      .select(explode(array(
+        struct(col("m").as("sa"), col("a").as("sb"), col("gc"),
+          (col("a") =!= col("m")).as("keep")),
+        struct(col("m").as("sa"), col("b").as("sb"), col("gc"),
+          lit(true).as("keep")))).as("r"))
+      .filter(col("r.keep"))
+      .groupBy(col("r.sa").as("sa"), col("r.sb").as("sb"))
+      .agg(max(col("r.gc")).as("chg"))
       .select(col("sa").as("a"), col("sb").as("b"), col("chg"))
   }
 

@@ -721,7 +721,11 @@ object Mining {
   // (setCheckpointDir) so a lost executor cannot have to recompute
   // the whole loop; superseded round RDDs are released the moment
   // they are consumed (Ck.release), and the frame SHRINKS toward
-  // |nodes| star edges round-over-round. Alternative for graphs
+  // |nodes| star edges round-over-round. Scale shape per alternation:
+  // two window passes + one aggregation, no joins (ops.star2Round —
+  // one exchange per star phase plus the output pair's; 4 jobs per
+  // round checkpoint at sf0.01 where the older aggregate-then-join-
+  // back body ran 9). Alternative for graphs
   // whose edges fit per-partition memory: q48's partition-local
   // union-find contraction (O(log P) rounds). Oracle: recursive-CTE
   // transitive min-label closure.
@@ -2943,8 +2947,8 @@ object Mining {
   // stop in either phase hash-mismatches; the warm round-count
   // advantage on a controlled delta is asserted in CcLoopSpec.
   //
-  // Scale shape per round is exactly q161's (node-keyed min-agg +
-  // node-sized pointer-jump self-join, flat checkpoint lineage);
+  // Scale shape per round is exactly q161's (two window passes + one
+  // aggregation, no joins, flat checkpoint lineage);
   // the init adds one node-keyed left join + a changelog-sized
   // broadcast. Oracle: the engine round replay unrolled (the q178
   // pattern), stop = first zero-movement round.
@@ -2987,8 +2991,11 @@ object Mining {
 
   /** DuckDB replay of the production cc round body (one large-star
     * + small-star alternation with its conservative changed-edge
-    * flags — ops.star2Round mirrored term for term), shared by the
-    * q217 / q218 / q219 oracles. `phase` unrolls `R` alternations
+    * flags), shared by the
+    * q217 / q218 / q219 oracles. It replays the aggregate-then-join
+    * form of the round, an independent derivation of the same
+    * (a, b, chg) rows ops.star2Round's window form returns
+    * (CcPropertySpec pins the two row-equal on random graphs). `phase` unrolls `R` alternations
     * from a canonical (a, b) initial edge CTE `init`; the engine
     * stops data-driven and a stop past the unroll leaves the phase's
     * `stop` CTE NULL — a loud hash mismatch, never a silent

@@ -1,7 +1,13 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, ExprId, Expression, ExpressionSet, SortOrder}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.connector.read.streaming.SparkDataStream
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** One narrow private-API bridge, kept in Spark's package namespace
@@ -61,7 +67,7 @@ object GraftPlanStats {
             // origin plan's constraint set, so downstream optimizer
             // constraint propagation (IsNotNull inference, filter
             // pruning) keeps working on the stats-swapped copy
-            val clean = new LogicalRDD(lr.output, lr.rdd,
+            val clean = new MeasuredCheckpoint(lr.output, lr.rdd,
               lr.outputPartitioning, lr.outputOrdering, lr.isStreaming,
               lr.stream)(session,
               Some(Statistics(sizeInBytes = BigInt(bytes))),
@@ -71,4 +77,53 @@ object GraftPlanStats {
         }
       case _ => df
     }
+}
+
+/** A measured checkpoint relation: a `LogicalRDD` whose canonical form
+  * binds its carried layout (hash partitioning, sort order) to its
+  * own output by position. Spark's default leaf canonicalization
+  * normalizes the output attributes but leaves the layout's attribute
+  * ids raw, so two fresh copies of one laid-out checkpoint — the copy
+  * the analyzer makes when a round reads the state twice (PageRank's
+  * rank vector feeds both the contribution join and the old-rank
+  * side) — never compare `sameResult`, and a SQL text analyzed
+  * separately from its DataFrame twin could not be pinned plan-equal.
+  * Everything else is the plain `LogicalRDD`.
+  */
+private[sql] class MeasuredCheckpoint(output: Seq[Attribute],
+    rdd: RDD[InternalRow], outputPartitioning: Partitioning,
+    outputOrdering: Seq[SortOrder], isStreaming: Boolean,
+    stream: Option[SparkDataStream])(session: CSparkSession,
+    originStats: Option[Statistics], originConstraints: Option[ExpressionSet])
+  extends LogicalRDD(output, rdd, outputPartitioning, outputOrdering,
+    isStreaming, stream)(session, originStats, originConstraints) {
+
+  // LogicalRDD.newInstance builds a plain LogicalRDD; keep the class
+  override def newInstance(): this.type = {
+    val fresh = AttributeMap(output.map(a => a -> a.newInstance()))
+    def re[T <: Expression](e: T): T =
+      e.transform { case a: Attribute => fresh.getOrElse(a, a) }.asInstanceOf[T]
+    val part = outputPartitioning match {
+      case p: Expression => re(p).asInstanceOf[Partitioning]
+      case p => p
+    }
+    new MeasuredCheckpoint(output.map(fresh(_)), rdd, part,
+      outputOrdering.map(re(_)), isStreaming, stream)(session,
+      Some(Statistics(sizeInBytes = computeStats().sizeInBytes)),
+      Some(ExpressionSet(constraints.map(re(_))))).asInstanceOf[this.type]
+  }
+
+  override protected def doCanonicalize(): LogicalPlan =
+    LogicalRDD(
+      output.zipWithIndex.map { case (a, i) =>
+        a.withExprId(ExprId(i.toLong)).canonicalized.asInstanceOf[Attribute]
+      },
+      rdd,
+      outputPartitioning match {
+        case p: Expression =>
+          QueryPlan.normalizeExpressions(p, output).asInstanceOf[Partitioning]
+        case p => p
+      },
+      outputOrdering.map(QueryPlan.normalizeExpressions(_, output)),
+      isStreaming, stream)(session, None, None)
 }

@@ -21,7 +21,7 @@ class BenchGateSpec extends AnyFunSuite {
       s""""$k":{"start_s":1.0,"runs":${rs.mkString("[", ",", "]")}}"""
     }.mkString(",")
     s"""{"metric":"total","value":1,"unit":"sec","queries":{$queries},""" +
-      s""""sf":"x","runs":{$runs},"meta":{"data":{"hash":"h1","bytes":1}}}"""
+      s""""sf":"x","runs":{$runs},"meta":{"cpus":4,"data":{"hash":"h1","bytes":1}}}"""
   }
 
   test("slower drifts with no adjudication parse back as unadjudicated; improvements and noise do not") {
@@ -307,7 +307,7 @@ class BenchGateSpec extends AnyFunSuite {
     Files.writeString(base,
       """{"metric":"total","value":1,"unit":"sec",""" +
         """"queries":{"q115_triangle_count":0.5},"sf":"x",""" +
-        """"meta":{"pin_round":15,"data":{"hash":"h1","bytes":1}}}""")
+        """"meta":{"pin_round":15,"cpus":4,"data":{"hash":"h1","bytes":1}}}""")
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
     val n = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(out))
@@ -324,7 +324,7 @@ class BenchGateSpec extends AnyFunSuite {
     Files.writeString(base,
       """{"metric":"total","value":1,"unit":"sec",""" +
         """"queries":{"q115_triangle_count":0.5},"sf":"x",""" +
-        """"meta":{"pin_round":13,"data":{"hash":"h1","bytes":1}}}""")
+        """"meta":{"pin_round":13,"cpus":4,"data":{"hash":"h1","bytes":1}}}""")
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
     assert(Bench.unadjudicatedIn(out.toString).isEmpty)
     val n2 = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -349,7 +349,7 @@ class BenchGateSpec extends AnyFunSuite {
     Files.writeString(base,
       """{"metric":"total","value":1,"unit":"sec",""" +
         """"queries":{"q219_takedown_dedup":1.0},"sf":"x",""" +
-        """"meta":{"pin_round":15,"data":{"hash":"h1","bytes":1}}}""")
+        """"meta":{"pin_round":15,"cpus":4,"data":{"hash":"h1","bytes":1}}}""")
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
     assert(Bench.spreadUnadjudicatedIn(out.toString) ==
       Seq("q219_takedown_dedup"))
@@ -363,7 +363,7 @@ class BenchGateSpec extends AnyFunSuite {
     Files.writeString(base,
       """{"metric":"total","value":1,"unit":"sec",""" +
         """"queries":{"q219_takedown_dedup":1.0},"sf":"x",""" +
-        """"meta":{"pin_round":12,"data":{"hash":"h1","bytes":1}}}""")
+        """"meta":{"pin_round":12,"cpus":4,"data":{"hash":"h1","bytes":1}}}""")
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
     assert(Bench.spreadUnadjudicatedIn(out.toString).isEmpty)
   }
@@ -400,7 +400,7 @@ class BenchGateSpec extends AnyFunSuite {
       val queries = qs.map { case (k, v) => s""""$k":$v""" }.mkString(",")
       Files.writeString(path,
         s"""{"metric":"total","value":9.9,"unit":"sec","queries":{$queries},""" +
-          s""""sf":"x","meta":{"load_avg":1.5,"steal_session_s":0.2,""" +
+          s""""sf":"x","meta":{"cpus":4,"load_avg":1.5,"steal_session_s":0.2,""" +
           s""""iowait_session_s":0.1,"steal_dodged_runs":2,""" +
           s""""descent_absorbed_runs":0,"floor_extend_draws":1,"wall_s":100.0,""" +
           s""""data":{"hash":"$hash","bytes":1}}}""")
@@ -423,6 +423,8 @@ class BenchGateSpec extends AnyFunSuite {
     assert(n.at("/meta/n_sessions").asInt() == 3)
     assert(n.at("/meta/sessions/0/load_avg").asDouble() == 1.5)
     assert(n.at("/meta/data/hash").asText() == "h1")
+    assert(n.at("/meta/cpus").asInt() == 4, n.toString)
+    assert(n.at("/meta/sf").asText() == "x", n.toString)
     // value = sum of pinned medians
     assert(math.abs(n.at("/value").asDouble() - (2.0 + 4.5 + 2.0)) < 1e-6)
     // the pinned artifact is BenchDiff-consumable as a baseline
@@ -435,6 +437,44 @@ class BenchGateSpec extends AnyFunSuite {
     assert(d.get("n_compared").asInt() == 3, d.toString)
     assert(d.get("n_drifts").asInt() == 0, d.toString)
     assert(!d.get("data_changed").asBoolean())
+    assert(d.get("comparable").asBoolean(), d.toString)
+  }
+
+  test("BenchDiff refuses a baseline without cpus, or with another CPU count or scale factor") {
+    val dir = Files.createTempDirectory("benchgate6")
+    val cur = dir.resolve("cur.json")
+    val base = dir.resolve("base.json")
+    val out = dir.resolve("diff.json")
+    // q_slow would be an unadjudicated 2x drift on a comparable pair;
+    // q_var is an intra-session spread, which needs no baseline
+    Files.writeString(cur, detailRuns(
+      ("q_slow", 1.0, Seq(1.0, 1.0, 1.0)), ("q_var", 1.0, Seq(5.0, 1.0, 1.2))))
+    def baseWith(meta: String, sf: String = "x"): Unit = Files.writeString(base,
+      s"""{"metric":"total","value":1,"unit":"sec",""" +
+        s""""queries":{"q_slow":0.5,"q_var":1.0},"sf":"$sf",""" +
+        s""""meta":{$meta"data":{"hash":"h1","bytes":1}}}""")
+    def diff(): com.fasterxml.jackson.databind.JsonNode = {
+      BenchDiff.main(Array(cur.toString, base.toString, out.toString))
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Files.readString(out))
+    }
+    for ((meta, sf, reason) <- Seq(
+        ("", "x", "records no cpus"),
+        (""""cpus":32,""", "x", "cpus differ"),
+        (""""cpus":4,""", "y", "scale factor differs"))) {
+      baseWith(meta, sf)
+      val d = diff()
+      assert(!d.get("comparable").asBoolean(), d.toString)
+      assert(d.get("comparable_reason").asText().contains(reason), d.toString)
+      assert(d.get("n_drifts").asInt() == 0 && d.get("n_compared").asInt() == 0, d.toString)
+      assert(Bench.unadjudicatedIn(out.toString).isEmpty)
+      assert(Bench.spreadUnadjudicatedIn(out.toString) == Seq("q_var"))
+    }
+    // same cpus and sf: the drift row comes back
+    baseWith(""""cpus":4,""")
+    val d = diff()
+    assert(d.get("comparable").asBoolean() && d.get("comparable_reason").isNull, d.toString)
+    assert(Bench.unadjudicatedIn(out.toString) == Seq("q_slow"))
   }
 
   test("steal dodge: stolen runs discard and re-draw; crashes and quiet runs keep") {
