@@ -25,7 +25,7 @@ object Explain {
       println(s"===== $name =====")
       name match {
         case "loop:pr_round" | "loop:ppr_round" =>
-          import org.apache.spark.sql.functions.{col, lit}
+          import org.apache.spark.sql.functions.{col, count, lit, sum}
           import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
           val (_, edges, nodes) =
             graft.queries.Curation.prGraphEdges(spark, sfDir)
@@ -42,14 +42,16 @@ object Explain {
             if (name == "loop:pr_round")
               graft.queries.Curation.prRound(edeg, pr)
             else graft.queries.Curation.pprRound(100L)(edeg, pr)
-          val pr0 = graft.queries.Curation
-            .prIterateInitCk(nodes.select(col("id"),
-              lit(1000000000L).as("pr")), edeg.rdd.getNumPartitions)
-          val (ck1, _) = graft.Loop.ckSumPartitioned(roundOf(pr0), col("mv"))
+          val (pr0, _) = graft.Loop.checkpoint(
+            graft.queries.Curation.prInit(nodes.select(col("id"),
+              lit(1000000000L).as("pr")), edeg.rdd.getNumPartitions),
+            count(lit(1)), keepLayout = true)
+          val (ck1, _) = graft.Loop.checkpoint(roundOf(pr0), sum(col("mv")),
+            keepLayout = true)
           val pr1 = ck1.select(col("id"), col("pr"))
           // print under the loop's own planning conditions: the real
-          // rounds materialize inside ckSumPartitioned (AQE off for
-          // the round job — Loop.noAdaptive), so the committed plan
+          // rounds materialize inside Loop.checkpoint(keepLayout) (AQE
+          // off for the round job — Loop.noAdaptive), so the committed plan
           // evidence must be planned the same way. Save/restore the
           // PRE-EXISTING value under try/finally (r17, ADVICE): an
           // exception mid-explain must not leave AQE off for the

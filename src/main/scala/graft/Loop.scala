@@ -1,58 +1,55 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions.{coalesce, count, lit, when}
-import org.apache.spark.sql.util.QueryExecutionListener
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
-/** Stop-check riders for the convergence loops (cc / scc / bfs /
-  * dagLayers / …). Every loop round ends with an eager
-  * localCheckpoint whose one materialization serves the next round —
-  * but the round's STOP CHECK ("did any label move?" / "is the
-  * frontier empty?") historically ran as a SECOND job over the
-  * checkpointed rows. At sf0.1 that second job is pure fixed
-  * overhead (~0.1-0.3 s of scheduling per round across 9-30 rounds
-  * of a convergence query); at cluster scale it is an extra stage
-  * launch per round. These helpers attach the check as a
-  * CollectMetrics rider (`observe()`) on the SAME checkpoint job, so
-  * one job answers both questions (round-7 verdict item 7).
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+
+/** The one driver for convergence loops (cc / PageRank / k-core /
+  * k-means / BFS / DAG layering) and the one checkpoint primitive
+  * under it.
   *
-  * Plumbing: `Observation.getOrEmpty` is private[sql], so the
-  * metric travels through the PUBLIC listener API instead — one
-  * QueryExecutionListener per session records `qe.observedMetrics`
-  * for names carrying the `graft_loop_` prefix. The listener bus is
-  * asynchronous, so the reader polls briefly (the event normally
-  * lands within a few ms of the action returning); if the metric
-  * still has not surfaced — e.g. a Spark version whose checkpoint
-  * path stops emitting SQL-execution events — the helpers fall back
-  * to the old second-job check. Correctness never depends on
-  * listener timing; only the saved job does.
+  * [[checkpoint]]: every loop round ends with an eager
+  * localCheckpoint whose one materialization serves the next round.
+  * The round's STOP METRIC ("how many edges changed?", "how much
+  * rank moved?", "how many nodes survived?") is any aggregate Column;
+  * it rides the SAME job as a Spark [[Observation]] (`observe()`),
+  * so one job answers both questions. The observation completes on
+  * Spark's async listener bus, normally within a few ms of the
+  * action; if it has not completed within [[RiderWait]] the metric
+  * is recomputed by a second job over the checkpointed rows
+  * (`agg(coalesce(metric, 0))`). Correctness never depends on bus
+  * timing; only the saved job does. Every checkpoint carries the
+  * MEASURED BlockManager size as its statistics (GraftPlanStats),
+  * and `keepLayout` materializes with AQE off so the checkpoint
+  * carries the plan's real hash partitioning into the next round
+  * ([[noAdaptive]]).
+  *
+  * [[fixpoint]]: the round loop itself — round counter, (round,
+  * metric) curve, release of each superseded round, projection back
+  * to the init's columns, probe, LoopStats.recordLoop, and the
+  * bounded-round guard (which releases the live state before it
+  * fails). New loops go through it; the loops that keep their own
+  * shape (level-list BFS, SCC's nested trims, label propagation, the
+  * fixed-round unrolls) still checkpoint through [[checkpoint]].
   */
 object Loop {
   // test introspection: how often the metric rode the checkpoint job
   // vs fell back to a second job (LoopRiderSpec pins rides > 0, i.e.
-  // the listener really does deliver for localCheckpoint actions)
+  // the observation really does complete for localCheckpoint actions)
   private[graft] val rides = new AtomicLong()
   private[graft] val fallbacks = new AtomicLong()
-  // Adaptive degrade: on a Spark build where the checkpoint path
-  // never emits SQL-execution events (the fallback comment's own
-  // contingency), every round would otherwise block the full 500 ms
-  // deadline before taking the second job — a 30-round loop loses
-  // 15 s to waiting for a bus that never delivers. After
-  // `SkipAfter` CONSECUTIVE fallbacks the wait collapses to a short
-  // grace (the bus, when it works at all, delivers within
-  // single-digit ms of the action returning), and one successful
-  // ride restores the full deadline.
-  private val SkipAfter = 3
-  private val consecFallbacks = new AtomicLong()
+  /** How long a checkpoint waits for its observation before paying
+    * the second-job fallback. */
+  private val RiderWait: FiniteDuration = 500.millis
   private val seq = new AtomicLong()
-  private val metrics = new ConcurrentHashMap[String, Row]()
   // per-loop cost split (bench_detail "rounds" side channel): wall ns
-  // spent inside ckCount's checkpoint action vs executor task ms
-  // burned during it. Thread-local because loops are driver-side
+  // spent inside checkpoint actions vs executor task ms burned
+  // during them. Thread-local because loops are driver-side
   // sequential per query; the SparkListener total is session-global
   // and its bus is ASYNC, so the task split is approximate (a stage
   // completing around a round boundary may land in the neighbor's
@@ -80,58 +77,15 @@ object Loop {
   }
 
   /** Snapshot-and-reset the calling thread's accumulated checkpoint
-    * cost: (wall ms inside ckCount actions, executor task ms during
-    * them). LoopStats.recordLoop drains this per named loop so
-    * bench_detail can split a loop query's fixed per-round floor
+    * cost: (wall ms inside checkpoint actions, executor task ms
+    * during them). LoopStats.recordLoop drains this per named loop
+    * so bench_detail can split a loop query's fixed per-round floor
     * (wall >> task/cores) from its data cost (task-dominated).
     */
   def drainTimes(): (Long, Long) = {
     val w = ckWallNs.get().getAndSet(0L) / 1000000L
     val t = ckTaskMs.get().getAndSet(0L)
     (w, t)
-  }
-  // sessions with our listener installed (weak: a stopped session
-  // must not be pinned by the side channel)
-  private val hooked =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  private def ensureListener(s: SparkSession): Unit = {
-    val needs = hooked.synchronized {
-      if (hooked.containsKey(s)) false
-      else { hooked.put(s, java.lang.Boolean.TRUE); true }
-    }
-    if (needs) s.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (name, row) =>
-          if (name.startsWith("graft_loop_")) {
-            // a row landing AFTER its reader's deadline (the reader
-            // already took the fallback) would otherwise sit in the
-            // JVM-global map forever — names are unique, nothing
-            // reads them twice. Bound the map instead of tracking
-            // per-entry age: clearing drops only metrics whose
-            // readers are in-flight (they fall back) or long gone.
-            if (metrics.size > 1024) metrics.clear()
-            metrics.put(name, row)
-          }
-        }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    })
-  }
-
-  /** Wait briefly for the named metric; the async bus usually
-    * delivers within single-digit ms. Consumes the entry.
-    */
-  private def awaitMetric(name: String, maxMs: Long = 500L): Option[Row] = {
-    val deadline = System.nanoTime() + maxMs * 1000000L
-    var row = metrics.remove(name)
-    while (row == null && System.nanoTime() < deadline) {
-      Thread.sleep(1L)
-      row = metrics.remove(name)
-    }
-    Option(row)
   }
 
   /** Run `body` with adaptive execution OFF, restoring the previous
@@ -230,136 +184,110 @@ object Loop {
     else df
   }
 
-  /** Eagerly checkpoint `frame` preserving its physical layout: the
-    * materialization runs with AQE off (see [[noAdaptive]]) so the
-    * returned checkpoint's LogicalRDD carries the plan's REAL
-    * hash-partitioning and sort order into the next round's planning
-    * instead of UnknownPartitioning. Measured stats as always.
+  /** Eagerly checkpoint `frame` and report the int64 value of the
+    * aggregate `metric` over it (0 when the aggregate is null, e.g.
+    * a sum or max over no rows), measured on the checkpoint job
+    * itself through an [[Observation]]; a second job over the
+    * checkpointed rows answers only when the observation misses
+    * [[RiderWait]]. `keepLayout` materializes with AQE off so the
+    * checkpoint carries the plan's hash partitioning and sort order
+    * ([[noAdaptive]]). The checkpoint carries measured statistics:
+    * a round body that joins the previous round would otherwise
+    * compound the inherited size estimate into a BigInt the planner
+    * hangs on past ~12 rounds.
     */
-  def ckPartitioned(frame: DataFrame): DataFrame =
-    noAdaptive(frame.sparkSession) {
-      org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
-        frame.localCheckpoint(true))
-    }
-
-  /** Eagerly checkpoint `frame` and report how many rows satisfy
-    * `moved`, measured on the checkpoint job itself.
-    */
-  def ckCount(frame: DataFrame, moved: Column): (DataFrame, Long) =
-    ckAgg(frame, count(when(moved, lit(1))),
-      ck => ck.filter(moved).count())
-
-  /** Eagerly checkpoint `frame` and report the int64 SUM of `c`
-    * over it, measured on the checkpoint job itself — the movement
-    * form the PageRank family needs (its stop scalar is Σ|Δpr|,
-    * not a moved-row count). Same rider/fallback/measured-stats
-    * contract as [[ckCount]].
-    */
-  def ckSum(frame: DataFrame, c: Column): (DataFrame, Long) =
-    ckAgg(frame, coalesce(org.apache.spark.sql.functions.sum(c), lit(0L)),
-      ck => ck.agg(coalesce(org.apache.spark.sql.functions.sum(c), lit(0L))
-        .as("mv")).head().getLong(0))
-
-  /** [[ckSum]] with the checkpoint's physical layout preserved (AQE
-    * off for the materialization — [[noAdaptive]]): the PageRank-
-    * family rounds use this so the id-partitioned, id-sorted rank
-    * state plans exchange-free round after round.
-    */
-  def ckSumPartitioned(frame: DataFrame, c: Column): (DataFrame, Long) =
-    noAdaptive(frame.sparkSession) {
-      ckAgg(frame, coalesce(org.apache.spark.sql.functions.sum(c), lit(0L)),
-        ck => ck.agg(coalesce(org.apache.spark.sql.functions.sum(c), lit(0L))
-          .as("mv")).head().getLong(0))
-    }
-
-  /** [[ckMax]] with the checkpoint's physical layout preserved — see
-    * [[ckSumPartitioned]]. The HITS half-steps use this so the
-    * id-partitioned score state plans exchange-free step after step.
-    */
-  def ckMaxPartitioned(frame: DataFrame, c: Column): (DataFrame, Long) =
-    noAdaptive(frame.sparkSession) {
-      ckAgg(frame, coalesce(org.apache.spark.sql.functions.max(c), lit(0L)),
-        ck => ck.agg(coalesce(org.apache.spark.sql.functions.max(c), lit(0L))
-          .as("mv")).head().getLong(0))
-    }
-
-  /** Eagerly checkpoint `frame` and report the int64 MAX of `c`
-    * over it (0 when empty), measured on the checkpoint job itself —
-    * the renormalize form the HITS family needs (its per-half-step
-    * scalar is max(raw), not a moved-row count). Same rider/
-    * fallback/measured-stats contract as [[ckCount]].
-    */
-  def ckMax(frame: DataFrame, c: Column): (DataFrame, Long) =
-    ckAgg(frame, coalesce(org.apache.spark.sql.functions.max(c), lit(0L)),
-      ck => ck.agg(coalesce(org.apache.spark.sql.functions.max(c), lit(0L))
-        .as("mv")).head().getLong(0))
-
-  /** The shared checkpoint-with-rider core: one aggregate `metric`
-    * rides the eager localCheckpoint job via observe(); `fallback`
-    * recomputes it with a second job over the checkpointed rows
-    * when the listener bus does not deliver.
-    */
-  private def ckAgg(frame: DataFrame, metric: Column,
-      fallback: DataFrame => Long): (DataFrame, Long) = {
-    ensureListener(frame.sparkSession)
+  def checkpoint(frame: DataFrame, metric: Column,
+      keepLayout: Boolean = false): (DataFrame, Long) = {
     ensureTaskListener(frame.sparkSession)
-    val name = s"graft_loop_${seq.incrementAndGet()}"
+    val value = coalesce(metric, lit(0L)).as("mv")
+    val obs = Observation(s"graft_loop_${seq.incrementAndGet()}")
     val t0 = System.nanoTime()
     val task0 = taskMsTotal.get()
-    // withMeasuredStats: swap the checkpoint's inherited size
-    // estimate (a product over the round's joins — compounds ~x8
-    // per round into astronomically large BigInts that hang the
-    // planner past ~12 rounds) for the BlockManager's measured size
-    val ck = org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
-      frame.observe(name, metric.as("mv"))
-        .localCheckpoint(true))
-    // degraded mode (no ride in SkipAfter tries): don't pay the full
-    // deadline every round for a bus that isn't delivering. The
-    // counter is JVM-global, so a transient GC/load streak anywhere
-    // would otherwise collapse the deadline for every later loop in
-    // the process with no way back (under load, deliveries beat
-    // 500 ms but not 25 ms) — every 32nd consecutive fallback
-    // re-probes at the full deadline so a recovered bus restores
-    // normal mode within a bounded number of rounds.
-    val fb = consecFallbacks.get()
-    val deadlineMs =
-      if (fb >= SkipAfter && fb % 32L != 0L) 25L else 500L
-    val n = awaitMetric(name, deadlineMs) match {
-      case Some(row) =>
-        rides.incrementAndGet(); consecFallbacks.set(0L); row.getLong(0)
-      case None => // listener raced or never fired: old second-job path
-        fallbacks.incrementAndGet(); consecFallbacks.incrementAndGet()
-        fallback(ck)
-    }
+    def materialize(): DataFrame =
+      org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
+        frame.observe(obs, value).localCheckpoint(true))
+    val ck =
+      if (keepLayout) noAdaptive(frame.sparkSession)(materialize())
+      else materialize()
+    val n =
+      try {
+        val row = Await.result(obs.future, RiderWait)
+        rides.incrementAndGet()
+        row.getLong(0)
+      } catch {
+        case _: TimeoutException =>
+          fallbacks.incrementAndGet()
+          secondJob(ck, metric)
+      }
     ckWallNs.get().addAndGet(System.nanoTime() - t0)
     ckTaskMs.get().addAndGet(math.max(0L, taskMsTotal.get() - task0))
     (ck, n)
   }
 
-  /** Eagerly checkpoint `frame` and report whether it is empty,
-    * measured on the checkpoint job itself.
+  /** The fallback: `metric` recomputed by a second job over the
+    * checkpointed rows. */
+  private[graft] def secondJob(ck: DataFrame, metric: Column): Long =
+    ck.agg(coalesce(metric, lit(0L))).head().getLong(0)
+
+  /** Iterate `round` from `init` to a fixpoint. `init` is
+    * checkpointed first (its row count rides that job); each round
+    * then checkpoints `round(state)` with `metric` riding the same
+    * job, releases the superseded state, appends (round, metric) to
+    * the curve, projects the checkpoint back to `init`'s columns
+    * (round-only columns such as a moved flag drop here) and hands
+    * that to `probe`. The loop stops at the first round where
+    * `done(previous, metric)` holds — `previous` is the prior
+    * round's metric, or the init's row count in round 1 (what a
+    * peel loop compares survivor counts against). Past `maxRounds`
+    * the live state is released and the loop fails loudly: the
+    * bound is a failure guard, never a stop rule. On success the
+    * round count is recorded as `LoopStats.recordLoop(name, rounds)`.
+    * Returns the final state and the curve (its length is the round
+    * count). The caller owns whatever `round` reads besides the
+    * state (edge persists, views) and must release it in a
+    * `finally` to stay leak-free on the guard path.
     */
-  def ckIsEmpty(frame: DataFrame): (DataFrame, Boolean) = {
-    val (ck, n) = ckCount(frame, lit(true))
-    (ck, n == 0L)
+  def fixpoint(name: String, init: DataFrame, metric: Column,
+      maxRounds: Int, keepLayout: Boolean = false,
+      done: (Long, Long) => Boolean = (_, m) => m == 0L,
+      probe: (Int, DataFrame) => Unit = (_, _) => ())(
+      round: DataFrame => DataFrame): (DataFrame, Seq[(Long, Long)]) = {
+    val cols = init.columns.toSeq.map(col)
+    var (state, prev) = checkpoint(init, count(lit(1)), keepLayout)
+    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var settled = false
+    while (!settled && curve.length < maxRounds) {
+      val (next, m) = checkpoint(round(state), metric, keepLayout)
+      Ck.release(state) // superseded round, fully consumed by `next`
+      settled = done(prev, m)
+      prev = m
+      curve += ((curve.length + 1L, m))
+      state = next.select(cols: _*)
+      probe(curve.length, state)
+    }
+    if (!settled) Ck.release(state)
+    require(settled, s"loop '$name' did not settle in $maxRounds rounds")
+    LoopStats.recordLoop(name, curve.length.toLong)
+    (state, curve.toSeq)
   }
 
   /** Attach a counting observe() rider to a LAZY frame and return it
-    * with a deferred reader. Unlike [[ckCount]] nothing materializes
-    * here: the metric surfaces when some LATER action executes the
-    * plan built on the returned frame, and `read()` then polls the
-    * listener side channel without running any job. A rider that
-    * never fired reads None and the caller records nothing — there
-    * is deliberately NO second-job fallback, because re-deriving an
-    * intermediate frame for a diagnostic count costs more than the
-    * count is worth (q205's candidate table is the query's largest
-    * intermediate; eagerly checkpointing it just to count it stored
-    * the whole thing in the BlockManager).
+    * with a deferred reader. Unlike [[checkpoint]] nothing
+    * materializes here: the metric surfaces when some LATER action
+    * executes the plan built on the returned frame, and `read()` then
+    * waits up to [[RiderWait]] for the observation without running
+    * any job. A rider that never fired reads None and the caller
+    * records nothing — there is deliberately NO second-job fallback,
+    * because re-deriving an intermediate frame for a diagnostic count
+    * costs more than the count is worth (q205's candidate table is
+    * the query's largest intermediate; eagerly checkpointing it just
+    * to count it stored the whole thing in the BlockManager).
     */
   def riderCount(frame: DataFrame): (DataFrame, () => Option[Long]) = {
-    ensureListener(frame.sparkSession)
-    val name = s"graft_loop_${seq.incrementAndGet()}"
-    val obs = frame.observe(name, count(lit(1)).as("n"))
-    (obs, () => awaitMetric(name).map(_.getLong(0)))
+    val obs = Observation(s"graft_loop_${seq.incrementAndGet()}")
+    val observed = frame.observe(obs, count(lit(1)).as("n"))
+    (observed, () =>
+      try Some(Await.result(obs.future, RiderWait).getLong(0))
+      catch { case _: TimeoutException => None })
   }
 }

@@ -42,7 +42,7 @@ object LoopStats {
   /** Snapshot and clear — the bench calls this after each query's
     * runs, so counts never leak across queries. Also resets the
     * CALLING THREAD's Loop time accumulators so an un-drained loop
-    * (or a stray ckCount outside any recordLoop scope) cannot bleed
+    * (or a stray Loop.checkpoint outside any recordLoop scope) cannot bleed
     * cost into the next query's first recorded loop. The time
     * accumulators are ThreadLocal, so this reset only covers
     * harnesses that run queries and drain on the SAME thread (all

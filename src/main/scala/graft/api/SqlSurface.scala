@@ -339,9 +339,7 @@ object SqlSurface {
     try {
       und.select(col("a").as("src"), col("b").as("dst"))
         .createOrReplaceTempView("cc_und")
-      val init = org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
-        s.sql(ccCanonSql).localCheckpoint(true))
-      ccCoreSql(s, init, maxRounds, probe)
+      ccCoreSql(s, s.sql(ccCanonSql), "cc", maxRounds, probe)
     } finally {
       s.catalog.dropTempView("cc_und")
       s.catalog.dropTempView("cc_edges")
@@ -350,34 +348,20 @@ object SqlSurface {
 
   /** The shared SQL-driven two-phase fixpoint: alternations of
     * [[ccRoundSql]] over the per-round `cc_edges` view from a
-    * caller-CHECKPOINTED canonical (a, b) init (round 1 releases it
-    * when superseded) — same round hygiene as
-    * ops.connectedComponents (per-round localCheckpoint flat
-    * lineage, stop check riding the checkpoint job, loud
-    * bounded-round guard), final labels read back with
-    * [[ccFinalSql]]. The caller owns the `cc_edges` drop.
+    * canonical (a, b) `init`, driven by graft.Loop.fixpoint (the
+    * round hygiene of ops.connectedComponents), final labels read
+    * back with [[ccFinalSql]]. The caller owns the `cc_edges` drop.
     */
-  private def ccCoreSql(s: SparkSession, init: DataFrame, maxRounds: Int,
-      probe: (Int, DataFrame) => Unit): (DataFrame, Seq[(Long, Long)]) = {
-    var e = init
-    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
+  private def ccCoreSql(s: SparkSession, init: DataFrame, loop: String,
+      maxRounds: Int, probe: (Int, DataFrame) => Unit)
+    : (DataFrame, Seq[(Long, Long)]) = {
+    val (e, curve) = graft.Loop.fixpoint(loop, init, count_if(col("chg")),
+        maxRounds, probe = probe) { e =>
       e.createOrReplaceTempView("cc_edges")
-      // stop check rides the checkpoint job, as in ops.star2Core
-      val (next, mv) = graft.Loop.ckCount(s.sql(ccRoundSql), col("chg"))
-      converged = mv == 0L
-      curve += ((rounds.toLong, mv))
-      graft.Ck.release(e) // superseded alternation, fully consumed
-      e = next.select(col("a"), col("b"))
-      probe(rounds, e)
+      s.sql(ccRoundSql)
     }
-    if (!converged) graft.Ck.release(e)
-    require(converged, s"connected components did not converge in $maxRounds rounds")
     e.createOrReplaceTempView("cc_edges")
-    (s.sql(ccFinalSql), curve.toSeq)
+    (s.sql(ccFinalSql), curve)
   }
 
   // ----- q217: the warm-start cc loop, SQL-driven -------------------
@@ -466,9 +450,7 @@ object SqlSurface {
         require(s.sql(ccStaleSql).isEmpty,
           "ccWarmLoopSqlOn: a kept previous label names a node absent " +
             "from the new edge set — deletedEdges under-reports the changelog")
-        val init = org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
-          s.sql(ccWarmInitSql).localCheckpoint(true))
-        ccCoreSql(s, init, maxRounds, (_, _) => ())
+        ccCoreSql(s, s.sql(ccWarmInitSql), "cc_warm", maxRounds, (_, _) => ())
       } finally canon.unpersist(blocking = false)
     } finally {
       Seq("cc_und", "cc_prev", "cc_dels", "cc_aff", "cc_canon", "cc_le",
@@ -1006,31 +988,19 @@ object SqlSurface {
     try {
       edeg.createOrReplaceTempView("pr_edeg")
       val eps = nodes.count() * Curation.EpsPerNode
-      // id-partitioned init (r16), same as prIterate's — keeps the
-      // SQL-driven round plan-equal to the co-partitioned DataFrame
-      // round (the checkpoint carries hash(id) into every round)
-      var pr = Curation.prIterateInitCk(
-        nodes.select(col("id"), lit(1000000000L).as("pr")),
-        edeg.rdd.getNumPartitions)
-      val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      var round = 0
-      var converged = false
-      while (!converged && round < Curation.MaxPrRounds) {
-        round += 1
+      // id-partitioned init (r16) and layout-keeping checkpoints, as
+      // in prIterate — keeps the SQL-driven round plan-equal to the
+      // co-partitioned DataFrame round (the checkpoint carries hash(id)
+      // into every round)
+      val (pr, curve) = graft.Loop.fixpoint("pr",
+          Curation.prInit(nodes.select(col("id"), lit(1000000000L).as("pr")),
+            edeg.rdd.getNumPartitions),
+          sum(col("mv")), Curation.MaxPrRounds, keepLayout = true,
+          done = (_, mv) => mv <= eps) { pr =>
         pr.createOrReplaceTempView("pr_ranks")
-        // movement rides the checkpoint job, layout preserved
-        // (graft.Loop.ckSumPartitioned) — same one-job-per-round +
-        // exchange-free-steady-round discipline as prIterate
-        val (next, mv) =
-          graft.Loop.ckSumPartitioned(s.sql(prRoundSql), col("mv"))
-        graft.Ck.release(pr) // superseded round, fully consumed
-        curve += ((round.toLong, mv))
-        converged = mv <= eps
-        pr = next.select(col("id"), col("pr"))
+        s.sql(prRoundSql)
       }
-      require(converged,
-        s"pagerank did not converge in ${Curation.MaxPrRounds} rounds")
-      (pr, curve.toSeq, round)
+      (pr, curve, curve.length)
     } finally {
       edeg.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
@@ -1073,30 +1043,16 @@ object SqlSurface {
       .persist(MEMORY_AND_DISK)
     try {
       nbrs.createOrReplaceTempView("kc_nbrs")
-      var alive = s.sql("SELECT DISTINCT node FROM kc_nbrs")
-        .localCheckpoint(true)
-      var aliveCnt = alive.count()
-      var rounds = 0
-      var stable = false
-      while (!stable && rounds < maxRounds) {
-        rounds += 1
+      val (alive, curve) = graft.Loop.fixpoint("kcore",
+          s.sql("SELECT DISTINCT node FROM kc_nbrs"), count(lit(1)), maxRounds,
+          done = (before, kept) => kept == before) { alive =>
         alive.createOrReplaceTempView("kc_alive")
-        val kept = s.sql(s"SELECT node FROM ($kcInducedSql) WHERE deg >= $k")
-          .localCheckpoint(true)
-        val keptCnt = kept.count()
-        stable = keptCnt == aliveCnt
-        graft.Ck.release(alive) // superseded survivor set
-        alive = kept
-        aliveCnt = keptCnt
+        s.sql(s"SELECT node FROM ($kcInducedSql) WHERE deg >= $k")
       }
-      val coreDeg =
-        if (stable) Some {
-          alive.createOrReplaceTempView("kc_alive")
-          s.sql(kcInducedSql).localCheckpoint(true)
-        } else None
-      graft.Ck.release(alive) // coreDeg (if any) is materialized off it
-      require(stable, s"k-core peel did not stabilize in $maxRounds rounds")
-      (coreDeg.get, rounds)
+      alive.createOrReplaceTempView("kc_alive")
+      val coreDeg = s.sql(kcInducedSql).localCheckpoint(true)
+      graft.Ck.release(alive) // coreDeg is materialized off it
+      (coreDeg, curve.length)
     } finally {
       nbrs.unpersist(blocking = false)
       s.catalog.dropTempView("kc_nbrs")
@@ -1292,9 +1248,8 @@ object SqlSurface {
     // eager checkpoints exist (e.g. the cc fixpoint's maxRounds
     // require fires), they must not leak for the session (round-12
     // advice). Ck.release is idempotent, so the success path's
-    // releases and the finally's overlap harmlessly. `init` itself
-    // is owned by ccCoreSql (consumed as round state and released
-    // there on both exits); `lbl` walks to the fixpoint's final
+    // releases and the finally's overlap harmlessly. The cc init
+    // is checkpointed and released by the fixpoint on both exits; `lbl` walks to the fixpoint's final
     // checkpoint.
     var pairs: org.apache.spark.sql.DataFrame = null
     var lbl: org.apache.spark.sql.DataFrame = null
@@ -1303,10 +1258,8 @@ object SqlSurface {
       pairs = org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
         s.sql(semDedupPairsSql).localCheckpoint(true))
       pairs.createOrReplaceTempView("sem_pairs")
-      val init = org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
-        s.sql("SELECT __i AS a, __j AS b FROM sem_pairs")
-          .localCheckpoint(true))
-      val (lblRaw, _) = ccCoreSql(s, init, 50, (_, _) => ())
+      val (lblRaw, _) = ccCoreSql(s,
+        s.sql("SELECT __i AS a, __j AS b FROM sem_pairs"), "cc", 50, (_, _) => ())
       lbl = lblRaw.select(col("node").as("id"), col("lbl").as("component"))
       lbl.createOrReplaceTempView("sem_lbl")
       val census = s.sql(
@@ -1448,12 +1401,13 @@ object SqlSurface {
           trimGuard += 1
           cur.createOrReplaceTempView("scc_cur")
           val (keep, keepCnt) =
-            graft.Loop.ckCount(s.sql(sccTrimKeepSql), lit(true))
+            graft.Loop.checkpoint(s.sql(sccTrimKeepSql), count(lit(1)))
           curCnt = keepCnt
           keep.createOrReplaceTempView("scc_keep")
-          val (removed, rEmpty) = graft.Loop.ckIsEmpty(s.sql(
-            "SELECT id, id AS scc FROM scc_cur LEFT ANTI JOIN scc_keep USING (id)"))
-          trimming = !rEmpty
+          val (removed, nRemoved) = graft.Loop.checkpoint(s.sql(
+            "SELECT id, id AS scc FROM scc_cur LEFT ANTI JOIN scc_keep USING (id)"),
+            count(lit(1)))
+          trimming = nRemoved > 0L
           if (trimming) {
             val na = assigned.unionByName(removed).localCheckpoint(true)
             graft.Ck.release(assigned)
@@ -1475,8 +1429,8 @@ object SqlSurface {
           while (!stable && colGuard < 100) {
             colGuard += 1
             color.createOrReplaceTempView("scc_color")
-            val (next, mvC) = graft.Loop.ckCount(s.sql(sccColorRoundSql),
-              col("clr") =!= col("old"))
+            val (next, mvC) = graft.Loop.checkpoint(s.sql(sccColorRoundSql),
+              count_if(col("clr") =!= col("old")))
             stable = mvC == 0L
             graft.Ck.release(color)
             color = next.select(col("id"), col("ord"), col("clr"))
@@ -1502,10 +1456,10 @@ object SqlSurface {
             bwGuard += 1
             members.createOrReplaceTempView("scc_members")
             val grown = s.sql(sccCollectGrowSql)
-            val (grow, nNew) = graft.Loop.ckCount(
+            val (grow, nNew) = graft.Loop.checkpoint(
               if (bailedClr == null) grown
               else grown.join(broadcast(bailedClr), Seq("clr"), "left_anti"),
-              lit(true))
+              count(lit(1)))
             growing = nNew > 0L
             hist += nNew
             if (growing) {
@@ -1529,8 +1483,8 @@ object SqlSurface {
                   .groupBy(col("clr")).agg(count(lit(1)).as("rem"))
                 val rateC = grow.groupBy(col("clr"))
                   .agg(count(lit(1)).as("rate"))
-                val (cls, _) = graft.Loop.ckCount(
-                  remC.join(rateC, Seq("clr")), lit(true))
+                val (cls, _) = graft.Loop.checkpoint(
+                  remC.join(rateC, Seq("clr")), count(lit(1)))
                 val tot = cls.agg(
                   coalesce(sum(col("rem")), lit(0L)).as("r"),
                   coalesce(sum(col("rate")), lit(0L)).as("g")).head()
@@ -1538,10 +1492,10 @@ object SqlSurface {
                 if (tot.getLong(0) > budget * tot.getLong(1)) {
                   // 4x per-class margin — see Mining.sccAssign's
                   // probe comment; the freeze set can be empty
-                  val (hopeless, nHopeless) = graft.Loop.ckCount(
+                  val (hopeless, nHopeless) = graft.Loop.checkpoint(
                     cls.filter(col("rem") > lit(4L * budget) * col("rate"))
                       .select(col("clr")),
-                    lit(true))
+                    count(lit(1)))
                   if (nHopeless > 0L) {
                     val nb =
                       if (bailedClr == null) hopeless
@@ -1600,8 +1554,8 @@ object SqlSurface {
             while (!bstable && bwGuard < oneStepBudget + 100) {
               bwGuard += 1
               back.createOrReplaceTempView("scc_back")
-              val (next, mvB) = graft.Loop.ckCount(s.sql(sccBackRoundSql),
-                col("b") =!= col("old"))
+              val (next, mvB) = graft.Loop.checkpoint(s.sql(sccBackRoundSql),
+                count_if(col("b") =!= col("old")))
               bstable = mvB == 0L
               graft.Ck.release(back)
               back = next.select(col("id"), col("ord"), col("b"))
@@ -1637,15 +1591,16 @@ object SqlSurface {
           graft.Ck.release(assigned)
           graft.Ck.release(roundA)
           assigned = na
-          val (nextActive, naEmpty) = graft.Loop.ckIsEmpty(s.sql(
-            "SELECT id FROM scc_cur LEFT ANTI JOIN scc_members USING (id)"))
+          val (nextActive, naCnt) = graft.Loop.checkpoint(s.sql(
+            "SELECT id FROM scc_cur LEFT ANTI JOIN scc_members USING (id)"),
+            count(lit(1)))
           graft.Ck.release(members)
           graft.Ck.release(color)
           if (cur ne active) graft.Ck.release(cur)
           ce.unpersist(blocking = false)
           graft.Ck.release(active)
           active = nextActive
-          done = naEmpty
+          done = naCnt == 0L
         } else {
           if (cur ne active) { graft.Ck.release(active); active = cur }
         }

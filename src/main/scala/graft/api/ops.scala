@@ -1452,7 +1452,7 @@ object ops {
       maxRounds: Int = 50,
       probe: (Int, DataFrame) => Unit = (_, _) => ())
     : (DataFrame, Seq[(Long, Long)]) =
-    star2Core(ccCanon(edges, src, dst).distinct(), maxRounds, probe)
+    star2Core(ccCanon(edges, src, dst).distinct(), "cc", maxRounds, probe)
 
   /** WARM-START / INCREMENTAL connected components (q217's
     * parameterized form — q178's CDC discipline applied to cc, the
@@ -1520,7 +1520,7 @@ object ops {
         "incrementalConnectedComponents: a kept previous label names a node " +
           "absent from the new edge set — deletedEdges under-reports the " +
           "changelog (every edge removed since prevLabels' graph must be listed)")
-      star2Core(canon.unionByName(le).distinct(), maxRounds, probe)
+      star2Core(canon.unionByName(le).distinct(), "cc_warm", maxRounds, probe)
     } finally canon.unpersist(blocking = false)
   }
 
@@ -1618,41 +1618,25 @@ object ops {
 
   /** The two-phase fixpoint over a caller-built canonical edge plan
     * (cold: the deduplicated canon projection; warm: canon unioned
-    * with the kept-label shortcut edges). Checkpoints the init with
-    * measured stats (the warm init is a multi-join plan whose
-    * inherited size estimate is the joins' product; round 1 must
-    * plan from the real edge count), re-checkpoints each
-    * alternation's output with the changed-edge count riding the
-    * same job, releases each superseded round, and reads the final
-    * star forest back as (id, component): leaves carry their center,
-    * centers carry themselves (distinct over the small center set).
+    * with the kept-label shortcut edges), driven by graft.Loop.fixpoint:
+    * the init checkpoint carries measured stats (the warm init is a
+    * multi-join plan whose inherited size estimate is the joins'
+    * product; round 1 must plan from the real edge count), and each
+    * alternation's changed-edge count rides its checkpoint job. The
+    * final star forest reads back as (id, component): leaves carry
+    * their center, centers carry themselves (distinct over the small
+    * center set). Rounds are recorded under `loop` ("cc" cold,
+    * "cc_warm" warm).
     */
-  private def star2Core(e0: DataFrame, maxRounds: Int,
+  private def star2Core(e0: DataFrame, loop: String, maxRounds: Int,
       probe: (Int, DataFrame) => Unit): (DataFrame, Seq[(Long, Long)]) = {
-    var e = org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
-      e0.localCheckpoint(true))
-    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      // stop check rides the checkpoint job (graft.Loop): one job per
-      // alternation answers both "materialize" and "did any edge change?"
-      val (next, mv) = graft.Loop.ckCount(star2Round(e), col("chg"))
-      converged = mv == 0L
-      curve += ((rounds.toLong, mv))
-      graft.Ck.release(e) // superseded alternation, fully consumed
-      e = next.select(col("a"), col("b"))
-      probe(rounds, e)
-    }
-    if (!converged) graft.Ck.release(e)
-    require(converged, s"connected components did not converge in $maxRounds rounds")
+    val (e, curve) = graft.Loop.fixpoint(loop, e0, count_if(col("chg")),
+      maxRounds, probe = probe)(star2Round)
     (e.select(col("b").as("id"), col("a").as("component"))
         .unionByName(
           e.select(col("a").as("id"), col("a").as("component")).distinct()),
-      curve.toSeq)
+      curve)
   }
-
 
   /** Register-sketch distinct-count estimate per group (q191's
     * parameterized form — the HyperLogLog shape): one 28-bit hash per
@@ -1833,11 +1817,12 @@ object ops {
       // two-anti-join shape paid one extra broadcast-build job per
       // hop — a per-hop floor cost on every sweep (q216 runs ~38
       // hops/query) — for identical semantics.
-      val (fresh, fEmpty) = graft.Loop.ckIsEmpty(
+      val (fresh, nFresh) = graft.Loop.checkpoint(
         nbrs.join(frontier, "__node")
           .select(col("__nbr").as("__node")).distinct()
-          .join(frontier.unionByName(prevNodes), Seq("__node"), "left_anti"))
-      exhausted = fEmpty
+          .join(frontier.unionByName(prevNodes), Seq("__node"), "left_anti"),
+        count(lit(1)))
+      exhausted = nFresh == 0L
       if (!exhausted) {
         levels ::= fresh
         withDist = withDist.unionByName(
@@ -1876,7 +1861,7 @@ object ops {
     * keyed by (node, seed)): the neighbor list is repartitioned by
     * node ONCE and every hop joins on it co-partitioned; each hop
     * checkpoints ONLY its fresh (node, seed, dist) pairs with the
-    * fresh-pair count riding the same job (graft.Loop.ckCount), and
+    * fresh-pair count riding the same job (graft.Loop.checkpoint), and
     * the level list IS the visited set — total materialized bytes
     * are O(pairs), not the accumulator shape's O(pairs × hops)
     * re-copy per hop (the r10 bfsDistances argument, measured here:
@@ -1929,7 +1914,7 @@ object ops {
       // anti-join per level: each broadcast build is its own AQE job,
       // and the probe read the two-anti-join shape at +15 jobs/run
       // (17 hops x one extra broadcast) for identical semantics.
-      val (fresh, nNew) = graft.Loop.ckCount(
+      val (fresh, nNew) = graft.Loop.checkpoint(
         nbrs.join(frontier, "__node")
           .groupBy(col("__nbr"), col("__seed"))
           .agg(min(col("__dist") + 1L).as("__dist"))
@@ -1937,7 +1922,7 @@ object ops {
           .join(frontier.select(col("__node"), col("__seed"))
               .unionByName(prevPairs.select(col("__node"), col("__seed"))),
             Seq("__node", "__seed"), "left_anti"),
-        lit(true))
+        count(lit(1)))
       exhausted = nNew == 0L
       if (!exhausted) {
         levels ::= fresh
@@ -2006,8 +1991,6 @@ object ops {
       .filter(col("__node") =!= col("__nbr"))
       .repartition(col("__node"))
       .persist(MEMORY_AND_DISK)
-    var alive = nbrs.select(col("__node")).distinct().localCheckpoint(true)
-    var aliveCnt = alive.count()
     // broadcastSurvivors is the documented fallback made callable: on
     // a graph whose NODE SET outgrows an executor, pass false and both
     // endpoint joins run co-partitioned on the (already repartitioned)
@@ -2018,32 +2001,20 @@ object ops {
       .join(hinted(core), "__node")
       .join(hinted(core.select(col("__node").as("__nbr"))), "__nbr")
       .groupBy(col("__node")).agg(count(lit(1)).as("__deg"))
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds) {
-      rounds += 1
-      // survivor count rides the checkpoint job (graft.Loop)
-      val (kept, keptCnt) = graft.Loop.ckCount(
-        induced(alive)
-          .filter(col("__deg") >= k).select(col("__node")),
-        lit(true))
-      stable = keptCnt == aliveCnt
-      graft.Ck.release(alive) // both endpoint joins materialized into kept
-      alive = kept
-      aliveCnt = keptCnt
-      probe(rounds, alive)
-    }
-    // materialize the final degrees only on success; release the edge
-    // persist BEFORE the loud guard so a guard hit leaks nothing
-    val coreDeg =
-      if (stable) Some(induced(alive)
+    // the survivor count rides each round's checkpoint job; a round
+    // is stable when it keeps every survivor of the previous one
+    try {
+      val (alive, curve) = graft.Loop.fixpoint("kcore",
+          nbrs.select(col("__node")).distinct(), count(lit(1)), maxRounds,
+          done = (before, kept) => kept == before, probe = probe) { alive =>
+        induced(alive).filter(col("__deg") >= k).select(col("__node"))
+      }
+      val coreDeg = induced(alive)
         .select(col("__node").as("id"), col("__deg").as("core_degree"))
-        .localCheckpoint(true))
-      else None
-    graft.Ck.release(alive) // coreDeg (if any) is materialized off it
-    nbrs.unpersist(blocking = false)
-    require(stable, s"k-core peel did not stabilize in $maxRounds rounds")
-    (coreDeg.get, rounds)
+        .localCheckpoint(true)
+      graft.Ck.release(alive) // coreDeg is materialized off it
+      (coreDeg, curve.length)
+    } finally nbrs.unpersist(blocking = false)
   }
 
   /** Newman-modularity sufficient statistics of a node partition
@@ -2209,7 +2180,6 @@ object ops {
     val pairs = semDedupPairs(av, tau).persist(MEMORY_AND_DISK)
     graft.Tables.touch(pairs)
     val (labels, rounds) = connectedComponents(pairs, "__i", "__j")
-    graft.LoopStats.recordLoop("semdedup_cc", rounds.toLong)
     val dup = labels.join(av.select(col("__id").as("id"), col("cell")), "id")
     val cellAll = av.groupBy(col("cell")).agg(
       count(lit(1)).as("n_vecs"), sum(col("__id")).as("__sid"))
@@ -2430,39 +2400,36 @@ object ops {
           when(better, struct(d2.as("d2"), lbl.as("lbl"))).otherwise(acc)
         }).getField("lbl")
     }
-    var prevAssign = base.select(col("__id"), col("__c0").as("cell"))
-      .localCheckpoint(true)
-    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var rounds = 0
-    var stopped = false
-    while (!stopped && rounds < maxRounds) {
-      rounds += 1
-      val assigned = base
-        .select(col("__id"), col("__e"), nearest(cells).as("cell"))
-        .persist(MEMORY_AND_DISK)
-      val newCells = centroidsOf(assigned, col("cell"))
-      val filled = cells.map { case (c, old) => c -> newCells.getOrElse(c, old) }
-      val moved = cells.toSeq.map { case (c, old) =>
-        old.zip(filled(c)).count { case (a, b) => a != b }.toLong
-      }.sum
-      val newAssign = assigned.select(col("__id"), col("cell"))
-        .localCheckpoint(true)
-      val reass = newAssign
-        .join(prevAssign.withColumnRenamed("cell", "__old"), "__id")
-        .filter(col("cell") =!= col("__old")).count()
-      assigned.unpersist(blocking = false)
-      // round r-1's assignment is fully consumed (the reassignment
-      // join above was its last reader): release its blocks
-      graft.Ck.release(prevAssign)
-      curve += ((rounds.toLong, moved, reass))
-      cells = filled
-      prevAssign = newAssign
-      stopped = reass * 100L <= n * stopReassignPct
+    // per round: the driver-held centroids move on one collect, and
+    // the (id, cell) assignment is checkpointed joined to the previous
+    // one, so the reassignment count rides that same job
+    val moves = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var assigned: DataFrame = null
+    try {
+      val (last, reassigned) = graft.Loop.fixpoint("kmeans",
+          base.select(col("__id"), col("__c0").as("cell")),
+          count_if(col("cell") =!= col("__old")), maxRounds,
+          done = (_, reass) => reass * 100L <= n * stopReassignPct) { prev =>
+        // the previous round's assignment was its checkpoint's last reader
+        if (assigned != null) assigned.unpersist(blocking = false)
+        assigned = base
+          .select(col("__id"), col("__e"), nearest(cells).as("cell"))
+          .persist(MEMORY_AND_DISK)
+        val newCells = centroidsOf(assigned, col("cell"))
+        val filled = cells.map { case (c, old) => c -> newCells.getOrElse(c, old) }
+        moves += cells.toSeq.map { case (c, old) =>
+          old.zip(filled(c)).count { case (a, b) => a != b }.toLong
+        }.sum
+        cells = filled
+        assigned.select(col("__id"), col("cell"))
+          .join(prev.withColumnRenamed("cell", "__old"), "__id")
+      }
+      (last.select(col("__id").as(id), col("cell")),
+        reassigned.zip(moves).map { case ((r, re), mv) => (r, mv, re) })
+    } finally {
+      if (assigned != null) assigned.unpersist(blocking = false)
+      base.unpersist(blocking = false)
     }
-    base.unpersist(blocking = false)
-    require(stopped,
-      s"k-means did not reach the reassignment threshold in $maxRounds rounds")
-    (prevAssign.select(col("__id").as(id), col("cell")), curve.toSeq)
   }
 
   /** Write-side 2-D clustering (q166's layout op): quantize two
@@ -2660,10 +2627,11 @@ object ops {
     val edeg = e.join(
         e.groupBy(col("__src")).agg(count(lit(1)).as("__outdeg")), "__src")
       .persist(MEMORY_AND_DISK)
-    val nodes = e.select(col("__src").as("id"))
-      .unionByName(e.select(col("__dst").as("id")))
-      .distinct().localCheckpoint(true)
-    val nNodes = nodes.count()
+    // the node count rides the node set's checkpoint job
+    val (nodes, nNodes) = graft.Loop.checkpoint(
+      e.select(col("__src").as("id"))
+        .unionByName(e.select(col("__dst").as("id"))).distinct(),
+      count(lit(1)))
     val eps = nNodes * epsPerNode
     // personalizeTo (q186's shape): the 15% teleport mass lands only
     // on the seed predicate's nodes — rank becomes seed proximity.
@@ -2689,39 +2657,28 @@ object ops {
         nodes.select(col("id"),
           when(isSeed(col("id")), lit(ip)).otherwise(lit(0L)).as("pr"))
     }
-    var pr = init.map(_.select(col("id"), col("pr")))
-      .getOrElse(defaultInit)
-      .localCheckpoint(true)
-    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      round += 1
-      val contrib = edeg
-        .join(broadcast(pr), col("__src") === col("id"))
-        .select(col("__dst"), expr("pr div __outdeg").as("__c"))
-        .groupBy(col("__dst")).agg(sum(col("__c")).as("__sc"))
-      val next = pr.select(col("id"), col("pr").as("__old"))
-        .join(contrib, col("id") === col("__dst"), "left")
-        .select(col("id"),
-          (tpOf(col("id")) +
-            expr("(85L * coalesce(__sc, 0L)) div 100L")).as("pr"),
-          col("__old"))
-        .select(col("id"), col("pr"), abs(col("pr") - col("__old")).as("__mv"))
-        .localCheckpoint(true) // one materialization: movement + next round
-      val mv = next.agg(sum(col("__mv"))).head().getLong(0)
-      // round r-1's checkpoint is fully consumed (contribution join +
-      // movement both materialized into `next`): release its blocks
-      graft.Ck.release(pr)
-      curve += ((round.toLong, mv))
-      converged = mv <= eps
-      pr = next.select(col("id"), col("pr"))
-      probe(round, pr)
-    }
-    edeg.unpersist(blocking = false) // release before the loud guard
-    if (!converged) graft.Ck.release(pr)
-    require(converged, s"pagerank did not converge in $maxRounds rounds")
-    (pr, curve.toSeq, round)
+    // Σ|Δpr| rides each round's checkpoint job (graft.Loop.fixpoint)
+    val (pr, curve) =
+      try graft.Loop.fixpoint("pr",
+          init.map(_.select(col("id"), col("pr"))).getOrElse(defaultInit),
+          sum(col("__mv")), maxRounds, done = (_, mv) => mv <= eps,
+          probe = probe) { pr =>
+        val contrib = edeg
+          .join(broadcast(pr), col("__src") === col("id"))
+          .select(col("__dst"), expr("pr div __outdeg").as("__c"))
+          .groupBy(col("__dst")).agg(sum(col("__c")).as("__sc"))
+        pr.select(col("id"), col("pr").as("__old"))
+          .join(contrib, col("id") === col("__dst"), "left")
+          .select(col("id"),
+            (tpOf(col("id")) +
+              expr("(85L * coalesce(__sc, 0L)) div 100L")).as("pr"),
+            col("__old"))
+          .select(col("id"), col("pr"), abs(col("pr") - col("__old")).as("__mv"))
+      } finally {
+        edeg.unpersist(blocking = false)
+        graft.Ck.release(nodes) // the init checkpoint was its last reader
+      }
+    (pr, curve, curve.length)
   }
 
   /** Offline CUSUM changepoint locator (q194's parameterized form):
@@ -3002,8 +2959,7 @@ object ops {
       .distinct()
       .persist(MEMORY_AND_DISK)
     graft.Tables.touch(und)
-    val (cc, ccRounds) = connectedComponents(und, "a", "b")
-    graft.LoopStats.recordLoop("cc", ccRounds.toLong)
+    val (cc, _) = connectedComponents(und, "a", "b")
     val topRows = cc.groupBy(col("component")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("component")).limit(1).collect()
     // loud empty-graph guard: an edge frame of only self-loops (or

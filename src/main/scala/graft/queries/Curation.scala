@@ -290,12 +290,13 @@ object Curation {
     val edeg = withOutdeg(edges, graft.Loop.statePartitions(edges))
       .persist(MEMORY_AND_DISK)
     touch(edeg)
-    var pr = prIterateInitCk(
-      nodesRaw.select(col("id"), lit(1000000000L).as("pr")),
-      edeg.rdd.getNumPartitions)
+    var (pr, _) = graft.Loop.checkpoint(
+      prInit(nodesRaw.select(col("id"), lit(1000000000L).as("pr")),
+        edeg.rdd.getNumPartitions), count(lit(1)), keepLayout = true)
     for (_ <- 1 to 3) {
-      val next = graft.Loop.ckPartitioned(
-        prRound(edeg, pr).select(col("id"), col("pr")))
+      val (next, _) = graft.Loop.checkpoint(
+        prRound(edeg, pr).select(col("id"), col("pr")), count(lit(1)),
+        keepLayout = true)
       graft.Ck.release(pr) // superseded round, fully consumed
       pr = next
     }
@@ -354,16 +355,12 @@ object Curation {
     val nNodes = nodes.count() // eager persist + the eps denominator
     val eps = nNodes * EpsPerNode
     val init = nodes.select(col("id"), lit(1000000000L).as("pr"))
-    val (pr, curve, converged) =
-      prIterate(edeg, init, eps, MaxPrRounds, probe)
-    // Unpersist BEFORE the guard so the MEMORY_AND_DISK blocks are
-    // released even when the loop fails loudly (ops.bfsDistances order).
-    edeg.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    if (!converged) graft.Ck.release(pr) // nothing consumes it past the guard
-    require(converged, s"pagerank did not converge in $MaxPrRounds rounds")
-    graft.LoopStats.recordLoop("pr", curve.length.toLong)
-    (pr, curve)
+    // the persists are released on the guard path too (finally)
+    try prIterate("pr", edeg, init, eps, MaxPrRounds, probe)
+    finally {
+      edeg.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
+    }
   }
 
   /** The base link graph q79/q175/q178 iterate over: the source
@@ -405,12 +402,6 @@ object Curation {
       .select(col("src"), col("dst"), col("outdeg"))
       .repartition(parts, col("dst"))
 
-  /** The integer PageRank loop from a caller-supplied init rank
-    * vector — the core shared by the cold start (q175, uniform init)
-    * and the warm start (q178, previous-fixpoint init). The caller
-    * owns edeg's persist; returns `converged` instead of requiring,
-    * so callers release persists before failing loudly.
-    */
   /** One integer-PageRank round over the (src, dst, outdeg) edge
     * frame and a (id, pr) rank vector: broadcast-rank contribution
     * exchange + node-sized left join. Factored out of [[prIterate]]
@@ -437,7 +428,7 @@ object Curation {
         abs(col("pr") - col("old")).as("mv"))
   }
 
-  /** The loop's rank-state init checkpoint, hash-partitioned on `id`
+  /** The loop's rank-state init, hash-partitioned on `id`
     * once (r16): the round's node-sized left join keys pr.id =
     * contrib.dst; with edeg laid out on `dst` (withOutdeg) the
     * aggregated contributions arrive `dst`-partitioned and the
@@ -452,37 +443,25 @@ object Curation {
     * Shared with graft.Explain's `loop:pr_round` so the committed
     * plan evidence prints the real steady-round shape.
     */
-  private[graft] def prIterateInitCk(init: DataFrame, parts: Int): DataFrame =
-    graft.Loop.ckPartitioned(
-      init.select(col("id"), col("pr")).repartition(parts, col("id")))
+  private[graft] def prInit(init: DataFrame, parts: Int): DataFrame =
+    init.select(col("id"), col("pr")).repartition(parts, col("id"))
 
-  private def prIterate(edeg: DataFrame, init: DataFrame, eps: Long,
-      maxRounds: Int, probe: (Int, DataFrame) => Unit = (_, _) => (),
+  /** The integer PageRank loop from a caller-supplied init rank
+    * vector — the core shared by the cold start (q175, uniform init)
+    * and the warm start (q178, previous-fixpoint init), its rounds
+    * recorded under `loop`. The caller owns edeg's persist and
+    * releases it in a `finally`: the guard throws.
+    */
+  private def prIterate(loop: String, edeg: DataFrame, init: DataFrame,
+      eps: Long, maxRounds: Int, probe: (Int, DataFrame) => Unit = (_, _) => (),
       roundFn: (DataFrame, DataFrame) => DataFrame = prRound)
-    : (DataFrame, Seq[(Long, Long)], Boolean) = {
-    var pr = prIterateInitCk(init, edeg.rdd.getNumPartitions)
-    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      round += 1
-      // the movement scalar Σ|Δpr| rides the round's checkpoint job
-      // (graft.Loop.ckSum — one job per round, not two) and the
-      // checkpoint carries MEASURED size statistics like every other
-      // loop's (the pr frame appears twice in the round body, so
-      // inherited product stats would compound across rounds)
-      val (next, mv) = graft.Loop.ckSumPartitioned(roundFn(edeg, pr), col("mv"))
-      // round r-1's checkpoint is fully consumed (contribution join +
-      // movement both materialized into `next`): release its blocks
-      // now — Ck.scala's leak rationale
-      graft.Ck.release(pr)
-      curve += ((round.toLong, mv))
-      converged = mv <= eps
-      pr = next.select(col("id"), col("pr"))
-      probe(round, pr)
-    }
-    (pr, curve.toSeq, converged)
-  }
+    : (DataFrame, Seq[(Long, Long)]) =
+    // the movement scalar Σ|Δpr| rides each round's checkpoint job,
+    // and the checkpoints keep the id layout (keepLayout) so the
+    // steady round plans exchange-free
+    graft.Loop.fixpoint(loop, prInit(init, edeg.rdd.getNumPartitions),
+      sum(col("mv")), maxRounds, keepLayout = true,
+      done = (_, mv) => mv <= eps, probe = probe)(roundFn(edeg, _))
 
   def q175PagerankConverge(s: SparkSession, dir: String): DataFrame = {
     val sess = s
@@ -615,14 +594,11 @@ object Curation {
     val init = nodes.select(col("id"),
       when(col("id") % 97L === 0L, lit(initPerSeed)).otherwise(lit(0L))
         .as("pr"))
-    val (pr, curve, converged) =
-      prIterate(edeg, init, eps, MaxPrRounds, probe, pprRound(tpPerSeed))
-    edeg.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    if (!converged) graft.Ck.release(pr)
-    require(converged, s"personalized pagerank did not converge in $MaxPrRounds rounds")
-    graft.LoopStats.recordLoop("ppr", curve.length.toLong)
-    (pr, curve)
+    try prIterate("ppr", edeg, init, eps, MaxPrRounds, probe, pprRound(tpPerSeed))
+    finally {
+      edeg.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
+    }
   }
 
   def q186PersonalizedPr(s: SparkSession, dir: String): DataFrame = {
@@ -740,16 +716,11 @@ object Curation {
       .persist(MEMORY_AND_DISK)
     touch(edeg0)
     val uniform = nodes.select(col("id"), lit(1000000000L).as("pr"))
-    val (pr0, curve0, conv0) =
-      prIterate(edeg0, uniform, eps, MaxPrRounds)
-    edeg0.unpersist(blocking = false)
-    // release nodes too if the guard is about to fire (it outlives
-    // the guard only on the success path, for the warm phase)
-    if (!conv0) { nodes.unpersist(blocking = false); graft.Ck.release(pr0) }
-    require(conv0, s"base pagerank did not converge in $MaxPrRounds rounds")
-    // recorded here (not with pr_warm below) so each phase's
-    // recordLoop drains ITS OWN checkpoint-cost window
-    graft.LoopStats.recordLoop("pr_base", curve0.length.toLong)
+    // nodes outlives the base phase only on its success path
+    val (pr0, curve0) =
+      try prIterate("pr_base", edeg0, uniform, eps, MaxPrRounds)
+      catch { case t: Throwable => nodes.unpersist(blocking = false); throw t }
+      finally edeg0.unpersist(blocking = false)
     // CDC changelog, q77's (op, key...) row shape: deterministic
     // deletes (a ~0.1% residue class of the base edges) +
     // deterministic inserts (a second derived edge family from a
@@ -780,16 +751,15 @@ object Curation {
     val edeg1 = withOutdeg(edges1, graft.Loop.statePartitions(edges1))
       .persist(MEMORY_AND_DISK)
     touch(edeg1)
-    val (pr1, curve1, conv1) =
-      prIterate(edeg1, pr0, eps, MaxWarmRounds)
-    edeg1.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    // the cold fixpoint is consumed (prIterate checkpointed its own
-    // copy of the warm init in its first action): release its blocks
-    graft.Ck.release(pr0)
-    if (!conv1) graft.Ck.release(pr1)
-    require(conv1, s"warm pagerank did not converge in $MaxWarmRounds rounds")
-    graft.LoopStats.recordLoop("pr_warm", curve1.length.toLong)
+    // the cold fixpoint is consumed once prIterate checkpointed its
+    // own copy of the warm init: release its blocks either way
+    val (pr1, curve1) =
+      try prIterate("pr_warm", edeg1, pr0, eps, MaxWarmRounds)
+      finally {
+        edeg1.unpersist(blocking = false)
+        nodes.unpersist(blocking = false)
+        graft.Ck.release(pr0)
+      }
     (pr1, curve0, curve1, edges1, nodes, eps)
   }
 
@@ -803,11 +773,10 @@ object Curation {
       .persist(MEMORY_AND_DISK)
     touch(edeg)
     val uniform = nodes.select(col("id"), lit(1000000000L).as("pr"))
-    val (prF, curve, converged) =
-      prIterate(edeg, uniform, eps, MaxPrRounds)
-    edeg.unpersist(blocking = false)
+    val (prF, curve) =
+      try prIterate("pr_cold", edeg, uniform, eps, MaxPrRounds)
+      finally edeg.unpersist(blocking = false)
     graft.Ck.release(prF) // only the round count is used here
-    require(converged, s"cold pagerank did not converge in $MaxPrRounds rounds")
     curve.length
   }
 
@@ -1557,7 +1526,7 @@ object Curation {
     * frame — the body the SQL twin (SqlSurface.hitsNormSql) is
     * plan-equal-pinned against. The production loop ([[hitsScores]])
     * fuses this step away: max(raw) rides the raw checkpoint job
-    * (Loop.ckMax) and the renormalize stays lazy over it, so this
+    * (Loop.checkpoint) and the renormalize stays lazy over it, so this
     * self-join shape survives as the SQL surface's (a SQL text has
     * no accumulator rider) and the documentation of the arithmetic;
     * q196HitsSql's row-equal output pin keeps the two honest.
@@ -1600,7 +1569,7 @@ object Curation {
     // one half-step = ONE checkpoint job (the q172 accumulator-twin
     // treatment, commit 99ab329): raw = Σ over `key`-incident edges
     // of the other role's score is checkpointed with max(raw) riding
-    // the SAME job (Loop.ckMax), and the integer renormalize stays
+    // the SAME job (Loop.checkpoint), and the integer renormalize stays
     // LAZY over that checkpoint — the next half-step's broadcast of
     // the scores materializes it once. The old shape paid a raw
     // checkpoint + a broadcast-max job + a normed checkpoint per
@@ -1611,20 +1580,21 @@ object Curation {
     def halfStep(scores: DataFrame, key: String, out: String): DataFrame = {
       // the out-keyed orientation feeds the groupBy(out) exchange-free
       val oriented = if (out == "dst") eByDst else eBySrc
-      val (raw, mx) = graft.Loop.ckMaxPartitioned(
-        hitsRawFrame(nodes, oriented, scores, key, out), col("raw"))
+      val (raw, mx) = graft.Loop.checkpoint(
+        hitsRawFrame(nodes, oriented, scores, key, out), max(col("raw")),
+        keepLayout = true)
       // structural (every dst has an in-edge, so some raw > 0) — and
       // the exact-integer contract needs a literal divisor, so a
       // zero here must fail loudly, never divide
       require(mx > 0L, s"HITS renormalize: max(raw) = $mx must be positive")
       raw.select(col("id"), expr(s"(raw * 10000) div ${mx}L").as("score"))
     }
-    var h = graft.Loop.ckPartitioned(
-      nodes.withColumn("score", lit(10000L)))
+    var (h, _) = graft.Loop.checkpoint(
+      nodes.withColumn("score", lit(10000L)), count(lit(1)), keepLayout = true)
     var a: DataFrame = null
     for (_ <- 1 to rounds) {
       val aNext = halfStep(h, "src", "dst")  // authorities ← hubs
-      // aNext's checkpoint is materialized (ckMax is eager) and the
+      // aNext's checkpoint is materialized (checkpoint is eager) and the
       // superseded frames' last consumer has run: a was consumed by
       // the previous hNext, h by this aNext
       if (a != null) graft.Ck.release(a)

@@ -1735,10 +1735,8 @@ object Dedup {
         .localCheckpoint(true))
     val (lab0, curve0) = graft.api.ops.nearDupLabels(base, "doc_id", "text",
       precomputedBands = Some(baseBands))
-    graft.LoopStats.recordLoop("ndd_base", curve0.length.toLong)
     val (kept, lab1, curve1) = graft.api.ops.nearDupDedupIncremental(
       base, delta, "doc_id", "text", lab0, oldBands = Some(baseBands))
-    graft.LoopStats.recordLoop("ndd_warm", curve1.length.toLong)
     val census = lab1.groupBy(col("component"))
       .agg(count(lit(1)).as("n"), max(col("id")).as("mx"))
       .select(lit("comp").as("part"), col("component").as("k"),
@@ -1847,13 +1845,11 @@ object Dedup {
         .localCheckpoint(true))
     val (lab0, curve0) = graft.api.ops.nearDupLabels(base, "doc_id", "text",
       precomputedBands = Some(baseBands))
-    graft.LoopStats.recordLoop("tdd_base", curve0.length.toLong)
     val deleted = lab0.filter(col("id") % 3 === 0)
       .select(col("id").as("doc_id"))
     val (kept, lab1, curve1) = graft.api.ops.nearDupDedupDelta(
       base, delta, deleted, "doc_id", "text", lab0,
       oldBands = Some(baseBands))
-    graft.LoopStats.recordLoop("tdd_warm", curve1.length.toLong)
     // disturbed-component census: how many clusters the takedowns
     // touched and how many surviving members needed re-verification
     // — the quantities the delta pass's cost is proportional to
@@ -2000,7 +1996,6 @@ object Dedup {
         .localCheckpoint(true))
     val (lab0, curve0) = graft.api.ops.nearDupLabels(base, "doc_id", "text",
       precomputedBands = Some(oldBands))
-    graft.LoopStats.recordLoop("cd_base", curve0.length.toLong)
     val deleted = lab0.filter(col("id") % 3 === 0)
       .select(col("id").as("doc_id"))
     val evalSet = docs.filter(col("doc_id") % 17 === 0)
@@ -2013,7 +2008,6 @@ object Dedup {
     val day = graft.api.ops.corpusDay(base, delta, deleted, "doc_id", "text",
       lab0, oldBands = Some(oldBands), evalSet = Some(evalSet),
       newVectors = Some(newVecs), centroids = Some(cents))
-    graft.LoopStats.recordLoop("cd_warm", day.warmCurve.length.toLong)
     val census = day.labels.groupBy(col("component"))
       .agg(count(lit(1)).as("v1"), max(col("id")).as("v2"))
       .select(lit("comp").as("part"), col("component").as("k"),

@@ -769,7 +769,6 @@ object Mining {
       probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) = {
     val (labels, rounds) = graft.api.ops.connectedComponents(
       sparseUnd(s, dir), "a", "b", probe = probe)
-    graft.LoopStats.recordLoop("cc", rounds.toLong)
     (labels.select(col("id").as("node"), col("component").as("lbl")), rounds)
   }
 
@@ -1051,64 +1050,51 @@ object Mining {
       .repartition(col("node")) // co-locate once; every hop joins on node
       .persist(MEMORY_AND_DISK)
     val nodes = nbrs.select(col("node")).distinct().localCheckpoint(true)
-    var visited = nodes.filter(col("node") % 97L === 0L)
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    // frontier carries dist so the expansion derives the next level's
-    // distance as dist + 1 (all members of one level share a dist;
-    // the groupBy-min below is that shared value, replacing distinct)
-    var frontier = visited.select(col("node"), col("dist"))
-    // Guard: fail loudly, never spin. 41 = the oracle's 40-hop
-    // recursion cap + 1: the engine proves exhaustion with an EMPTY
-    // round past the last distance, so supporting eccentricity <= 40
-    // (exactly the distances q172Sql's `r.d < 40` recursion reaches)
-    // needs a 41-hop budget — at 40 an ecc-40 graph would fail here
-    // while the oracle still answers.
-    val maxHops = 41
-    var hop = 0
-    var exhausted = false
-    while (!exhausted && hop < maxHops) {
-      hop += 1
-      // ONE job per hop (round-11 job-floor pass): the accumulator ∪
-      // expansion union is checkpointed with the fresh-row count
-      // riding it — the old shape paid a frontier checkpoint job AND
-      // a union checkpoint job per hop. The final (empty-frontier)
-      // hop re-materializes an unchanged accumulator; one redundant
-      // node-sized copy against one saved job every expanding hop.
-      // (ops.bfsDistances keeps the per-level-checkpoint shape for
-      // O(n) total materialized bytes at scale; this twin keeps the
-      // flat single-accumulator shape CcLoopSpec pins.)
-      // the fresh level's dist comes from the FRONTIER's dist + 1
-      // (column arithmetic), not `lit(hop)` — a changing literal
-      // would make every hop's codegen source unique, recompiling a
-      // fresh Janino class per hop per run (the r12 code-cache
-      // finding; ops.bfsDistances carries the level-list variant of
-      // the same fix)
-      val (nv, nNew) = graft.Loop.ckCount(
+    // The state is the visited accumulator (node, dist) with the
+    // frontier flagged `__new` (the seeds are the first frontier);
+    // frontier rows carry dist so the expansion derives the next
+    // level's distance as dist + 1 (all members of one level share a
+    // dist; the groupBy-min below is that shared value, replacing
+    // distinct).
+    // ONE job per hop (round-11 job-floor pass): the accumulator ∪
+    // expansion union is checkpointed with the fresh-row count
+    // riding it — the old shape paid a frontier checkpoint job AND
+    // a union checkpoint job per hop. The final (empty-frontier)
+    // hop re-materializes an unchanged accumulator; one redundant
+    // node-sized copy against one saved job every expanding hop.
+    // (ops.bfsDistances keeps the per-level-checkpoint shape for
+    // O(n) total materialized bytes at scale; this twin keeps the
+    // flat single-accumulator shape CcLoopSpec pins.)
+    // The fresh level's dist comes from the FRONTIER's dist + 1
+    // (column arithmetic), not a hop literal — a changing literal
+    // would make every hop's codegen source unique, recompiling a
+    // fresh Janino class per hop per run (the r12 code-cache
+    // finding; ops.bfsDistances carries the level-list variant of
+    // the same fix).
+    // Guard: 41 = the oracle's 40-hop recursion cap + 1: the engine
+    // proves exhaustion with an EMPTY round past the last distance,
+    // so supporting eccentricity <= 40 (exactly the distances
+    // q172Sql's `r.d < 40` recursion reaches) needs a 41-hop budget —
+    // at 40 an ecc-40 graph would fail here while the oracle still
+    // answers.
+    val (visited, curve) =
+      try graft.Loop.fixpoint("bfs",
+          nodes.filter(col("node") % 97L === 0L)
+            .select(col("node"), lit(0L).as("dist"), lit(true).as("__new")),
+          count_if(col("__new")), 41, probe = probe) { st =>
+        val visited = st.select(col("node"), col("dist"))
+        val frontier = st.filter(col("__new")).select(col("node"), col("dist"))
         visited.select(col("node"), col("dist"), lit(false).as("__new"))
           .unionByName(nbrs.join(frontier, "node")
             .groupBy(col("nbr")).agg(min(col("dist") + 1L).as("dist"))
             .select(col("nbr").as("node"), col("dist"))
             .join(visited, Seq("node"), "left_anti")
-            .select(col("node"), col("dist"), lit(true).as("__new"))),
-        col("__new"))
-      exhausted = nNew == 0L
-      graft.Ck.release(visited)
-      visited = nv.select(col("node"), col("dist"))
-      if (!exhausted) frontier = nv.filter(col("__new"))
-        .select(col("node"), col("dist"))
-      probe(hop, visited)
-    }
-    nbrs.unpersist(blocking = false) // release before the loud guard
-    // frontier is a filter over the LIVE accumulator checkpoint now —
-    // no separate frontier checkpoint exists to release (the one-job
-    // ride above folded it into the accumulator)
-    if (!exhausted) graft.Ck.release(visited)
-    require(exhausted, s"BFS frontier not exhausted in $maxHops hops")
-    graft.LoopStats.recordLoop("bfs", hop.toLong)
+            .select(col("node"), col("dist"), lit(true).as("__new")))
+      } catch { case t: Throwable => graft.Ck.release(nodes); throw t }
+      finally nbrs.unpersist(blocking = false)
     val dist = nodes.join(visited, Seq("node"), "left")
       .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
-    (dist, hop)
+    (dist, curve.length)
   }
 
   def q172BfsHops(s: SparkSession, dir: String): DataFrame = {
@@ -1244,34 +1230,18 @@ object Mining {
       .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
       .repartition(col("node")) // co-locate once; every round joins on node
       .persist(MEMORY_AND_DISK)
-    var alive = nbrs.select(col("node")).distinct().localCheckpoint(true)
-    var aliveCnt = alive.count()
-    def induced(core: DataFrame): DataFrame = kcoreInduced(nbrs, core)
-    val maxRounds = 40 // guard: fail loudly, never spin
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxRounds) {
-      rounds += 1
-      val kept = induced(alive)
-        .filter(col("deg") >= k).select(col("node"))
-        .localCheckpoint(true) // one materialization: count + next round
-      val keptCnt = kept.count()
-      stable = keptCnt == aliveCnt
-      graft.Ck.release(alive) // both endpoint joins materialized into kept
-      alive = kept
-      aliveCnt = keptCnt
-      probe(rounds, alive)
-    }
-    // materialize the final induced degrees only on success, and
-    // release the edge persist BEFORE the loud guard (no leak if it
-    // fires — the r5-ADVICE unpersist-ordering rule)
-    val coreDeg =
-      if (stable) Some(induced(alive).localCheckpoint(true)) else None
-    graft.Ck.release(alive) // coreDeg (if any) is materialized off it
-    nbrs.unpersist(blocking = false)
-    require(stable, s"k-core peel did not stabilize in $maxRounds rounds")
-    graft.LoopStats.recordLoop("kcore", rounds.toLong)
-    (coreDeg.get, rounds)
+    // one job per round: the survivor count rides the checkpoint
+    // (Loop.fixpoint); the guard (40 rounds) fails loudly, never spins
+    try {
+      val (alive, curve) = graft.Loop.fixpoint("kcore",
+          nbrs.select(col("node")).distinct(), count(lit(1)), 40,
+          done = (before, kept) => kept == before, probe = probe) { alive =>
+        kcoreInduced(nbrs, alive).filter(col("deg") >= k).select(col("node"))
+      }
+      val coreDeg = kcoreInduced(nbrs, alive).localCheckpoint(true)
+      graft.Ck.release(alive) // coreDeg is materialized off it
+      (coreDeg, curve.length)
+    } finally nbrs.unpersist(blocking = false)
   }
 
   def q181Kcore(s: SparkSession, dir: String): DataFrame = {
@@ -1990,10 +1960,10 @@ object Mining {
     // pass: the trim loop below needs |active| anyway — survivors ==
     // prior count IS the fixpoint test, replacing the old per-pass
     // removed-emptiness job)
-    var (active, activeCnt) = graft.Loop.ckCount(
+    var (active, activeCnt) = graft.Loop.checkpoint(
       edges.select(col("src").as("id"))
         .unionByName(edges.select(col("dst").as("id")))
-        .distinct(), lit(true))
+        .distinct(), count(lit(1)))
     // the hash-scrambled propagation order ord(v) = h28(v)·2³⁵ + v
     // (see phase 2) needs ids in [0, 2³⁵) to stay injective and
     // order-safe in int64 — fail loudly outside the envelope
@@ -2029,8 +1999,8 @@ object Mining {
         // IS the fixpoint test: survivors == prior live count means
         // the pass removed nothing (the old shape paid a second
         // removed-emptiness job per pass for the same answer)
-        val (keep, keepCnt) = graft.Loop.ckCount(
-          sccTrimKeep(edges, cur), lit(true))
+        val (keep, keepCnt) = graft.Loop.checkpoint(
+          sccTrimKeep(edges, cur), count(lit(1)))
         trimming = keepCnt != curCnt
         curCnt = keepCnt
         if (cur ne active) graft.Ck.release(cur)
@@ -2049,9 +2019,9 @@ object Mining {
       // Σ|removed| (the release contract is unchanged) and the final
       // union's plan depth SHRINKS (one leaf per round, not per pass).
       if (curCnt != activeCnt) {
-        val (removed, _) = graft.Loop.ckCount(
+        val (removed, _) = graft.Loop.checkpoint(
           active.join(cur, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc")), lit(true))
+            .select(col("id"), col("id").as("scc")), count(lit(1)))
         pieces += removed
       }
       done = curCnt == 0L // counted on the final trim pass's job
@@ -2087,8 +2057,8 @@ object Mining {
         while (!stable && colGuard < 100) {
           colGuard += 1
           // stop check rides the checkpoint job (graft.Loop)
-          val (next, mvC) = graft.Loop.ckCount(
-            sccColorRound(ce, color), col("clr") =!= col("old"))
+          val (next, mvC) = graft.Loop.checkpoint(
+            sccColorRound(ce, color), count_if(col("clr") =!= col("old")))
           stable = mvC == 0L
           graft.Ck.release(color)
           color = next.select(col("id"), col("ord"), col("clr"))
@@ -2197,11 +2167,11 @@ object Mining {
           val grow0 = sccCollectGrow(ce, color, members)
           val grow = if (bailedClr == null) grow0
             else grow0.join(broadcast(bailedClr), Seq("clr"), "left_anti")
-          val (nm, nNew) = graft.Loop.ckCount(
+          val (nm, nNew) = graft.Loop.checkpoint(
             members.select(col("id"), col("clr"), lit(false).as("__new"))
               .unionByName(grow
                 .select(col("id"), col("clr"), lit(true).as("__new"))),
-            col("__new"))
+            count_if(col("__new")))
           growing = nNew > 0L
           hist += nNew
           graft.Ck.release(members)
@@ -2257,8 +2227,8 @@ object Mining {
               .groupBy(col("clr")).agg(count(lit(1)).as("rem"))
             val rateC = lastFresh.groupBy(col("clr"))
               .agg(count(lit(1)).as("rate"))
-            val (cls, _) = graft.Loop.ckCount(
-              remC.join(rateC, Seq("clr")), lit(true))
+            val (cls, _) = graft.Loop.checkpoint(
+              remC.join(rateC, Seq("clr")), count(lit(1)))
             val tot = cls.agg(
               coalesce(sum(col("rem")), lit(0L)).as("r"),
               coalesce(sum(col("rate")), lit(0L)).as("g")).head()
@@ -2280,10 +2250,10 @@ object Mining {
               // CAN be empty (the 1x global trigger does not
               // pigeonhole a 4x class) — an empty round leaves
               // bailedClr untouched and the trial simply continues.
-              val (hopeless, nHopeless) = graft.Loop.ckCount(
+              val (hopeless, nHopeless) = graft.Loop.checkpoint(
                 cls.filter(col("rem") > lit(4L * budget) * col("rate"))
                   .select(col("clr")),
-                lit(true))
+                count(lit(1)))
               if (nHopeless > 0L) {
                 graft.LoopStats.record("scc_bail_at",
                   math.max(graft.LoopStats.peek("scc_bail_at"), bwGuard.toLong))
@@ -2359,8 +2329,8 @@ object Mining {
           var bstable = false
           while (!bstable && bwGuard < oneStepBudget + 100) {
             bwGuard += 1
-            val (next, mvB) = graft.Loop.ckCount(
-              sccBackRound(sameE, back), col("b") =!= col("old"))
+            val (next, mvB) = graft.Loop.checkpoint(
+              sccBackRound(sameE, back), count_if(col("b") =!= col("old")))
             bstable = mvB == 0L
             graft.Ck.release(back)
             back = next.select(col("id"), col("ord"), col("b"))
@@ -2392,14 +2362,14 @@ object Mining {
         // one checkpoint PIECE for the final assembly, no running
         // assigned re-checkpoint (round-11 job-floor pass)
         val minId = members.groupBy(col("clr")).agg(min(col("id")).as("scc"))
-        val (roundA, _) = graft.Loop.ckCount(
+        val (roundA, _) = graft.Loop.checkpoint(
           members.join(minId, Seq("clr")).select(col("id"), col("scc")),
-          lit(true))
+          count(lit(1)))
         pieces += roundA
         // survivor count rides the checkpoint job (graft.Loop) —
         // it seeds the next outer round's trim fixpoint test
-        val (nextActive, naCnt) = graft.Loop.ckCount(
-          cur.join(members, Seq("id"), "left_anti"), lit(true))
+        val (nextActive, naCnt) = graft.Loop.checkpoint(
+          cur.join(members, Seq("id"), "left_anti"), count(lit(1)))
         graft.Ck.release(members)
         graft.Ck.release(color)
         if (cur ne active) graft.Ck.release(cur)
@@ -2456,29 +2426,19 @@ object Mining {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val ce = cond.persist(MEMORY_AND_DISK)
     touch(ce)
-    var lvl = census.select(col("scc"), lit(0L).as("lvl"))
-      .localCheckpoint(true)
-    var stable = false
-    var rounds = 0
-    while (!stable && rounds < maxDepth) {
-      rounds += 1
-      val relax = ce
-        .join(lvl.select(col("scc").as("csrc"), col("lvl").as("plvl")), "csrc")
-        .groupBy(col("cdst").as("scc")).agg(max(col("plvl") + 1L).as("rlvl"))
-      // stop check rides the checkpoint job (graft.Loop)
-      val (next, mvL) = graft.Loop.ckCount(
+    // the moved-level count rides each round's checkpoint job; a
+    // guard hit means a cycle in the condensed graph (wrong SCC labels)
+    val (lvl, _) =
+      try graft.Loop.fixpoint("dag_layers",
+          census.select(col("scc"), lit(0L).as("lvl")),
+          count_if(col("lvl") =!= col("old")), maxDepth) { lvl =>
+        val relax = ce
+          .join(lvl.select(col("scc").as("csrc"), col("lvl").as("plvl")), "csrc")
+          .groupBy(col("cdst").as("scc")).agg(max(col("plvl") + 1L).as("rlvl"))
         lvl.join(relax, Seq("scc"), "left")
           .select(col("scc"), col("lvl").as("old"),
-            greatest(col("lvl"), coalesce(col("rlvl"), col("lvl"))).as("lvl")),
-        col("lvl") =!= col("old"))
-      stable = mvL == 0L
-      graft.Ck.release(lvl)
-      lvl = next.select(col("scc"), col("lvl"))
-    }
-    ce.unpersist(blocking = false)
-    require(stable,
-      s"condensation layering did not settle in $maxDepth rounds — " +
-        "a cycle in the condensed graph means SCC labels are wrong")
+            greatest(col("lvl"), coalesce(col("rlvl"), col("lvl"))).as("lvl"))
+      } finally ce.unpersist(blocking = false)
     val outdeg = cond.groupBy(col("csrc").as("scc"))
       .agg(count(lit(1)).as("outd"))
     val out = census.join(lvl, Seq("scc"))
@@ -2961,7 +2921,6 @@ object Mining {
     touch(und0)
     val (lab0, curve0) =
       graft.api.ops.connectedComponentsCurve(und0, "a", "b")
-    graft.LoopStats.recordLoop("cc_base", curve0.length.toLong)
     val dels = und0.filter((col("a") * 7L + col("b") * 11L) % 61L === 0L)
     val ins = undFamily(s, dir, 37L, 512L)
     val und1 = und0.join(dels, Seq("a", "b"), "left_anti")
@@ -2971,7 +2930,6 @@ object Mining {
     touch(und1)
     val (lab1, curve1) = graft.api.ops.incrementalConnectedComponents(
       lab0, und1, dels, "a", "b")
-    graft.LoopStats.recordLoop("cc_warm", curve1.length.toLong)
     graft.Ck.release(lab0) // warm init checkpointed; base labels consumed
     und0.unpersist(blocking = false)
     val census = lab1.groupBy(col("component"))

@@ -1271,91 +1271,24 @@ object Vectors {
   private val KmCap = 16 // bound: SQL unroll length == Spark guard
 
   def q163KmeansConverge(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // NOT re-laid-out (r16 lesson, measured): the per-round argmin
+    // delegates to the parameterized core (the q202 pattern). NOT
+    // re-laid-out (r16 lesson, measured): the per-round argmin
     // assignment over 64-dim vectors is COMPUTE-bound — repartitioning
-    // base to the state-join width (statePartitions read ~1 at sf0.1)
-    // serialized the map stage onto one core and cost more than the
-    // join layout saved (closing bench 4.64 s vs 3.85 s baseline).
-    // The base keeps the scan's parallelism; only the reassignment
-    // COUNT is optimized (it rides the round checkpoint below).
-    val base = embeddings(s, dir)
-      .select(col("vec_id"), col("label"), emb(col("embedding")).as("e"))
-      .persist(MEMORY_AND_DISK)
-    val n = base.count() // eager persist + the threshold denominator
-    // exact mean: decimal sum (order-independent) -> double -> 4dp
-    def mean4(x: Column): Column =
-      round(sum(x.cast("decimal(20,10)")).cast("double") / count(lit(1)), 4)
-    def centroidsOf(assigned: DataFrame, by: Column): Map[Int, Seq[Double]] =
-      assigned.select(by.cast("int").as("cell"), posexplode(col("e")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d")).agg(mean4(col("x")).as("m"))
-        .collect().groupBy(_.getInt(0))
-        .map { case (c, rows) =>
-          c -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        }
-    var cells: Map[Int, Seq[Double]] = centroidsOf(base, col("label"))
-    // the q73 argmin fold against a LITERAL cells array (driver-held
-    // model state): assignment is map-only at any scale
-    def nearest(cellsNow: Map[Int, Seq[Double]]): Column = {
-      val lit0 = typedLit(cellsNow.toSeq.sortBy(_._1))
-      aggregate(lit0,
-        struct(lit(Double.MaxValue).as("d2"), lit(null).cast("int").as("lbl")),
-        (acc, cell) => {
-          val diff = zip_with(col("e"), cell.getField("_2"), (x, y) => x - y)
-          val d2 = round(graft.functions.vec.arrayDot(diff, diff), 6)
-          val lbl = cell.getField("_1")
-          val better = acc.getField("lbl").isNull
-            .or(d2 < acc.getField("d2"))
-            .or(d2 === acc.getField("d2") && lbl < acc.getField("lbl"))
-          when(better, struct(d2.as("d2"), lbl.as("lbl"))).otherwise(acc)
-        }).getField("lbl")
-    }
-    var prevAssign = base
-      .select(col("vec_id"), col("label").cast("int").as("cell"))
-      .localCheckpoint(true)
-    val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var rounds = 0
-    var stopped = false
-    while (!stopped && rounds < KmCap) {
-      rounds += 1
-      val assigned = base
-        .select(col("vec_id"), col("e"), nearest(cells).as("cell"))
-        .persist(MEMORY_AND_DISK)
-      val newCells = centroidsOf(assigned, col("cell"))
-      val filled = cells.map { case (c, old) => c -> newCells.getOrElse(c, old) }
-      val moved = cells.toSeq.map { case (c, old) =>
-        old.zip(filled(c)).count { case (a, b) => a != b }.toLong
-      }.sum
-      // the reassignment count rides the round checkpoint job (r16):
-      // the old shape paid a checkpoint job + a separate count job
-      // per round for the same answer. The joined frame carries
-      // old_cell through the checkpoint (one extra int per row);
-      // next round's prevAssign is the (vec_id, cell) projection.
-      val (ckA, reass) = graft.Loop.ckCount(
-        assigned.select(col("vec_id"), col("cell"))
-          .join(prevAssign.withColumnRenamed("cell", "old_cell"), "vec_id"),
-        col("cell") =!= col("old_cell"))
-      assigned.unpersist(blocking = false)
-      // round r-1's assignment is fully consumed (the reassignment
-      // join above was its last reader): release its blocks
-      graft.Ck.release(prevAssign)
-      curve += ((rounds.toLong, moved, reass))
-      cells = filled
-      prevAssign = ckA.select(col("vec_id"), col("cell"))
-      stopped = reass * 50L <= n // <= 2% reassigned
-    }
-    require(stopped, s"k-means did not reach the movement threshold in $KmCap rounds")
-    graft.LoopStats.recordLoop("kmeans", rounds.toLong)
-    val census = prevAssign.groupBy(col("cell"))
+    // the points to the state-join width (statePartitions read ~1 at
+    // sf0.1) serialized the map stage onto one core and cost more than
+    // the join layout saved (closing bench 4.64 s vs 3.85 s baseline).
+    val (assign, curve) = graft.api.ops.kmeansToConvergence(
+      embeddings(s, dir), "vec_id", col("embedding"), col("label"),
+      maxRounds = KmCap)
+    val census = assign.groupBy(col("cell"))
       .agg(count(lit(1)).as("cnt"), min(col("vec_id")).as("mn"))
       .collect().map(r => (r.getInt(0).toLong, r.getLong(1), r.getLong(2)))
     // the census collect was the final assignment's last reader — the
     // output below is built purely from driver rows, so this query
     // leaves ZERO checkpoint blocks behind
-    graft.Ck.release(prevAssign)
-    base.unpersist(blocking = false)
+    graft.Ck.release(assign)
     val ss = s; import ss.implicits._
-    (curve.toSeq.map { case (r, mv, rs) => ("round", r, mv, rs) } ++
+    (curve.map { case (r, mv, rs) => ("round", r, mv, rs) } ++
       census.sortBy(_._1).map { case (c, cnt, mn) => ("cell", c, cnt, mn) })
       .toDF("part", "k", "v1", "v2")
       .orderBy("part", "k")

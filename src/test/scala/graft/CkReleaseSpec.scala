@@ -126,4 +126,32 @@ class CkReleaseSpec extends SparkSpec {
     Ck.release(labels)
     assert(persisted == before, "releasing the returned frame must zero the loop")
   }
+
+  test("loop guards release their live state: kmeans and dagLayers past maxRounds") {
+    spark.catalog.clearCache()
+    val before = persisted
+    // k-means on a line with alternating initial cells: round 1
+    // reassigns half the points, far past the 2% stop threshold
+    val points = spark.range(100).select(col("id"),
+      array(col("id").cast("double"), lit(0.0)).as("v"))
+    val km = intercept[IllegalArgumentException] {
+      graft.api.ops.kmeansToConvergence(points, "id", col("v"),
+        col("id") % 2, maxRounds = 1)
+    }
+    assert(km.getMessage.contains("did not settle"), km.getMessage)
+    assert(persisted == before,
+      s"kmeans guard leaked ${(persisted -- before).size} persisted RDDs")
+    // a 3-chain condensation DAG needs two relaxation rounds to
+    // settle its levels (plus the stable round)
+    val s = spark
+    import s.implicits._
+    val cond = Seq((1L, 2L), (2L, 3L)).toDF("csrc", "cdst")
+    val census = Seq((1L, 1L), (2L, 1L), (3L, 1L)).toDF("scc", "n_nodes")
+    val dag = intercept[IllegalArgumentException] {
+      graft.queries.Mining.dagLayers(cond, census, maxDepth = 1)
+    }
+    assert(dag.getMessage.contains("did not settle"), dag.getMessage)
+    assert(persisted == before,
+      s"dagLayers guard leaked ${(persisted -- before).size} persisted RDDs")
+  }
 }

@@ -122,8 +122,9 @@ class JobBudgetSpec extends SparkSpec {
   // measured at sf0.001 (see the scaladoc for method); update ONLY
   // with a deliberate plan change, never to silence a regression
   // 47 -> 46 in r16: dual-orientation edge caches + id-partitioned
-  // score checkpoints (ckMaxPartitioned) — two extra orientation
-  // touch jobs, three fewer broadcast-build jobs in the half-steps
+  // score checkpoints (layout-keeping Loop.checkpoint) — two extra
+  // orientation touch jobs, three fewer broadcast-build jobs in the
+  // half-steps
   // 46 -> 44: footer-inference jobs gone (Tables schema memo)
   private val Q196Expected = 44L
   // 27 -> 21 in r16: node-partitioned neighbor cache — each round's
@@ -133,7 +134,13 @@ class JobBudgetSpec extends SparkSpec {
   private val Q165Expected = 19L
   // 28 -> 26: footer-inference jobs gone (Tables schema memo)
   private val Q195Expected = 26L
-  private val Q216Expected = 58L
+  // 58 -> 47: three measured plan changes, no loop-shape change —
+  // -4 from ops.bfsDistances' one anti-join against the union of the
+  // two previous levels (r17: one broadcast-build job fewer per hop,
+  // two sweeps x 2 hops), -2 footer-inference jobs gone (Tables
+  // schema memo), -5 from star2Round's two-window cc round (4 jobs
+  // per alternation checkpoint instead of 9)
+  private val Q216Expected = 47L
   // 68 -> 66: footer-inference jobs gone (Tables schema memo)
   private val Q199Expected = 66L
   // 80 -> 78: footer-inference jobs gone (Tables schema memo)
@@ -145,8 +152,8 @@ class JobBudgetSpec extends SparkSpec {
   private val Q217Expected = 47L
   // 71 -> 52 in r16: the co-partitioned round (edeg laid out on dst
   // at Loop.statePartitions width, rank checkpoints carrying
-  // hash(id) + sort order via ckSumPartitioned) makes every steady
-  // round a single zero-exchange checkpoint job — the per-round
+  // hash(id) + sort order via Loop.checkpoint(keepLayout)) makes every
+  // steady round a single zero-exchange checkpoint job — the per-round
   // contribution broadcast builds and rank exchanges are gone; the
   // window-based withOutdeg also drops the double edge derivation
   // 52 -> 50: footer-inference jobs gone (Tables schema memo)

@@ -1,58 +1,120 @@
 package graft
 
+import java.util.concurrent.{Callable, Executors, TimeUnit}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Pins the graft.Loop stop-check rider: the moved-count metric must
-  * (a) be CORRECT in both delivery modes and (b) actually ride the
-  * checkpoint job's listener event in this Spark build — if every
-  * call fell back to the second job, the round-7 item-7 optimization
-  * would silently not exist.
+/** Pins graft.Loop's one checkpoint primitive: the stop metric that
+  * rides the checkpoint job as a Spark Observation must (a) equal
+  * what the second-job fallback computes on the same checkpoint, for
+  * every metric kind the loops use, (b) actually ride in this Spark
+  * build — if every call fell back to the second job, the one-job-
+  * per-round discipline would silently not exist — and (c) stay
+  * correct when two loops run at once in two sessions.
   */
 class LoopRiderSpec extends SparkSpec {
 
-  test("ckCount counts moved rows and preserves the frame") {
+  /** (name, frame, metric, expected value) — one row per metric kind
+    * a loop stops on. */
+  private def cases: Seq[(String, DataFrame, Column, Long)] = {
     val s = spark
     import s.implicits._
-    val df = Seq((1L, 1L), (2L, 3L), (4L, 5L), (6L, 6L))
-      .toDF("old", "new")
-    val (ck, moved) = Loop.ckCount(df, col("old") =!= col("new"))
-    assert(moved == 2L)
-    assert(ck.count() == 4L)
-    assert(ck.columns.toSeq == Seq("old", "new")) // observe adds no column
-    graft.Ck.release(ck)
-    val (ck2, none) = Loop.ckCount(df.filter(col("old") === col("new")),
-      col("old") =!= col("new"))
-    assert(none == 0L)
-    graft.Ck.release(ck2)
+    val pairs = Seq((1L, 1L), (2L, 3L), (4L, 5L), (6L, 6L)).toDF("old", "new")
+    Seq(
+      ("moved count", pairs, count_if(col("old") =!= col("new")), 2L),
+      ("moved count, none moved", pairs.filter(col("old") === col("new")),
+        count_if(col("old") =!= col("new")), 0L),
+      ("sum", pairs, sum(abs(col("new") - col("old"))), 2L),
+      ("sum over no rows", pairs.filter(lit(false)), sum(col("new")), 0L),
+      ("max", pairs, max(col("new")), 6L),
+      ("max over no rows", pairs.filter(lit(false)), max(col("new")), 0L),
+      ("emptiness, non-empty", pairs, count(lit(1)), 4L),
+      ("emptiness, empty", pairs.filter(lit(false)), count(lit(1)), 0L))
   }
 
-  test("ckIsEmpty answers emptiness on the checkpoint job") {
-    val s = spark
-    import s.implicits._
-    val (ckA, emptyA) = Loop.ckIsEmpty(Seq(1L).toDF("x").filter(lit(false)))
-    assert(emptyA)
-    graft.Ck.release(ckA)
-    val (ckB, emptyB) = Loop.ckIsEmpty(Seq(1L, 2L).toDF("x"))
-    assert(!emptyB)
-    assert(ckB.count() == 2L)
-    graft.Ck.release(ckB)
+  cases.foreach { case (name, frame, metric, want) =>
+    test(s"checkpoint rider equals the fallback's second job: $name") {
+      val (ck, rode) = Loop.checkpoint(frame, metric)
+      assert(rode == want, s"$name: rider read $rode, want $want")
+      assert(Loop.secondJob(ck, metric) == rode,
+        s"$name: the fallback disagrees with the rider on the same checkpoint")
+      assert(ck.columns.toSeq == frame.columns.toSeq) // observe adds no column
+      assert(ck.count() == frame.count())
+      Ck.release(ck)
+    }
   }
 
-  test("the metric rides the checkpoint job (listener delivers), not the fallback") {
-    val s = spark
-    import s.implicits._
+  test("the metric rides the checkpoint job (observation completes), not the fallback") {
     val r0 = Loop.rides.get()
     val f0 = Loop.fallbacks.get()
     (1 to 5).foreach { i =>
-      val (ck, n) = Loop.ckCount(
-        s.range(100L * i).toDF("id"), col("id") % 2 === 0)
+      val (ck, n) = Loop.checkpoint(
+        spark.range(100L * i).toDF("id"), count_if(col("id") % 2 === 0))
       assert(n == 50L * i)
-      graft.Ck.release(ck)
+      Ck.release(ck)
     }
     val rides = Loop.rides.get() - r0
     val fallbacks = Loop.fallbacks.get() - f0
     // the async bus may race an individual call, but if ALL five fell
     // back the rider is dead code in this Spark build — fail loudly
     assert(rides >= 1L, s"all $fallbacks calls took the fallback path")
+  }
+
+  test("fixpoint: guard releases the live state and fails loudly") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val err = intercept[IllegalArgumentException] {
+      // a state that never settles: every round moves every row
+      Loop.fixpoint("never", spark.range(10).toDF("id"),
+        count(lit(1)), maxRounds = 3)(st => st.select((col("id") + 1).as("id")))
+    }
+    assert(err.getMessage.contains("did not settle in 3 rounds"), err.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+      "the guard path left checkpoint blocks behind")
+  }
+
+  test("two cc loops at once, in two sessions on two threads, both match the oracle") {
+    // union-find over the driver-side edge list: the component label
+    // is the smallest member id, as ops.connectedComponents defines it
+    def oracle(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(k => k -> find(k)).toMap
+    }
+    // long paths need several star alternations, so both loops are
+    // mid-iteration at the same time
+    def paths(offset: Long, n: Int, len: Int): Seq[(Long, Long)] =
+      (0 until n).flatMap { p =>
+        val base = offset + p * 1000L
+        (0 until len - 1).map(i => (base + i, base + i + 1))
+      }
+    val graphs = Seq(paths(0L, 3, 40), paths(50000L, 4, 25))
+    def run(s: SparkSession, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      import s.implicits._
+      (1 to 3).map { _ =>
+        val (labels, _) = api.ops.connectedComponents(
+          edges.toDF("s", "d"), "s", "d")
+        val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        Ck.release(labels)
+        got
+      }.reduce { (a, b) => assert(a == b); a }
+    }
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val futures = graphs.map { g =>
+        val s = spark.newSession()
+        pool.submit(new Callable[Map[Long, Long]] { def call() = run(s, g) })
+      }
+      futures.zip(graphs).foreach { case (f, g) =>
+        assert(f.get(5, TimeUnit.MINUTES) == oracle(g))
+      }
+    } finally pool.shutdownNow()
   }
 }

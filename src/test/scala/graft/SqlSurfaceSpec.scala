@@ -78,9 +78,9 @@ class SqlSurfaceSpec extends SparkSpec {
     val (_, edges, nodesRaw) = Curation.prGraphEdges(spark, dir)
     val edeg = Curation.withOutdeg(edges, Loop.statePartitions(edges))
     edeg.createOrReplaceTempView("pr_edeg")
-    val pr0 = Curation.prIterateInitCk(
+    val (pr0, _) = Loop.checkpoint(Curation.prInit(
       nodesRaw.select(col("id"), lit(1000000000L).as("pr")),
-      edeg.rdd.getNumPartitions)
+      edeg.rdd.getNumPartitions), count(lit(1)), keepLayout = true)
     pr0.createOrReplaceTempView("pr_ranks")
     pinPlanEqual("pr_round",
       Curation.prRound(edeg, pr0), spark.sql(SqlSurface.prRoundSql))
