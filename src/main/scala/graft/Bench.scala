@@ -10,16 +10,18 @@ object Bench {
     */
   private[graft] val DiffUnparseable = "__bench_diff_unparseable__"
 
-  /** Names of drifts a BENCH_DIFF artifact reports as
-    * "unadjudicated" — the structural gate's load-bearing parse
+  /** Names a BENCH_DIFF artifact's `section` ("drifts" — the
+    * cross-round ratio gate — or "spreads" — the intra-session
+    * variance gate, round-11 verdict item 3) reports as
+    * "unadjudicated": the structural gate's load-bearing parse
     * (faster-direction rows carry status "improvement" and
     * adjudicated rows their adjudication text, so only genuinely
-    * unexplained slower drifts come back). A MISSING file parses as
-    * clean (BenchDiff failures are already reported loudly at the
-    * call site); a PRESENT but unparseable file reads as dirty via
+    * unexplained rows come back). A MISSING file parses as clean
+    * (BenchDiff failures are already reported loudly at the call
+    * site); a PRESENT but unparseable file reads as dirty via
     * [[DiffUnparseable]] plus a stderr banner.
     */
-  private[graft] def unadjudicatedIn(path: String): Seq[String] = {
+  private[graft] def unadjudicatedIn(path: String, section: String): Seq[String] = {
     val p = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(p)) Seq.empty
     else try {
@@ -30,7 +32,7 @@ object Bench {
       // reports "unadjudicated (stale adjudication: ...)" and must
       // read as dirty — it flows through the retry pass like any
       // unexplained drift until re-validated against the current pin
-      Option(n.get("drifts")).toSeq.flatMap(_.fields().asScala)
+      Option(n.get(section)).toSeq.flatMap(_.fields().asScala)
         .filter(e => e.getValue.get("status").asText().startsWith("unadjudicated"))
         .map(_.getKey).toSeq.sorted
     } catch {
@@ -40,25 +42,6 @@ object Bench {
             "a malformed drift artifact reads as DIRTY, never clean")
         Seq(DiffUnparseable)
     }
-  }
-
-  /** Names the BENCH_DIFF "spreads" section reports as unadjudicated
-    * — the intra-bench variance gate (round-11 verdict item 3: a
-    * 3-7x run spread inside one session was invisible to the
-    * cross-round ratio gate). Same missing-clean /
-    * malformed-dirty contract as [[unadjudicatedIn]].
-    */
-  private[graft] def spreadUnadjudicatedIn(path: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else try {
-      import scala.jdk.CollectionConverters._
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(p))
-      Option(n.get("spreads")).toSeq.flatMap(_.fields().asScala)
-        .filter(e => e.getValue.get("status").asText().startsWith("unadjudicated"))
-        .map(_.getKey).toSeq.sorted
-    } catch { case _: Throwable => Seq(DiffUnparseable) }
   }
 
   /** The steal-dodge sampling loop (round-13, pure and spec-pinned
@@ -650,7 +633,7 @@ object Bench {
       }
       detailWritten
     }
-    def unadjudicated(): Seq[String] = unadjudicatedIn("BENCH_DIFF.json")
+    def unadjudicated(): Seq[String] = unadjudicatedIn("BENCH_DIFF.json", "drifts")
     writeAndDiff()
     // STRUCTURAL drift gate (round-10): rounds 8 and 9 both shipped a
     // clean closing bench, then a post-close refresh re-opened
@@ -727,7 +710,7 @@ object Bench {
     // audited trim (the ONE known-mechanism shape, see descentAbsorb),
     // an adjudication entry (key "<query>:spread"), or a fix that
     // stabilizes the query.
-    val dirtySpread = spreadUnadjudicatedIn("BENCH_DIFF.json")
+    val dirtySpread = unadjudicatedIn("BENCH_DIFF.json", "spreads")
     val spreadField =
       if (dirtySpread.isEmpty) ""
       else s""","spread_unadjudicated":${dirtySpread.map("\"" + _ + "\"").mkString("[", ",", "]")}"""

@@ -174,9 +174,13 @@ object Loop {
     */
   def broadcastIfFits(df: DataFrame): DataFrame = {
     val thrStr = df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+      .get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
+    // a leading '-' negates, as Spark's own byte-conf parser reads
+    // it: "-1" (broadcast off) must not fall back to the 10 MB default
+    val (mag, sign) =
+      if (thrStr.startsWith("-")) (thrStr.drop(1), -1L) else (thrStr, 1L)
     val thr =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thrStr)
+      try sign * org.apache.spark.network.util.JavaUtils.byteStringAsBytes(mag)
       catch { case _: NumberFormatException => 10L << 20 }
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (thr > 0 && est <= BigInt(thr))

@@ -1167,11 +1167,11 @@ object SqlSurface {
   // (the directed family's second loop on the SQL surface — round-8
   // verdict item 5. Round bodies are plan-equal-pinned in
   // SqlSurfaceSpec against the factored production bodies
-  // Mining.sccTrimKeep / sccColorRound / sccCollectGrow /
-  // sccBackRound; the driver below mirrors Mining.sccAssign's
-  // control flow — trim fixpoint, hash-scrambled forward coloring,
-  // hybrid backward collect — with the same Loop riders, checkpoint
-  // hygiene, and loud guards.)
+  // Mining.sccTrimKeep / sccColorInit / sccColorRound /
+  // sccCollectGrow / sccBackRound; sccLoopSqlOn runs them on
+  // Mining.sccAssign, the one SCC driver, so trim fixpoint,
+  // hash-scrambled forward coloring, hybrid backward collect, Loop
+  // riders, checkpoint hygiene and guards are that driver's.)
 
   /** Live induced-subgraph edges over `scc_edges` / `scc_cur` —
     * interpolated per use site (twice in the trim body), the
@@ -1193,7 +1193,7 @@ object SqlSurface {
        |) WHERE ho = 1L AND hi = 1L""".stripMargin
 
   /** The hash-scrambled color init over `scc_cur` — plan-equal to
-    * `cur.select(id, Mining.sccOrd)` + the clr copy.
+    * Mining.sccColorInit.
     */
   val sccColorInitSql: String =
     """SELECT id, ord, ord AS clr FROM (
@@ -1326,7 +1326,8 @@ object SqlSurface {
       |  WHERE clr = mclr
       |) LEFT ANTI JOIN scc_members USING (id)""".stripMargin
 
-  /** The color-class-internal edge set for the doubled fixpoint. */
+  /** The color-class-internal edge set over `scc_ce` / `scc_color`
+    * (the doubled fixpoint's input, as SqlSurfaceSpec builds it). */
   val sccSameESql: String =
     """SELECT src, dst FROM (
       |  SELECT * FROM scc_ce
@@ -1358,260 +1359,43 @@ object SqlSurface {
        |FROM ($sccJ1Sub) a
        |JOIN (SELECT ord AS t2, b AS tb2 FROM scc_back) b ON a.b2 = b.t2""".stripMargin
 
-  /** q199's SCC loop driven entirely through `spark.sql` over a
-    * caller-persisted canonical directed edge frame: the EXACT
-    * control flow of Mining.sccAssign (trim-to-fixpoint peel,
-    * forward max-coloring, hybrid one-step/doubled backward collect,
-    * min-member-id assignment), with the same graft.Loop riders and
-    * Ck hygiene. Returns the (id, scc) labels and the outer round
-    * count.
-    */
-  /** RESERVED VIEW NAMES: owns `scc_edges` / `scc_cur` / `scc_keep`
-    * / `scc_ce` / `scc_color` / `scc_members` / `scc_same` /
-    * `scc_back` for the loop's duration, dropped on exit — see
-    * [[ccLoopSql]]'s contract.
+  /** q199's SCC loop with every round body a `spark.sql` text: the
+    * SQL bodies above, run by Mining.sccAssign — the one SCC driver
+    * (trim-to-fixpoint peel, forward max-coloring, hybrid
+    * one-step/doubled backward collect with the per-class freeze,
+    * min-member-id assignment, Loop riders, Ck hygiene, guards and
+    * LoopStats). Each body registers its inputs under the `scc_*`
+    * names its text reads and parses the text; the driver hands it
+    * the same frames it hands the DataFrame bodies, so the SQL
+    * surface runs the same jobs as q199. Takes a caller-persisted
+    * canonical directed edge frame; returns the (id, scc) labels and
+    * the outer round count.
+    *
+    * RESERVED VIEW NAMES: owns `scc_edges` / `scc_cur` / `scc_ce` /
+    * `scc_color` / `scc_members` / `scc_same` / `scc_back` for the
+    * loop's duration, dropped on exit — see [[ccLoopSql]]'s contract.
     */
   def sccLoopSqlOn(s: SparkSession, edges: DataFrame,
       maxOuter: Int = 30): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    try {
-      edges.createOrReplaceTempView("scc_edges")
-      var active = s.sql(
-        """SELECT DISTINCT id FROM (
-          |  SELECT src AS id FROM scc_edges
-          |  UNION ALL SELECT dst FROM scc_edges)""".stripMargin)
-        .localCheckpoint(true)
-      val idBounds = active.agg(min(col("id")), max(col("id"))).head()
-      if (!idBounds.isNullAt(0)) {
-        require(idBounds.getLong(0) >= 0L && idBounds.getLong(1) < (1L << 35),
-          s"SCC needs node ids in [0, 2^35), got [${idBounds.getLong(0)}, " +
-            s"${idBounds.getLong(1)}] — relabel (e.g. zipWithIndex) first")
-      }
-      var assigned = active.select(col("id"), col("id").as("scc"))
-        .filter(lit(false)).localCheckpoint(true)
-      var outer = 0
-      var done = active.isEmpty
-      while (!done && outer < maxOuter) {
-        outer += 1
-        var cur = active
-        var curCnt = -1L
-        var trimming = true
-        var trimGuard = 0
-        while (trimming && trimGuard < 200) {
-          trimGuard += 1
-          cur.createOrReplaceTempView("scc_cur")
-          val (keep, keepCnt) =
-            graft.Loop.checkpoint(s.sql(sccTrimKeepSql), count(lit(1)))
-          curCnt = keepCnt
-          keep.createOrReplaceTempView("scc_keep")
-          val (removed, nRemoved) = graft.Loop.checkpoint(s.sql(
-            "SELECT id, id AS scc FROM scc_cur LEFT ANTI JOIN scc_keep USING (id)"),
-            count(lit(1)))
-          trimming = nRemoved > 0L
-          if (trimming) {
-            val na = assigned.unionByName(removed).localCheckpoint(true)
-            graft.Ck.release(assigned)
-            assigned = na
-          } else graft.Ck.release(removed)
-          if (cur ne active) graft.Ck.release(cur)
-          cur = keep
-        }
-        require(!trimming, "SCC trim did not reach a fixpoint")
-        done = curCnt == 0L
-        if (!done) {
-          cur.createOrReplaceTempView("scc_cur")
-          val ce = s.sql(sccCurESql).persist(MEMORY_AND_DISK)
-          graft.Tables.touch(ce)
-          ce.createOrReplaceTempView("scc_ce")
-          var color = s.sql(sccColorInitSql).localCheckpoint(true)
-          var stable = false
-          var colGuard = 0
-          while (!stable && colGuard < 100) {
-            colGuard += 1
-            color.createOrReplaceTempView("scc_color")
-            val (next, mvC) = graft.Loop.checkpoint(s.sql(sccColorRoundSql),
-              count_if(col("clr") =!= col("old")))
-            stable = mvC == 0L
-            graft.Ck.release(color)
-            color = next.select(col("id"), col("ord"), col("clr"))
-          }
-          require(stable, "SCC coloring did not reach a fixpoint")
-          color.createOrReplaceTempView("scc_color")
-          val oneStepBudget = 64
-          var members = s.sql("SELECT id, clr FROM scc_color WHERE clr = ord")
-            .localCheckpoint(true)
-          var growing = true
-          var bwGuard = 0
-          // stagnation freeze — mirrors Mining.sccAssign's round-13
-          // control flow (see the scaladoc there): r12's GLOBAL
-          // budget test stays the trigger, and when it trips only
-          // the individually-hopeless classes freeze (their grow
-          // rows are filtered below); everyone else keeps
-          // one-stepping and drained classes complete as before
-          val hist = scala.collection.mutable.ArrayBuffer.empty[Long]
-          var lastStagnant = false
-          var lastGrow: DataFrame = null
-          var bailedClr: DataFrame = null
-          while (growing && bwGuard < oneStepBudget) {
-            bwGuard += 1
-            members.createOrReplaceTempView("scc_members")
-            val grown = s.sql(sccCollectGrowSql)
-            val (grow, nNew) = graft.Loop.checkpoint(
-              if (bailedClr == null) grown
-              else grown.join(broadcast(bailedClr), Seq("clr"), "left_anti"),
-              count(lit(1)))
-            growing = nNew > 0L
-            hist += nNew
-            if (growing) {
-              val nm = members.unionByName(grow).localCheckpoint(true)
-              graft.Ck.release(members)
-              if (lastGrow ne null) graft.Ck.release(lastGrow)
-              lastGrow = grow
-              members = nm
-              // probe-gated, constant-rate freeze — mirrors
-              // Mining.sccAssign's round-13 shape (see the scaladoc
-              // there: only the exact additive signature — five
-              // consecutive identical nNew values — raises the
-              // suspicion; anything looser misfired on finite
-              // classes near completion)
-              val stagnant = bwGuard >= 5 &&
-                hist.slice(bwGuard - 5, bwGuard).distinct.size == 1
-              if (stagnant && !lastStagnant) {
-                val remC = color
-                  .join(grow.select(col("clr")).distinct(), "clr")
-                  .join(members.select(col("id")), Seq("id"), "left_anti")
-                  .groupBy(col("clr")).agg(count(lit(1)).as("rem"))
-                val rateC = grow.groupBy(col("clr"))
-                  .agg(count(lit(1)).as("rate"))
-                val (cls, _) = graft.Loop.checkpoint(
-                  remC.join(rateC, Seq("clr")), count(lit(1)))
-                val tot = cls.agg(
-                  coalesce(sum(col("rem")), lit(0L)).as("r"),
-                  coalesce(sum(col("rate")), lit(0L)).as("g")).head()
-                val budget = (oneStepBudget - bwGuard).toLong
-                if (tot.getLong(0) > budget * tot.getLong(1)) {
-                  // 4x per-class margin — see Mining.sccAssign's
-                  // probe comment; the freeze set can be empty
-                  val (hopeless, nHopeless) = graft.Loop.checkpoint(
-                    cls.filter(col("rem") > lit(4L * budget) * col("rate"))
-                      .select(col("clr")),
-                    count(lit(1)))
-                  if (nHopeless > 0L) {
-                    val nb =
-                      if (bailedClr == null) hopeless
-                      else {
-                        val u = bailedClr.unionByName(hopeless)
-                          .localCheckpoint(true)
-                        graft.Ck.release(bailedClr)
-                        graft.Ck.release(hopeless)
-                        u
-                      }
-                    bailedClr = nb
-                  } else graft.Ck.release(hopeless)
-                }
-                graft.Ck.release(cls)
-              }
-              lastStagnant = stagnant
-            } else graft.Ck.release(grow)
-          }
-          if (growing || bailedClr != null) {
-            // restricted-class fixpoint — the frozen classes plus
-            // any class still growing at budget exhaustion
-            // (Mining.sccAssign's round-13 shape; drained classes
-            // are complete)
-            val activeClr = {
-              val base =
-                if (!growing) bailedClr
-                else {
-                  lastGrow.createOrReplaceTempView("scc_lastgrow")
-                  val g = s.sql("SELECT DISTINCT clr FROM scc_lastgrow")
-                  if (bailedClr == null) g
-                  else g.unionByName(bailedClr).distinct()
-                }
-              base.localCheckpoint(true)
-            }
-            activeClr.createOrReplaceTempView("scc_active")
-            val colorA = s.sql(
-              """SELECT id, ord, clr FROM scc_color
-                |LEFT SEMI JOIN scc_active USING (clr)""".stripMargin)
-              .localCheckpoint(true)
-            colorA.createOrReplaceTempView("scc_color_a")
-            val sameE = s.sql(sccSameESql
-                .replace("scc_color", "scc_color_a"))
-              .localCheckpoint(true)
-            sameE.createOrReplaceTempView("scc_same")
-            // warm init — members seeded at their exact fixpoint
-            // value (Mining.sccAssign's round-12 shape)
-            members.createOrReplaceTempView("scc_members")
-            var back = s.sql(
-              """SELECT c.id, c.ord,
-                |  CASE WHEN m.id IS NOT NULL THEN c.clr ELSE c.ord END AS b
-                |FROM scc_color_a c
-                |LEFT JOIN (SELECT id FROM scc_members) m ON c.id = m.id"""
-                .stripMargin)
-              .localCheckpoint(true)
-            var bstable = false
-            while (!bstable && bwGuard < oneStepBudget + 100) {
-              bwGuard += 1
-              back.createOrReplaceTempView("scc_back")
-              val (next, mvB) = graft.Loop.checkpoint(s.sql(sccBackRoundSql),
-                count_if(col("b") =!= col("old")))
-              bstable = mvB == 0L
-              graft.Ck.release(back)
-              back = next.select(col("id"), col("ord"), col("b"))
-            }
-            require(bstable, "SCC backward collect did not converge")
-            back.createOrReplaceTempView("scc_back")
-            members.createOrReplaceTempView("scc_members")
-            val nm = s.sql(
-              """SELECT id, clr FROM scc_members
-                |LEFT ANTI JOIN scc_active USING (clr)
-                |UNION ALL
-                |SELECT id, clr FROM (
-                |  SELECT c.id, c.clr, k.b FROM scc_color_a c
-                |  JOIN (SELECT id, b FROM scc_back) k USING (id)
-                |) WHERE b = clr""".stripMargin).localCheckpoint(true)
-            graft.Ck.release(members)
-            members = nm
-            graft.Ck.release(back)
-            graft.Ck.release(sameE)
-            graft.Ck.release(colorA)
-            graft.Ck.release(activeClr)
-            if (bailedClr != null) graft.Ck.release(bailedClr)
-            Seq("scc_lastgrow", "scc_active", "scc_color_a")
-              .foreach(s.catalog.dropTempView)
-          }
-          if (lastGrow ne null) graft.Ck.release(lastGrow)
-          members.createOrReplaceTempView("scc_members")
-          val roundA = s.sql(
-            """SELECT m.id, x.scc FROM scc_members m
-              |JOIN (SELECT clr, MIN(id) AS scc FROM scc_members GROUP BY clr) x
-              |  USING (clr)""".stripMargin).localCheckpoint(true)
-          val na = assigned.unionByName(roundA).localCheckpoint(true)
-          graft.Ck.release(assigned)
-          graft.Ck.release(roundA)
-          assigned = na
-          val (nextActive, naCnt) = graft.Loop.checkpoint(s.sql(
-            "SELECT id FROM scc_cur LEFT ANTI JOIN scc_members USING (id)"),
-            count(lit(1)))
-          graft.Ck.release(members)
-          graft.Ck.release(color)
-          if (cur ne active) graft.Ck.release(cur)
-          ce.unpersist(blocking = false)
-          graft.Ck.release(active)
-          active = nextActive
-          done = naCnt == 0L
-        } else {
-          if (cur ne active) { graft.Ck.release(active); active = cur }
-        }
-      }
-      graft.Ck.release(active)
-      require(done, s"SCC did not converge in $maxOuter outer rounds")
-      (assigned, outer)
-    } finally {
-      Seq("scc_edges", "scc_cur", "scc_keep", "scc_ce", "scc_color",
-        "scc_members", "scc_same", "scc_back")
-        .foreach(s.catalog.dropTempView)
+    def sqlOver(text: String, views: (String, DataFrame)*): DataFrame = {
+      views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+      s.sql(text)
+    }
+    val bodies = Mining.SccBodies(
+      trimKeep = (e, cur) =>
+        sqlOver(sccTrimKeepSql, "scc_edges" -> e, "scc_cur" -> cur),
+      colorInit = cur => sqlOver(sccColorInitSql, "scc_cur" -> cur),
+      colorRound = (ce, color) =>
+        sqlOver(sccColorRoundSql, "scc_ce" -> ce, "scc_color" -> color),
+      collectGrow = (ce, color, members) =>
+        sqlOver(sccCollectGrowSql, "scc_ce" -> ce, "scc_color" -> color,
+          "scc_members" -> members),
+      backRound = (same, back) =>
+        sqlOver(sccBackRoundSql, "scc_same" -> same, "scc_back" -> back))
+    try Mining.sccAssign(edges, maxOuter, bodies)
+    finally {
+      Seq("scc_edges", "scc_cur", "scc_ce", "scc_color", "scc_members",
+        "scc_same", "scc_back").foreach(s.catalog.dropTempView)
     }
   }
 

@@ -2664,7 +2664,7 @@ object ops {
           sum(col("__mv")), maxRounds, done = (_, mv) => mv <= eps,
           probe = probe) { pr =>
         val contrib = edeg
-          .join(broadcast(pr), col("__src") === col("id"))
+          .join(graft.Loop.broadcastIfFits(pr), col("__src") === col("id"))
           .select(col("__dst"), expr("pr div __outdeg").as("__c"))
           .groupBy(col("__dst")).agg(sum(col("__c")).as("__sc"))
         pr.select(col("id"), col("pr").as("__old"))

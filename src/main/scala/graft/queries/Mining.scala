@@ -1215,11 +1215,14 @@ object Mining {
     * BOTH endpoints survive. Factored out of [[kcoreLoop]] so
     * SqlSurfaceSpec can pin the SQL-driven round body plan-equal to
     * this exact production code (the ccRound/prRound discipline).
+    * The survivor set is broadcast only while it fits the session's
+    * autoBroadcastJoinThreshold (Loop.broadcastIfFits); the SQL
+    * text's BROADCAST hints match it below that size.
     */
   private[graft] def kcoreInduced(nbrs: DataFrame, core: DataFrame): DataFrame =
     nbrs
-      .join(broadcast(core), "node")
-      .join(broadcast(core.select(col("node").as("nbr"))), "nbr")
+      .join(graft.Loop.broadcastIfFits(core), "node")
+      .join(graft.Loop.broadcastIfFits(core.select(col("node").as("nbr"))), "nbr")
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
   private[graft] def kcoreLoop(s: SparkSession, dir: String, k: Int = 2,
@@ -1839,12 +1842,6 @@ object Mining {
       .distinct()
   }
 
-  /** The SCC assignment loop (parameterized core — ops.scc and the
-    * MiningSpec adversarial graphs call it directly). Takes a
-    * distinct (src, dst) long edge frame without self-loops; returns
-    * the (id, scc) table — scc = the component's MINIMUM member id,
-    * q161's canonical-label convention — and the outer round count.
-    */
   /** The hash-scrambled propagation total order ord(v) = h28(v)·2³⁵
     * + v (injective for ids in [0, 2³⁵), pseudo-random — see the
     * phase-2 comment in [[sccAssign]]). Factored so the SQL surface
@@ -1951,8 +1948,37 @@ object Mining {
         greatest(col("b2"), col("tb2")).as("b"))
   }
 
-  private[graft] def sccAssign(edges0: DataFrame,
-      maxOuter: Int = 30): (DataFrame, Int) = {
+  /** The color init over the live node set: (id, ord, clr = ord). */
+  private[graft] def sccColorInit(cur: DataFrame): DataFrame =
+    cur.select(col("id"), sccOrd)
+      .select(col("id"), col("ord"), col("ord").as("clr"))
+
+  /** The five round bodies [[sccAssign]] runs; everything else (the
+    * loops, stop tests, freeze, warm init, assembly, releases, guards,
+    * LoopStats) is the driver's. The defaults are the DataFrame
+    * bodies; SqlSurface.sccLoopSqlOn passes SQL texts pinned
+    * plan-equal to them (SqlSurfaceSpec), so both surfaces run one
+    * program. Arguments: trimKeep(edges, cur), colorInit(cur),
+    * colorRound(ce, color), collectGrow(ce, color, members),
+    * backRound(sameE, back).
+    */
+  private[graft] final case class SccBodies(
+      trimKeep: (DataFrame, DataFrame) => DataFrame = sccTrimKeep,
+      colorInit: DataFrame => DataFrame = sccColorInit,
+      colorRound: (DataFrame, DataFrame) => DataFrame = sccColorRound,
+      collectGrow: (DataFrame, DataFrame, DataFrame) => DataFrame =
+        sccCollectGrow,
+      backRound: (DataFrame, DataFrame) => DataFrame = sccBackRound)
+
+  /** The SCC assignment loop (parameterized core — q199, q202,
+    * ops.scc, the SQL surface and the MiningSpec adversarial graphs
+    * all run it). Takes a distinct (src, dst) long edge frame without
+    * self-loops; returns the (id, scc) table — scc = the component's
+    * MINIMUM member id, q161's canonical-label convention — and the
+    * outer round count.
+    */
+  private[graft] def sccAssign(edges0: DataFrame, maxOuter: Int = 30,
+      bodies: SccBodies = SccBodies()): (DataFrame, Int) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = edges0.persist(MEMORY_AND_DISK)
     touch(edges)
@@ -2000,7 +2026,7 @@ object Mining {
         // the pass removed nothing (the old shape paid a second
         // removed-emptiness job per pass for the same answer)
         val (keep, keepCnt) = graft.Loop.checkpoint(
-          sccTrimKeep(edges, cur), count(lit(1)))
+          bodies.trimKeep(edges, cur), count(lit(1)))
         trimming = keepCnt != curCnt
         curCnt = keepCnt
         if (cur ne active) graft.Ck.release(cur)
@@ -2049,16 +2075,14 @@ object Mining {
         // with the propagation order except by vanishing chance —
         // the expected-O(log) behavior of randomized shortcutting,
         // independent of how the graph labeled its nodes.
-        var color = cur.select(col("id"), sccOrd)
-          .select(col("id"), col("ord"), col("ord").as("clr"))
-          .localCheckpoint(true)
+        var color = bodies.colorInit(cur).localCheckpoint(true)
         var stable = false
         var colGuard = 0
         while (!stable && colGuard < 100) {
           colGuard += 1
           // stop check rides the checkpoint job (graft.Loop)
           val (next, mvC) = graft.Loop.checkpoint(
-            sccColorRound(ce, color), count_if(col("clr") =!= col("old")))
+            bodies.colorRound(ce, color), count_if(col("clr") =!= col("old")))
           stable = mvC == 0L
           graft.Ck.release(color)
           color = next.select(col("id"), col("ord"), col("clr"))
@@ -2164,7 +2188,7 @@ object Mining {
           // final (zero-growth) round re-materializes an unchanged
           // member set; one redundant class-sized copy against one
           // saved job every growing round.
-          val grow0 = sccCollectGrow(ce, color, members)
+          val grow0 = bodies.collectGrow(ce, color, members)
           val grow = if (bailedClr == null) grow0
             else grow0.join(broadcast(bailedClr), Seq("clr"), "left_anti")
           val (nm, nNew) = graft.Loop.checkpoint(
@@ -2330,7 +2354,7 @@ object Mining {
           while (!bstable && bwGuard < oneStepBudget + 100) {
             bwGuard += 1
             val (next, mvB) = graft.Loop.checkpoint(
-              sccBackRound(sameE, back), count_if(col("b") =!= col("old")))
+              bodies.backRound(sameE, back), count_if(col("b") =!= col("old")))
             bstable = mvB == 0L
             graft.Ck.release(back)
             back = next.select(col("id"), col("ord"), col("b"))

@@ -39,7 +39,7 @@ class BenchGateSpec extends AnyFunSuite {
     Files.writeString(base, detail(
       "q_slow" -> 0.5, "q_fast" -> 1.0, "q_tiny" -> 0.04, "q_flat" -> 1.0))
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
-    assert(Bench.unadjudicatedIn(out.toString) == Seq("q_slow"))
+    assert(Bench.unadjudicatedIn(out.toString, "drifts") == Seq("q_slow"))
     // the artifact itself counts the same way (the judge-facing field)
     val n = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(out))
@@ -60,7 +60,7 @@ class BenchGateSpec extends AnyFunSuite {
     Files.writeString(cur, detail("q115_triangle_count" -> 1.0))
     Files.writeString(base, detail("q115_triangle_count" -> 0.5))
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
-    assert(Bench.unadjudicatedIn(out.toString).isEmpty)
+    assert(Bench.unadjudicatedIn(out.toString, "drifts").isEmpty)
     val n = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(out))
     assert(n.get("n_drifts").asInt() == 1)
@@ -69,16 +69,16 @@ class BenchGateSpec extends AnyFunSuite {
       .startsWith("ADJUDICATED"))
     // gate robustness: absent artifact = clean (BenchDiff failures
     // are reported separately at the call site)
-    assert(Bench.unadjudicatedIn(dir.resolve("nope.json").toString).isEmpty)
+    assert(Bench.unadjudicatedIn(dir.resolve("nope.json").toString, "drifts").isEmpty)
     // ...but PRESENT-and-unparseable = DIRTY (round-11 advice: a
     // truncated BENCH_DIFF must never read as a clean gate). The
     // marker names no query, so the retry pass skips it and only the
     // loud ship path sees it.
     val garbage = dir.resolve("garbage.json")
     Files.writeString(garbage, """{"drifts": {"q_x": truncated""")
-    assert(Bench.unadjudicatedIn(garbage.toString) ==
+    assert(Bench.unadjudicatedIn(garbage.toString, "drifts") ==
       Seq(Bench.DiffUnparseable))
-    assert(Bench.spreadUnadjudicatedIn(garbage.toString) ==
+    assert(Bench.unadjudicatedIn(garbage.toString, "spreads") ==
       Seq(Bench.DiffUnparseable))
   }
 
@@ -104,9 +104,9 @@ class BenchGateSpec extends AnyFunSuite {
       ("q_tight", 2.0, Seq(2.0, 2.0, 2.0)),
       ("q217_incremental_cc", 1.0, Seq(1.0, 1.0, 1.0))))
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
-    assert(Bench.spreadUnadjudicatedIn(out.toString) == Seq("q_var"))
+    assert(Bench.unadjudicatedIn(out.toString, "spreads") == Seq("q_var"))
     // ratio gate unaffected: no min moved, so no drift rows at all
-    assert(Bench.unadjudicatedIn(out.toString).isEmpty)
+    assert(Bench.unadjudicatedIn(out.toString, "drifts").isEmpty)
     val n = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(out))
     assert(n.get("n_spreads").asInt() == 2, n.toString)
@@ -317,7 +317,7 @@ class BenchGateSpec extends AnyFunSuite {
     // the stale text is preserved after the marker for the auditor
     assert(status.contains("ADJUDICATED r13"), status)
     // ...and the gate parse counts it dirty, so it flows to retry/loud
-    assert(Bench.unadjudicatedIn(out.toString) == Seq("q115_triangle_count"))
+    assert(Bench.unadjudicatedIn(out.toString, "drifts") == Seq("q115_triangle_count"))
     assert(n.get("n_unadjudicated").asInt() == 1, n.toString)
     // an adjudication at or after the pin round still silences: pin
     // round 13 makes the same entry current
@@ -326,7 +326,7 @@ class BenchGateSpec extends AnyFunSuite {
         """"queries":{"q115_triangle_count":0.5},"sf":"x",""" +
         """"meta":{"pin_round":13,"cpus":4,"data":{"hash":"h1","bytes":1}}}""")
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
-    assert(Bench.unadjudicatedIn(out.toString).isEmpty)
+    assert(Bench.unadjudicatedIn(out.toString, "drifts").isEmpty)
     val n2 = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(out))
     assert(n2.at("/drifts/q115_triangle_count/status").asText()
@@ -351,7 +351,7 @@ class BenchGateSpec extends AnyFunSuite {
         """"queries":{"q219_takedown_dedup":1.0},"sf":"x",""" +
         """"meta":{"pin_round":15,"cpus":4,"data":{"hash":"h1","bytes":1}}}""")
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
-    assert(Bench.spreadUnadjudicatedIn(out.toString) ==
+    assert(Bench.unadjudicatedIn(out.toString, "spreads") ==
       Seq("q219_takedown_dedup"))
     val n = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readString(out))
@@ -365,7 +365,7 @@ class BenchGateSpec extends AnyFunSuite {
         """"queries":{"q219_takedown_dedup":1.0},"sf":"x",""" +
         """"meta":{"pin_round":12,"cpus":4,"data":{"hash":"h1","bytes":1}}}""")
     BenchDiff.main(Array(cur.toString, base.toString, out.toString))
-    assert(Bench.spreadUnadjudicatedIn(out.toString).isEmpty)
+    assert(Bench.unadjudicatedIn(out.toString, "spreads").isEmpty)
   }
 
   test("BenchPin: sessions lacking /sf or /meta/data pin to null fields, not malformed JSON") {
@@ -467,14 +467,14 @@ class BenchGateSpec extends AnyFunSuite {
       assert(!d.get("comparable").asBoolean(), d.toString)
       assert(d.get("comparable_reason").asText().contains(reason), d.toString)
       assert(d.get("n_drifts").asInt() == 0 && d.get("n_compared").asInt() == 0, d.toString)
-      assert(Bench.unadjudicatedIn(out.toString).isEmpty)
-      assert(Bench.spreadUnadjudicatedIn(out.toString) == Seq("q_var"))
+      assert(Bench.unadjudicatedIn(out.toString, "drifts").isEmpty)
+      assert(Bench.unadjudicatedIn(out.toString, "spreads") == Seq("q_var"))
     }
     // same cpus and sf: the drift row comes back
     baseWith(""""cpus":4,""")
     val d = diff()
     assert(d.get("comparable").asBoolean() && d.get("comparable_reason").isNull, d.toString)
-    assert(Bench.unadjudicatedIn(out.toString) == Seq("q_slow"))
+    assert(Bench.unadjudicatedIn(out.toString, "drifts") == Seq("q_slow"))
   }
 
   test("steal dodge: stolen runs discard and re-draw; crashes and quiet runs keep") {

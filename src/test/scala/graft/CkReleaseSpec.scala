@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic checkpoint-block release (`Ck.release`): the
@@ -112,19 +113,25 @@ class CkReleaseSpec extends SparkSpec {
   }
 
   test("scc loop: nested trim/color/collect rounds all release their blocks") {
-    spark.catalog.clearCache()
-    val before = persisted
-    val (labels, _) = graft.queries.Mining.sccAssign(
-      graft.queries.Mining.dirEdges(spark, dir))
-    labels.count()
-    spark.catalog.clearCache() // graphEv's catalog-managed cache
-    val leftover = persisted -- before
-    // three nested inner loops per outer round — only the returned
-    // assignment frame may survive
-    assert(leftover.size <= 1,
-      s"scc loop leaked ${leftover.size} persisted RDDs (want <= 1)")
-    Ck.release(labels)
-    assert(persisted == before, "releasing the returned frame must zero the loop")
+    // the one SCC driver over each body set it runs
+    val drivers = Seq[(String, DataFrame => (DataFrame, Int))](
+      "dataframe" -> (e => graft.queries.Mining.sccAssign(e)),
+      "sql" -> (e => graft.api.SqlSurface.sccLoopSqlOn(spark, e)))
+    for ((driver, scc) <- drivers) {
+      spark.catalog.clearCache()
+      val before = persisted
+      val (labels, _) = scc(graft.queries.Mining.dirEdges(spark, dir))
+      labels.count()
+      spark.catalog.clearCache() // graphEv's catalog-managed cache
+      val leftover = persisted -- before
+      // three nested inner loops per outer round — only the returned
+      // assignment frame may survive
+      assert(leftover.size <= 1,
+        s"$driver: scc loop leaked ${leftover.size} persisted RDDs (want <= 1)")
+      Ck.release(labels)
+      assert(persisted == before,
+        s"$driver: releasing the returned frame must zero the loop")
+    }
   }
 
   test("loop guards release their live state: kmeans and dagLayers past maxRounds") {

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.ops
+import graft.api.{SqlSurface, ops}
 
 /** Algorithm-level checks for the mining operators: the distributed
   * implementations must agree with brute-force enumeration on small
@@ -11,6 +12,12 @@ import graft.api.ops
   * isolated nodes, duplicate/reversed edges, self-loops).
   */
 class MiningSpec extends SparkSpec {
+
+  /** The SCC driver over each body set it runs: Mining's DataFrame
+    * bodies and the SQL surface's texts. */
+  private def sccDrivers: Seq[(String, DataFrame => (DataFrame, Int))] = Seq(
+    "dataframe" -> (e => queries.Mining.sccAssign(e)),
+    "sql" -> (e => SqlSurface.sccLoopSqlOn(spark, e)))
 
   test("triangleCounts matches brute force on random graphs") {
     val s = spark
@@ -120,10 +127,13 @@ class MiningSpec extends SparkSpec {
     }
     def check(label: String, n: Int, edges: Seq[(Long, Long)]): Unit = {
       val df = edges.toDF("src", "dst")
-      val (lbl, rounds) = queries.Mining.sccAssign(df)
-      val got = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      graft.Ck.release(lbl)
-      assert(got == brute(n, edges), s"$label diverged (rounds=$rounds)")
+      val want = brute(n, edges)
+      for ((driver, scc) <- sccDrivers) {
+        val (lbl, rounds) = scc(df)
+        val got = lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        graft.Ck.release(lbl)
+        assert(got == want, s"$label diverged on $driver bodies (rounds=$rounds)")
+      }
     }
     // two 3-cycles joined by a one-way bridge (two SCCs, not one)
     check("bridged cycles", 8,
@@ -159,26 +169,33 @@ class MiningSpec extends SparkSpec {
     val n = 600
     val ring = (0 until n).map(i => (i.toLong, ((i + 1) % n).toLong))
       .toDF("src", "dst")
-    graft.LoopStats.drain()
-    val (lbl, outer) = queries.Mining.sccAssign(ring)
-    val got = lbl.collect()
-    graft.Ck.release(lbl)
-    assert(got.length == n && got.forall(_.getLong(1) == 0L),
-      s"ring must be one SCC labeled 0")
-    assert(outer == 1, s"one trim-free outer round, got $outer")
-    val bw = graft.LoopStats.drain().getOrElse("scc_bw", -1L)
-    // round-12 shape: the probe-gated bail must abandon the one-step
-    // trial by round ~7 (the ring's frontier adds exactly one node
-    // per round — flat nNew, and the stagnation probe counts ~n
-    // remaining against a budget that covers ~58), then the
-    // fresh+stale-jump fixpoint finishes in O(log 600) expected
-    // rounds — nowhere near the 64-round trial the r11 hybrid burned
-    // first, let alone the linear 599 of the round-7 one-step-only
-    // collect. (An id-ordered max walk WOULD be linear even when
-    // jump-accelerated: this ring is exactly the adversarial
-    // monotone case the hash-scrambled propagation order defuses.)
-    assert(bw > 6L && bw <= 30L,
-      s"collect rounds not [bail-by-7 + O(log) fixpoint]: $bw")
+    for ((driver, scc) <- sccDrivers) {
+      graft.LoopStats.drain()
+      val (lbl, outer) = scc(ring)
+      val got = lbl.collect()
+      graft.Ck.release(lbl)
+      assert(got.length == n && got.forall(_.getLong(1) == 0L),
+        s"$driver: ring must be one SCC labeled 0")
+      assert(outer == 1, s"$driver: one trim-free outer round, got $outer")
+      val stats = graft.LoopStats.drain()
+      val bw = stats.getOrElse("scc_bw", -1L)
+      // the trial stopped (freeze or budget) and the doubled
+      // back-round fixpoint ran
+      assert(stats.getOrElse("scc_bail_at", 0L) > 0L,
+        s"$driver: the one-step trial never stopped: $stats")
+      // round-12 shape: the probe-gated bail must abandon the one-step
+      // trial by round ~7 (the ring's frontier adds exactly one node
+      // per round — flat nNew, and the stagnation probe counts ~n
+      // remaining against a budget that covers ~58), then the
+      // fresh+stale-jump fixpoint finishes in O(log 600) expected
+      // rounds — nowhere near the 64-round trial the r11 hybrid burned
+      // first, let alone the linear 599 of the round-7 one-step-only
+      // collect. (An id-ordered max walk WOULD be linear even when
+      // jump-accelerated: this ring is exactly the adversarial
+      // monotone case the hash-scrambled propagation order defuses.)
+      assert(bw > 6L && bw <= 30L,
+        s"$driver: collect rounds not [bail-by-7 + O(log) fixpoint]: $bw")
+    }
   }
 
   test("dagLayers stratifies a hand-built condensation by longest path") {

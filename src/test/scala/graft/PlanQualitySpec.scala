@@ -1027,6 +1027,64 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("Join"), p)
     assert(!p.contains("parquet"), p) // report is detached from the scan
   }
+
+  // The loop round bodies hint node-sized state (rank vector,
+  // survivor set) into edge joins through Loop.broadcastIfFits: past
+  // the session's autoBroadcastJoinThreshold the join shuffles and
+  // nothing is collected to the driver. An unconditional broadcast()
+  // hint overrides the threshold. A child session carries the -1
+  // threshold, so the shared session's conf is never touched.
+  test("pagerank and kcoreInduced plan no BroadcastExchange when the threshold is -1") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val cs = spark.newSession()
+    cs.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val h = new AdaptiveSparkPlanHelper {}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    cs.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    // the executed plans of every query `body` runs in the child
+    // session (the listener bus is async: poll to quiescence)
+    def planned(body: => Unit): Seq[SparkPlan] = {
+      seen.clear()
+      body
+      var prev = -1
+      var tries = 0
+      while (prev != seen.size && tries < 20) {
+        prev = seen.size; tries += 1; Thread.sleep(100L)
+      }
+      seen.toArray(Array.empty[SparkPlan]).toSeq
+    }
+    def sortMergeJoins(plans: Seq[SparkPlan]): Int =
+      plans.map(p => h.collect(p) { case j: SortMergeJoinExec => j }.size).sum
+    def broadcasting(plans: Seq[SparkPlan]): Seq[SparkPlan] =
+      plans.filter(p => h.collect(p) { case b: BroadcastExchangeExec => b }.nonEmpty)
+    // a 12-node permutation digraph: ranks are stationary, one round
+    val e = cs.range(12).select(col("id").as("src"),
+      ((col("id") * 5L + 1L) % 12L).as("dst"))
+    var rounds = 0
+    val pr = planned {
+      val (ranks, _, n) = graft.api.ops.pagerank(e, "src", "dst")
+      rounds = n
+      Ck.release(ranks)
+    }
+    assert(rounds >= 1 && sortMergeJoins(pr) > 0,
+      s"pagerank's round never planned a join (rounds=$rounds)")
+    assert(broadcasting(pr).isEmpty, broadcasting(pr).mkString("\n"))
+    val nbrs = e.select(col("src").as("node"), col("dst").as("nbr"))
+    val core = cs.range(6).select(col("id").as("node"))
+    val kc = planned { graft.queries.Mining.kcoreInduced(nbrs, core).collect() }
+    assert(sortMergeJoins(kc) == 2, kc.mkString("\n"))
+    assert(broadcasting(kc).isEmpty, broadcasting(kc).mkString("\n"))
+  }
+
   // Re-pinned when star2Round moved to the two-window reducer form:
   // the older aggregate-then-join-back body planned a broadcast min
   // table join, a dedup aggregate and a triple-referenced `large`

@@ -196,6 +196,27 @@ class SqlSurfaceSpec extends SparkSpec {
       s"SCC census diverges:\ndf=${rows(dfOut)}\nsql=${rows(sqOut)}")
   }
 
+  test("SQL-driven SCC runs the same jobs as the DataFrame q199") {
+    ready
+    // JobBudgetSpec's method: a warm-up run (schema memo, spread
+    // copies), then the jobs of a counted run under a job group; the
+    // slack is the rider fallbacks counted over both windows (each
+    // fallback is one extra job on the same thread)
+    def jobs(name: String)(run: => DataFrame): Long = {
+      Ck.release(run) // warm-up
+      var out: DataFrame = null
+      val n = countJobs(s"sqlsurface_scc_$name") { out = run; out.count() }
+      Ck.release(out)
+      n
+    }
+    val fb0 = Loop.fallbacks.get()
+    val df = jobs("df")(SparkEntry.queries("q199_scc")(spark, dir))
+    val sq = jobs("sql")(SqlSurface.q199SccSql(spark, dir))
+    val fb = Loop.fallbacks.get() - fb0
+    assert(math.abs(df - sq) <= fb,
+      s"SQL-driven SCC ran $sq jobs, the DataFrame q199 $df (rider fallbacks $fb)")
+  }
+
   test("SQL-driven warm cc bodies are plan-equal to ops'; q217 agrees") {
     ready
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
