@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * the r16 optimization evidence (plans/r16/) actually claims about:
   *   loop:pr_round   — Curation.prRound over the persisted edeg and a
   *                     round-1-shaped rank checkpoint (q175/q178 body)
-  *   loop:ppr_round  — Curation.pprRound, same harness (q186 body)
+  *   loop:ppr_round  — Curation.prRound with a seed-only teleport
+  *                     column, same harness (q186 body)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -25,7 +26,7 @@ object Explain {
       println(s"===== $name =====")
       name match {
         case "loop:pr_round" | "loop:ppr_round" =>
-          import org.apache.spark.sql.functions.{col, count, lit, sum}
+          import org.apache.spark.sql.functions.{col, count, lit, sum, when}
           import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
           val (_, edges, nodes) =
             graft.queries.Curation.prGraphEdges(spark, sfDir)
@@ -41,7 +42,8 @@ object Explain {
           def roundOf(pr: org.apache.spark.sql.DataFrame) =
             if (name == "loop:pr_round")
               graft.queries.Curation.prRound(edeg, pr)
-            else graft.queries.Curation.pprRound(100L)(edeg, pr)
+            else graft.queries.Curation.prRound(edeg, pr,
+              when(col("id") % 97L === 0L, lit(100L)).otherwise(lit(0L)))
           val (pr0, _) = graft.Loop.checkpoint(
             graft.queries.Curation.prInit(nodes.select(col("id"),
               lit(1000000000L).as("pr")), edeg.rdd.getNumPartitions),

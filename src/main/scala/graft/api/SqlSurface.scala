@@ -951,114 +951,95 @@ object SqlSurface {
 
   // ----- q175: the PageRank loop, SQL-driven -----------------------
 
-  /** One Curation.prRound over the `pr_edeg` / `pr_ranks` views:
-    * broadcast-rank contribution exchange + node-sized left join,
-    * plan-equal to the DataFrame round (pinned in SqlSurfaceSpec).
+  /** One Curation.prRound over the `pr_edeg` / `pr_ranks` /
+    * `pr_ranks_b` views (the rank vector twice: `pr_ranks_b` is its
+    * size-gated broadcast side, registered by [[prRoundBody]]):
+    * contribution exchange + node-sized left join, plan-equal to the
+    * DataFrame round (pinned in SqlSurfaceSpec).
     */
   val prRoundSql: String =
-    s"""SELECT id, pr, abs(pr - old) AS mv
-       |FROM (
-       |  SELECT id, 150000000L + ${ldiv("85L * coalesce(sc, 0L)", "100L")} AS pr, old
-       |  FROM (SELECT id, pr AS old FROM pr_ranks)
-       |  LEFT JOIN (
-       |    SELECT dst, SUM(c) AS sc
-       |    FROM (
-       |      SELECT /*+ BROADCAST(pr_ranks) */ dst, ${ldiv("pr", "outdeg")} AS c
-       |      FROM pr_edeg JOIN pr_ranks ON src = id
-       |    )
-       |    GROUP BY dst
-       |  ) ON id = dst
-       |)""".stripMargin
+    """SELECT id, pr, abs(pr - old) AS mv
+      |FROM (
+      |  SELECT id, 150000000L + (85L * coalesce(sc, 0L)) div 100L AS pr, old
+      |  FROM (SELECT id, pr AS old FROM pr_ranks)
+      |  LEFT JOIN (
+      |    SELECT dst, SUM(c) AS sc
+      |    FROM (
+      |      SELECT dst, pr div outdeg AS c
+      |      FROM pr_edeg JOIN pr_ranks_b ON src = id
+      |    )
+      |    GROUP BY dst
+      |  ) ON id = dst
+      |)""".stripMargin
 
-  /** q175's integer-PageRank loop driven through `spark.sql` — the
-    * same movement-threshold stop, curve, and per-round hygiene as
-    * Curation.prLoop. Returns (final ranks, movement curve, rounds).
+  /** The SQL PageRank round body: registers the round's inputs as
+    * the views [[prRoundSql]] reads (the broadcast side through
+    * Loop.broadcastIfFits, as Curation.prRound) and parses it. The
+    * caller drops the views once the loop is done: dropping
+    * `pr_edeg` earlier would uncache the persisted edge frame.
     */
-  /** RESERVED VIEW NAMES: owns `pr_edeg` / `pr_ranks` for the loop's
-    * duration, dropped on exit — see [[ccLoopSql]]'s contract.
+  def prRoundBody(s: SparkSession)(edeg: DataFrame, pr: DataFrame): DataFrame = {
+    edeg.createOrReplaceTempView("pr_edeg")
+    pr.createOrReplaceTempView("pr_ranks")
+    graft.Loop.broadcastIfFits(pr).createOrReplaceTempView("pr_ranks_b")
+    s.sql(prRoundSql)
+  }
+
+  /** q175's integer-PageRank loop with the SQL round body: runs
+    * Curation.prLoop (the one PageRank driver) with [[prRoundBody]].
+    * Returns (final ranks, movement curve, rounds).
+    */
+  /** RESERVED VIEW NAMES: owns `pr_edeg` / `pr_ranks` / `pr_ranks_b`
+    * for the loop's duration, dropped on exit — see [[ccLoopSql]]'s
+    * contract.
     */
   def prLoopSql(s: SparkSession, dir: String)
     : (DataFrame, Seq[(Long, Long)], Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val (_, edges, nodesRaw) = Curation.prGraphEdges(s, dir)
-    val edeg = Curation.withOutdeg(edges, graft.Loop.statePartitions(edges))
-      .persist(MEMORY_AND_DISK)
-    graft.Tables.touch(edeg)
-    val nodes = nodesRaw.persist(MEMORY_AND_DISK)
-    try {
-      edeg.createOrReplaceTempView("pr_edeg")
-      val eps = nodes.count() * Curation.EpsPerNode
-      // id-partitioned init (r16) and layout-keeping checkpoints, as
-      // in prIterate — keeps the SQL-driven round plan-equal to the
-      // co-partitioned DataFrame round (the checkpoint carries hash(id)
-      // into every round)
-      val (pr, curve) = graft.Loop.fixpoint("pr",
-          Curation.prInit(nodes.select(col("id"), lit(1000000000L).as("pr")),
-            edeg.rdd.getNumPartitions),
-          sum(col("mv")), Curation.MaxPrRounds, keepLayout = true,
-          done = (_, mv) => mv <= eps) { pr =>
-        pr.createOrReplaceTempView("pr_ranks")
-        s.sql(prRoundSql)
-      }
-      (pr, curve, curve.length)
-    } finally {
-      edeg.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      s.catalog.dropTempView("pr_edeg")
-      s.catalog.dropTempView("pr_ranks")
-    }
+    val (pr, curve) =
+      try Curation.prLoop(s, dir, round = prRoundBody(s))
+      finally Seq("pr_edeg", "pr_ranks", "pr_ranks_b").foreach(s.catalog.dropTempView)
+    (pr, curve, curve.length)
   }
 
   // ----- q181: the k-core peel loop, SQL-driven --------------------
 
   /** One induced-degree round over the `kc_nbrs` / `kc_alive` views:
-    * an edge survives iff BOTH endpoints survive, with the survivor
-    * set broadcast into both endpoint joins — plan-equal to
-    * Mining.kcoreInduced (pinned in SqlSurfaceSpec).
+    * an edge survives iff BOTH endpoints survive — plan-equal to
+    * Mining.kcoreInduced (pinned in SqlSurfaceSpec). `kc_alive` is
+    * registered size-gated by [[kcInducedBody]].
     */
   val kcInducedSql: String =
-    """SELECT /*+ BROADCAST(c1), BROADCAST(c2) */ node, COUNT(1) AS deg
+    """SELECT node, COUNT(1) AS deg
       |FROM kc_nbrs
       |JOIN (SELECT node FROM kc_alive) c1 USING (node)
       |JOIN (SELECT node AS nbr FROM kc_alive) c2 USING (nbr)
       |GROUP BY node""".stripMargin
 
-  /** q181's synchronous peel loop driven through `spark.sql` — same
-    * stop rule (a round that removes nothing), bounded-round guard,
-    * and per-round checkpoint hygiene (including the Ck release of
-    * superseded survivor sets) as Mining.kcoreLoop. Returns the
-    * final core's induced degree table and the round count (the
+  /** The SQL k-core round body: registers the neighbour list and the
+    * survivor set (through Loop.broadcastIfFits, as
+    * Mining.kcoreInduced) as the views [[kcInducedSql]] reads and
+    * parses it. The caller drops the views once the peel is done:
+    * dropping `kc_nbrs` earlier would uncache the persisted list.
+    */
+  def kcInducedBody(s: SparkSession)(nbrs: DataFrame, alive: DataFrame): DataFrame = {
+    nbrs.createOrReplaceTempView("kc_nbrs")
+    graft.Loop.broadcastIfFits(alive).createOrReplaceTempView("kc_alive")
+    s.sql(kcInducedSql)
+  }
+
+  /** q181's peel with the SQL round body: runs Mining.kcorePeel (the
+    * one k-core driver) with [[kcInducedBody]]. Returns the final
+    * core's induced degree table and the round count (the
     * stable-detection round included, q175's counting rule).
     */
   /** RESERVED VIEW NAMES: owns `kc_nbrs` / `kc_alive` for the loop's
     * duration, dropped on exit — see [[ccLoopSql]]'s contract.
     */
   def kcoreLoopSql(s: SparkSession, dir: String, k: Int = 2,
-      maxRounds: Int = 40): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = Mining.sparseUnd(s, dir)
-    val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
-      .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("node")) // co-locate once; every round joins on node
-      .persist(MEMORY_AND_DISK)
-    try {
-      nbrs.createOrReplaceTempView("kc_nbrs")
-      val (alive, curve) = graft.Loop.fixpoint("kcore",
-          s.sql("SELECT DISTINCT node FROM kc_nbrs"), count(lit(1)), maxRounds,
-          done = (before, kept) => kept == before) { alive =>
-        alive.createOrReplaceTempView("kc_alive")
-        s.sql(s"SELECT node FROM ($kcInducedSql) WHERE deg >= $k")
-      }
-      alive.createOrReplaceTempView("kc_alive")
-      val coreDeg = s.sql(kcInducedSql).localCheckpoint(true)
-      graft.Ck.release(alive) // coreDeg is materialized off it
-      (coreDeg, curve.length)
-    } finally {
-      nbrs.unpersist(blocking = false)
-      s.catalog.dropTempView("kc_nbrs")
-      s.catalog.dropTempView("kc_alive")
-    }
-  }
+      maxRounds: Int = 40): (DataFrame, Int) =
+    try Mining.kcorePeel(Mining.sparseUnd(s, dir), k, maxRounds,
+      induced = kcInducedBody(s))
+    finally Seq("kc_nbrs", "kc_alive").foreach(s.catalog.dropTempView)
 
   // ----- q196: the HITS loop, SQL-driven ---------------------------
   // (the directed-graph family's entry on the SQL surface — round-7
@@ -1066,18 +1047,30 @@ object SqlSurface {
 
   /** The raw half of one HITS half-step over the `hits_nodes` /
     * `hits_edges` / `hits_scores` views — plan-equal to
-    * Curation.hitsRawFrame.
+    * Curation.hitsRawFrame. `hits_scores` is registered size-gated by
+    * [[hitsRawBody]].
     */
   def hitsRawSql(key: String, out: String): String =
     s"""SELECT id, coalesce(raw, 0L) AS raw
        |FROM hits_nodes
        |LEFT JOIN (
-       |  SELECT /*+ BROADCAST(sc) */ $out, SUM(os) AS raw
+       |  SELECT $out, SUM(os) AS raw
        |  FROM hits_edges
        |  JOIN (SELECT id AS $key, score AS os FROM hits_scores) sc
        |    USING ($key)
        |  GROUP BY $out
        |) ON id = $out""".stripMargin
+
+  /** The SQL raw half-step body: registers the score vector (through
+    * Loop.broadcastIfFits, as Curation.hitsRawFrame) as `hits_scores`
+    * and parses [[hitsRawSql]] over the caller's `hits_nodes` /
+    * `hits_edges` views.
+    */
+  def hitsRawBody(s: SparkSession, key: String, out: String)(
+      scores: DataFrame): DataFrame = {
+    graft.Loop.broadcastIfFits(scores).createOrReplaceTempView("hits_scores")
+    s.sql(hitsRawSql(key, out))
+  }
 
   /** The max-renormalize half over the `hits_raw` view — plan-equal
     * to Curation.hitsNormFrame.
@@ -1109,8 +1102,7 @@ object SqlSurface {
       edges.createOrReplaceTempView("hits_edges")
       nodes.createOrReplaceTempView("hits_nodes")
       def halfStep(scores: DataFrame, key: String, out: String): DataFrame = {
-        scores.createOrReplaceTempView("hits_scores")
-        val raw = s.sql(hitsRawSql(key, out)).localCheckpoint(true)
+        val raw = hitsRawBody(s, key, out)(scores).localCheckpoint(true)
         raw.createOrReplaceTempView("hits_raw")
         val normed = s.sql(hitsNormSql).localCheckpoint(true)
         graft.Ck.release(raw)

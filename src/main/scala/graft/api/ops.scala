@@ -1957,21 +1957,17 @@ object ops {
     * WITHIN the surviving induced subgraph is below k, and stops when
     * a round removes nothing — the standard degeneracy/robustness
     * decomposition (spam-farm detection, dense-community seeding).
-    * Scale shape per round: the edge list is repartitioned by node
-    * once before the persist and never re-exchanged; the survivor
-    * set is node-sized and broadcast into both endpoint joins (on a
-    * graph whose node set outgrows a broadcast, drop the hint and
-    * the joins run co-partitioned on the node key — nothing else
-    * changes); survivors are localCheckpoint(eager)-ed so one
-    * materialization serves the stability count and the next round
-    * (reliable checkpoint() on a cluster). Self-loops are dropped
-    * BEFORE the node set is derived, so a self-loop-only node is
-    * excluded up front — it never appears in the alive set, any
-    * probe frame, or the returned table (it is absent, not "peeled
-    * in round 1", and contributes nothing to round counts). Returns the
-    * (id, core_degree) table — empty when the graph dissolves — and
-    * the data-driven round count (the stable-detection round
-    * included).
+    * A thin adapter over Mining's one peel driver
+    * (`Mining.kcorePeel`, the q181 core): edges are undirected,
+    * self-loops are dropped before the node set is derived (a
+    * self-loop-only node is absent from the alive set, every probe
+    * frame and the result), and duplicate edges in either
+    * orientation count once. The driver repartitions the neighbour
+    * list by node once, and the survivor set is broadcast into both
+    * endpoint joins only while it fits the session's broadcast
+    * threshold. Returns the (id, core_degree) table — empty when the
+    * graph dissolves — and the data-driven round count (the
+    * stable-detection round included).
     *
     * Guard tuning: `maxRounds = 40` is a FAILURE bound — peel depth
     * is the graph's degeneracy-layer count, single digits on
@@ -1982,39 +1978,11 @@ object ops {
     */
   def kcore(edges: DataFrame, src: String, dst: String, k: Int,
       maxRounds: Int = 40,
-      probe: (Int, DataFrame) => Unit = (_, _) => (),
-      broadcastSurvivors: Boolean = true): (DataFrame, Int) = {
+      probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) = {
     require(k > 0, s"kcore needs k > 0, got $k")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val nbrs = edges.select(col(src).as("__node"), col(dst).as("__nbr"))
-      .unionByName(edges.select(col(dst).as("__node"), col(src).as("__nbr")))
-      .filter(col("__node") =!= col("__nbr"))
-      .repartition(col("__node"))
-      .persist(MEMORY_AND_DISK)
-    // broadcastSurvivors is the documented fallback made callable: on
-    // a graph whose NODE SET outgrows an executor, pass false and both
-    // endpoint joins run co-partitioned on the (already repartitioned)
-    // node key instead of shipping the survivor set to every executor
-    def hinted(df: DataFrame): DataFrame =
-      if (broadcastSurvivors) graft.Loop.broadcastIfFits(df) else df
-    def induced(core: DataFrame): DataFrame = nbrs
-      .join(hinted(core), "__node")
-      .join(hinted(core.select(col("__node").as("__nbr"))), "__nbr")
-      .groupBy(col("__node")).agg(count(lit(1)).as("__deg"))
-    // the survivor count rides each round's checkpoint job; a round
-    // is stable when it keeps every survivor of the previous one
-    try {
-      val (alive, curve) = graft.Loop.fixpoint("kcore",
-          nbrs.select(col("__node")).distinct(), count(lit(1)), maxRounds,
-          done = (before, kept) => kept == before, probe = probe) { alive =>
-        induced(alive).filter(col("__deg") >= k).select(col("__node"))
-      }
-      val coreDeg = induced(alive)
-        .select(col("__node").as("id"), col("__deg").as("core_degree"))
-        .localCheckpoint(true)
-      graft.Ck.release(alive) // coreDeg is materialized off it
-      (coreDeg, curve.length)
-    } finally nbrs.unpersist(blocking = false)
+    val (core, rounds) = graft.queries.Mining.kcorePeel(
+      edges.select(col(src).as("a"), col(dst).as("b")), k, maxRounds, probe)
+    (core.select(col("node").as("id"), col("deg").as("core_degree")), rounds)
   }
 
   /** Newman-modularity sufficient statistics of a node partition
@@ -2577,19 +2545,19 @@ object ops {
 
   /** Integer PageRank to a movement-threshold fixpoint (q175's
     * parameterized form; damping 0.85, ranks scaled to 1e9 so every
-    * round is exact int64 and bit-reproducible across partitionings
-    * and engines). Per round: one contribution exchange — edge list
-    * joined to the node-sized rank vector (broadcast here; on a graph
-    * whose node set outgrows a broadcast, bucket/co-partition both
-    * sides on the node key and nothing else changes), partial-agg
-    * SUM per destination — and one node-sized left join producing
-    * the next vector plus the |Δpr| movement column. The round frame
-    * is localCheckpoint(eager)-ed so ONE materialization serves the
-    * movement scalar and the next round, and lineage never grows
-    * (swap for reliable checkpoint() on a cluster). Dangling nodes
+    * round is exact int64 `div` and bit-reproducible across
+    * partitionings and engines). A thin adapter over Curation's one
+    * PageRank driver (`Curation.pagerankOn`, the q175/q178/q186
+    * core): it renames the endpoints, derives the node set and the
+    * teleport column, and passes `Curation.prRound`. So it runs the
+    * r16 layout: the edge cache is partitioned on dst, the rank
+    * checkpoints keep an id layout, and the rank vector is broadcast
+    * into the contribution join only while it fits the session's
+    * broadcast threshold. Dangling nodes
     * (no out-edges) contribute nothing and settle at the floor
     * 0.15e9; nodes that only ever appear as destinations still get
-    * ranks (the node set is the distinct edge ENDPOINTS).
+    * ranks (the node set is the distinct edge ENDPOINTS). Self-loops
+    * and duplicate edges are dropped.
     *
     * `init` warm-starts the loop from a previous (id, pr) fixpoint —
     * q178's incremental shape: after a small edge churn, the
@@ -2621,63 +2589,30 @@ object ops {
       probe: (Int, DataFrame) => Unit = (_, _) => (),
       personalizeTo: Option[Column => Column] = None)
     : (DataFrame, Seq[(Long, Long)], Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(src).as("__src"), col(dst).as("__dst"))
-      .filter(col("__src") =!= col("__dst")).distinct()
-    val edeg = e.join(
-        e.groupBy(col("__src")).agg(count(lit(1)).as("__outdeg")), "__src")
-      .persist(MEMORY_AND_DISK)
+    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
+      .filter(col("src") =!= col("dst")).distinct()
     // the node count rides the node set's checkpoint job
     val (nodes, nNodes) = graft.Loop.checkpoint(
-      e.select(col("__src").as("id"))
-        .unionByName(e.select(col("__dst").as("id"))).distinct(),
+      e.select(col("src").as("id"))
+        .unionByName(e.select(col("dst").as("id"))).distinct(),
       count(lit(1)))
-    val eps = nNodes * epsPerNode
-    // personalizeTo (q186's shape): the 15% teleport mass lands only
-    // on the seed predicate's nodes — rank becomes seed proximity.
-    // tpOf(id) replaces the uniform 0.15e9 constant in the update;
-    // the default init concentrates the full mass on the seeds.
-    // count the seed set ONCE (one Spark action) and share it between
-    // the teleport column and the default init
-    val nSeeds = personalizeTo.map { isSeed =>
-      val ns = nodes.filter(isSeed(col("id"))).count()
-      require(ns > 0, "personalized pagerank needs a non-empty seed set")
-      ns
-    }
-    val tpOf: Column => Column = personalizeTo match {
-      case None => _ => lit(150000000L)
+    // personalizeTo (q186's shape): the teleport mass and the default
+    // init land only on the seeds. The seed set is counted once.
+    val (tp, defaultPr) = personalizeTo match {
+      case None => (lit(150000000L), lit(1000000000L))
       case Some(isSeed) =>
-        val tp = 150000000L * nNodes / nSeeds.get
-        idc => when(isSeed(idc), lit(tp)).otherwise(lit(0L))
+        val ns = nodes.filter(isSeed(col("id"))).count()
+        require(ns > 0, "personalized pagerank needs a non-empty seed set")
+        def onSeeds(v: Long) = when(isSeed(col("id")), lit(v)).otherwise(lit(0L))
+        (onSeeds(150000000L * nNodes / ns), onSeeds(1000000000L * nNodes / ns))
     }
-    def defaultInit = personalizeTo match { // lazy: skipped on warm start
-      case None => nodes.select(col("id"), lit(1000000000L).as("pr"))
-      case Some(isSeed) =>
-        val ip = 1000000000L * nNodes / nSeeds.get
-        nodes.select(col("id"),
-          when(isSeed(col("id")), lit(ip)).otherwise(lit(0L)).as("pr"))
-    }
-    // Σ|Δpr| rides each round's checkpoint job (graft.Loop.fixpoint)
     val (pr, curve) =
-      try graft.Loop.fixpoint("pr",
-          init.map(_.select(col("id"), col("pr"))).getOrElse(defaultInit),
-          sum(col("__mv")), maxRounds, done = (_, mv) => mv <= eps,
-          probe = probe) { pr =>
-        val contrib = edeg
-          .join(graft.Loop.broadcastIfFits(pr), col("__src") === col("id"))
-          .select(col("__dst"), expr("pr div __outdeg").as("__c"))
-          .groupBy(col("__dst")).agg(sum(col("__c")).as("__sc"))
-        pr.select(col("id"), col("pr").as("__old"))
-          .join(contrib, col("id") === col("__dst"), "left")
-          .select(col("id"),
-            (tpOf(col("id")) +
-              expr("(85L * coalesce(__sc, 0L)) div 100L")).as("pr"),
-            col("__old"))
-          .select(col("id"), col("pr"), abs(col("pr") - col("__old")).as("__mv"))
-      } finally {
-        edeg.unpersist(blocking = false)
-        graft.Ck.release(nodes) // the init checkpoint was its last reader
-      }
+      try graft.queries.Curation.pagerankOn("pr", e,
+          init.map(_.select(col("id"), col("pr")))
+            .getOrElse(nodes.select(col("id"), defaultPr.as("pr"))),
+          nNodes * epsPerNode, maxRounds, probe,
+          graft.queries.Curation.prRound(_, _, tp))
+      finally graft.Ck.release(nodes) // the init checkpoint was its last reader
     (pr, curve, curve.length)
   }
 

@@ -267,9 +267,10 @@ object Curation {
   // from events: user u links to (u*31 + k) mod N for each distinct
   // props-key k it emitted. All rank arithmetic is int64 floor
   // division with rank mass scaled to 10^9, so both engines agree
-  // bit-for-bit AND every intermediate (85 * inbound mass, bounded
-  // by 85 * total mass) stays below 2^53 where `ldiv`'s double
-  // division is exact.
+  // bit-for-bit. The round divides with SQL `div` (exact int64), not
+  // `ldiv`, whose double division is exact only below 2^53: 85 times
+  // a node's inbound mass passes that bound once a warm-start rank
+  // reaches ~1e14, while `div` stays exact to the int64 range.
   //
   // Scale shape per iteration: rank vector (|nodes| rows) broadcasts
   // into the edge list; contributions partial-aggregate on dst. The
@@ -343,24 +344,22 @@ object Curation {
   // guard.
   private[graft] val EpsPerNode = 1000L
 
+  /** q175's loop; `round` is the round body (SqlSurface.prLoopSql
+    * passes its SQL twin of [[prRound]]).
+    */
   private[graft] def prLoop(s: SparkSession, dir: String,
-      probe: (Int, DataFrame) => Unit = (_, _) => ())
+      probe: (Int, DataFrame) => Unit = (_, _) => (),
+      round: (DataFrame, DataFrame) => DataFrame = prRound(_, _))
     : (DataFrame, Seq[(Long, Long)]) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val (_, edges, nodesRaw) = prGraphEdges(s, dir)
-    val edeg = withOutdeg(edges, graft.Loop.statePartitions(edges))
-      .persist(MEMORY_AND_DISK)
-    touch(edeg)
     val nodes = nodesRaw.persist(MEMORY_AND_DISK)
-    val nNodes = nodes.count() // eager persist + the eps denominator
-    val eps = nNodes * EpsPerNode
-    val init = nodes.select(col("id"), lit(1000000000L).as("pr"))
-    // the persists are released on the guard path too (finally)
-    try prIterate("pr", edeg, init, eps, MaxPrRounds, probe)
-    finally {
-      edeg.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
+    // the persist is released on the guard path too (finally)
+    try {
+      val eps = nodes.count() * EpsPerNode // eager persist + eps
+      pagerankOn("pr", edges, nodes.select(col("id"), lit(1000000000L).as("pr")),
+        eps, MaxPrRounds, probe, round)
+    } finally nodes.unpersist(blocking = false)
   }
 
   /** The base link graph q79/q175/q178 iterate over: the source
@@ -404,12 +403,16 @@ object Curation {
 
   /** One integer-PageRank round over the (src, dst, outdeg) edge
     * frame and a (id, pr) rank vector: broadcast-rank contribution
-    * exchange + node-sized left join. Factored out of [[prIterate]]
-    * so SqlSurfaceSpec can pin the SQL-driven round body plan-equal
-    * to this exact production code. Returns the (id, pr, mv) frame
-    * (caller checkpoints it).
+    * exchange + node-sized left join. `tp` is the teleport mass per
+    * node, a column over `id`: the uniform 0.15e9 by default, a
+    * seed-conditional one for personalized PageRank (q186). Both
+    * divisions are int64 `div`, exact over the whole int64 range.
+    * SqlSurfaceSpec pins the SQL round body (SqlSurface.prRoundSql)
+    * plan-equal to this production code. Returns the (id, pr, mv)
+    * frame (caller checkpoints it).
     */
-  private[graft] def prRound(edeg: DataFrame, pr: DataFrame): DataFrame = {
+  private[graft] def prRound(edeg: DataFrame, pr: DataFrame,
+      tp: Column = lit(150000000L)): DataFrame = {
     // size-gated rank broadcast (r17, ADVICE): the checkpointed rank
     // vector carries measured stats, so under the session threshold
     // this is the same forced broadcast as before (local plan
@@ -417,13 +420,12 @@ object Curation {
     // shuffle join on src instead of an impossible node-sized ship
     val contrib = edeg
       .join(graft.Loop.broadcastIfFits(pr), col("src") === col("id"))
-      .select(col("dst"), Relational.ldiv(col("pr"), col("outdeg")).as("c"))
+      .select(col("dst"), expr("pr div outdeg").as("c"))
       .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
     pr.select(col("id"), col("pr").as("old"))
       .join(contrib, col("id") === col("dst"), "left")
-      .select(col("id"), (lit(150000000L) +
-        Relational.ldiv(lit(85L) * coalesce(col("sc"), lit(0L)), lit(100L)))
-        .as("pr"), col("old"))
+      .select(col("id"),
+        (tp + expr("(85L * coalesce(sc, 0L)) div 100L")).as("pr"), col("old"))
       .select(col("id"), col("pr"),
         abs(col("pr") - col("old")).as("mv"))
   }
@@ -446,91 +448,144 @@ object Curation {
   private[graft] def prInit(init: DataFrame, parts: Int): DataFrame =
     init.select(col("id"), col("pr")).repartition(parts, col("id"))
 
-  /** The integer PageRank loop from a caller-supplied init rank
-    * vector — the core shared by the cold start (q175, uniform init)
-    * and the warm start (q178, previous-fixpoint init), its rounds
-    * recorded under `loop`. The caller owns edeg's persist and
-    * releases it in a `finally`: the guard throws.
+  /** The one PageRank driver: every integer-PageRank loop (q175,
+    * q178's cold and warm phases, q186, ops.pagerank and the SQL
+    * surface's prLoopSql) runs here and passes only its init, stop
+    * threshold and round body. `edges` is a distinct (src, dst)
+    * frame without self-loops; this lays it out (withOutdeg),
+    * persists it for the loop, and releases it on every path (the
+    * guard throws). Returns the final checkpointed (id, pr) vector
+    * and the (round, movement) curve; rounds are recorded under
+    * `loop`.
     */
+  private[graft] def pagerankOn(loop: String, edges: DataFrame,
+      init: DataFrame, eps: Long, maxRounds: Int,
+      probe: (Int, DataFrame) => Unit = (_, _) => (),
+      round: (DataFrame, DataFrame) => DataFrame = prRound(_, _))
+    : (DataFrame, Seq[(Long, Long)]) = {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val edeg = withOutdeg(edges, graft.Loop.statePartitions(edges))
+      .persist(MEMORY_AND_DISK)
+    touch(edeg)
+    try prIterate(loop, edeg, init, eps, maxRounds, probe, round)
+    finally edeg.unpersist(blocking = false)
+  }
+
   private def prIterate(loop: String, edeg: DataFrame, init: DataFrame,
-      eps: Long, maxRounds: Int, probe: (Int, DataFrame) => Unit = (_, _) => (),
-      roundFn: (DataFrame, DataFrame) => DataFrame = prRound)
+      eps: Long, maxRounds: Int, probe: (Int, DataFrame) => Unit,
+      round: (DataFrame, DataFrame) => DataFrame)
     : (DataFrame, Seq[(Long, Long)]) =
     // the movement scalar Σ|Δpr| rides each round's checkpoint job,
     // and the checkpoints keep the id layout (keepLayout) so the
     // steady round plans exchange-free
     graft.Loop.fixpoint(loop, prInit(init, edeg.rdd.getNumPartitions),
       sum(col("mv")), maxRounds, keepLayout = true,
-      done = (_, mv) => mv <= eps, probe = probe)(roundFn(edeg, _))
+      done = (_, mv) => mv <= eps, probe = probe)(round(edeg, _))
 
   def q175PagerankConverge(s: SparkSession, dir: String): DataFrame = {
-    val sess = s
-    import sess.implicits._
     val (pr, curve) = prLoop(s, dir)
+    prReport(s, pr, "round" -> curve)
+  }
+
+  /** The q175/q178/q186 output: the top-20 (id, pr) ranks as part
+    * "rank", then each movement curve under its own part name.
+    */
+  private def prReport(s: SparkSession, pr: DataFrame,
+      curves: (String, Seq[(Long, Long)])*): DataFrame = {
+    import s.implicits._
     val top = pr.orderBy(col("pr").desc, col("id")).limit(20)
       .withColumn("k", row_number().over(
         Window.orderBy(col("pr").desc, col("id"))).cast("long"))
       .select(lit("rank").as("part"), col("k"),
         col("id").as("v1"), col("pr").as("v2"))
-    val curveDf = curve.toDF("k", "v1")
-      .select(lit("round").as("part"), col("k"), col("v1"), lit(0L).as("v2"))
-    top.unionByName(curveDf).orderBy("part", "k")
+    curves.map { case (part, curve) => curve.toDF("k", "v1")
+        .select(lit(part).as("part"), col("k"), col("v1"), lit(0L).as("v2"))
+      }.foldLeft(top)(_ unionByName _).orderBy("part", "k")
   }
 
-  val q175Sql: String = {
-    def it(r: Int): String = {
-      val prev = if (r == 1) "pr0" else s"it${r - 1}"
-      s"""it$r AS MATERIALIZED (
-         |${prIter(prev)})""".stripMargin
-    }
-    val mvRows = (1 to MaxPrRounds).map { r =>
-      val prev = if (r == 1) "pr0" else s"it${r - 1}"
-      s"""SELECT $r AS round, (SELECT CAST(SUM(ABS(a.pr - b.pr)) AS BIGINT)
-         |  FROM it$r a JOIN $prev b ON a.id = b.id) AS mv""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    val rankRows = (1 to MaxPrRounds)
-      .map(r => s"SELECT $r AS round, id, pr FROM it$r")
-      .mkString("\nUNION ALL\n")
-    s"""WITH ev AS (
-       |  SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-       |  FROM events WHERE json_extract_string(props, '$$.k') IS NOT NULL
-       |), edges AS (
-       |  SELECT DISTINCT user_id AS src,
-       |    (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev) AS dst
-       |  FROM ev
-       |  WHERE user_id <> (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev)
-       |), deg AS (
-       |  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
-       |), nodes AS (
-       |  SELECT DISTINCT user_id AS id FROM ev
-       |), pr0 AS (
+  val q175Sql: String =
+    s"""WITH $prGraphCtes, pr0 AS (
        |  SELECT id, CAST(1000000000 AS BIGINT) AS pr FROM nodes
        |),
-       |${(1 to MaxPrRounds).map(it).mkString(",\n")},
-       |curve AS (
+       |${prUnrollSql("it", "pr0", MaxPrRounds, "", prIter(_))}
+       |${prReportSql("", "round" -> "")}""".stripMargin
+
+  // ----- the DuckDB PageRank oracles (q79, q175, q178, q186) -------
+
+  /** prGraphEdges' graph in DuckDB SQL plus its out-degree table:
+    * the `ev`, `edges`, `deg` and `nodes` CTEs every PageRank oracle
+    * opens with.
+    */
+  private def prGraphCtes: String =
+    """ev AS (
+      |  SELECT user_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+      |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL
+      |), edges AS (
+      |  SELECT DISTINCT user_id AS src,
+      |    (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev) AS dst
+      |  FROM ev
+      |  WHERE user_id <> (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev)
+      |), deg AS (
+      |  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
+      |), nodes AS (
+      |  SELECT DISTINCT user_id AS id FROM ev
+      |)""".stripMargin
+
+  /** The loop unrolled for the full guard depth: the materialized
+    * rounds `<name>1..<name>rounds` from the `init` CTE (`iter` maps
+    * the previous round's CTE to the next round's body), then
+    * `curve<tag>` (round, movement), `stop<tag>` (the first round
+    * under eps, the loop's stop rule) and `ranks<tag>` (every
+    * round's ranks) — so a loop that stops early or late mismatches.
+    */
+  private def prUnrollSql(name: String, init: String, rounds: Int,
+      tag: String, iter: String => String): String = {
+    def t(r: Int) = if (r == 0) init else s"$name$r"
+    val its = (1 to rounds).map(r =>
+      s"${t(r)} AS MATERIALIZED (\n${iter(t(r - 1))})").mkString(",\n")
+    val mvRows = (1 to rounds).map { r =>
+      s"""SELECT $r AS round, (SELECT CAST(SUM(ABS(a.pr - b.pr)) AS BIGINT)
+         |  FROM ${t(r)} a JOIN ${t(r - 1)} b ON a.id = b.id) AS mv""".stripMargin
+    }.mkString("\nUNION ALL\n")
+    val rankRows = (1 to rounds)
+      .map(r => s"SELECT $r AS round, id, pr FROM ${t(r)}")
+      .mkString("\nUNION ALL\n")
+    s"""$its,
+       |curve$tag AS (
        |$mvRows
-       |), stop AS (
-       |  SELECT MIN(round) AS r FROM curve
+       |), stop$tag AS (
+       |  SELECT MIN(round) AS r FROM curve$tag
        |  WHERE mv <= (SELECT COUNT(*) FROM nodes) * $EpsPerNode
-       |), ranks AS (
+       |), ranks$tag AS (
        |$rankRows
-       |)
-       |SELECT part, k, v1, v2 FROM (
+       |)""".stripMargin
+  }
+
+  /** [[prReport]] in SQL: the top-20 of `ranks<tag>` at its stop
+    * round, then each (part, curve tag) curve up to its stop.
+    */
+  private def prReportSql(tag: String, curves: (String, String)*): String = {
+    val curveRows = curves.map { case (part, c) =>
+      s"""  UNION ALL
+         |  SELECT '$part' AS part, CAST(round AS BIGINT) AS k,
+         |    mv AS v1, 0 AS v2
+         |  FROM curve$c WHERE round <= (SELECT r FROM stop$c)""".stripMargin
+    }.mkString("\n")
+    s"""SELECT part, k, v1, v2 FROM (
        |  SELECT 'rank' AS part, CAST(rn AS BIGINT) AS k, id AS v1, pr AS v2
        |  FROM (SELECT id, pr, row_number() OVER (ORDER BY pr DESC, id) AS rn
-       |        FROM ranks WHERE round = (SELECT r FROM stop))
+       |        FROM ranks$tag WHERE round = (SELECT r FROM stop$tag))
        |  WHERE rn <= 20
-       |  UNION ALL
-       |  SELECT 'round' AS part, CAST(round AS BIGINT) AS k,
-       |    mv AS v1, 0 AS v2
-       |  FROM curve WHERE round <= (SELECT r FROM stop)
+       |$curveRows
        |) ORDER BY part, k""".stripMargin
   }
 
-  private def prIter(prev: String): String = prIterOn(prev, "edges", "deg")
-
-  private def prIterOn(prev: String, edges: String, deg: String): String =
-    s"""SELECT nd.id, 150000000 + (85 * COALESCE(s.sc, 0)) // 100 AS pr
+  /** One oracle round from the `prev` CTE over the `edges` / `deg`
+    * CTEs; `tp` is the teleport mass per node.
+    */
+  private def prIter(prev: String, edges: String = "edges", deg: String = "deg",
+      tp: String = "150000000"): String =
+    s"""SELECT nd.id, $tp + (85 * COALESCE(s.sc, 0)) // 100 AS pr
        |  FROM nodes nd LEFT JOIN (
        |    SELECT e.dst, CAST(SUM(p.pr // d.outdeg) AS BIGINT) AS sc
        |    FROM $edges e JOIN $deg d ON d.src = e.src
@@ -550,104 +605,39 @@ object Curation {
   // The STOP ROUND is oracle-gated by the q175 discipline (full-
   // guard SQL unroll, MIN(round | mv <= eps), curve + top-20 ranks
   // at the stop compared). Round shape and hygiene are exactly
-  // q175's — the same prIterate core runs both; only the round
-  // function differs (seed-conditional teleport instead of the
+  // q175's — the same pagerankOn driver runs both; only prRound's
+  // teleport column differs (seed-conditional instead of the
   // constant). Convergence is data-driven at ~8-9 rounds at the
   // gated SFs, under the shared MaxPrRounds guard.
   // ---------------------------------------------------------------
-  /** One PPR round: q175's contribution exchange with the teleport
-    * mass landing only on seed nodes.
-    */
-  private[graft] def pprRound(tpPerSeed: Long)(
-      edeg: DataFrame, pr: DataFrame): DataFrame = {
-    // size-gated rank broadcast — see prRound (r17, ADVICE)
-    val contrib = edeg
-      .join(graft.Loop.broadcastIfFits(pr), col("src") === col("id"))
-      .select(col("dst"), Relational.ldiv(col("pr"), col("outdeg")).as("c"))
-      .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-    pr.select(col("id"), col("pr").as("old"))
-      .join(contrib, col("id") === col("dst"), "left")
-      .select(col("id"),
-        (when(col("id") % 97L === 0L, lit(tpPerSeed)).otherwise(lit(0L)) +
-          Relational.ldiv(lit(85L) * coalesce(col("sc"), lit(0L)), lit(100L)))
-          .as("pr"), col("old"))
-      .select(col("id"), col("pr"), abs(col("pr") - col("old")).as("mv"))
-  }
-
   private[graft] def pprLoop(s: SparkSession, dir: String,
       probe: (Int, DataFrame) => Unit = (_, _) => ())
     : (DataFrame, Seq[(Long, Long)]) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val (_, edges, nodesRaw) = prGraphEdges(s, dir)
-    val edeg = withOutdeg(edges, graft.Loop.statePartitions(edges))
-      .persist(MEMORY_AND_DISK)
-    touch(edeg)
     val nodes = nodesRaw.persist(MEMORY_AND_DISK)
-    val nNodes = nodes.count()
-    val nSeeds = nodes.filter(col("id") % 97L === 0L).count()
-    require(nSeeds > 0, "PPR needs a non-empty seed set")
-    val eps = nNodes * EpsPerNode
-    // driver-side scalars (control-plane-sized); both divisions are
-    // exact int64 on positive operands
-    val tpPerSeed = 150000000L * nNodes / nSeeds
-    val initPerSeed = 1000000000L * nNodes / nSeeds
-    val init = nodes.select(col("id"),
-      when(col("id") % 97L === 0L, lit(initPerSeed)).otherwise(lit(0L))
-        .as("pr"))
-    try prIterate("ppr", edeg, init, eps, MaxPrRounds, probe, pprRound(tpPerSeed))
-    finally {
-      edeg.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
+    try {
+      val nNodes = nodes.count()
+      val nSeeds = nodes.filter(col("id") % 97L === 0L).count()
+      require(nSeeds > 0, "PPR needs a non-empty seed set")
+      // driver-side scalars (control-plane-sized); both divisions are
+      // exact int64 on positive operands
+      val tp = 150000000L * nNodes / nSeeds
+      val ip = 1000000000L * nNodes / nSeeds
+      def onSeeds(v: Long) =
+        when(col("id") % 97L === 0L, lit(v)).otherwise(lit(0L))
+      pagerankOn("ppr", edges, nodes.select(col("id"), onSeeds(ip).as("pr")),
+        nNodes * EpsPerNode, MaxPrRounds, probe, prRound(_, _, onSeeds(tp)))
+    } finally nodes.unpersist(blocking = false)
   }
 
   def q186PersonalizedPr(s: SparkSession, dir: String): DataFrame = {
-    val sess = s
-    import sess.implicits._
     val (pr, curve) = pprLoop(s, dir)
-    val top = pr.orderBy(col("pr").desc, col("id")).limit(20)
-      .withColumn("k", row_number().over(
-        Window.orderBy(col("pr").desc, col("id"))).cast("long"))
-      .select(lit("rank").as("part"), col("k"),
-        col("id").as("v1"), col("pr").as("v2"))
-    val curveDf = curve.toDF("k", "v1")
-      .select(lit("round").as("part"), col("k"), col("v1"), lit(0L).as("v2"))
-    top.unionByName(curveDf).orderBy("part", "k")
+    prReport(s, pr, "round" -> curve)
   }
 
-  val q186Sql: String = {
-    def it(r: Int): String = {
-      val prev = if (r == 1) "ppr0" else s"pit${r - 1}"
-      s"""pit$r AS MATERIALIZED (
-         |  SELECT nd.id,
-         |    (CASE WHEN nd.id % 97 = 0 THEN (SELECT tp FROM sc1) ELSE 0 END)
-         |      + (85 * COALESCE(s.sc, 0)) // 100 AS pr
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT e.dst, CAST(SUM(p.pr // d.outdeg) AS BIGINT) AS sc
-         |    FROM edges e JOIN deg d ON d.src = e.src
-         |    JOIN $prev p ON p.id = e.src GROUP BY e.dst) s ON s.dst = nd.id)""".stripMargin
-    }
-    val mvRows = (1 to MaxPrRounds).map { r =>
-      val prev = if (r == 1) "ppr0" else s"pit${r - 1}"
-      s"""SELECT $r AS round, (SELECT CAST(SUM(ABS(a.pr - b.pr)) AS BIGINT)
-         |  FROM pit$r a JOIN $prev b ON a.id = b.id) AS mv""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    val rankRows = (1 to MaxPrRounds)
-      .map(r => s"SELECT $r AS round, id, pr FROM pit$r")
-      .mkString("\nUNION ALL\n")
-    s"""WITH ev AS (
-       |  SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-       |  FROM events WHERE json_extract_string(props, '$$.k') IS NOT NULL
-       |), edges AS (
-       |  SELECT DISTINCT user_id AS src,
-       |    (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev) AS dst
-       |  FROM ev
-       |  WHERE user_id <> (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev)
-       |), deg AS (
-       |  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
-       |), nodes AS (
-       |  SELECT DISTINCT user_id AS id FROM ev
-       |), sc1 AS (
+  val q186Sql: String =
+    s"""WITH $prGraphCtes, sc1 AS (
        |  SELECT
        |    CAST(150000000 * (SELECT COUNT(*) FROM nodes)
        |      // (SELECT COUNT(*) FROM nodes WHERE id % 97 = 0) AS BIGINT) AS tp,
@@ -658,26 +648,9 @@ object Curation {
        |    THEN (SELECT ip FROM sc1) ELSE CAST(0 AS BIGINT) END AS pr
        |  FROM nodes
        |),
-       |${(1 to MaxPrRounds).map(it).mkString(",\n")},
-       |curve AS (
-       |$mvRows
-       |), stop AS (
-       |  SELECT MIN(round) AS r FROM curve
-       |  WHERE mv <= (SELECT COUNT(*) FROM nodes) * $EpsPerNode
-       |), ranks AS (
-       |$rankRows
-       |)
-       |SELECT part, k, v1, v2 FROM (
-       |  SELECT 'rank' AS part, CAST(rn AS BIGINT) AS k, id AS v1, pr AS v2
-       |  FROM (SELECT id, pr, row_number() OVER (ORDER BY pr DESC, id) AS rn
-       |        FROM ranks WHERE round = (SELECT r FROM stop))
-       |  WHERE rn <= 20
-       |  UNION ALL
-       |  SELECT 'round' AS part, CAST(round AS BIGINT) AS k,
-       |    mv AS v1, 0 AS v2
-       |  FROM curve WHERE round <= (SELECT r FROM stop)
-       |) ORDER BY part, k""".stripMargin
-  }
+       |${prUnrollSql("pit", "ppr0", MaxPrRounds, "", prIter(_,
+           tp = "(CASE WHEN nd.id % 97 = 0 THEN (SELECT tp FROM sc1) ELSE 0 END)"))}
+       |${prReportSql("", "round" -> "")}""".stripMargin
 
   // ---------------------------------------------------------------
   // q178: INCREMENTAL PageRank — the 100-TB reality behind q175: the
@@ -712,15 +685,11 @@ object Curation {
     val nodes = nodesRaw.persist(MEMORY_AND_DISK)
     val nNodes = nodes.count()
     val eps = nNodes * EpsPerNode
-    val edeg0 = withOutdeg(edges0, graft.Loop.statePartitions(edges0))
-      .persist(MEMORY_AND_DISK)
-    touch(edeg0)
     val uniform = nodes.select(col("id"), lit(1000000000L).as("pr"))
     // nodes outlives the base phase only on its success path
     val (pr0, curve0) =
-      try prIterate("pr_base", edeg0, uniform, eps, MaxPrRounds)
+      try pagerankOn("pr_base", edges0, uniform, eps, MaxPrRounds)
       catch { case t: Throwable => nodes.unpersist(blocking = false); throw t }
-      finally edeg0.unpersist(blocking = false)
     // CDC changelog, q77's (op, key...) row shape: deterministic
     // deletes (a ~0.1% residue class of the base edges) +
     // deterministic inserts (a second derived edge family from a
@@ -748,15 +717,11 @@ object Curation {
         Seq("src", "dst"), "left_anti")
       .unionByName(chg.filter(col("op") === "I").select(col("src"), col("dst")))
       .distinct()
-    val edeg1 = withOutdeg(edges1, graft.Loop.statePartitions(edges1))
-      .persist(MEMORY_AND_DISK)
-    touch(edeg1)
-    // the cold fixpoint is consumed once prIterate checkpointed its
+    // the cold fixpoint is consumed once the driver checkpointed its
     // own copy of the warm init: release its blocks either way
     val (pr1, curve1) =
-      try prIterate("pr_warm", edeg1, pr0, eps, MaxWarmRounds)
+      try pagerankOn("pr_warm", edges1, pr0, eps, MaxWarmRounds)
       finally {
-        edeg1.unpersist(blocking = false)
         nodes.unpersist(blocking = false)
         graft.Ck.release(pr0)
       }
@@ -768,80 +733,22 @@ object Curation {
     */
   private[graft] def coldPrRounds(s: SparkSession, edges: DataFrame,
       nodes: DataFrame, eps: Long): Int = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edeg = withOutdeg(edges, graft.Loop.statePartitions(edges))
-      .persist(MEMORY_AND_DISK)
-    touch(edeg)
-    val uniform = nodes.select(col("id"), lit(1000000000L).as("pr"))
-    val (prF, curve) =
-      try prIterate("pr_cold", edeg, uniform, eps, MaxPrRounds)
-      finally edeg.unpersist(blocking = false)
+    val (prF, curve) = pagerankOn("pr_cold", edges,
+      nodes.select(col("id"), lit(1000000000L).as("pr")), eps, MaxPrRounds)
     graft.Ck.release(prF) // only the round count is used here
     curve.length
   }
 
   def q178IncrementalPagerank(s: SparkSession, dir: String): DataFrame = {
-    val sess = s
-    import sess.implicits._
     val (pr1, curve0, curve1, _, _, _) = incrementalPrRun(s, dir)
-    val top = pr1.orderBy(col("pr").desc, col("id")).limit(20)
-      .withColumn("k", row_number().over(
-        Window.orderBy(col("pr").desc, col("id"))).cast("long"))
-      .select(lit("rank").as("part"), col("k"),
-        col("id").as("v1"), col("pr").as("v2"))
-    val c0 = curve0.toDF("k", "v1")
-      .select(lit("round0").as("part"), col("k"), col("v1"), lit(0L).as("v2"))
-    val c1 = curve1.toDF("k", "v1")
-      .select(lit("round1").as("part"), col("k"), col("v1"), lit(0L).as("v2"))
-    top.unionByName(c0).unionByName(c1).orderBy("part", "k")
+    prReport(s, pr1, "round0" -> curve0, "round1" -> curve1)
   }
 
-  val q178Sql: String = {
-    def it(r: Int): String = {
-      val prev = if (r == 1) "pr0" else s"it${r - 1}"
-      s"""it$r AS MATERIALIZED (
-         |${prIter(prev)})""".stripMargin
-    }
-    def wit(r: Int): String = {
-      val prev = if (r == 1) "winit" else s"wit${r - 1}"
-      s"""wit$r AS MATERIALIZED (
-         |${prIterOn(prev, "edges1", "deg1")})""".stripMargin
-    }
-    def mvRows(rounds: Int, tbl: Int => String): String =
-      (1 to rounds).map { r =>
-        s"""SELECT $r AS round, (SELECT CAST(SUM(ABS(a.pr - b.pr)) AS BIGINT)
-           |  FROM ${tbl(r)} a JOIN ${tbl(r - 1)} b ON a.id = b.id) AS mv""".stripMargin
-      }.mkString("\nUNION ALL\n")
-    val rank0Rows = (1 to MaxPrRounds)
-      .map(r => s"SELECT $r AS round, id, pr FROM it$r")
-      .mkString("\nUNION ALL\n")
-    val rank1Rows = (1 to MaxWarmRounds)
-      .map(r => s"SELECT $r AS round, id, pr FROM wit$r")
-      .mkString("\nUNION ALL\n")
-    s"""WITH ev AS (
-       |  SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-       |  FROM events WHERE json_extract_string(props, '$$.k') IS NOT NULL
-       |), edges AS (
-       |  SELECT DISTINCT user_id AS src,
-       |    (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev) AS dst
-       |  FROM ev
-       |  WHERE user_id <> (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev)
-       |), deg AS (
-       |  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
-       |), nodes AS (
-       |  SELECT DISTINCT user_id AS id FROM ev
-       |), pr0 AS (
+  val q178Sql: String =
+    s"""WITH $prGraphCtes, pr0 AS (
        |  SELECT id, CAST(1000000000 AS BIGINT) AS pr FROM nodes
        |),
-       |${(1 to MaxPrRounds).map(it).mkString(",\n")},
-       |curve0 AS (
-       |${mvRows(MaxPrRounds, r => if (r == 0) "pr0" else s"it$r")}
-       |), stop0 AS (
-       |  SELECT MIN(round) AS r FROM curve0
-       |  WHERE mv <= (SELECT COUNT(*) FROM nodes) * $EpsPerNode
-       |), ranks0 AS (
-       |$rank0Rows
-       |), winit AS (
+       |${prUnrollSql("it", "pr0", MaxPrRounds, "0", prIter(_))}, winit AS (
        |  SELECT id, pr FROM ranks0 WHERE round = (SELECT r FROM stop0)
        |), ins AS (
        |  SELECT DISTINCT user_id AS src,
@@ -859,45 +766,11 @@ object Curation {
        |), deg1 AS (
        |  SELECT src, COUNT(*) AS outdeg FROM edges1 GROUP BY src
        |),
-       |${(1 to MaxWarmRounds).map(wit).mkString(",\n")},
-       |curve1 AS (
-       |${mvRows(MaxWarmRounds, r => if (r == 0) "winit" else s"wit$r")}
-       |), stop1 AS (
-       |  SELECT MIN(round) AS r FROM curve1
-       |  WHERE mv <= (SELECT COUNT(*) FROM nodes) * $EpsPerNode
-       |), ranks1 AS (
-       |$rank1Rows
-       |)
-       |SELECT part, k, v1, v2 FROM (
-       |  SELECT 'rank' AS part, CAST(rn AS BIGINT) AS k, id AS v1, pr AS v2
-       |  FROM (SELECT id, pr, row_number() OVER (ORDER BY pr DESC, id) AS rn
-       |        FROM ranks1 WHERE round = (SELECT r FROM stop1))
-       |  WHERE rn <= 20
-       |  UNION ALL
-       |  SELECT 'round0' AS part, CAST(round AS BIGINT) AS k,
-       |    mv AS v1, 0 AS v2
-       |  FROM curve0 WHERE round <= (SELECT r FROM stop0)
-       |  UNION ALL
-       |  SELECT 'round1' AS part, CAST(round AS BIGINT) AS k,
-       |    mv AS v1, 0 AS v2
-       |  FROM curve1 WHERE round <= (SELECT r FROM stop1)
-       |) ORDER BY part, k""".stripMargin
-  }
+       |${prUnrollSql("wit", "winit", MaxWarmRounds, "1", prIter(_, "edges1", "deg1"))}
+       |${prReportSql("1", "round0" -> "0", "round1" -> "1")}""".stripMargin
 
   val q79Sql: String =
-    s"""WITH ev AS (
-       |  SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-       |  FROM events WHERE json_extract_string(props, '$$.k') IS NOT NULL
-       |), edges AS (
-       |  SELECT DISTINCT user_id AS src,
-       |    (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev) AS dst
-       |  FROM ev
-       |  WHERE user_id <> (user_id * 31 + k) % (SELECT MAX(user_id) + 1 FROM ev)
-       |), deg AS (
-       |  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src
-       |), nodes AS (
-       |  SELECT DISTINCT user_id AS id FROM ev
-       |), pr0 AS (
+    s"""WITH $prGraphCtes, pr0 AS (
        |  SELECT id, CAST(1000000000 AS BIGINT) AS pr FROM nodes
        |), it1 AS (
        |${prIter("pr0")}

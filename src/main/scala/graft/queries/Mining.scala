@@ -1187,15 +1187,11 @@ object Mining {
   // degeneracy/robustness statistic (spam-farm detection, dense-
   // community seeding, graph sparsification preflight) and the
   // simplest member of the peel family (truss decomposition, onion
-  // layers). Scale shape per round: the edge list was repartitioned
-  // by node ONCE before the loop and never re-exchanged; the alive
-  // set is node-sized and broadcast into BOTH endpoint semi-joins
-  // (on a graph whose node set outgrows a broadcast the same joins
-  // run bucketed/co-partitioned on `node` — lpLoop's documented
-  // fallback); the survivor set is localCheckpoint(eager)-ed so one
-  // materialization serves the driver-side stability count and the
-  // next round, with plan lineage flat every round (ccLoop's
-  // hygiene; reliable checkpoint() on a cluster). The STOP ROUND is
+  // layers). The loop is kcorePeel, the one k-core driver: the
+  // neighbour list is laid out by node once and never re-exchanged,
+  // the survivor set joins both endpoints (broadcast while it fits
+  // the threshold, a shuffle join past it), and each round is one
+  // checkpoint job carrying the survivor count. The STOP ROUND is
   // itself oracle-gated (q175's discipline): the DuckDB twin
   // materializes the full unrolled peel, recomputes the census
   // curve, and selects MIN(round | census stable), so a loop that
@@ -1206,18 +1202,12 @@ object Mining {
   // (sf0.001's sparsified graph dissolves entirely) yields zero
   // rows in BOTH engines — the agreed-on degenerate case.
   // ---------------------------------------------------------------
-  /** The peel loop, factored out so CcLoopSpec can observe each
-    * round's survivor frame. Returns the final core's induced degree
-    * table and the data-driven round count (the stable-detection
-    * round included, q175's counting rule).
-    */
   /** Induced degrees within a survivor set: an edge survives iff
-    * BOTH endpoints survive. Factored out of [[kcoreLoop]] so
-    * SqlSurfaceSpec can pin the SQL-driven round body plan-equal to
-    * this exact production code (the ccRound/prRound discipline).
-    * The survivor set is broadcast only while it fits the session's
-    * autoBroadcastJoinThreshold (Loop.broadcastIfFits); the SQL
-    * text's BROADCAST hints match it below that size.
+    * BOTH endpoints survive. The default round body of
+    * [[kcorePeel]]; SqlSurfaceSpec pins the SQL body
+    * (SqlSurface.kcInducedSql) plan-equal to it. The survivor set is
+    * broadcast only while it fits the session's
+    * autoBroadcastJoinThreshold (Loop.broadcastIfFits).
     */
   private[graft] def kcoreInduced(nbrs: DataFrame, core: DataFrame): DataFrame =
     nbrs
@@ -1225,27 +1215,50 @@ object Mining {
       .join(graft.Loop.broadcastIfFits(core.select(col("node").as("nbr"))), "nbr")
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
-  private[graft] def kcoreLoop(s: SparkSession, dir: String, k: Int = 2,
-      probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = sparseUnd(s, dir)
-    val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
+  /** The (node, nbr) neighbour list of an undirected (a, b) edge
+    * frame: both orientations, self-loops dropped, duplicates counted
+    * once, laid out by node (the dedup rides that layout, no second
+    * exchange) so every peel round joins on node without a shuffle.
+    */
+  private[graft] def kcoreNbrs(und: DataFrame): DataFrame =
+    und.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("node")) // co-locate once; every round joins on node
-      .persist(MEMORY_AND_DISK)
-    // one job per round: the survivor count rides the checkpoint
-    // (Loop.fixpoint); the guard (40 rounds) fails loudly, never spins
+      .filter(col("node") =!= col("nbr"))
+      .repartition(col("node"))
+      .distinct()
+
+  /** The one k-core driver (q181, ops.kcore and the SQL surface's
+    * kcoreLoopSql): peels the undirected (a, b) frame `und` until a
+    * round removes nothing. It builds and persists the neighbour
+    * list, runs the rounds through Loop.fixpoint (the survivor count
+    * rides each checkpoint; the guard fails loudly, never spins),
+    * checkpoints the final induced degrees and releases the rest.
+    * `induced` is the round body. Returns the final core's (node,
+    * deg) table and the data-driven round count (the stable-detection
+    * round included, q175's counting rule).
+    */
+  private[graft] def kcorePeel(und: DataFrame, k: Int, maxRounds: Int = 40,
+      probe: (Int, DataFrame) => Unit = (_, _) => (),
+      induced: (DataFrame, DataFrame) => DataFrame = kcoreInduced)
+    : (DataFrame, Int) = {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val nbrs = kcoreNbrs(und).persist(MEMORY_AND_DISK)
     try {
       val (alive, curve) = graft.Loop.fixpoint("kcore",
-          nbrs.select(col("node")).distinct(), count(lit(1)), 40,
+          nbrs.select(col("node")).distinct(), count(lit(1)), maxRounds,
           done = (before, kept) => kept == before, probe = probe) { alive =>
-        kcoreInduced(nbrs, alive).filter(col("deg") >= k).select(col("node"))
+        induced(nbrs, alive).filter(col("deg") >= k).select(col("node"))
       }
-      val coreDeg = kcoreInduced(nbrs, alive).localCheckpoint(true)
+      val coreDeg = induced(nbrs, alive).localCheckpoint(true)
       graft.Ck.release(alive) // coreDeg is materialized off it
       (coreDeg, curve.length)
     } finally nbrs.unpersist(blocking = false)
   }
+
+  /** q181's peel over the sparse undirected graph (k = 2). */
+  private[graft] def kcoreLoop(s: SparkSession, dir: String,
+      probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) =
+    kcorePeel(sparseUnd(s, dir), 2, probe = probe)
 
   def q181Kcore(s: SparkSession, dir: String): DataFrame = {
     val (coreDeg, rounds) = kcoreLoop(s, dir)

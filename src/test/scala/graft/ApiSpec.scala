@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.api.ops
@@ -474,25 +475,51 @@ class ApiSpec extends SparkSpec {
     }
   }
 
-  test("personalized pagerank agrees with the oracle-gated q186 pipeline") {
-    val d01 = "/root/testdata/sf0.01"
-    val (_, edges, _) = graft.queries.Curation.prGraphEdges(spark, d01)
-    val (pr, curve, _) = ops.pagerank(edges, "src", "dst",
-      epsPerNode = 1000L, maxRounds = 20,
-      personalizeTo = Some(_ % 97L === 0L))
-    val q186 = SparkEntry.queries("q186_personalized_pr")(spark, d01)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    // curves identical round for round
-    val oracleCurve = q186.filter(_._1 == "round").sortBy(_._2)
-      .map(r => (r._2, r._3))
-    assert(curve == oracleCurve.toSeq,
-      s"api=$curve oracle=${oracleCurve.toSeq}")
-    // top-20 ranks identical
-    val apiTop = pr.orderBy(col("pr").desc, col("id")).limit(20)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val oracleTop = q186.filter(_._1 == "rank").sortBy(_._2)
-      .map(r => (r._3, r._4)).toSeq
-    assert(apiTop == oracleTop)
+  // one row per teleport: ops.pagerank against the oracle-gated
+  // query that runs the same loop on the same graph
+  Seq(
+    ("personalized", Some((_: Column) % 97L === 0L): Option[Column => Column],
+      "q186", "q186_personalized_pr"),
+    ("uniform", None, "q175", "q175_pagerank_converge")
+  ).foreach { case (teleport, personalizeTo, q, query) =>
+    test(s"$teleport pagerank agrees with the oracle-gated $q pipeline") {
+      val d01 = "/root/testdata/sf0.01"
+      val (_, edges, _) = graft.queries.Curation.prGraphEdges(spark, d01)
+      val (pr, curve, _) = ops.pagerank(edges, "src", "dst",
+        epsPerNode = 1000L, maxRounds = 20, personalizeTo = personalizeTo)
+      val out = SparkEntry.queries(query)(spark, d01)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      // curves identical round for round
+      val oracleCurve = out.filter(_._1 == "round").sortBy(_._2)
+        .map(r => (r._2, r._3))
+      assert(curve == oracleCurve.toSeq,
+        s"api=$curve oracle=${oracleCurve.toSeq}")
+      // top-20 ranks identical
+      val apiTop = pr.orderBy(col("pr").desc, col("id")).limit(20)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val oracleTop = out.filter(_._1 == "rank").sortBy(_._2)
+        .map(r => (r._3, r._4)).toSeq
+      assert(apiTop == oracleTop)
+    }
+  }
+
+  test("pagerank's round stays exact when 85 * inbound mass passes 2^55") {
+    val s = spark
+    import s.implicits._
+    // star: leaves 1..4 -> hub 0, warm-started at ~1e15 each, so the
+    // hub's 85 * sc is ~3.4e17, past 2^55 where a double division
+    // rounds; this init makes the double form read one unit low
+    val leaves = (1L to 4L).map(i => i -> (1000000010000030L + (i - 1L) * 7919L))
+    val edges = leaves.map { case (i, _) => (i, 0L) }.toDF("s", "d")
+    val init = ((0L -> 1000000000L) +: leaves).toDF("id", "pr")
+    val sc = leaves.map(_._2).sum
+    assert(BigInt(85L) * sc > BigInt(2).pow(55))
+    var hub1 = -1L
+    val (pr, _, _) = ops.pagerank(edges, "s", "d", init = Some(init),
+      probe = (r, st) => if (r == 1)
+        hub1 = st.filter(col("id") === 0L).collect().head.getLong(1))
+    assert(hub1 == 150000000L + 85L * sc / 100L, s"hub round 1 = $hub1")
+    Ck.release(pr)
   }
 
   test("kmeansToConvergence agrees with the oracle-gated q163 pipeline") {
@@ -691,22 +718,37 @@ class ApiSpec extends SparkSpec {
     assert(api.except(q182).count() === 0 && q182.except(api).count() === 0)
   }
 
-  test("kcore peels a tail to nothing but keeps the triangle intact") {
-    val s = spark
-    import s.implicits._
-    // triangle {1,2,3} with a 2-hop tail 3-4-5: k=2 peels 5 (deg 1),
-    // which exposes 4 (deg 1), then stabilizes — the cascade is the
-    // point; a single-pass degree filter would leave 4 behind
-    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
-      .toDF("a", "b")
-    val (core, rounds) = ops.kcore(edges, "a", "b", 2)
-    val got = core.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 2L), (2L, 2L), (3L, 2L)), got.toString)
-    assert(rounds == 3, s"rounds=$rounds") // peel, peel, stable-probe
-    // k above the clique degree dissolves the graph: empty, not error
-    val (gone, _) = ops.kcore(edges, "a", "b", 3)
-    assert(gone.isEmpty)
-    intercept[IllegalArgumentException](ops.kcore(edges, "a", "b", 0))
+  // triangle {1,2,3} with a 2-hop tail 3-4-5: k=2 peels 5 (deg 1),
+  // which exposes 4 (deg 1), then stabilizes — the cascade is the
+  // point; a single-pass degree filter would leave 4 behind. The
+  // extra rows must not change the core: a self-loop-only node is
+  // absent, duplicate edges (either orientation) count once, and
+  // caller columns named like the driver's own (node, nbr, deg)
+  // survive the adapter's renames.
+  private val kcoreBase = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+  Seq(
+    ("", kcoreBase, ("a", "b")),
+    ("a self-loop-only node", kcoreBase :+ ((9L, 9L)), ("a", "b")),
+    ("duplicate edges", kcoreBase ++ Seq((3L, 4L), (5L, 4L)), ("a", "b")),
+    ("columns named node/nbr", kcoreBase, ("node", "nbr")),
+    ("columns named nbr/node", kcoreBase, ("nbr", "node")),
+    ("columns named deg/node", kcoreBase, ("deg", "node"))
+  ).foreach { case (input, rows, (src, dst)) =>
+    val row = if (input.isEmpty) "" else s" ($input)"
+    test(s"kcore peels a tail to nothing but keeps the triangle intact$row") {
+      val s = spark
+      import s.implicits._
+      val edges = rows.toDF(src, dst)
+      val (core, rounds) = ops.kcore(edges, src, dst, 2)
+      assert(core.columns.toSeq == Seq("id", "core_degree"))
+      val got = core.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((1L, 2L), (2L, 2L), (3L, 2L)), got.toString)
+      assert(rounds == 3, s"rounds=$rounds") // peel, peel, stable-probe
+      // k above the clique degree dissolves the graph: empty, not error
+      val (gone, _) = ops.kcore(edges, src, dst, 3)
+      assert(gone.isEmpty)
+      intercept[IllegalArgumentException](ops.kcore(edges, src, dst, 0))
+    }
   }
 
   test("kcore agrees with the oracle-gated q181 pipeline") {

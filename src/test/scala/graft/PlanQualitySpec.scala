@@ -1029,11 +1029,14 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   // The loop round bodies hint node-sized state (rank vector,
-  // survivor set) into edge joins through Loop.broadcastIfFits: past
-  // the session's autoBroadcastJoinThreshold the join shuffles and
-  // nothing is collected to the driver. An unconditional broadcast()
-  // hint overrides the threshold. A child session carries the -1
-  // threshold, so the shared session's conf is never touched.
+  // survivor set, score vector) into edge joins through
+  // Loop.broadcastIfFits: past the session's
+  // autoBroadcastJoinThreshold the join shuffles and nothing is
+  // collected to the driver. An unconditional broadcast() hint, or a
+  // BROADCAST hint in a SQL text, overrides the threshold. The SQL
+  // round bodies gate when they register their views. A child
+  // session carries the -1 threshold, so the shared session's conf
+  // is never touched.
   test("pagerank and kcoreInduced plan no BroadcastExchange when the threshold is -1") {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -1083,6 +1086,23 @@ class PlanQualitySpec extends SparkSpec {
     val kc = planned { graft.queries.Mining.kcoreInduced(nbrs, core).collect() }
     assert(sortMergeJoins(kc) == 2, kc.mkString("\n"))
     assert(broadcasting(kc).isEmpty, broadcasting(kc).mkString("\n"))
+    // the SQL-driven loops: their graph derivations cross-join a
+    // one-row broadcast max (a nested-loop join, not node-sized), so
+    // what must be absent here is a broadcast HASH join
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.api.SqlSurface
+    val dirL = "/root/testdata/sf0.001"
+    Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])](
+      "kcoreLoopSql" -> (() => Seq(SqlSurface.kcoreLoopSql(cs, dirL)._1)),
+      "prLoopSql" -> (() => Seq(SqlSurface.prLoopSql(cs, dirL)._1)),
+      "hitsLoopSql" -> { () => val (a, h) = SqlSurface.hitsLoopSql(cs, dirL); Seq(a, h) }
+    ).foreach { case (loop, run) =>
+      val plans = planned(run().foreach(Ck.release))
+      val bhj = plans.filter(p =>
+        h.collect(p) { case j: BroadcastHashJoinExec => j }.nonEmpty)
+      assert(bhj.isEmpty, s"$loop:\n" + bhj.mkString("\n"))
+      assert(sortMergeJoins(plans) > 0, s"$loop never planned a join")
+    }
   }
 
   // Re-pinned when star2Round moved to the two-window reducer form:

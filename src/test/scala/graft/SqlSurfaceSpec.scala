@@ -14,9 +14,9 @@ import graft.queries.{Curation, Mining}
   * API, not a second implementation that happens to agree. One
   * representative query per family (relational q01, dedup q23,
   * retrieval q88, hybrid fusion q185) plus the convergence loops (q161 connected
-  * components, q175 PageRank), whose SQL-driven rounds are pinned
-  * against the exact production round bodies (Mining.ccRound /
-  * Curation.prRound) and whose loops must match round-for-round.
+  * components, q175 PageRank, q181 k-core, q196 HITS, q199 SCC),
+  * whose SQL round bodies are pinned against the exact production
+  * round bodies and whose loops must match round-for-round.
   */
 class SqlSurfaceSpec extends SparkSpec {
 
@@ -77,13 +77,13 @@ class SqlSurfaceSpec extends SparkSpec {
     ready
     val (_, edges, nodesRaw) = Curation.prGraphEdges(spark, dir)
     val edeg = Curation.withOutdeg(edges, Loop.statePartitions(edges))
-    edeg.createOrReplaceTempView("pr_edeg")
     val (pr0, _) = Loop.checkpoint(Curation.prInit(
       nodesRaw.select(col("id"), lit(1000000000L).as("pr")),
       edeg.rdd.getNumPartitions), count(lit(1)), keepLayout = true)
-    pr0.createOrReplaceTempView("pr_ranks")
     pinPlanEqual("pr_round",
-      Curation.prRound(edeg, pr0), spark.sql(SqlSurface.prRoundSql))
+      Curation.prRound(edeg, pr0), SqlSurface.prRoundBody(spark)(edeg, pr0))
+    Ck.release(pr0)
+    Seq("pr_edeg", "pr_ranks", "pr_ranks_b").foreach(spark.catalog.dropTempView)
 
     val (dfPr, dfCurve) = Curation.prLoop(spark, dir)
     val (sqPr, sqCurve, sqRounds) = SqlSurface.prLoopSql(spark, dir)
@@ -96,20 +96,16 @@ class SqlSurfaceSpec extends SparkSpec {
   test("SQL-driven k-core round is plan-equal to Mining.kcoreInduced; loops agree") {
     ready
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the round body: same repartitioned edge view, same survivor
-    // frame shape the loop feeds it (a checkpointed node set)
-    val und = Mining.sparseUnd(spark, dir)
-    val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
-      .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("node"))
+    // the round body: same neighbour list, same survivor frame shape
+    // the loop feeds it (a checkpointed node set)
+    val nbrs = Mining.kcoreNbrs(Mining.sparseUnd(spark, dir))
       .persist(MEMORY_AND_DISK)
-    nbrs.createOrReplaceTempView("kc_nbrs")
     val alive = nbrs.select(col("node")).distinct().localCheckpoint(true)
-    alive.createOrReplaceTempView("kc_alive")
     pinPlanEqual("kcore_induced",
-      Mining.kcoreInduced(nbrs, alive), spark.sql(SqlSurface.kcInducedSql))
+      Mining.kcoreInduced(nbrs, alive), SqlSurface.kcInducedBody(spark)(nbrs, alive))
     nbrs.unpersist(blocking = false)
     Ck.release(alive)
+    Seq("kc_nbrs", "kc_alive").foreach(spark.catalog.dropTempView)
 
     // loop agreement: same data-driven peel depth, same final census
     // (sf0.001's sparsified graph dissolves entirely — the empty-core
@@ -130,11 +126,10 @@ class SqlSurfaceSpec extends SparkSpec {
     edges.createOrReplaceTempView("hits_edges")
     nodes.createOrReplaceTempView("hits_nodes")
     val h0 = nodes.withColumn("score", lit(10000L)).localCheckpoint(true)
-    h0.createOrReplaceTempView("hits_scores")
     pinPlanEqual("hits_raw",
       Curation.hitsRawFrame(nodes, edges, h0, "src", "dst"),
-      spark.sql(SqlSurface.hitsRawSql("src", "dst")))
-    val raw = spark.sql(SqlSurface.hitsRawSql("src", "dst"))
+      SqlSurface.hitsRawBody(spark, "src", "dst")(h0))
+    val raw = SqlSurface.hitsRawBody(spark, "src", "dst")(h0)
       .localCheckpoint(true)
     raw.createOrReplaceTempView("hits_raw")
     pinPlanEqual("hits_norm",
@@ -143,6 +138,8 @@ class SqlSurfaceSpec extends SparkSpec {
     nodes.unpersist(blocking = false)
     Ck.release(h0)
     Ck.release(raw)
+    Seq("hits_edges", "hits_nodes", "hits_scores", "hits_raw")
+      .foreach(spark.catalog.dropTempView)
 
     val dfOut = SparkEntry.queries("q196_hits")(spark, dir)
     val sqOut = SqlSurface.q196HitsSql(spark, dir)
@@ -215,6 +212,32 @@ class SqlSurfaceSpec extends SparkSpec {
     val fb = Loop.fallbacks.get() - fb0
     assert(math.abs(df - sq) <= fb,
       s"SQL-driven SCC ran $sq jobs, the DataFrame q199 $df (rider fallbacks $fb)")
+  }
+
+  test("SQL-driven k-core and PageRank run the same jobs as the DataFrame loops") {
+    ready
+    // the SCC parity test's method: warm-up run, counted run, slack
+    // of the rider fallbacks over both windows
+    def jobs(name: String)(run: => DataFrame): Long = {
+      Ck.release(run) // warm-up
+      var out: DataFrame = null
+      val n = countJobs(s"sqlsurface_$name") { out = run; out.count() }
+      Ck.release(out)
+      n
+    }
+    Seq(
+      ("k-core", () => Mining.kcoreLoop(spark, dir)._1,
+        () => SqlSurface.kcoreLoopSql(spark, dir)._1),
+      ("pagerank", () => Curation.prLoop(spark, dir)._1,
+        () => SqlSurface.prLoopSql(spark, dir)._1)
+    ).foreach { case (loop, dfRun, sqlRun) =>
+      val fb0 = Loop.fallbacks.get()
+      val df = jobs(s"${loop}_df")(dfRun())
+      val sq = jobs(s"${loop}_sql")(sqlRun())
+      val fb = Loop.fallbacks.get() - fb0
+      assert(math.abs(df - sq) <= fb,
+        s"SQL-driven $loop ran $sq jobs, the DataFrame loop $df (rider fallbacks $fb)")
+    }
   }
 
   test("SQL-driven warm cc bodies are plan-equal to ops'; q217 agrees") {
