@@ -1009,11 +1009,11 @@ object SqlSurface {
     * registered size-gated by [[kcInducedBody]].
     */
   val kcInducedSql: String =
-    """SELECT node, COUNT(1) AS deg
-      |FROM kc_nbrs
-      |JOIN (SELECT node FROM kc_alive) c1 USING (node)
-      |JOIN (SELECT node AS nbr FROM kc_alive) c2 USING (nbr)
-      |GROUP BY node""".stripMargin
+    """SELECT e.node, COUNT(1) AS deg
+      |FROM kc_nbrs e
+      |JOIN kc_alive c1 ON e.node = c1.node
+      |JOIN kc_alive c2 ON e.nbr = c2.node
+      |GROUP BY e.node""".stripMargin
 
   /** The SQL k-core round body: registers the neighbour list and the
     * survivor set (through Loop.broadcastIfFits, as

@@ -1209,11 +1209,15 @@ object Mining {
     * broadcast only while it fits the session's
     * autoBroadcastJoinThreshold (Loop.broadcastIfFits).
     */
-  private[graft] def kcoreInduced(nbrs: DataFrame, core: DataFrame): DataFrame =
-    nbrs
-      .join(graft.Loop.broadcastIfFits(core), "node")
-      .join(graft.Loop.broadcastIfFits(core.select(col("node").as("nbr"))), "nbr")
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+  private[graft] def kcoreInduced(nbrs: DataFrame, core: DataFrame): DataFrame = {
+    // one relation under two aliases: both endpoint joins read one
+    // broadcast stage (exchange reuse), not two collects per round
+    val alive = graft.Loop.broadcastIfFits(core)
+    nbrs.as("e")
+      .join(alive.as("c1"), col("e.node") === col("c1.node"))
+      .join(alive.as("c2"), col("e.nbr") === col("c2.node"))
+      .groupBy(col("e.node")).agg(count(lit(1)).as("deg"))
+  }
 
   /** The (node, nbr) neighbour list of an undirected (a, b) edge
     * frame: both orientations, self-loops dropped, duplicates counted

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.io.ByteArrayOutputStream
-
 import graft.model.{HeaterControl, SensorData, TemperatureControl}
 
 /** Hand-rolled proto3 wire codec for the reference's three messages
@@ -35,33 +33,62 @@ object ProtoCodec {
 
   // ---- primitives ----------------------------------------------
 
-  private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v = v >>> 7
+  /** Writes one message into an array sized to it exactly up front:
+    * no growable buffer, no trailing copy, no lock per byte. Every
+    * field number here is below 16, so each tag is one byte. */
+  private final class Writer(size: Int) {
+    private val buf = new Array[Byte](size)
+    private var pos = 0
+
+    private def varint(v0: Long): Unit = {
+      var v = v0
+      while ((v & ~0x7fL) != 0L) {
+        buf(pos) = ((v & 0x7f) | 0x80).toByte; pos += 1
+        v = v >>> 7
+      }
+      buf(pos) = v.toByte; pos += 1
     }
-    out.write(v.toInt & 0x7f)
+
+    /** proto3 int32 (also the enum's wire form): omitted when 0. */
+    def int32(field: Int, v: Int): Writer = {
+      if (v != 0) { buf(pos) = (field << 3).toByte; pos += 1; varint(v.toLong) }
+      this
+    }
+
+    /** proto3 double: fixed64, little-endian; omitted when its raw
+      * bits are 0. */
+    def double(field: Int, v: Double): Writer = {
+      val bits = java.lang.Double.doubleToRawLongBits(v)
+      if (bits != 0L) {
+        buf(pos) = ((field << 3) | 1).toByte; pos += 1
+        var b = bits
+        var i = 0
+        while (i < 8) { buf(pos) = b.toByte; b = b >>> 8; pos += 1; i += 1 }
+      }
+      this
+    }
+
+    def bytes: Array[Byte] = {
+      if (pos != size) throw new IllegalStateException(s"sized $size bytes, wrote $pos")
+      buf
+    }
   }
 
-  private def writeTag(out: ByteArrayOutputStream, field: Int, wire: Int): Unit =
-    writeVarint(out, ((field.toLong << 3) | wire.toLong))
-
-  /** proto3 int32: negative values sign-extend to 64 bits (10-byte varint). */
-  private def writeInt32Field(out: ByteArrayOutputStream, field: Int, v: Int): Unit =
-    if (v != 0) { writeTag(out, field, 0); writeVarint(out, v.toLong) }
-
-  /** proto3 double: fixed64, little-endian; omitted iff raw bits are 0
-    * (matches protobuf-java: -0.0 IS serialized). */
-  private def writeDoubleField(out: ByteArrayOutputStream, field: Int, v: Double): Unit = {
-    val bits = java.lang.Double.doubleToRawLongBits(v)
-    if (bits != 0L) {
-      writeTag(out, field, 1)
-      var b = bits
-      var i = 0
-      while (i < 8) { out.write((b & 0xff).toInt); b = b >>> 8; i += 1 }
-    }
+  private def varintSize(v: Long): Int = {
+    var n = 1
+    var rest = v >>> 7
+    while (rest != 0L) { n += 1; rest = rest >>> 7 }
+    n
   }
+
+  /** Bytes of an int32 field: negative values sign-extend to 64 bits
+    * (a 10-byte varint); 0 is omitted. */
+  private def int32Size(v: Int): Int = if (v == 0) 0 else 1 + varintSize(v.toLong)
+
+  /** Bytes of a double field: omitted iff raw bits are 0 (matches
+    * protobuf-java: -0.0 IS serialized). */
+  private def doubleSize(v: Double): Int =
+    if (java.lang.Double.doubleToRawLongBits(v) == 0L) 0 else 9
 
   /** Mutable cursor over the payload; structural errors throw Malformed
     * and surface as None from the message decoders. */
@@ -138,10 +165,8 @@ object ProtoCodec {
   // ---- SensorData ----------------------------------------------
 
   def encodeSensor(s: SensorData): Array[Byte] = {
-    val out = new ByteArrayOutputStream(16)
-    writeInt32Field(out, 1, s.sensorID)
-    writeDoubleField(out, 2, s.temperature)
-    out.toByteArray
+    new Writer(int32Size(s.sensorID) + doubleSize(s.temperature))
+      .int32(1, s.sensorID).double(2, s.temperature).bytes
   }
 
   def decodeSensor(b: Array[Byte]): Option[SensorData] = decodeWith(b) { r =>
@@ -163,12 +188,10 @@ object ProtoCodec {
   // ---- TemperatureControl --------------------------------------
 
   def encodeControl(c: TemperatureControl): Array[Byte] = {
-    val out = new ByteArrayOutputStream(32)
-    writeInt32Field(out, 1, c.sensorID)
-    writeDoubleField(out, 2, c.desired)
-    writeDoubleField(out, 3, c.upDelta)
-    writeDoubleField(out, 4, c.downDelta)
-    out.toByteArray
+    new Writer(int32Size(c.sensorID) + doubleSize(c.desired) + doubleSize(c.upDelta) +
+        doubleSize(c.downDelta))
+      .int32(1, c.sensorID).double(2, c.desired).double(3, c.upDelta)
+      .double(4, c.downDelta).bytes
   }
 
   def decodeControl(b: Array[Byte]): Option[TemperatureControl] = decodeWith(b) { r =>
@@ -194,12 +217,10 @@ object ProtoCodec {
   // ---- HeaterControl (flattened enum) --------------------------
 
   def encodeHeater(h: HeaterControl): Array[Byte] = {
-    val out = new ByteArrayOutputStream(16)
-    writeInt32Field(out, 1, h.sensorID)
-    // enum on the wire is a plain varint; On=0 is the proto3 default
-    // and is omitted, exactly like protobuf-java would
-    if (h.action != 0) { writeTag(out, 2, 0); writeVarint(out, h.action.toLong) }
-    out.toByteArray
+    // enum on the wire is a plain varint, written as an int32; On=0 is
+    // the proto3 default and is omitted, exactly like protobuf-java would
+    new Writer(int32Size(h.sensorID) + int32Size(h.action))
+      .int32(1, h.sensorID).int32(2, h.action).bytes
   }
 
   def decodeHeater(b: Array[Byte]): Option[HeaterControl] = decodeWith(b) { r =>

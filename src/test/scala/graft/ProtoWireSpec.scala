@@ -4,6 +4,8 @@ import java.nio.file.Files
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.model.{ControlEvent, ControlState, HeaterControl, Hysteresis, SensorData, TemperatureControl}
 import graft.streaming.{HeaterCommand, HeaterSim, ProtoCodec, ThermostatStream}
@@ -56,6 +58,74 @@ class ProtoWireSpec extends SparkSpec {
     assert(ProtoCodec.decodeControl(ProtoCodec.encodeControl(tc)).contains(tc))
     val hc = HeaterControl(9, 1)
     assert(ProtoCodec.decodeHeater(ProtoCodec.encodeHeater(hc)).contains(hc))
+  }
+
+  // ---- reference encoding, assembled independently of the codec ----
+
+  /** Base-128 groups, low first, the continuation bit on all but the
+    * last. */
+  private def refVarint(v: Long): Seq[Byte] = {
+    val groups = Iterator.iterate(v)(_ >>> 7).takeWhile(_ != 0L).map(g => (g & 0x7f).toInt).toSeq
+    val gs = if (groups.isEmpty) Seq(0) else groups
+    gs.init.map(g => (g | 0x80).toByte) :+ gs.last.toByte
+  }
+
+  /** proto3 omits a scalar field that holds its default: 0 for an
+    * int32 or enum, all-zero bits for a double (so -0.0 is written).
+    * A negative int32 is sign-extended to 64 bits before encoding. */
+  private def refInt32(field: Int, v: Int): Seq[Byte] =
+    if (v == 0) Nil else (field << 3).toByte +: refVarint(v.toLong)
+
+  private def refDouble(field: Int, v: Double): Seq[Byte] =
+    if (java.lang.Double.doubleToRawLongBits(v) == 0L) Nil
+    else ((field << 3) | 1).toByte +: le64(v).toSeq
+
+  /** Bit equality, so -0.0 differs from 0.0 and NaN equals NaN. */
+  private def same(a: Double, b: Double): Boolean =
+    java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b)
+
+  private val edgeInts = Seq(0, 1, -1, 127, 128, 16384, Int.MinValue, Int.MaxValue)
+  private val edgeDoubles = Seq(0.0, -0.0, 1.0, -1.0, Double.NaN,
+    Double.MinPositiveValue, -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL / 3,
+    Double.MaxValue, Double.PositiveInfinity, Double.NegativeInfinity)
+  private val anyInt = Gen.frequency(1 -> Gen.oneOf(edgeInts), 1 -> Gen.choose(Int.MinValue, Int.MaxValue))
+  private val anyDouble = Gen.frequency(1 -> Gen.oneOf(edgeDoubles),
+    1 -> Gen.choose(-1e6, 1e6), 1 -> Gen.choose(Long.MinValue, Long.MaxValue).map(java.lang.Double.longBitsToDouble))
+
+  /** 500 seeded samples of `g` (the raw-scalacheck loop; the
+    * scalatestplus bridge is not in the offline cache). */
+  private def forAllSamples[A](g: Gen[A])(check: A => Unit): Unit =
+    (0 until 500).foreach(i => g.apply(Gen.Parameters.default, Seed(i.toLong)).foreach(check))
+
+  test("every encoder's bytes equal the reference encoding, and decode returns the message") {
+    def sensor(m: SensorData): Unit = {
+      val got = ProtoCodec.encodeSensor(m)
+      assert(got.toSeq == refInt32(1, m.sensorID) ++ refDouble(2, m.temperature), m)
+      val back = ProtoCodec.decodeSensor(got).get
+      assert(back.sensorID == m.sensorID && same(back.temperature, m.temperature), m)
+    }
+    def control(m: TemperatureControl): Unit = {
+      val got = ProtoCodec.encodeControl(m)
+      assert(got.toSeq == refInt32(1, m.sensorID) ++ refDouble(2, m.desired) ++
+        refDouble(3, m.upDelta) ++ refDouble(4, m.downDelta), m)
+      val back = ProtoCodec.decodeControl(got).get
+      assert(back.sensorID == m.sensorID && same(back.desired, m.desired) &&
+        same(back.upDelta, m.upDelta) && same(back.downDelta, m.downDelta), m)
+    }
+    def heater(m: HeaterControl): Unit = {
+      val got = ProtoCodec.encodeHeater(m)
+      assert(got.toSeq == refInt32(1, m.sensorID) ++ refInt32(2, m.action), m)
+      assert(ProtoCodec.decodeHeater(got).contains(m))
+    }
+    for (i <- edgeInts; d <- edgeDoubles) sensor(SensorData(i, d))
+    for (i <- edgeInts; a <- edgeInts) heater(HeaterControl(i, a))
+    forAllSamples(for (i <- anyInt; d <- anyDouble) yield SensorData(i, d))(sensor)
+    forAllSamples(for (i <- anyInt; d <- anyDouble; u <- anyDouble; w <- anyDouble)
+      yield TemperatureControl(i, d, u, w))(control)
+    forAllSamples(for (i <- anyInt; a <- anyInt) yield HeaterControl(i, a))(heater)
+    // the reference itself: Int.MinValue is a 10-byte varint, 300 two bytes
+    assert(refVarint(Int.MinValue.toLong).length == 10)
+    assert(refVarint(300L) == Seq[Byte](0xac.toByte, 0x02))
   }
 
   test("conforming reader: unknown fields skipped, last value wins, defaults on absence") {

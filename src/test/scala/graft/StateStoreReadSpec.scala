@@ -29,14 +29,16 @@ class StateStoreReadSpec extends SparkSpec {
     try {
       val k1 = HeaterSim.eventsOf(HeaterSim.closedLoop(20))
       val k2 = k1.map(e => e.copy(sensorID = 7L, desired = 50.0))
-      ms.addData(k1 ++ k2)
+      // a key that only ever sees readings: nothing to remember, no state row
+      val k3 = k1.filter(_.kind == "data").map(_.copy(sensorID = 9L))
+      ms.addData(k1 ++ k2 ++ k3)
       q.processAllAvailable()
     } finally q.stop()
 
     val state = s.read.format("statestore").load(chk)
     val keys = state.select(col("key.value").cast("long")).as[Long]
       .collect().toSet
-    assert(keys == Set(1L, 7L))
+    assert(keys == Set(1L, 7L)) // no row for the readings-only key 9
     // the stored ControlState carries the latest setting per key
     val settings = state.select(col("key.value").cast("long"),
         col("value.groupState.hasSetting"), col("value.groupState.desired"))

@@ -104,6 +104,22 @@ class ThermostatStreamSpec extends SparkSpec {
     assert(out.toSeq == Seq(HeaterCommand(1L, 2L, 1), HeaterCommand(1L, 4L, 0)))
   }
 
+  test("pipeline runs over a plain union of typed branches") {
+    val s = spark
+    import s.implicits._
+    // a typed map feeding a typed flatMap in each branch, unioned and
+    // grouped directly: pushing the key projection into the branches
+    // leaves an object-typed Project Spark cannot execute
+    val evs = HeaterSim.eventsOf(HeaterSim.closedLoop(30))
+    val rows = s.range(evs.length.toLong).as[Long]
+    def branch(kind: String) = rows.map(i => (i, i)).flatMap { case (i, _) =>
+      Some(evs(i.toInt)).filter(_.kind == kind)
+    }
+    val out = ThermostatStream.pipeline(branch("data").unionByName(branch("control")))
+      .collect().toSeq.sortBy(_.seq)
+    assert(out.nonEmpty && out == goldenFold(evs))
+  }
+
   test("a control and data event sharing a seq apply control-first, deterministically") {
     val s = spark
     import s.implicits._
