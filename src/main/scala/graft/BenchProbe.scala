@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 /** Per-run job/stage/GC breakdown for spread adjudication: runs one
   * SparkEntry query N times and prints, per run, wall time, GC delta,
-  * JIT-compilation-time delta, code-cache occupancy, job count, and
-  * the top-5 slowest jobs (wall and summed task time). Slow runs then
+  * JIT-compilation-time delta, code-cache occupancy, the LoopStats
+  * counters the run recorded (loop rounds and their `_wms` / `_tms`
+  * cost split), job count, and the top-5 slowest jobs (wall and
+  * summed task time). Slow runs then
   * read as "job 37 went from 0.2 to 9 s with flat task time" (driver/
   * JVM stall) vs "task time ballooned" (executor-side work or GC).
   */
@@ -93,11 +95,14 @@ object BenchProbe {
     val n = if (args.length > 2) args(2).toInt else 3
     (1 to n).foreach { i =>
       clock.reset()
+      LoopStats.drain()
       val gc0 = gcMs(); val jit0 = jitMs(); val cl0 = classes()
       val t0 = System.nanoTime()
       val c = SparkEntry.queries(args(1))(spark, args(0)).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[probe] ${args(1)} run$i: $dt%.2f s rows=$c gc+${gcMs() - gc0}ms jit+${jitMs() - jit0}ms ccache=${ccacheMb()}%.0fmb classes+${classes() - cl0}%d")
+      val loops = LoopStats.drain().toSeq.sorted
+        .map { case (k, v) => s" $k=$v" }.mkString
+      println(f"[probe] ${args(1)} run$i: $dt%.2f s rows=$c gc+${gcMs() - gc0}ms jit+${jitMs() - jit0}ms ccache=${ccacheMb()}%.0fmb classes+${classes() - cl0}%d$loops")
       println(s"[probe]   ${clock.report()}")
       println(s"[probe]   stages: ${clock.stageReport()}")
       spark.catalog.clearCache()

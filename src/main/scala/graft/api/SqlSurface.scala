@@ -8,11 +8,15 @@ import graft.queries.{Curation, Mining}
 /** The SQL-first entry surface: the engine consumed the way a
   * SQL-only user consumes a real analytics engine — temp views over
   * the table inventory, `spark.sql` texts for representative
-  * operators (one per family), and SQL-driven forms of the
+  * operators (one per family), and SQL round bodies for the
   * convergence loops. SqlSurfaceSpec pins each SQL form PLAN-EQUAL
-  * (`optimizedPlan.sameResult`) to its DataFrame twin, so a SQL user
+  * (`optimizedPlan.sameResult`) to its DataFrame form, so a SQL user
   * gets byte-identical plans — same pushdown, same broadcast sides,
-  * same partial aggregation — not a parallel implementation.
+  * same partial aggregation — not a parallel implementation. Each
+  * loop runs on its one DataFrame driver (ops.star2Core /
+  * ops.ccWarmStart, Curation.pagerankOn, Curation.hitsScores,
+  * Mining.kcorePeel, Mining.sccAssign), which the SQL surface hands
+  * only its round bodies.
   *
   * Texts are Spark SQL (the engine surface), distinct from the
   * DuckDB oracle texts in the qNN files (the correctness gate).
@@ -258,6 +262,15 @@ object SqlSurface {
     "q185_rrf_fusion" -> q185Sql,
     "q194_cusum_changepoint" -> q194Sql)
 
+  /** A round body's parse: registers each (name, frame) as a temp
+    * view, then parses `text` over them.
+    */
+  private def sqlOver(s: SparkSession, text: String,
+      views: (String, DataFrame)*): DataFrame = {
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    s.sql(text)
+  }
+
   // ----- q161: the connected-components loop, SQL-driven -----------
 
   /** The canonical (min, max, self-loops dropped, deduplicated)
@@ -303,21 +316,17 @@ object SqlSurface {
        |  GROUP BY r.sa, r.sb
        |)""".stripMargin
 
-  /** The final star forest read back as labels over the converged
-    * `cc_edges` view: leaves carry their center, centers themselves.
+  /** The SQL alternation body: registers the round's edge set as
+    * `cc_edges` and parses [[ccRoundSql]].
     */
-  val ccFinalSql: String =
-    """SELECT b AS node, a AS lbl FROM cc_edges
-      |UNION ALL
-      |SELECT DISTINCT a AS node, a AS lbl FROM cc_edges""".stripMargin
+  def ccRoundBody(s: SparkSession)(e: DataFrame): DataFrame =
+    sqlOver(s, ccRoundSql, "cc_edges" -> e)
 
-  /** q161's loop driven entirely through `spark.sql`: same round
-    * hygiene as ops.connectedComponents (per-round localCheckpoint
-    * flat lineage, changed-edge stop check riding the checkpoint
-    * job, loud bounded-round guard), alternations data-driven.
-    * Returns the final (node, lbl) frame and the alternation count.
-    */
-  /** RESERVED VIEW NAMES: the loop owns `cc_und` / `cc_edges` for
+  /** q161's loop with SQL bodies: runs ops.star2Core (the one cc
+    * driver) from [[ccCanonSql]] with [[ccRoundBody]]. Returns the
+    * final (node, lbl) frame and the alternation count.
+    *
+    * RESERVED VIEW NAMES: the loop owns `cc_und` / `cc_edges` for
     * its duration and drops them on exit (success or failure) — a
     * session view of either name is replaced; two concurrent loops
     * must run in separate sessions (`SparkSession.newSession()`).
@@ -334,42 +343,25 @@ object SqlSurface {
     */
   def ccLoopSqlCurve(s: SparkSession, dir: String, maxRounds: Int = 50,
       probe: (Int, DataFrame) => Unit = (_, _) => ())
-    : (DataFrame, Seq[(Long, Long)]) = {
-    val und = Mining.sparseUnd(s, dir)
+    : (DataFrame, Seq[(Long, Long)]) =
     try {
-      und.select(col("a").as("src"), col("b").as("dst"))
-        .createOrReplaceTempView("cc_und")
-      ccCoreSql(s, s.sql(ccCanonSql), "cc", maxRounds, probe)
-    } finally {
-      s.catalog.dropTempView("cc_und")
-      s.catalog.dropTempView("cc_edges")
-    }
-  }
+      val und = Mining.sparseUnd(s, dir).select(col("a").as("src"), col("b").as("dst"))
+      ccLabels(ops.star2Core(sqlOver(s, ccCanonSql, "cc_und" -> und), "cc",
+        maxRounds, probe, ccRoundBody(s)))
+    } finally Seq("cc_und", "cc_edges").foreach(s.catalog.dropTempView)
 
-  /** The shared SQL-driven two-phase fixpoint: alternations of
-    * [[ccRoundSql]] over the per-round `cc_edges` view from a
-    * canonical (a, b) `init`, driven by graft.Loop.fixpoint (the
-    * round hygiene of ops.connectedComponents), final labels read
-    * back with [[ccFinalSql]]. The caller owns the `cc_edges` drop.
-    */
-  private def ccCoreSql(s: SparkSession, init: DataFrame, loop: String,
-      maxRounds: Int, probe: (Int, DataFrame) => Unit)
-    : (DataFrame, Seq[(Long, Long)]) = {
-    val (e, curve) = graft.Loop.fixpoint(loop, init, count_if(col("chg")),
-        maxRounds, probe = probe) { e =>
-      e.createOrReplaceTempView("cc_edges")
-      s.sql(ccRoundSql)
-    }
-    e.createOrReplaceTempView("cc_edges")
-    (s.sql(ccFinalSql), curve)
-  }
+  /** star2Core's (id, component) readback renamed to the SQL
+    * surface's (node, lbl). */
+  private def ccLabels(out: (DataFrame, Seq[(Long, Long)]))
+    : (DataFrame, Seq[(Long, Long)]) =
+    (out._1.select(col("id").as("node"), col("component").as("lbl")), out._2)
 
   // ----- q217: the warm-start cc loop, SQL-driven -------------------
-  // (the incremental/CDC family's entry on the SQL surface — round-9
-  // verdict item 5: the SQL-only user had every cold loop but no
-  // warm form. Shortcut-edge body plan-equal-pinned in SqlSurfaceSpec
-  // against ops.ccLabelEdges, the exact production init q217 runs;
-  // the round body is [[ccRoundSql]], pinned against ops.star2Round.)
+  // (the incremental/CDC family's entry on the SQL surface. It runs
+  // on ops.ccWarmStart; its bodies are plan-equal-pinned in
+  // SqlSurfaceSpec against ops.ccAffected, ops.ccCanon and
+  // ops.ccLabelEdges, the round body [[ccRoundSql]] against
+  // ops.star2Round.)
 
   /** The disturbed-component derivation over `cc_prev` / `cc_dels`
     * (src, dst) — plan-equal to ops.ccAffected.
@@ -399,62 +391,47 @@ object SqlSurface {
        |  USING (component)
        |WHERE __aff IS NULL AND component <> id""".stripMargin
 
-  /** The detectable-staleness probe over `cc_le` / `cc_canon`:
-    * shortcut edges whose component node left the new graph — must
-    * be empty (the incrementalConnectedComponents CONTRACT; an
-    * under-reported delete would otherwise graft a departed node id
-    * back into the labeling).
+  /** The canonical edges over the raw `cc_und` (src, dst) view,
+    * self-loops dropped and NOT deduplicated — plan-equal to
+    * ops.ccCanon, the warm start's `canon` body (the init union
+    * deduplicates).
     */
-  val ccStaleSql: String =
-    s"""SELECT id FROM (SELECT DISTINCT a AS id FROM cc_le)
-       |LEFT ANTI JOIN ($ccNodesSub) USING (id)""".stripMargin
+  val ccCanonRawSql: String =
+    """SELECT a, b FROM (
+      |  SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM cc_und
+      |) WHERE a <> b""".stripMargin
 
-  /** The warm initial edge set: canonical new edges plus the kept
-    * shortcut edges, deduplicated — plan-equal to the production
-    * init ops.incrementalConnectedComponents builds.
-    */
-  val ccWarmInitSql: String =
-    """SELECT DISTINCT a, b FROM (
-      |  SELECT a, b FROM cc_canon UNION ALL SELECT a, b FROM cc_le)""".stripMargin
-
-  /** q217's warm-start loop driven through `spark.sql`: previous
-    * fixpoint labels + new edges + the changelog's deleted edges in,
-    * (labels, movement curve) out — the same shortcut-edge contract,
-    * loud stale-label guard, and per-round hygiene as
-    * ops.incrementalConnectedComponents, with every body a SQL text.
-    */
-  /** RESERVED VIEW NAMES: owns `cc_und` / `cc_prev` / `cc_dels` /
-    * `cc_aff` / `cc_canon` / `cc_le` / `cc_edges` for the loop's
-    * duration, dropped on exit — see [[ccLoopSql]]'s contract.
+  /** q217's warm-start loop with SQL bodies: previous fixpoint labels
+    * + new edges + the changelog's deleted edges in, (labels,
+    * movement curve) out. Runs ops.ccWarmStart (the one warm-start
+    * driver: shortcut-edge contract, stale-label guard, loop and
+    * releases) with [[ccAffectedSql]], [[ccCanonRawSql]],
+    * [[ccLabelEdgesSql]] and [[ccRoundBody]] as its bodies.
+    *
+    * RESERVED VIEW NAMES: owns `cc_und` / `cc_prev` / `cc_dels` /
+    * `cc_aff` / `cc_canon` / `cc_edges` for the loop's duration,
+    * dropped on exit — see [[ccLoopSql]]'s contract.
     */
   def ccWarmLoopSqlOn(s: SparkSession, prevLabels: DataFrame,
       edges: DataFrame, deletedEdges: DataFrame, src: String, dst: String,
       maxRounds: Int = 50): (DataFrame, Seq[(Long, Long)]) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    try {
-      edges.select(col(src).as("src"), col(dst).as("dst"))
-        .createOrReplaceTempView("cc_und")
-      prevLabels.createOrReplaceTempView("cc_prev")
-      deletedEdges.select(col(src).as("src"), col(dst).as("dst"))
-        .createOrReplaceTempView("cc_dels")
-      s.sql(ccAffectedSql).createOrReplaceTempView("cc_aff")
-      // the canonical edges feed the node set (shortcut build +
-      // stale guard) and the init union — persist across those
-      // consumers, released before the loop runs on the checkpoint
-      val canon = s.sql(ccCanonSql).persist(MEMORY_AND_DISK)
-      try {
-        canon.createOrReplaceTempView("cc_canon")
-        s.sql(ccLabelEdgesSql).createOrReplaceTempView("cc_le")
-        // loud stale-label guard, one node-sized anti-join (the
-        // production contract — see ops.incrementalConnectedComponents)
-        require(s.sql(ccStaleSql).isEmpty,
-          "ccWarmLoopSqlOn: a kept previous label names a node absent " +
-            "from the new edge set — deletedEdges under-reports the changelog")
-        ccCoreSql(s, s.sql(ccWarmInitSql), "cc_warm", maxRounds, (_, _) => ())
-      } finally canon.unpersist(blocking = false)
-    } finally {
-      Seq("cc_und", "cc_prev", "cc_dels", "cc_aff", "cc_canon", "cc_le",
-        "cc_edges").foreach(s.catalog.dropTempView)
+    def srcDst(e: DataFrame): DataFrame =
+      e.select(col(src).as("src"), col(dst).as("dst"))
+    val bodies = ops.CcWarmBodies(
+      affected = (prev, dels) =>
+        sqlOver(s, ccAffectedSql, "cc_prev" -> prev, "cc_dels" -> srcDst(dels)),
+      canon = e => sqlOver(s, ccCanonRawSql, "cc_und" -> srcDst(e)),
+      labelEdges = (canon, prev, aff) => sqlOver(s, ccLabelEdgesSql,
+        "cc_canon" -> canon, "cc_prev" -> prev, "cc_aff" -> aff),
+      round = ccRoundBody(s))
+    // the views expose the caller's frames (`cc_prev`) or rename them
+    // (`cc_und`, `cc_dels`): drop the names only, never the caller's
+    // caches
+    try ccLabels(ops.ccWarmStart(prevLabels, edges, deletedEdges,
+      maxRounds, (_, _) => (), bodies))
+    finally {
+      Seq("cc_und", "cc_prev", "cc_dels", "cc_aff", "cc_canon", "cc_edges")
+        .foreach(org.apache.spark.sql.graftbridge.Bridge.dropTempViewOnly(s, _))
     }
   }
 
@@ -1042,8 +1019,9 @@ object SqlSurface {
     finally Seq("kc_nbrs", "kc_alive").foreach(s.catalog.dropTempView)
 
   // ----- q196: the HITS loop, SQL-driven ---------------------------
-  // (the directed-graph family's entry on the SQL surface — round-7
-  // verdict item 5; round bodies plan-equal-pinned in SqlSurfaceSpec)
+  // (the directed-graph family's entry on the SQL surface. It runs on
+  // Curation.hitsScores; the half-step body is plan-equal-pinned in
+  // SqlSurfaceSpec.)
 
   /** The raw half of one HITS half-step over the `hits_nodes` /
     * `hits_edges` / `hits_scores` views — plan-equal to
@@ -1061,70 +1039,41 @@ object SqlSurface {
        |  GROUP BY $out
        |) ON id = $out""".stripMargin
 
-  /** The SQL raw half-step body: registers the score vector (through
-    * Loop.broadcastIfFits, as Curation.hitsRawFrame) as `hits_scores`
-    * and parses [[hitsRawSql]] over the caller's `hits_nodes` /
-    * `hits_edges` views.
+  /** The SQL half-step body: registers the node set as `hits_nodes`,
+    * the oriented edge copy it is handed as `hits_edges` and the
+    * score vector (through Loop.broadcastIfFits, as
+    * Curation.hitsRawFrame) as `hits_scores`, and parses
+    * [[hitsRawSql]]. The caller drops the views once the driver
+    * returns: dropping `hits_edges` earlier would uncache the edge
+    * copy it names.
     */
-  def hitsRawBody(s: SparkSession, key: String, out: String)(
-      scores: DataFrame): DataFrame = {
-    graft.Loop.broadcastIfFits(scores).createOrReplaceTempView("hits_scores")
-    s.sql(hitsRawSql(key, out))
-  }
+  def hitsRawBody(s: SparkSession)(nodes: DataFrame, edges: DataFrame,
+      scores: DataFrame, key: String, out: String): DataFrame =
+    sqlOver(s, hitsRawSql(key, out), "hits_nodes" -> nodes,
+      "hits_edges" -> edges, "hits_scores" -> graft.Loop.broadcastIfFits(scores))
 
-  /** The max-renormalize half over the `hits_raw` view — plan-equal
-    * to Curation.hitsNormFrame.
-    */
-  val hitsNormSql: String =
-    """SELECT /*+ BROADCAST(m) */ id, (raw * 10000) div mx AS score
-      |FROM hits_raw
-      |CROSS JOIN (SELECT MAX(raw) AS mx FROM hits_raw) m""".stripMargin
-
-  /** q196's 4-round mutual power iteration driven through
-    * `spark.sql` — same half-step checkpoints, Ck-release hygiene,
-    * and integer renormalize as Curation.hitsScores. Returns the
+  /** HITS with the SQL half-step body: runs Curation.hitsScores (the
+    * one HITS driver) with [[hitsRawBody]] over a caller-persisted
+    * distinct (src, dst) edge frame without self-loops. Returns the
     * final (authority, hub) score frames, both checkpointed (caller
     * releases).
+    *
+    * RESERVED VIEW NAMES: owns `hits_nodes` / `hits_edges` /
+    * `hits_scores` for the loop's duration, dropped on exit — see
+    * [[ccLoopSql]]'s contract.
     */
-  /** RESERVED VIEW NAMES: owns `hits_edges` / `hits_nodes` /
-    * `hits_scores` / `hits_raw` for the loop's duration, dropped on
-    * exit — see [[ccLoopSql]]'s contract.
+  def hitsLoopSqlOn(s: SparkSession, edges: DataFrame): (DataFrame, DataFrame) =
+    try Curation.hitsScores(edges, raw = hitsRawBody(s))
+    finally Seq("hits_nodes", "hits_edges", "hits_scores").foreach(s.catalog.dropTempView)
+
+  /** q196's 4-round mutual power iteration on the SQL surface:
+    * [[hitsLoopSqlOn]] over q196's persisted edges.
     */
   def hitsLoopSql(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val edges = Curation.hitsEdges(s, dir).persist(MEMORY_AND_DISK)
     graft.Tables.touch(edges)
-    val nodes = edges.select(col("src").as("id"))
-      .unionByName(edges.select(col("dst").as("id")))
-      .distinct().persist(MEMORY_AND_DISK)
-    graft.Tables.touch(nodes)
-    try {
-      edges.createOrReplaceTempView("hits_edges")
-      nodes.createOrReplaceTempView("hits_nodes")
-      def halfStep(scores: DataFrame, key: String, out: String): DataFrame = {
-        val raw = hitsRawBody(s, key, out)(scores).localCheckpoint(true)
-        raw.createOrReplaceTempView("hits_raw")
-        val normed = s.sql(hitsNormSql).localCheckpoint(true)
-        graft.Ck.release(raw)
-        normed
-      }
-      var h = nodes.withColumn("score", lit(10000L)).localCheckpoint(true)
-      var a: DataFrame = null
-      for (_ <- 1 to Curation.HitsRounds) {
-        val aNext = halfStep(h, "src", "dst") // authorities ← hubs
-        if (a != null) graft.Ck.release(a)
-        a = aNext
-        val hNext = halfStep(a, "dst", "src") // hubs ← authorities
-        graft.Ck.release(h)
-        h = hNext
-      }
-      (a, h)
-    } finally {
-      edges.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      Seq("hits_edges", "hits_nodes", "hits_scores", "hits_raw")
-        .foreach(s.catalog.dropTempView)
-    }
+    try hitsLoopSqlOn(s, edges) finally edges.unpersist(blocking = false)
   }
 
   /** q196's 20-row output shape over the SQL-driven loop. */
@@ -1205,9 +1154,10 @@ object SqlSurface {
 
   // ----- q222: SemDeDup on the SQL surface --------------------------
   // (the vectors family's entry: the cell-blocked semantic pair
-  // stage as a SQL text over the production-assigned frame, the
-  // shared SQL cc fixpoint as the component solve, and a SQL census
-  // — plan-equal pair body, row-equal output vs the DataFrame q222.)
+  // stage as a SQL text over the production-assigned frame, the one
+  // cc driver with the SQL round body as the component solve, and a
+  // SQL census — plan-equal pair body, row-equal output vs the
+  // DataFrame q222.)
 
   /** The cell-blocked semantic pair stage over `sem_av` (__id, __e
     * normalized, cell) — plan-equal to ops.semDedupPairs at q222's
@@ -1223,11 +1173,11 @@ object SqlSurface {
 
   /** q222's census through the SQL surface: the production
     * assignment frame registered as `sem_av`, [[semDedupPairsSql]],
-    * the shared SQL cc fixpoint ([[ccRoundSql]] rounds via the
-    * q161 core), and a SQL census — row-equal to the DataFrame
-    * q222_semdedup. RESERVED VIEW NAMES: owns `sem_av` /
-    * `sem_pairs` / `sem_lbl` (plus the cc core's `cc_edges`) for
-    * the call's duration, dropped on exit.
+    * ops.star2Core with [[ccRoundBody]] as the component solve, and
+    * a SQL census — row-equal to the DataFrame q222_semdedup.
+    * RESERVED VIEW NAMES: owns `sem_av` / `sem_pairs` / `sem_lbl`
+    * (plus the round body's `cc_edges`) for the call's duration,
+    * dropped on exit.
     */
   def q222SemDedupSql(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1250,9 +1200,8 @@ object SqlSurface {
       pairs = org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
         s.sql(semDedupPairsSql).localCheckpoint(true))
       pairs.createOrReplaceTempView("sem_pairs")
-      val (lblRaw, _) = ccCoreSql(s,
-        s.sql("SELECT __i AS a, __j AS b FROM sem_pairs"), "cc", 50, (_, _) => ())
-      lbl = lblRaw.select(col("node").as("id"), col("lbl").as("component"))
+      lbl = ops.star2Core(s.sql("SELECT __i AS a, __j AS b FROM sem_pairs"),
+        "cc", 50, (_, _) => (), ccRoundBody(s))._1
       lbl.createOrReplaceTempView("sem_lbl")
       val census = s.sql(
         """WITH dup AS (
@@ -1369,21 +1318,17 @@ object SqlSurface {
     */
   def sccLoopSqlOn(s: SparkSession, edges: DataFrame,
       maxOuter: Int = 30): (DataFrame, Int) = {
-    def sqlOver(text: String, views: (String, DataFrame)*): DataFrame = {
-      views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-      s.sql(text)
-    }
     val bodies = Mining.SccBodies(
       trimKeep = (e, cur) =>
-        sqlOver(sccTrimKeepSql, "scc_edges" -> e, "scc_cur" -> cur),
-      colorInit = cur => sqlOver(sccColorInitSql, "scc_cur" -> cur),
+        sqlOver(s, sccTrimKeepSql, "scc_edges" -> e, "scc_cur" -> cur),
+      colorInit = cur => sqlOver(s, sccColorInitSql, "scc_cur" -> cur),
       colorRound = (ce, color) =>
-        sqlOver(sccColorRoundSql, "scc_ce" -> ce, "scc_color" -> color),
+        sqlOver(s, sccColorRoundSql, "scc_ce" -> ce, "scc_color" -> color),
       collectGrow = (ce, color, members) =>
-        sqlOver(sccCollectGrowSql, "scc_ce" -> ce, "scc_color" -> color,
+        sqlOver(s, sccCollectGrowSql, "scc_ce" -> ce, "scc_color" -> color,
           "scc_members" -> members),
       backRound = (same, back) =>
-        sqlOver(sccBackRoundSql, "scc_same" -> same, "scc_back" -> back))
+        sqlOver(s, sccBackRoundSql, "scc_same" -> same, "scc_back" -> back))
     try Mining.sccAssign(edges, maxOuter, bodies)
     finally {
       Seq("scc_edges", "scc_cur", "scc_ce", "scc_color", "scc_members",

@@ -1500,35 +1500,70 @@ object ops {
       edges: DataFrame, deletedEdges: DataFrame, src: String, dst: String,
       maxRounds: Int = 50,
       probe: (Int, DataFrame) => Unit = (_, _) => ())
+    : (DataFrame, Seq[(Long, Long)]) =
+    ccWarmStart(prevLabels, edges, deletedEdges, maxRounds, probe,
+      CcWarmBodies(
+        affected = (prev, dels) => ccAffected(prev, dels, src, dst),
+        canon = e => ccCanon(e, src, dst),
+        labelEdges = ccLabelEdges))
+
+  /** The bodies [[ccWarmStart]] runs; everything else (the canon
+    * persist, the stale-label guard, the init union, the loop and the
+    * releases) is the driver's. [[incrementalConnectedComponents]]
+    * passes the DataFrame bodies, SqlSurface.ccWarmLoopSqlOn SQL
+    * texts pinned plan-equal to them (SqlSurfaceSpec), so both
+    * surfaces run one program. Arguments: affected(prevLabels,
+    * deletedEdges), canon(edges) — canonical (a, b), self-loops
+    * dropped, not deduplicated — labelEdges(canon, prevLabels,
+    * affected), and the alternation round(e).
+    */
+  private[graft] final case class CcWarmBodies(
+      affected: (DataFrame, DataFrame) => DataFrame,
+      canon: DataFrame => DataFrame,
+      labelEdges: (DataFrame, DataFrame, DataFrame) => DataFrame,
+      round: DataFrame => DataFrame = star2Round)
+
+  /** The one warm-start cc driver ([[incrementalConnectedComponents]]
+    * and SqlSurface.ccWarmLoopSqlOn): the canonical new edges are
+    * persisted across their three readers (the shortcut build, the
+    * stale-label guard and the init union) and released once the
+    * init is checkpointed; the loop is [[star2Core]] under "cc_warm".
+    */
+  private[graft] def ccWarmStart(prevLabels: DataFrame, edges: DataFrame,
+      deletedEdges: DataFrame, maxRounds: Int,
+      probe: (Int, DataFrame) => Unit, bodies: CcWarmBodies)
     : (DataFrame, Seq[(Long, Long)]) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val affected = ccAffected(prevLabels, deletedEdges, src, dst)
-    val canon = ccCanon(edges, src, dst).persist(MEMORY_AND_DISK)
+    val affected = bodies.affected(prevLabels, deletedEdges)
+    val canon = bodies.canon(edges).persist(MEMORY_AND_DISK)
     try {
-      val nodes = canon.select(col("a").as("id"))
-        .unionByName(canon.select(col("b").as("id"))).distinct()
-      val le = ccLabelEdges(nodes, prevLabels, affected)
-      // loud stale-label guard (see CONTRACT above): every shortcut
-      // edge's component must name a node of the NEW graph, else the
+      val le = bodies.labelEdges(canon, prevLabels, affected)
+      // loud stale-label guard (see the CONTRACT of
+      // incrementalConnectedComponents): every shortcut edge's
+      // component must name a node of the NEW graph, else the
       // contraction would graft a departed node id into the labeling.
       // One node-sized anti-join over the persisted canonical edges —
       // cheap next to a single alternation, and it catches caller
       // under-reporting of deletes instead of returning a corrupt
       // labeling.
       require(le.select(col("a").as("id")).distinct()
-          .join(nodes, Seq("id"), "left_anti").isEmpty,
+          .join(ccNodes(canon), Seq("id"), "left_anti").isEmpty,
         "incrementalConnectedComponents: a kept previous label names a node " +
           "absent from the new edge set — deletedEdges under-reports the " +
           "changelog (every edge removed since prevLabels' graph must be listed)")
-      star2Core(canon.unionByName(le).distinct(), "cc_warm", maxRounds, probe)
+      star2Core(canon.unionByName(le).distinct(), "cc_warm", maxRounds, probe,
+        bodies.round)
     } finally canon.unpersist(blocking = false)
   }
 
+  /** The node set (id) of a canonical (a, b) edge frame. */
+  private def ccNodes(canon: DataFrame): DataFrame =
+    canon.select(col("a").as("id"))
+      .unionByName(canon.select(col("b").as("id"))).distinct()
+
   /** The components a changelog's deleted edges disturb —
     * changelog-sized, broadcast into the warm shortcut-edge build.
-    * Factored out so the SQL-driven warm loop
-    * ([[SqlSurface.ccWarmLoopSqlOn]]) can be pinned plan-equal to
-    * this exact production body.
+    * The DataFrame `affected` body of [[CcWarmBodies]].
     */
   private[graft] def ccAffected(prevLabels: DataFrame,
       deletedEdges: DataFrame, src: String, dst: String): DataFrame =
@@ -1537,16 +1572,15 @@ object ops {
         .unionByName(deletedEdges.select(col(dst).as("id"))).distinct(), "id")
       .select(col("component")).distinct()
 
-  /** The warm-start SHORTCUT edges over an (id)-shaped node set:
-    * one (component, id) edge per kept label of an undisturbed
-    * component — delete-disturbed components and fresh nodes
-    * contribute nothing (the [[incrementalConnectedComponents]]
-    * contract). Factored out so the SQL-driven warm loop can be
-    * pinned plan-equal to this exact production body.
+  /** The warm-start SHORTCUT edges over the nodes of the canonical
+    * new edges: one (component, id) edge per kept label of an
+    * undisturbed component — delete-disturbed components and fresh
+    * nodes contribute nothing (the [[incrementalConnectedComponents]]
+    * contract). The DataFrame `labelEdges` body of [[CcWarmBodies]].
     */
-  private[graft] def ccLabelEdges(nodes: DataFrame, prevLabels: DataFrame,
+  private[graft] def ccLabelEdges(canon: DataFrame, prevLabels: DataFrame,
       affected: DataFrame): DataFrame =
-    nodes
+    ccNodes(canon)
       .join(prevLabels, Seq("id"), "inner")
       .join(broadcast(affected.withColumn("__aff", lit(1L))),
         Seq("component"), "left")
@@ -1626,12 +1660,15 @@ object ops {
     * final star forest reads back as (id, component): leaves carry
     * their center, centers carry themselves (distinct over the small
     * center set). Rounds are recorded under `loop` ("cc" cold,
-    * "cc_warm" warm).
+    * "cc_warm" warm). `round` is the alternation body: [[star2Round]],
+    * or the SQL surface's text pinned plan-equal to it.
     */
-  private def star2Core(e0: DataFrame, loop: String, maxRounds: Int,
-      probe: (Int, DataFrame) => Unit): (DataFrame, Seq[(Long, Long)]) = {
+  private[graft] def star2Core(e0: DataFrame, loop: String, maxRounds: Int,
+      probe: (Int, DataFrame) => Unit,
+      round: DataFrame => DataFrame = star2Round)
+    : (DataFrame, Seq[(Long, Long)]) = {
     val (e, curve) = graft.Loop.fixpoint(loop, e0, count_if(col("chg")),
-      maxRounds, probe = probe)(star2Round)
+      maxRounds, probe = probe)(round)
     (e.select(col("b").as("id"), col("a").as("component"))
         .unionByName(
           e.select(col("a").as("id"), col("a").as("component")).distinct()),
@@ -2780,7 +2817,8 @@ object ops {
     * dropped): 4 integer power iterations of a = Eᵀh, h = Ea with
     * max-renormalization to 10000 after every half-step — pure
     * int64, reproducible across engines (see q196). Returns the full
-    * (id, auth, hub) table. Scale: the score vectors are node-sized
+    * (id, auth, hub) table, empty when no edge survives the
+    * normalization. Scale: the score vectors are node-sized
     * broadcasts onto the edge list (co-partitioned joins past a
     * broadcast); per-round frames checkpoint eagerly and release.
     */
@@ -2791,14 +2829,15 @@ object ops {
       .filter(col("src") =!= col("dst"))
       .distinct()
       .persist(MEMORY_AND_DISK)
-    val (a, h) = graft.queries.Curation.hitsScores(canon)
-    val out = a.select(col("id"), col("score").as("auth"))
-      .join(h.select(col("id"), col("score").as("hub")), "id")
-      .localCheckpoint(true)
-    graft.Ck.release(a)
-    graft.Ck.release(h)
-    canon.unpersist(blocking = false)
-    out
+    try {
+      val (a, h) = graft.queries.Curation.hitsScores(canon)
+      val out = a.select(col("id"), col("score").as("auth"))
+        .join(h.select(col("id"), col("score").as("hub")), "id")
+        .localCheckpoint(true)
+      graft.Ck.release(a)
+      graft.Ck.release(h)
+      out
+    } finally canon.unpersist(blocking = false)
   }
 
   /** Strongly connected components (q199's parameterized form): the

@@ -1363,7 +1363,7 @@ object Curation {
   // ---------------------------------------------------------------
   private[graft] val HitsRounds = 4
 
-  /** q196's edge derivation (also the SQL-driven twin's input). */
+  /** q196's edge derivation (also SqlSurface.hitsLoopSql's input). */
   private[graft] def hitsEdges(s: SparkSession, dir: String): DataFrame = {
     val ev = Mining.graphEv(s, dir)
     val n = ev.agg((max(col("user_id")) + 1L).as("n"))
@@ -1374,14 +1374,10 @@ object Curation {
       .distinct()
   }
 
-  /** The HITS iteration core (ops.hits and the MiningSpec replay
-    * call it): takes a caller-persisted distinct (src, dst) edge
-    * frame without self-loops; returns the CHECKPOINTED final
-    * (authority, hub) score frames — caller releases both via
-    * graft.Ck.release.
-    */
-  /** The raw half of one HITS half-step — factored so the SQL-driven
-    * twin (SqlSurface.hitsRawSql) can be pinned plan-equal to it.
+  /** The raw half of one HITS half-step: Σ over the `key`-incident
+    * edges of the other role's score, per `out` node — the default
+    * body of [[hitsScores]] (SqlSurface.hitsRawSql is pinned
+    * plan-equal to it).
     */
   private[graft] def hitsRawFrame(nodes: DataFrame, edges: DataFrame,
       scores: DataFrame, key: String, out: String): DataFrame =
@@ -1395,21 +1391,20 @@ object Curation {
       col("id") === col(out), "left")
       .select(col("id"), coalesce(col("raw"), lit(0L)).as("raw"))
 
-  /** The renormalize half of one HITS half-step as a standalone
-    * frame — the body the SQL twin (SqlSurface.hitsNormSql) is
-    * plan-equal-pinned against. The production loop ([[hitsScores]])
-    * fuses this step away: max(raw) rides the raw checkpoint job
-    * (Loop.checkpoint) and the renormalize stays lazy over it, so this
-    * self-join shape survives as the SQL surface's (a SQL text has
-    * no accumulator rider) and the documentation of the arithmetic;
-    * q196HitsSql's row-equal output pin keeps the two honest.
+  /** The one HITS driver (q196, ops.hits, SqlSurface.hitsLoopSql and
+    * the MiningSpec replay run it): takes a caller-persisted distinct
+    * (src, dst) edge frame without self-loops; returns the
+    * CHECKPOINTED final (authority, hub) score frames — caller
+    * releases both via graft.Ck.release. An edgeless input returns
+    * its empty init checkpoint as both. `raw` is the half-step body,
+    * raw(nodes, oriented edges, scores, key, out): [[hitsRawFrame]],
+    * or the SQL surface's text pinned plan-equal to it; the layout,
+    * checkpoints, renormalize, guard and releases are the driver's.
     */
-  private[graft] def hitsNormFrame(raw: DataFrame): DataFrame =
-    raw.crossJoin(broadcast(raw.agg(max(col("raw")).as("mx"))))
-      .select(col("id"), expr("(raw * 10000) div mx").as("score"))
-
   private[graft] def hitsScores(edges: DataFrame,
-      rounds: Int = HitsRounds): (DataFrame, DataFrame) = {
+      rounds: Int = HitsRounds,
+      raw: (DataFrame, DataFrame, DataFrame, String, String) => DataFrame =
+        hitsRawFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Dual-orientation edge layout (r16, the GraphX trade): the
     // a-half-step aggregates by dst, the h-half-step by src — one
@@ -1427,18 +1422,10 @@ object Curation {
     // sat resident for the whole loop).
     val k = graft.Loop.statePartitions(edges)
     val eByDst = edges.repartition(k, col("dst")).persist(MEMORY_AND_DISK)
-    touch(eByDst)
     val eBySrc = edges.repartition(k, col("src")).persist(MEMORY_AND_DISK)
-    touch(eBySrc)
     val nodes = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id")))
       .distinct().repartition(k, col("id")).persist(MEMORY_AND_DISK)
-    touch(nodes)
-    // last read of the input frame was nodes' build: drop its cache
-    // now (no-op when the caller passed an unpersisted frame; the
-    // callers' own end-of-query unpersist stays as an idempotent
-    // backstop)
-    edges.unpersist(blocking = false)
     // one half-step = ONE checkpoint job (the q172 accumulator-twin
     // treatment, commit 99ab329): raw = Σ over `key`-incident edges
     // of the other role's score is checkpointed with max(raw) riding
@@ -1453,33 +1440,54 @@ object Curation {
     def halfStep(scores: DataFrame, key: String, out: String): DataFrame = {
       // the out-keyed orientation feeds the groupBy(out) exchange-free
       val oriented = if (out == "dst") eByDst else eBySrc
-      val (raw, mx) = graft.Loop.checkpoint(
-        hitsRawFrame(nodes, oriented, scores, key, out), max(col("raw")),
+      val (r, mx) = graft.Loop.checkpoint(
+        raw(nodes, oriented, scores, key, out), max(col("raw")),
         keepLayout = true)
-      // structural (every dst has an in-edge, so some raw > 0) — and
-      // the exact-integer contract needs a literal divisor, so a
-      // zero here must fail loudly, never divide
+      // structural on a non-empty graph (every dst has an in-edge, so
+      // some raw > 0) — and the exact-integer contract needs a
+      // literal divisor, so a zero here must fail loudly, never divide
+      if (mx <= 0L) graft.Ck.release(r)
       require(mx > 0L, s"HITS renormalize: max(raw) = $mx must be positive")
-      raw.select(col("id"), expr(s"(raw * 10000) div ${mx}L").as("score"))
+      r.select(col("id"), expr(s"(raw * 10000) div ${mx}L").as("score"))
     }
-    var (h, _) = graft.Loop.checkpoint(
-      nodes.withColumn("score", lit(10000L)), count(lit(1)), keepLayout = true)
     var a: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val aNext = halfStep(h, "src", "dst")  // authorities ← hubs
-      // aNext's checkpoint is materialized (checkpoint is eager) and the
-      // superseded frames' last consumer has run: a was consumed by
-      // the previous hNext, h by this aNext
-      if (a != null) graft.Ck.release(a)
-      a = aNext
-      val hNext = halfStep(a, "dst", "src")  // hubs ← authorities
-      graft.Ck.release(h)
-      h = hNext
+    var h: DataFrame = null
+    try {
+      touch(eByDst)
+      touch(eBySrc)
+      touch(nodes)
+      // last read of the input frame was nodes' build: drop its cache
+      // now (no-op when the caller passed an unpersisted frame; the
+      // callers' own end-of-query unpersist stays as an idempotent
+      // backstop)
+      edges.unpersist(blocking = false)
+      // the node count rides the init checkpoint: an edgeless graph
+      // returns it, empty, as both score vectors
+      val (h0, n) = graft.Loop.checkpoint(
+        nodes.withColumn("score", lit(10000L)), count(lit(1)), keepLayout = true)
+      h = h0
+      if (n == 0L) a = h
+      else for (_ <- 1 to rounds) {
+        val aNext = halfStep(h, "src", "dst")  // authorities ← hubs
+        // aNext's checkpoint is materialized (checkpoint is eager) and
+        // the superseded frames' last consumer has run: a was consumed
+        // by the previous hNext, h by this aNext
+        if (a != null) graft.Ck.release(a)
+        a = aNext
+        val hNext = halfStep(a, "dst", "src")  // hubs ← authorities
+        graft.Ck.release(h)
+        h = hNext
+      }
+      (a, h)
+    } catch {
+      case t: Throwable =>
+        Seq(a, h).filter(_ != null).foreach(graft.Ck.release)
+        throw t
+    } finally {
+      nodes.unpersist(blocking = false)
+      eByDst.unpersist(blocking = false)
+      eBySrc.unpersist(blocking = false)
     }
-    nodes.unpersist(blocking = false)
-    eByDst.unpersist(blocking = false)
-    eBySrc.unpersist(blocking = false)
-    (a, h)
   }
 
   def q196Hits(s: SparkSession, dir: String): DataFrame = {

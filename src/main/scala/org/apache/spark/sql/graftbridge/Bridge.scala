@@ -51,6 +51,16 @@ object Bridge {
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
+  /** Drop a session temp view by name only. `Catalog.dropTempView`
+    * also uncaches every cached plan equal to the view's, and plan
+    * equality erases alias names: dropping a view that exposes or
+    * merely renames a caller's persisted frame unpersists that frame.
+    */
+  def dropTempViewOnly(spark: org.apache.spark.sql.SparkSession,
+      name: String): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog.dropTempView(name)
+
   /** Register a SQL function into an EXISTING session's registry
     * (sessionState is private[sql]). The SparkSessionExtensions path
     * only applies at session build time; this covers sessions created

@@ -1053,6 +1053,21 @@ class ApiSpec extends SparkSpec {
     }
   }
 
+  // an input with no edge left after normalization scores nothing:
+  // empty, not a failed renormalize over max(raw) = 0
+  Seq(
+    ("an empty edge list", Seq.empty[(Long, Long)]),
+    ("self-loops only", Seq((1L, 1L), (2L, 2L)))
+  ).foreach { case (input, rows) =>
+    test(s"hits returns an empty (id, auth, hub) frame for $input") {
+      val s = spark
+      import s.implicits._
+      val out = ops.hits(rows.toDF("s", "d"), "s", "d")
+      assert(out.columns.toSeq == Seq("id", "auth", "hub"))
+      assert(out.isEmpty)
+    }
+  }
+
   test("scc separates one-way bridged cycles that undirected CC merges") {
     val s = spark
     import s.implicits._

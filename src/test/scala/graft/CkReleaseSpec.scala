@@ -134,6 +134,39 @@ class CkReleaseSpec extends SparkSpec {
     }
   }
 
+  test("hits: both surfaces release") {
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val s = spark
+    import s.implicits._
+    // the one HITS driver over each half-step body it runs
+    val drivers = Seq[(String, DataFrame => (DataFrame, DataFrame))](
+      "dataframe" -> (e => graft.queries.Curation.hitsScores(e)),
+      "sql" -> (e => graft.api.SqlSurface.hitsLoopSqlOn(spark, e)))
+    for ((driver, hits) <- drivers) {
+      // an edgeless graph: empty scores, every cache and checkpoint
+      // the driver made is gone once the caller releases them
+      spark.catalog.clearCache()
+      val before = persisted
+      val (a0, h0) = hits(Seq.empty[(Long, Long)].toDF("src", "dst"))
+      assert(a0.isEmpty && h0.isEmpty, s"$driver: edgeless graph scored nodes")
+      Ck.release(a0); Ck.release(h0)
+      assert(persisted == before,
+        s"$driver: edgeless hits leaked ${(persisted -- before).size} persisted RDDs")
+      // q196's graph: only the returned (a, h) blocks remain
+      val e = graft.queries.Curation.hitsEdges(spark, dir).persist(MEMORY_AND_DISK)
+      Tables.touch(e)
+      val (a, h) = hits(e)
+      a.count(); h.count()
+      spark.catalog.clearCache() // graphEv's catalog-managed cache
+      val leftover = persisted -- before
+      assert(leftover.size <= 2,
+        s"$driver: hits leaked ${leftover.size} persisted RDDs (want <= 2)")
+      Ck.release(a); Ck.release(h)
+      assert(persisted == before,
+        s"$driver: releasing the returned frames must zero the loop")
+    }
+  }
+
   test("loop guards release their live state: kmeans and dagLayers past maxRounds") {
     spark.catalog.clearCache()
     val before = persisted

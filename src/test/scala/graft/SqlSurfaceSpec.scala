@@ -123,22 +123,17 @@ class SqlSurfaceSpec extends SparkSpec {
     val nodes = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id")))
       .distinct().persist(MEMORY_AND_DISK)
-    edges.createOrReplaceTempView("hits_edges")
-    nodes.createOrReplaceTempView("hits_nodes")
     val h0 = nodes.withColumn("score", lit(10000L)).localCheckpoint(true)
-    pinPlanEqual("hits_raw",
-      Curation.hitsRawFrame(nodes, edges, h0, "src", "dst"),
-      SqlSurface.hitsRawBody(spark, "src", "dst")(h0))
-    val raw = SqlSurface.hitsRawBody(spark, "src", "dst")(h0)
-      .localCheckpoint(true)
-    raw.createOrReplaceTempView("hits_raw")
-    pinPlanEqual("hits_norm",
-      Curation.hitsNormFrame(raw), spark.sql(SqlSurface.hitsNormSql))
+    // both half-steps: authorities from hubs, hubs from authorities
+    Seq(("src", "dst"), ("dst", "src")).foreach { case (key, out) =>
+      pinPlanEqual(s"hits_raw_$out",
+        Curation.hitsRawFrame(nodes, edges, h0, key, out),
+        SqlSurface.hitsRawBody(spark)(nodes, edges, h0, key, out))
+    }
     edges.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     Ck.release(h0)
-    Ck.release(raw)
-    Seq("hits_edges", "hits_nodes", "hits_scores", "hits_raw")
+    Seq("hits_edges", "hits_nodes", "hits_scores")
       .foreach(spark.catalog.dropTempView)
 
     val dfOut = SparkEntry.queries("q196_hits")(spark, dir)
@@ -240,6 +235,58 @@ class SqlSurfaceSpec extends SparkSpec {
     }
   }
 
+  test("SQL-driven HITS and warm cc run the same jobs as their DataFrame drivers") {
+    ready
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import graft.api.ops
+    // the loops themselves, not q196 / q217, whose top-k and census
+    // steps differ across the surfaces. Method of the parity tests
+    // above: warm-up run, counted run, slack of the rider fallbacks.
+    def jobs(name: String)(run: => Seq[DataFrame]): Long = {
+      run.foreach(Ck.release) // warm-up
+      var out: Seq[DataFrame] = Nil
+      val n = countJobs(s"sqlsurface_$name") {
+        out = run; out.foreach(_.count())
+      }
+      out.foreach(Ck.release)
+      n
+    }
+    def parity(loop: String, df: => Seq[DataFrame], sql: => Seq[DataFrame]): Unit = {
+      val fb0 = Loop.fallbacks.get()
+      val d = jobs(s"${loop}_df")(df)
+      val q = jobs(s"${loop}_sql")(sql)
+      val fb = Loop.fallbacks.get() - fb0
+      assert(math.abs(d - q) <= fb,
+        s"SQL-driven $loop ran $q jobs, its DataFrame driver $d (rider fallbacks $fb)")
+    }
+    // HITS on q196's edges, persisted as hitsLoopSql persists them
+    parity("hits", {
+      val e = Curation.hitsEdges(spark, dir).persist(MEMORY_AND_DISK)
+      Tables.touch(e)
+      val (a, h) = Curation.hitsScores(e)
+      Seq(a, h)
+    }, {
+      val (a, h) = SqlSurface.hitsLoopSql(spark, dir)
+      Seq(a, h)
+    })
+    // the warm start on q217's inputs: cold labels, the changelog's
+    // new edge set and its deletes
+    val und0 = Mining.sparseUnd(spark, dir).persist(MEMORY_AND_DISK)
+    Tables.touch(und0)
+    val (lab0, _) = ops.connectedComponents(und0, "a", "b")
+    val dels = und0.filter((col("a") * 7L + col("b") * 11L) % 61L === 0L)
+    val und1 = und0.join(dels, Seq("a", "b"), "left_anti")
+      .unionByName(Mining.undFamily(spark, dir, 37L, 512L))
+      .distinct().persist(MEMORY_AND_DISK)
+    Tables.touch(und1)
+    parity("cc_warm",
+      Seq(ops.incrementalConnectedComponents(lab0, und1, dels, "a", "b")._1),
+      Seq(SqlSurface.ccWarmLoopSqlOn(spark, lab0, und1, dels, "a", "b")._1))
+    Ck.release(lab0)
+    und0.unpersist(blocking = false)
+    und1.unpersist(blocking = false)
+  }
+
   test("SQL-driven warm cc bodies are plan-equal to ops'; q217 agrees") {
     ready
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -259,14 +306,15 @@ class SqlSurfaceSpec extends SparkSpec {
     pinPlanEqual("cc_affected",
       ops.ccAffected(prev, dels, "src", "dst"),
       spark.sql(SqlSurface.ccAffectedSql))
+    pinPlanEqual("cc_canon_raw",
+      ops.ccCanon(und.select(col("a").as("src"), col("b").as("dst")), "src", "dst"),
+      spark.sql(SqlSurface.ccCanonRawSql))
     val aff = spark.sql(SqlSurface.ccAffectedSql).localCheckpoint(true)
     aff.createOrReplaceTempView("cc_aff")
     val canon = spark.sql(SqlSurface.ccCanonSql).persist(MEMORY_AND_DISK)
     canon.createOrReplaceTempView("cc_canon")
-    val nodes = canon.select(col("a").as("id"))
-      .unionByName(canon.select(col("b").as("id"))).distinct()
     pinPlanEqual("cc_label_edges",
-      ops.ccLabelEdges(nodes, prev, aff),
+      ops.ccLabelEdges(canon, prev, aff),
       spark.sql(SqlSurface.ccLabelEdgesSql))
     canon.unpersist(blocking = false)
     Ck.release(lab0); Ck.release(aff)
