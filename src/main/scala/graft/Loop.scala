@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit}
 
 /** The one driver for convergence loops (cc / PageRank / k-core /
-  * k-means / BFS / DAG layering) and the one checkpoint primitive
-  * under it.
+  * k-means / DAG layering) and the one checkpoint primitive under
+  * it.
   *
   * [[checkpoint]]: every loop round ends with an eager
   * localCheckpoint whose one materialization serves the next round.
@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit}
   * to the init's columns, probe, LoopStats.recordLoop, and the
   * bounded-round guard (which releases the live state before it
   * fails). New loops go through it; the loops that keep their own
-  * shape (level-list BFS, SCC's nested trims, label propagation, the
-  * fixed-round unrolls) still checkpoint through [[checkpoint]].
+  * shape (the BFS level loop `ops.bfsLevels`, SCC's nested trims,
+  * label propagation, the fixed-round unrolls) still checkpoint
+  * through [[checkpoint]].
   */
 object Loop {
   // test introspection: how often the metric rode the checkpoint job

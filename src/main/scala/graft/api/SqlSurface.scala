@@ -333,22 +333,28 @@ object SqlSurface {
     */
   def ccLoopSql(s: SparkSession, dir: String, maxRounds: Int = 50,
       probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) = {
-    val (labels, curve) = ccLoopSqlCurve(s, dir, maxRounds, probe)
+    val (labels, curve) =
+      ccLoopSqlCurve(s, Mining.sparseUnd(s, dir), maxRounds, probe)
     (labels, curve.length)
   }
 
-  /** [[ccLoopSql]] returning the full (round, edges changed)
-    * movement curve — what the warm-start consumers ship (the
-    * ops.connectedComponentsCurve analog on the SQL surface).
+  /** [[ccLoopSql]] over a caller's undirected (a, b) edge frame,
+    * returning the full (round, edges changed) movement curve — what
+    * the warm-start consumers ship (the ops.connectedComponentsCurve
+    * analog on the SQL surface). `cc_und` renames the caller's frame,
+    * so the views are dropped by name only, never the caller's cache.
     */
-  def ccLoopSqlCurve(s: SparkSession, dir: String, maxRounds: Int = 50,
+  def ccLoopSqlCurve(s: SparkSession, und: DataFrame, maxRounds: Int = 50,
       probe: (Int, DataFrame) => Unit = (_, _) => ())
     : (DataFrame, Seq[(Long, Long)]) =
     try {
-      val und = Mining.sparseUnd(s, dir).select(col("a").as("src"), col("b").as("dst"))
-      ccLabels(ops.star2Core(sqlOver(s, ccCanonSql, "cc_und" -> und), "cc",
+      val e = und.select(col("a").as("src"), col("b").as("dst"))
+      ccLabels(ops.star2Core(sqlOver(s, ccCanonSql, "cc_und" -> e), "cc",
         maxRounds, probe, ccRoundBody(s)))
-    } finally Seq("cc_und", "cc_edges").foreach(s.catalog.dropTempView)
+    } finally {
+      Seq("cc_und", "cc_edges")
+        .foreach(org.apache.spark.sql.graftbridge.Bridge.dropTempViewOnly(s, _))
+    }
 
   /** star2Core's (id, component) readback renamed to the SQL
     * surface's (node, lbl). */
@@ -435,18 +441,18 @@ object SqlSurface {
     }
   }
 
-  /** q161's output shape over the SQL-driven loop. */
+  /** q161's output shape over the SQL-driven loop: a lazy census over
+    * the labels checkpoint, as the DataFrame q161 returns (release it
+    * with graft.Ck.release after its last reader). The analyzed plan
+    * holds the labels, so the view name can go at once.
+    */
   def q161ComponentsSql(s: SparkSession, dir: String): DataFrame = {
     val (labels, _) = ccLoopSql(s, dir)
     labels.createOrReplaceTempView("cc_final")
-    val out =
-      try s.sql(
-        """SELECT lbl AS cluster, COUNT(1) AS n_nodes, MAX(node) AS max_node
-          |FROM cc_final GROUP BY lbl ORDER BY cluster""".stripMargin)
-        .localCheckpoint(true) // materialize before the view drops
-      finally s.catalog.dropTempView("cc_final")
-    graft.Ck.release(labels) // the census above was its last reader
-    out
+    try s.sql(
+      """SELECT lbl AS cluster, COUNT(1) AS n_nodes, MAX(node) AS max_node
+        |FROM cc_final GROUP BY lbl ORDER BY cluster""".stripMargin)
+    finally org.apache.spark.sql.graftbridge.Bridge.dropTempViewOnly(s, "cc_final")
   }
 
   /** q217's output shape over the SQL-driven loops: cold fixpoint
@@ -462,21 +468,21 @@ object SqlSurface {
     // the loops release internally on a tripped guard, so the
     // composition must match that discipline on ITS exit paths) —
     // releases are idempotent, so the success path's eager releases
-    // below coexist with the finally's sweep
-    val (lab0, curve0) = ccLoopSqlCurve(s, dir)
-    var lab1Opt: Option[DataFrame] = None
+    // below coexist with the finally's sweep. One persisted base
+    // graph serves the cold loop and the changelog, as in q217.
     val und0 = Mining.sparseUnd(s, dir).persist(MEMORY_AND_DISK)
-    val und1 = {
-      graft.Tables.touch(und0)
-      und0.join(und0.filter((col("a") * 7L + col("b") * 11L) % 61L === 0L),
-          Seq("a", "b"), "left_anti")
-        .unionByName(Mining.undFamily(s, dir, 37L, 512L))
-        .distinct()
-        .persist(MEMORY_AND_DISK)
-    }
+    val dels = und0.filter((col("a") * 7L + col("b") * 11L) % 61L === 0L)
+    val und1 = und0.join(dels, Seq("a", "b"), "left_anti")
+      .unionByName(Mining.undFamily(s, dir, 37L, 512L))
+      .distinct()
+      .persist(MEMORY_AND_DISK)
+    var lab0Opt: Option[DataFrame] = None
+    var lab1Opt: Option[DataFrame] = None
     try {
+      graft.Tables.touch(und0)
+      val (lab0, curve0) = ccLoopSqlCurve(s, und0)
+      lab0Opt = Some(lab0)
       graft.Tables.touch(und1)
-      val dels = und0.filter((col("a") * 7L + col("b") * 11L) % 61L === 0L)
       val (lab1, curve1) = ccWarmLoopSqlOn(s,
         lab0.select(col("node").as("id"), col("lbl").as("component")),
         und1, dels, "a", "b")
@@ -484,24 +490,22 @@ object SqlSurface {
       graft.Ck.release(lab0) // warm init checkpointed; base labels consumed
       und0.unpersist(blocking = false)
       lab1.createOrReplaceTempView("cc_warm_final")
+      // the analyzed census holds lab1, so the view name can go at
+      // once; the output checkpoint below is its one materialization
       val census =
         try s.sql(
           """SELECT 'comp' AS part, lbl AS k, CAST(COUNT(1) AS BIGINT) AS v1,
             |  MAX(node) AS v2 FROM cc_warm_final GROUP BY lbl""".stripMargin)
-          .localCheckpoint(true) // materialize before the view drops
-        finally s.catalog.dropTempView("cc_warm_final")
-      graft.Ck.release(lab1)
-      und1.unpersist(blocking = false)
+        finally org.apache.spark.sql.graftbridge.Bridge.dropTempViewOnly(
+          s, "cc_warm_final")
       val c0 = curve0.toDF("k", "v1")
         .select(lit("round0").as("part"), col("k"), col("v1"), lit(0L).as("v2"))
       val c1 = curve1.toDF("k", "v1")
         .select(lit("round1").as("part"), col("k"), col("v1"), lit(0L).as("v2"))
-      val out = census.unionByName(c0).unionByName(c1).orderBy("part", "k")
+      census.unionByName(c0).unionByName(c1).orderBy("part", "k")
         .localCheckpoint(true)
-      graft.Ck.release(census)
-      out
     } finally {
-      graft.Ck.release(lab0)
+      lab0Opt.foreach(graft.Ck.release)
       lab1Opt.foreach(graft.Ck.release)
       und0.unpersist(blocking = false)
       und1.unpersist(blocking = false)
@@ -1329,10 +1333,13 @@ object SqlSurface {
           "scc_members" -> members),
       backRound = (same, back) =>
         sqlOver(s, sccBackRoundSql, "scc_same" -> same, "scc_back" -> back))
+    // `scc_edges` exposes the caller's edge cache: drop the names
+    // only, never the caches behind them
     try Mining.sccAssign(edges, maxOuter, bodies)
     finally {
       Seq("scc_edges", "scc_cur", "scc_ce", "scc_color", "scc_members",
-        "scc_same", "scc_back").foreach(s.catalog.dropTempView)
+        "scc_same", "scc_back")
+        .foreach(org.apache.spark.sql.graftbridge.Bridge.dropTempViewOnly(s, _))
     }
   }
 

@@ -1758,57 +1758,24 @@ object ops {
         col("__r.n_docs"), col("__r.n_matches"))
   }
 
-  /** Multi-source BFS to frontier exhaustion (q172's parameterized
-    * form): hop distances from a seed predicate over an undirected
-    * edge set — Pregel-style message passing where per-round work is
-    * proportional to the FRONTIER, not the node set. Per hop: one
-    * node-keyed edge join (the edge list is repartitioned by node
-    * once before the persist, so hops reuse that co-location — the
-    * bucketing shape at 100 TB), anti-joins against the LAST TWO
-    * levels only, and ONE localCheckpoint(eager) whose single
-    * materialization serves the frontier-empty stop probe and the
-    * next hop (reliable checkpoint() on a cluster). Nodes in
-    * seedless components come back dist = -1. Returns the (id, dist)
-    * frame and the hop count (the final hop is the empty probe).
-    *
-    * Round-10 shape (the scale-bytes lever, measured): the previous
-    * loop re-checkpointed the whole visited accumulator every hop —
-    * a SECOND job per round and O(n·hops) materialized bytes — and
-    * anti-joined the full node-sized accumulator. Now each level
-    * checkpoints once (every node materializes exactly once across
-    * the sweep) and the visited check uses only levels d and d−1,
-    * which is EXACT on an undirected graph: a neighbor of a dist-d
-    * node has dist ≥ d−1, so excluding those two levels from the
-    * frontier's neighbor set leaves precisely level d+1. One job per
-    * hop, frontier-proportional anti-joins at any scale. Honest
-    * local numbers (q216 BenchOne A/B at sf0.1): ~12.8 s vs the
-    * accumulator shape's ~11.7 s — the halved job count does NOT
-    * show locally (two per-level anti-join builds replace one
-    * accumulator scan, a wash against the per-job floor); the win
-    * is the O(n·hops) → O(n) materialized-bytes drop and the
-    * frontier-sized (never node-sized) anti-join inputs, which is
-    * what matters on a graph that doesn't fit one executor. (A
-    * chain-k-levels-into-one-job variant was also built and
-    * measured WORSE — 12→20 s — because each in-job level's
-    * distinct-shuffle subtree is re-evaluated by every level after
-    * it; rejected.) The returned dist frame unions the level
-    * checkpoints — release it (graft.Ck.release walks all levels)
-    * after its last consumer, as before.
-    *
-    * Guard tuning: `maxHops = 40` is a FAILURE bound — BFS runs
-    * exactly ecc(seeds) hops (the seed set's eccentricity), and
-    * real-world / power-law graphs sit far below 40; a long chain
-    * graph is the one honest case that needs it raised. Hitting the
-    * guard otherwise means the frontier never drained — fail loudly,
-    * inspect the hop curve via `probe`, then raise deliberately.
+  /** A graph prepared once for any number of BFS runs: `nbrs` is the
+    * (__node, __nbr) neighbour list in both directions, self-loops
+    * dropped, repartitioned by node before its persist so every hop's
+    * frontier join reuses that co-location (the bucketing shape at
+    * 100 TB); `nodes` checkpoints every endpoint, a node whose only
+    * edges are self-loops included.
     */
-  def bfsDistances(edges: DataFrame, src: String, dst: String,
-      isSeed: Column => Column, maxHops: Int = 40,
-      probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) = {
+  private[graft] final case class BfsGraph(nbrs: DataFrame, nodes: DataFrame)
+
+  /** Prepare the [[BfsGraph]] of `edges`, run `body` on it, then drop
+    * the edge caches; the node checkpoint outlives a successful
+    * `body` (its outputs may read it) and is released on failure.
+    * Both parts derive from ONE persisted pass over `edges`, which
+    * may be an expensive unpersisted derivation.
+    */
+  private[graft] def onBfsGraph[T](edges: DataFrame, src: String,
+      dst: String)(body: BfsGraph => T): T = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // ONE pass over the caller's edge frame (it may be an expensive
-    // unpersisted derivation): the unfiltered endpoint union serves
-    // both the node set and, self-loop-filtered, the traversal list
     val endpoints = edges
       .select(col(src).as("__node"), col(dst).as("__nbr"))
       .unionByName(edges.select(col(dst).as("__node"), col(src).as("__nbr")))
@@ -1817,70 +1784,115 @@ object ops {
       .filter(col("__node") =!= col("__nbr"))
       .repartition(col("__node"))
       .persist(MEMORY_AND_DISK)
-    // Node set from the UNFILTERED endpoints: a node whose only edges
-    // are self-loops still appears (dist = -1, or 0 if it is a seed)
-    // even though self-loops carry no traversal and are dropped above.
-    val nodes = endpoints.select(col("__node"))
-      .distinct().localCheckpoint(true)
-    val seed = nodes.filter(isSeed(col("__node")))
-      .select(col("__node"))
+    try {
+      val nodes = endpoints.select(col("__node")).distinct().localCheckpoint(true)
+      try body(BfsGraph(nbrs, nodes))
+      catch { case t: Throwable => graft.Ck.release(nodes); throw t }
+    } finally {
+      nbrs.unpersist(blocking = false)
+      endpoints.unpersist(blocking = false)
+    }
+  }
+
+  /** The one BFS level loop (bfsDistances, closenessSample and both
+    * diameterSweep sweeps run it): multi-source BFS from the nodes
+    * matching `isSeed` to frontier exhaustion, where per-hop work is
+    * proportional to the FRONTIER, not the node set. Level rows are
+    * (__node, keys…, __dist); every key column starts as the seed's
+    * own id, so `keys = Nil` is one BFS from the whole seed set and
+    * `keys = Seq("__seed")` is one independent BFS per seed. Per hop:
+    * join the frontier to the neighbour list; union those candidates
+    * (dist + 1) with the last TWO levels' rows, flagged as seen; keep
+    * min(dist) per (node, keys…) in the groups with no seen row; and
+    * checkpoint the new level through `graft.Loop.checkpoint` with its
+    * row count riding the same job. Each hop runs 3 jobs under AQE
+    * (measured on q172 at sf0.01, local[4]): the frontier's
+    * broadcast, the aggregate's shuffle-map stage and the
+    * checkpoint's result stage. The seen rows ride the aggregate's
+    * shuffle instead of an anti-join: the anti-join form paid a
+    * fourth job per hop, the broadcast of its build side.
+    *
+    * The level list IS the visited set: each level checkpoints once,
+    * so total materialized bytes are O(reached rows), not the
+    * accumulator shape's O(rows × hops) re-copy. The two-level check
+    * is EXACT on an undirected graph (per key): a neighbour of a
+    * dist-d node has dist ≥ d−1, so excluding levels d and d−1 from
+    * the frontier's neighbours leaves precisely level d+1. The
+    * distance is the frontier's dist + 1, never a hop literal: a
+    * changing literal would make every hop's codegen source unique,
+    * one fresh Janino class per hop per run (the round-12 code-cache
+    * finding).
+    *
+    * `probe` sees each hop's level checkpoint, the final (empty) one
+    * included. Returns the union of the level checkpoints (release
+    * it after its last reader; it holds no other checkpoint) and the
+    * hop count, whose final hop is the empty exhaustion proof,
+    * recorded as `LoopStats.recordLoop(loop, hops)`. `maxHops` is a
+    * FAILURE bound: BFS runs ecc(seeds) + 1 hops, and a tripped guard
+    * releases every level and fails loudly.
+    */
+  private[graft] def bfsLevels(g: BfsGraph, isSeed: Column => Column,
+      keys: Seq[String], loop: String, maxHops: Int,
+      probe: (Int, DataFrame) => Unit): (DataFrame, Int) = {
+    val keyCols = keys.map(col)
+    val seeds = g.nodes.filter(isSeed(col("__node")))
+      .select((col("__node") +: keys.map(col("__node").as(_))) :+
+        lit(0L).as("__dist"): _*)
       .localCheckpoint(true)
-    // per-level NODE-ONLY checkpoints, newest first — together they
-    // ARE the visited set; nothing is ever re-copied. Node-only is
-    // deliberate (round-12): the old shape projected
-    // `lit(hop).as("__dist")` inside the hop plan, and that changing
-    // literal made every hop's whole-stage-codegen source UNIQUE —
-    // one fresh Janino class per hop per run, which both recompiles
-    // on every hop (the 100-entry codegen cache can't hold a
-    // 60-hop sweep's worth of one-off sources) and fills the JIT
-    // code cache across a bench session (the r11 tail-spike class).
-    // With the literal gone every hop reuses ONE cached plan; the
-    // hop number is attached below in `withDist`, a plan-only union
-    // that executes once at assembly time, never per hop.
-    var levels: List[DataFrame] = List(seed)
-    var frontier = seed // level d
-    var prevNodes = seed.filter(lit(false)) // level d-1
-    // distances view, grown one union branch per hop (plan objects
-    // only — the per-branch literal projection is a trivial Project
-    // over a checkpoint scan, compiled once at the final assembly)
-    var withDist = seed.select(col("__node"), lit(0L).as("__dist"))
+    var levels = List(seeds) // newest first
+    var prev = seeds.filter(lit(false)) // level d-1
     var hop = 0
     var exhausted = false
     while (!exhausted && hop < maxHops) {
       hop += 1
-      // frontier-empty check rides the checkpoint job (graft.Loop);
-      // the two-level visited check is exact (scaladoc proof). ONE
-      // anti-join against the UNION of levels d and d−1 (r17): the
-      // two-anti-join shape paid one extra broadcast-build job per
-      // hop — a per-hop floor cost on every sweep (q216 runs ~38
-      // hops/query) — for identical semantics.
-      val (fresh, nFresh) = graft.Loop.checkpoint(
-        nbrs.join(frontier, "__node")
-          .select(col("__nbr").as("__node")).distinct()
-          .join(frontier.unionByName(prevNodes), Seq("__node"), "left_anti"),
+      val frontier = levels.head // level d
+      val (fresh, n) = graft.Loop.checkpoint(
+        g.nbrs.join(frontier, "__node")
+          .select((col("__nbr").as("__node") +: keyCols) :+
+            (col("__dist") + 1L).as("__dist") :+ lit(false).as("__seen"): _*)
+          .unionByName(frontier.unionByName(prev).withColumn("__seen", lit(true)))
+          .groupBy((col("__node") +: keyCols): _*)
+          .agg(min(col("__dist")).as("__dist"), max(col("__seen")).as("__seen"))
+          .filter(!col("__seen"))
+          .select((col("__node") +: keyCols) :+ col("__dist"): _*),
         count(lit(1)))
-      exhausted = nFresh == 0L
-      if (!exhausted) {
-        levels ::= fresh
-        withDist = withDist.unionByName(
-          fresh.select(col("__node"), lit(hop.toLong).as("__dist")))
-        prevNodes = frontier
-        frontier = fresh
-      } else {
-        graft.Ck.release(fresh) // empty probe frame
-      }
-      probe(hop, withDist)
+      probe(hop, fresh)
+      exhausted = n == 0L
+      if (exhausted) graft.Ck.release(fresh)
+      else { prev = frontier; levels ::= fresh }
     }
-    nbrs.unpersist(blocking = false)
-    endpoints.unpersist(blocking = false)
-    // the level checkpoints must not outlive a tripped guard
-    if (!exhausted) { levels.foreach(graft.Ck.release); graft.Ck.release(nodes) }
-    require(exhausted, s"BFS frontier not exhausted in $maxHops hops")
-    val dist = nodes.join(withDist, Seq("__node"), "left")
-      .select(col("__node").as("id"),
-        coalesce(col("__dist"), lit(-1L)).as("dist"))
-    (dist, hop)
+    if (!exhausted) levels.foreach(graft.Ck.release)
+    require(exhausted, s"BFS '$loop' frontier not exhausted in $maxHops hops")
+    graft.LoopStats.recordLoop(loop, hop.toLong)
+    (levels.reverse.reduce(_ unionByName _), hop)
   }
+
+  /** Multi-source BFS to frontier exhaustion (q172's parameterized
+    * form): hop distances from a seed predicate over an undirected
+    * edge set, run by [[bfsLevels]] with no key columns (LoopStats
+    * key `bfs`). Nodes in seedless components come back dist = -1.
+    * Returns the (id, dist) frame — release it with graft.Ck.release
+    * (it walks every level and the node checkpoint) after its last
+    * consumer — and the hop count (the final hop is the empty
+    * exhaustion proof).
+    *
+    * Guard tuning: `maxHops = 40` is a FAILURE bound — BFS runs
+    * exactly ecc(seeds) + 1 hops, and real-world / power-law graphs
+    * sit far below 40; a long chain graph is the one honest case
+    * that needs it raised. Hitting the guard otherwise means the
+    * frontier never drained — fail loudly, inspect the levels via
+    * `probe`, then raise deliberately.
+    */
+  def bfsDistances(edges: DataFrame, src: String, dst: String,
+      isSeed: Column => Column, maxHops: Int = 40,
+      probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) =
+    onBfsGraph(edges, src, dst) { g =>
+      val (visited, hops) = bfsLevels(g, isSeed, Nil, "bfs", maxHops, probe)
+      val dist = g.nodes.join(visited, Seq("__node"), "left")
+        .select(col("__node").as("id"),
+          coalesce(col("__dist"), lit(-1L)).as("dist"))
+      (dist, hops)
+    }
 
   /** SAMPLED CLOSENESS CENTRALITY (Eppstein & Wang 2001): per-seed
     * multi-source BFS over a deterministic seed sample, aggregated
@@ -1894,100 +1906,31 @@ object ops {
     * (0, 0, 0). cent_e6 = (1e6·n_seed) div sum_d is integer-exact
     * across engines.
     *
-    * Loop shape (r17: ops.bfsDistances' PER-LEVEL checkpoints,
-    * keyed by (node, seed)): the neighbor list is repartitioned by
-    * node ONCE and every hop joins on it co-partitioned; each hop
-    * checkpoints ONLY its fresh (node, seed, dist) pairs with the
-    * fresh-pair count riding the same job (graft.Loop.checkpoint), and
-    * the level list IS the visited set — total materialized bytes
-    * are O(pairs), not the accumulator shape's O(pairs × hops)
-    * re-copy per hop (the r10 bfsDistances argument, measured here:
-    * the r16 driver run re-wrote the full ~300k-pair accumulator on
-    * every one of 17 hops). The visited check anti-joins the last
-    * TWO levels only, which is exact per seed on an undirected
-    * graph: a neighbor of a dist-d pair has dist ≥ d−1, so excluding
-    * levels d and d−1 from the expansion leaves precisely level d+1.
-    * Per-hop distance derives from the frontier's dist + 1 column
-    * arithmetic — no changing literal, so every hop reuses one
-    * codegen class (the r12 finding). State is O(nodes × seeds)
-    * pairs — exactly the Eppstein–Wang space bound; at 100 TB the
-    * seed fraction shrinks as log n / n while the frame stays
-    * shuffle-partitioned on node, never driver-held.
+    * The loop is [[bfsLevels]] keyed by the seed (LoopStats key
+    * `closeness`): one level holds the fresh (node, seed, dist)
+    * pairs. State is O(nodes × seeds) pairs — exactly the
+    * Eppstein–Wang space bound; at 100 TB the seed fraction shrinks
+    * as log n / n while the frame stays shuffle-partitioned on node,
+    * never driver-held.
     */
   def closenessSample(edges: DataFrame, src: String, dst: String,
       isSeed: Column => Column, maxHops: Int = 41,
       probe: (Int, DataFrame) => Unit = (_, _) => ())
-    : (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val endpoints = edges
-      .select(col(src).as("__node"), col(dst).as("__nbr"))
-      .unionByName(edges.select(col(dst).as("__node"), col(src).as("__nbr")))
-      .persist(MEMORY_AND_DISK)
-    val nbrs = endpoints
-      .filter(col("__node") =!= col("__nbr"))
-      .repartition(col("__node"))
-      .persist(MEMORY_AND_DISK)
-    val nodes = endpoints.select(col("__node"))
-      .distinct().localCheckpoint(true)
-    val seeds = nodes.filter(isSeed(col("__node")))
-      .select(col("__node"), col("__node").as("__seed"), lit(0L).as("__dist"))
-      .localCheckpoint(true)
-    // per-level pair checkpoints, newest first — together they ARE
-    // the visited set; nothing is ever re-copied (bfsDistances' r10
-    // shape). `visited` below is a PLAN-ONLY union view over them,
-    // grown one branch per hop for the probe hook and the final
-    // aggregation; it executes once at assembly, never per hop.
-    var levels: List[DataFrame] = List(seeds)
-    var frontier = seeds // level d
-    var prevPairs = seeds.filter(lit(false)) // level d-1
-    var visited = seeds
-    var hop = 0
-    var exhausted = false
-    while (!exhausted && hop < maxHops) {
-      hop += 1
-      // fresh-pair count rides the level checkpoint job (graft.Loop);
-      // the two-level visited check is exact (scaladoc proof). ONE
-      // anti-join against the UNION of the two levels, not one
-      // anti-join per level: each broadcast build is its own AQE job,
-      // and the probe read the two-anti-join shape at +15 jobs/run
-      // (17 hops x one extra broadcast) for identical semantics.
-      val (fresh, nNew) = graft.Loop.checkpoint(
-        nbrs.join(frontier, "__node")
-          .groupBy(col("__nbr"), col("__seed"))
-          .agg(min(col("__dist") + 1L).as("__dist"))
-          .select(col("__nbr").as("__node"), col("__seed"), col("__dist"))
-          .join(frontier.select(col("__node"), col("__seed"))
-              .unionByName(prevPairs.select(col("__node"), col("__seed"))),
-            Seq("__node", "__seed"), "left_anti"),
-        count(lit(1)))
-      exhausted = nNew == 0L
-      if (!exhausted) {
-        levels ::= fresh
-        visited = visited.unionByName(fresh)
-        prevPairs = frontier
-        frontier = fresh
-      } else {
-        graft.Ck.release(fresh) // empty probe frame
-      }
-      probe(hop, visited)
+    : (DataFrame, Int) =
+    onBfsGraph(edges, src, dst) { g =>
+      val (visited, hops) =
+        bfsLevels(g, isSeed, Seq("__seed"), "closeness", maxHops, probe)
+      val perNode = visited.groupBy(col("__node"))
+        .agg(count(lit(1)).as("n_seed"), sum(col("__dist")).as("sum_d"))
+      val cent = g.nodes.join(perNode, Seq("__node"), "left")
+        .select(col("__node").as("node"),
+          coalesce(col("n_seed"), lit(0L)).as("n_seed"),
+          coalesce(col("sum_d"), lit(0L)).as("sum_d"))
+        .withColumn("cent_e6",
+          when(col("sum_d") > 0,
+            expr("(1000000 * n_seed) div sum_d")).otherwise(lit(0L)))
+      (cent, hops)
     }
-    nbrs.unpersist(blocking = false)
-    endpoints.unpersist(blocking = false)
-    // the level checkpoints must not outlive a tripped guard
-    if (!exhausted) { levels.foreach(graft.Ck.release); graft.Ck.release(nodes) }
-    require(exhausted, s"closeness BFS not exhausted in $maxHops hops")
-    graft.LoopStats.recordLoop("closeness", hop.toLong)
-    val perNode = visited.groupBy(col("__node"))
-      .agg(count(lit(1)).as("n_seed"), sum(col("__dist")).as("sum_d"))
-    val cent = nodes.join(perNode, Seq("__node"), "left")
-      .select(col("__node").as("node"),
-        coalesce(col("n_seed"), lit(0L)).as("n_seed"),
-        coalesce(col("sum_d"), lit(0L)).as("sum_d"))
-      .withColumn("cent_e6",
-        when(col("sum_d") > 0,
-          expr("(1000000 * n_seed) div sum_d")).otherwise(lit(0L)))
-    (cent, hop)
-  }
 
   /** Synchronous k-core peel to a data-driven fixpoint (q181's
     * parameterized form): each round removes every node whose degree
@@ -2900,8 +2843,10 @@ object ops {
     * (deterministic tie: min id) — ecc of the second sweep is the
     * diameter lower bound, exact on trees (Magnien-Latapy-Habib
     * 2009). Returns one row (component, n_nodes, seed_node,
-    * ecc_seed, far_node, diameter_lb). Scale: two frontier-
-    * proportional BFS runs + the cc fixpoint; three O(1) driver
+    * ecc_seed, far_node, diameter_lb). Scale: the cc fixpoint, then
+    * two [[bfsLevels]] runs (LoopStats keys `bfs_sweep1` and
+    * `bfs_sweep2`) over ONE prepared [[BfsGraph]], each reading its
+    * farthest node straight off its levels; three O(1) driver
     * scalars. Both sweeps run over the WINNING COMPONENT's edges
     * only — the cc labels are already in hand, and one semi-join
     * stops every BFS hop from re-scanning the other components'
@@ -2956,20 +2901,24 @@ object ops {
     graft.Tables.touch(big)
     graft.Ck.release(cc)
     und.unpersist(blocking = false) // the sweeps only read `big`
-    def farthest(seed: Long, sweep: String): (Long, Long) = {
-      // +1: the exhaustion proof is an empty round PAST the last
-      // distance, so supporting ecc <= maxHops needs maxHops+1 hops
-      val (dist, hops) = bfsDistances(big, "a", "b", c => c === lit(seed),
-        maxHops = maxHops + 1)
-      graft.LoopStats.recordLoop(sweep, hops.toLong)
-      val far = dist.filter(col("dist") >= 0L)
-        .orderBy(col("dist").desc, col("id")).limit(1).head()
-      graft.Ck.release(dist)
-      (far.getLong(0), far.getLong(1))
-    }
-    val (u, eccSeed) = farthest(comp, "bfs_sweep1")
-    val (_, diameterLb) = farthest(u, "bfs_sweep2")
-    big.unpersist(blocking = false)
+    // one prepared graph serves both sweeps
+    val (u, eccSeed, diameterLb) =
+      try onBfsGraph(big, "a", "b") { g =>
+        def farthest(seed: Long, sweep: String): (Long, Long) = {
+          // +1: the exhaustion proof is an empty round PAST the last
+          // distance, so supporting ecc <= maxHops needs maxHops+1 hops
+          val (levels, _) = bfsLevels(g, _ === lit(seed), Nil, sweep,
+            maxHops + 1, (_, _) => ())
+          val far = levels.orderBy(col("__dist").desc, col("__node"))
+            .limit(1).head()
+          graft.Ck.release(levels)
+          (far.getLong(0), far.getLong(1))
+        }
+        val (u, eccSeed) = farthest(comp, "bfs_sweep1")
+        val (_, diameterLb) = farthest(u, "bfs_sweep2")
+        graft.Ck.release(g.nodes)
+        (u, eccSeed, diameterLb)
+      } finally big.unpersist(blocking = false)
     Seq((comp, nComp, comp, eccSeed, u, diameterLb))
       .toDF("component", "n_nodes", "seed_node", "ecc_seed",
         "far_node", "diameter_lb")

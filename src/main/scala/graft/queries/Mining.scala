@@ -1025,82 +1025,24 @@ object Mining {
   // pointer jumping) and q163 (driver-held model state): Pregel-style
   // message passing where per-round work is proportional to the
   // FRONTIER, not the node set. Seeds = node % 97 == 0 on the q161
-  // sparsified graph; per hop the frontier expands one edge-join,
-  // anti-joins the visited set (monotone accumulator), and the loop
-  // stops when a hop yields ZERO fresh nodes — the frontier-empty
-  // predicate every 100-TB BFS/reachability job stops on (influence
-  // radius, taint propagation, recall-graph expansion). Hygiene is
-  // ccLoop's: the fresh frame is localCheckpoint(eager)-ed so ONE
-  // materialization serves the emptiness probe, the visited union,
-  // and the next hop's expansion; visited is re-checkpointed per
-  // round so the plan never grows (reliable checkpoint() on a
-  // cluster). The edge list is repartitioned by node BEFORE the
-  // persist, so every hop's frontier join reuses that co-location
-  // instead of re-exchanging edges (bucketing at 100 TB). Components
-  // with no seed stay unreached on purpose — dist = -1 exercises the
-  // unreachable branch. Oracle: recursive-CTE reachability with a
-  // bounded hop column, MIN(d) per node.
+  // sparsified graph; the loop is ops.bfsDistances (the one BFS
+  // level loop, ops.bfsLevels), which stops when a hop yields ZERO
+  // fresh nodes — the frontier-empty predicate every 100-TB
+  // BFS/reachability job stops on (influence radius, taint
+  // propagation, recall-graph expansion). Components with no seed
+  // stay unreached on purpose — dist = -1 exercises the unreachable
+  // branch. Guard: 41 = the oracle's 40-hop recursion cap + 1: the
+  // engine proves exhaustion with an EMPTY round past the last
+  // distance, so supporting eccentricity <= 40 (exactly the
+  // distances q172Sql's `r.d < 40` recursion reaches) needs a 41-hop
+  // budget. Oracle: recursive-CTE reachability with a bounded hop
+  // column, MIN(d) per node.
   // ---------------------------------------------------------------
-  private[graft] def bfsLoop(s: SparkSession, dir: String,
-      probe: (Int, DataFrame) => Unit = (_, _) => ()): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = sparseUnd(s, dir)
-    val nbrs = und.select(col("a").as("node"), col("b").as("nbr"))
-      .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
-      .repartition(col("node")) // co-locate once; every hop joins on node
-      .persist(MEMORY_AND_DISK)
-    val nodes = nbrs.select(col("node")).distinct().localCheckpoint(true)
-    // The state is the visited accumulator (node, dist) with the
-    // frontier flagged `__new` (the seeds are the first frontier);
-    // frontier rows carry dist so the expansion derives the next
-    // level's distance as dist + 1 (all members of one level share a
-    // dist; the groupBy-min below is that shared value, replacing
-    // distinct).
-    // ONE job per hop (round-11 job-floor pass): the accumulator ∪
-    // expansion union is checkpointed with the fresh-row count
-    // riding it — the old shape paid a frontier checkpoint job AND
-    // a union checkpoint job per hop. The final (empty-frontier)
-    // hop re-materializes an unchanged accumulator; one redundant
-    // node-sized copy against one saved job every expanding hop.
-    // (ops.bfsDistances keeps the per-level-checkpoint shape for
-    // O(n) total materialized bytes at scale; this twin keeps the
-    // flat single-accumulator shape CcLoopSpec pins.)
-    // The fresh level's dist comes from the FRONTIER's dist + 1
-    // (column arithmetic), not a hop literal — a changing literal
-    // would make every hop's codegen source unique, recompiling a
-    // fresh Janino class per hop per run (the r12 code-cache
-    // finding; ops.bfsDistances carries the level-list variant of
-    // the same fix).
-    // Guard: 41 = the oracle's 40-hop recursion cap + 1: the engine
-    // proves exhaustion with an EMPTY round past the last distance,
-    // so supporting eccentricity <= 40 (exactly the distances
-    // q172Sql's `r.d < 40` recursion reaches) needs a 41-hop budget —
-    // at 40 an ecc-40 graph would fail here while the oracle still
-    // answers.
-    val (visited, curve) =
-      try graft.Loop.fixpoint("bfs",
-          nodes.filter(col("node") % 97L === 0L)
-            .select(col("node"), lit(0L).as("dist"), lit(true).as("__new")),
-          count_if(col("__new")), 41, probe = probe) { st =>
-        val visited = st.select(col("node"), col("dist"))
-        val frontier = st.filter(col("__new")).select(col("node"), col("dist"))
-        visited.select(col("node"), col("dist"), lit(false).as("__new"))
-          .unionByName(nbrs.join(frontier, "node")
-            .groupBy(col("nbr")).agg(min(col("dist") + 1L).as("dist"))
-            .select(col("nbr").as("node"), col("dist"))
-            .join(visited, Seq("node"), "left_anti")
-            .select(col("node"), col("dist"), lit(true).as("__new")))
-      } catch { case t: Throwable => graft.Ck.release(nodes); throw t }
-      finally nbrs.unpersist(blocking = false)
-    val dist = nodes.join(visited, Seq("node"), "left")
-      .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
-    (dist, curve.length)
-  }
-
   def q172BfsHops(s: SparkSession, dir: String): DataFrame = {
-    val (dist, _) = bfsLoop(s, dir)
+    val (dist, _) = graft.api.ops.bfsDistances(
+      sparseUnd(s, dir), "a", "b", _ % 97L === 0L, maxHops = 41)
     dist.groupBy(col("dist"))
-      .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"))
+      .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
       .orderBy("dist")
   }
 
@@ -1132,11 +1074,9 @@ object Mining {
   // (Θ(nm)) is out of reach: per-seed BFS from the deterministic
   // node % 7 sample, estimator ĉ(v) = n_seed(v) / Σ_s d(s,v),
   // integer-quantized cent_e6 = (1e6·n_seed) div sum_d. The loop is
-  // ops.closenessSample (r17: bfsDistances' per-LEVEL checkpoints
-  // keyed by (node, seed) — O(pairs) total materialized bytes, not
-  // the retired accumulator's O(pairs × hops) re-copy per hop;
-  // state = the Eppstein–Wang O(n·m_seeds) pair bound,
-  // shuffle-partitioned on node). Oracle: the q172
+  // ops.closenessSample (the one BFS level loop keyed by seed —
+  // O(pairs) total materialized bytes; state = the Eppstein–Wang
+  // O(n·m_seeds) pair bound, shuffle-partitioned on node). Oracle: the q172
   // recursive-CTE BFS with a seed column carried through the
   // recursion — per-(seed, node) min distance, aggregated to the
   // same estimator.
@@ -1830,7 +1770,7 @@ object Mining {
   //       parallel; assign and remove them.
   // Every inner loop is data-driven with a loud bounded guard, every
   // round frame localCheckpoint(eager)-ed and superseded checkpoints
-  // released (the ccLoop/bfsLoop hygiene; reliable checkpoint() on a
+  // released (the ccLoop hygiene; reliable checkpoint() on a
   // cluster). Edge frames are persisted per outer round and dropped
   // before the next — the live subgraph shrinks monotonically.
   // Worst case (a long id-decreasing chain) degenerates to one SCC
@@ -1996,7 +1936,10 @@ object Mining {
     */
   private[graft] def sccAssign(edges0: DataFrame, maxOuter: Int = 30,
       bodies: SccBodies = SccBodies()): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import org.apache.spark.storage.StorageLevel.{MEMORY_AND_DISK, NONE}
+    // a caller-persisted frame is the caller's cache entry: persist
+    // is a no-op on it, and only a cache made here is dropped here
+    val ownsCache = edges0.storageLevel == NONE
     val edges = edges0.persist(MEMORY_AND_DISK)
     touch(edges)
     // the node count rides the init checkpoint (round-11 job-floor
@@ -2424,7 +2367,7 @@ object Mining {
         if (cur ne active) { graft.Ck.release(active); active = cur }
       }
     }
-    edges.unpersist(blocking = false) // release before the loud guard
+    if (ownsCache) edges.unpersist(blocking = false) // before the loud guard
     graft.Ck.release(active) // empty (or superseded) on every exit path
     if (!done) pieces.foreach(graft.Ck.release) // nothing reads them past the guard
     require(done, s"SCC did not converge in $maxOuter outer rounds")
@@ -2875,13 +2818,13 @@ object Mining {
   // node, take the farthest node u (deterministic tie: min id), BFS
   // again from u — ecc(u) is the diameter lower bound, exact on
   // trees and within a small factor in practice (Magnien-Latapy-
-  // Habib 2009). Composition: ccLoop labels → largest component →
-  // two ops.bfsDistances runs; three driver-side scalars total, all
-  // O(1)-sized (the q163 discipline).
+  // Habib 2009). Composition: cc labels → largest component → two
+  // BFS level loops over one prepared graph; three driver-side
+  // scalars total, all O(1)-sized (the q163 discipline).
   //
-  // Scale shape: inherits ccLoop's pointer-jump fixpoint and BFS's
-  // frontier-proportional rounds — nothing new materializes beyond
-  // two dist tables, both released after their scalar is read.
+  // Scale shape: inherits cc's fixpoint and BFS's frontier-
+  // proportional rounds — nothing new materializes beyond the two
+  // sweeps' level lists, each released after its scalar is read.
   // Oracle: the q161 closure + two recursive-CTE BFS replays with
   // the same deterministic tie order.
   // ---------------------------------------------------------------

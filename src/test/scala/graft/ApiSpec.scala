@@ -382,14 +382,17 @@ class ApiSpec extends SparkSpec {
     assert(api.except(q173).count() === 0 && q173.except(api).count() === 0)
   }
 
-  test("bfsDistances agrees with the oracle-gated q172 pipeline") {
-    val und = graft.queries.Mining.sparseUnd(spark, dir)
+  test("bfsDistances on q172's graph agrees with a plain-Scala BFS") {
+    // sf0.01: sf0.001's q172 graph exhausts in one hop
+    val und = graft.queries.Mining.sparseUnd(spark, "/root/testdata/sf0.01")
+    val edges = und.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val (dist, hops) = ops.bfsDistances(und, "a", "b", _ % 97L === 0L)
-    assert(hops > 0 && hops < 40, s"hops=$hops")
-    val api = dist.groupBy(col("dist"))
-      .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
-    val q172 = SparkEntry.queries("q172_bfs_hops")(spark, dir)
-    assert(api.except(q172).count() === 0 && q172.except(api).count() === 0)
+    assert(hops > 2 && hops < 40, s"hops=$hops")
+    val got = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Ck.release(dist)
+    val want = BfsReference.bfsDistances(edges, _ % 97L == 0L)
+    assert(got == want)
+    assert(hops == want.values.max + 1, s"hops=$hops")
   }
 
   test("bfsDistances two-level visited check is exact on hand graphs") {

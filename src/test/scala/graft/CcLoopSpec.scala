@@ -55,8 +55,18 @@ class CcLoopSpec extends SparkSpec {
     assert(n == 500L) // sf0.01 embeddings corpus, fully assigned
   }
 
+  // q172's BFS: ops.bfsDistances over the sparsified graph with the
+  // node % 97 seeds and the oracle-synced 41-hop guard
+  private def q172Bfs(
+      probe: (Int, org.apache.spark.sql.DataFrame) => Unit = (_, _) => ())
+    : (org.apache.spark.sql.DataFrame, Int) = {
+    import org.apache.spark.sql.functions._
+    graft.api.ops.bfsDistances(graft.queries.Mining.sparseUnd(spark, dir),
+      "a", "b", _ % 97L === 0L, maxHops = 41, probe = probe)
+  }
+
   test("bfs loop: exhausts the frontier with a data-driven hop count within the guard") {
-    val (dist, hops) = graft.queries.Mining.bfsLoop(spark, dir)
+    val (dist, hops) = q172Bfs()
     // >2: the loop genuinely expands multiple hops; <40: the guard
     // was never the stop reason (the final hop is the empty probe)
     assert(hops > 2 && hops < 40, s"hops=$hops")
@@ -64,27 +74,28 @@ class CcLoopSpec extends SparkSpec {
     // every distance is either -1 (seedless component) or < hops
     val bad = dist.filter(col("dist") < -1L || col("dist") >= hops.toLong)
     assert(bad.isEmpty)
+    Ck.release(dist)
   }
 
   test("bfs loop: lineage does not grow across hops (localCheckpoint pin)") {
     val plans = ArrayBuffer.empty[(Int, Int)]
     def depth(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.numberedTreeString.linesIterator.size
-    graft.queries.Mining.bfsLoop(spark, dir, (h, visited) => plans += (h -> depth(visited)))
-    // the visited accumulator is re-checkpointed per hop: every hop
-    // observes a flat LogicalRDD(+Project), not a growing union tree
+    Ck.release(q172Bfs((h, level) => plans += (h -> depth(level)))._1)
+    // each hop checkpoints its level: every hop observes a flat
+    // LogicalRDD(+Project), not a plan that grows with the hop count
     val depths = plans.map(_._2).distinct
     assert(depths.size == 1, s"plan depth varies across hops: $plans")
-    assert(depths.head <= 3, s"visited plan deeper than LogicalRDD+Project: $plans")
+    assert(depths.head <= 3, s"level plan deeper than LogicalRDD+Project: $plans")
   }
 
   test("bfs loop: distances are a BFS fixpoint (triangle inequality on every edge)") {
     import org.apache.spark.sql.functions._
-    val (dist, _) = graft.queries.Mining.bfsLoop(spark, dir)
+    val (dist, _) = q172Bfs()
     val und = graft.queries.Mining.sparseUnd(spark, dir)
     val edges = und
-      .join(dist.select(col("node").as("a"), col("dist").as("da")), "a")
-      .join(dist.select(col("node").as("b"), col("dist").as("db")), "b")
+      .join(dist.select(col("id").as("a"), col("dist").as("da")), "a")
+      .join(dist.select(col("id").as("b"), col("dist").as("db")), "b")
     // adjacent reached nodes differ by at most one hop; a reached node
     // adjacent to an unreached one is impossible (BFS would reach it)
     val badPair = edges.filter(
@@ -94,9 +105,10 @@ class CcLoopSpec extends SparkSpec {
     assert(badPair.isEmpty, "an edge violates the BFS distance fixpoint")
     // seeds are exactly the dist-0 set
     val seedsWrong = dist.filter(
-      (col("node") % 97L === 0L && col("dist") =!= 0L) ||
-      (col("node") % 97L =!= 0L && col("dist") === 0L))
+      (col("id") % 97L === 0L && col("dist") =!= 0L) ||
+      (col("id") % 97L =!= 0L && col("dist") === 0L))
     assert(seedsWrong.isEmpty)
+    Ck.release(dist)
   }
 
   test("pr loop: stops at the movement threshold with a data-driven round count") {

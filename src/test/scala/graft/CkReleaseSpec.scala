@@ -102,14 +102,33 @@ class CkReleaseSpec extends SparkSpec {
   test("bfs loop: immediate-exhaustion path keeps the seed frame readable") {
     // ops.bfsDistances with seeds whose neighbors are all seeds too:
     // hop 1 finds nothing fresh, the loop exhausts immediately, and
-    // the dist join must still read the seed checkpoint (the
-    // `expanded` guard in the release path)
+    // the dist join must still read the seed level (only the empty
+    // hop-1 level is released)
     val edges = spark.range(6).select(col("id").as("src"),
       ((col("id") + 1) % 6).as("dst"))
     val (dist, hops) = graft.api.ops.bfsDistances(
       edges, "src", "dst", _ => lit(true))
     assert(hops == 1)
     assert(dist.filter(col("dist") === 0L).count() == 6)
+  }
+
+  test("scc loop: a caller-persisted edge frame stays cached on both surfaces") {
+    import org.apache.spark.storage.StorageLevel.{MEMORY_AND_DISK, NONE}
+    // sccAssign's own persist is a no-op on a frame the caller already
+    // cached; dropping it (or the SQL surface's `scc_edges` view over
+    // it) would drop the caller's cache entry
+    val drivers = Seq[(String, DataFrame => (DataFrame, Int))](
+      "dataframe" -> (e => graft.queries.Mining.sccAssign(e)),
+      "sql" -> (e => graft.api.SqlSurface.sccLoopSqlOn(spark, e)))
+    for ((driver, scc) <- drivers) {
+      val edges = graft.queries.Mining.dirEdges(spark, dir).persist(MEMORY_AND_DISK)
+      Tables.touch(edges)
+      val (labels, _) = scc(edges)
+      Ck.release(labels)
+      assert(edges.storageLevel != NONE,
+        s"$driver: the SCC loop dropped the caller's edge cache")
+      edges.unpersist(blocking = true)
+    }
   }
 
   test("scc loop: nested trim/color/collect rounds all release their blocks") {

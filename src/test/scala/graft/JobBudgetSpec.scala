@@ -95,6 +95,15 @@ class JobBudgetSpec extends SparkSpec {
     pin("q216_diameter_sweep", Q216Expected, riders = 5L)
   }
 
+  // riders = the hop count at sf0.001 (one Loop.checkpoint per hop)
+  test("q172 BFS: one level-list frontier loop, 3 jobs per hop") {
+    pin("q172_bfs_hops", Q172Expected, riders = 1L)
+  }
+
+  test("q225 closeness: the same level loop keyed by seed") {
+    pin("q225_closeness_sample", Q225Expected, riders = 2L)
+  }
+
   test("q199 SCC: trim peel + color/collect fixpoint, no freeze-misfire job inflation") {
     pin("q199_scc", Q199Expected, riders = 9L)
   }
@@ -140,11 +149,26 @@ class JobBudgetSpec extends SparkSpec {
   // two sweeps x 2 hops), -2 footer-inference jobs gone (Tables
   // schema memo), -5 from star2Round's two-window cc round (4 jobs
   // per alternation checkpoint instead of 9)
-  private val Q216Expected = 47L
+  // 47 -> 42: both sweeps run ops.bfsLevels over one prepared
+  // graph (one neighbour list and node checkpoint instead of one per
+  // sweep), read their farthest node off the levels (no join back to
+  // the node set), and fold the two-level visited check into the
+  // hop's aggregate (no anti-join broadcast: 3 jobs per hop, not 4)
+  private val Q216Expected = 42L
+  // measured at sf0.001 when q172 moved onto ops.bfsDistances (the
+  // one BFS level loop): node checkpoint, seed level, 1 hop
+  private val Q172Expected = 19L
+  // measured with q172's: the same loop keyed by seed, 2 hops
+  private val Q225Expected = 21L
   // 68 -> 66: footer-inference jobs gone (Tables schema memo)
-  private val Q199Expected = 66L
+  // 66 -> 63: sccAssign keeps the caller's edge cache (it unpersisted
+  // it), so the intra-edge census reads the cache instead of
+  // re-deriving dirEdges
+  private val Q199Expected = 63L
   // 80 -> 78: footer-inference jobs gone (Tables schema memo)
-  private val Q202Expected = 78L
+  // 78 -> 72: the same kept cache, twice: dagLayers' condensation
+  // edges and census read its persisted canonical edges
+  private val Q202Expected = 72L
   // 61 -> 57: footer-inference jobs gone (Tables schema memo)
   // 57 -> 47: star2Round's two-window round runs 4 jobs per cc
   // alternation checkpoint instead of 9 (no joins, one exchange per

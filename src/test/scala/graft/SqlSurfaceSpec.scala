@@ -37,6 +37,34 @@ class SqlSurfaceSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString)
 
+  /** Jobs of one counted run of `run` (each frame counted), after a
+    * warm-up run that fills the schema memo and the spread copies
+    * (JobBudgetSpec's method); both runs' frames are released.
+    */
+  private def jobs(name: String)(run: => Seq[DataFrame]): Long = {
+    run.foreach(Ck.release) // warm-up
+    var out: Seq[DataFrame] = Nil
+    val n = countJobs(s"sqlsurface_$name") {
+      out = run; out.foreach(_.count())
+    }
+    out.foreach(Ck.release)
+    n
+  }
+
+  /** The SQL surface's form of `name` runs as many jobs as the
+    * DataFrame form; the slack is the rider fallbacks counted over
+    * both windows (each fallback is one extra job on the same thread).
+    */
+  private def parity(name: String, df: => Seq[DataFrame],
+      sql: => Seq[DataFrame]): Unit = {
+    val fb0 = Loop.fallbacks.get()
+    val d = jobs(s"${name}_df")(df)
+    val q = jobs(s"${name}_sql")(sql)
+    val fb = Loop.fallbacks.get() - fb0
+    assert(math.abs(d - q) <= fb,
+      s"SQL-driven $name ran $q jobs, its DataFrame form $d (rider fallbacks $fb)")
+  }
+
   test("q01/q23/q88 SQL texts are plan-equal to the DataFrame forms") {
     ready
     SqlSurface.sql.foreach { case (name, text) =>
@@ -190,75 +218,24 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("SQL-driven SCC runs the same jobs as the DataFrame q199") {
     ready
-    // JobBudgetSpec's method: a warm-up run (schema memo, spread
-    // copies), then the jobs of a counted run under a job group; the
-    // slack is the rider fallbacks counted over both windows (each
-    // fallback is one extra job on the same thread)
-    def jobs(name: String)(run: => DataFrame): Long = {
-      Ck.release(run) // warm-up
-      var out: DataFrame = null
-      val n = countJobs(s"sqlsurface_scc_$name") { out = run; out.count() }
-      Ck.release(out)
-      n
-    }
-    val fb0 = Loop.fallbacks.get()
-    val df = jobs("df")(SparkEntry.queries("q199_scc")(spark, dir))
-    val sq = jobs("sql")(SqlSurface.q199SccSql(spark, dir))
-    val fb = Loop.fallbacks.get() - fb0
-    assert(math.abs(df - sq) <= fb,
-      s"SQL-driven SCC ran $sq jobs, the DataFrame q199 $df (rider fallbacks $fb)")
+    parity("scc", Seq(SparkEntry.queries("q199_scc")(spark, dir)),
+      Seq(SqlSurface.q199SccSql(spark, dir)))
   }
 
   test("SQL-driven k-core and PageRank run the same jobs as the DataFrame loops") {
     ready
-    // the SCC parity test's method: warm-up run, counted run, slack
-    // of the rider fallbacks over both windows
-    def jobs(name: String)(run: => DataFrame): Long = {
-      Ck.release(run) // warm-up
-      var out: DataFrame = null
-      val n = countJobs(s"sqlsurface_$name") { out = run; out.count() }
-      Ck.release(out)
-      n
-    }
-    Seq(
-      ("k-core", () => Mining.kcoreLoop(spark, dir)._1,
-        () => SqlSurface.kcoreLoopSql(spark, dir)._1),
-      ("pagerank", () => Curation.prLoop(spark, dir)._1,
-        () => SqlSurface.prLoopSql(spark, dir)._1)
-    ).foreach { case (loop, dfRun, sqlRun) =>
-      val fb0 = Loop.fallbacks.get()
-      val df = jobs(s"${loop}_df")(dfRun())
-      val sq = jobs(s"${loop}_sql")(sqlRun())
-      val fb = Loop.fallbacks.get() - fb0
-      assert(math.abs(df - sq) <= fb,
-        s"SQL-driven $loop ran $sq jobs, the DataFrame loop $df (rider fallbacks $fb)")
-    }
+    parity("k-core", Seq(Mining.kcoreLoop(spark, dir)._1),
+      Seq(SqlSurface.kcoreLoopSql(spark, dir)._1))
+    parity("pagerank", Seq(Curation.prLoop(spark, dir)._1),
+      Seq(SqlSurface.prLoopSql(spark, dir)._1))
   }
 
   test("SQL-driven HITS and warm cc run the same jobs as their DataFrame drivers") {
     ready
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     import graft.api.ops
-    // the loops themselves, not q196 / q217, whose top-k and census
-    // steps differ across the surfaces. Method of the parity tests
-    // above: warm-up run, counted run, slack of the rider fallbacks.
-    def jobs(name: String)(run: => Seq[DataFrame]): Long = {
-      run.foreach(Ck.release) // warm-up
-      var out: Seq[DataFrame] = Nil
-      val n = countJobs(s"sqlsurface_$name") {
-        out = run; out.foreach(_.count())
-      }
-      out.foreach(Ck.release)
-      n
-    }
-    def parity(loop: String, df: => Seq[DataFrame], sql: => Seq[DataFrame]): Unit = {
-      val fb0 = Loop.fallbacks.get()
-      val d = jobs(s"${loop}_df")(df)
-      val q = jobs(s"${loop}_sql")(sql)
-      val fb = Loop.fallbacks.get() - fb0
-      assert(math.abs(d - q) <= fb,
-        s"SQL-driven $loop ran $q jobs, its DataFrame driver $d (rider fallbacks $fb)")
-    }
+    // the loops themselves, not q196, whose top-k step differs
+    // across the surfaces
     // HITS on q196's edges, persisted as hitsLoopSql persists them
     parity("hits", {
       val e = Curation.hitsEdges(spark, dir).persist(MEMORY_AND_DISK)
@@ -285,6 +262,14 @@ class SqlSurfaceSpec extends SparkSpec {
     Ck.release(lab0)
     und0.unpersist(blocking = false)
     und1.unpersist(blocking = false)
+  }
+
+  test("SQL census queries q161 and q217 run the same jobs as the DataFrame queries") {
+    ready
+    parity("q161", Seq(SparkEntry.queries("q161_connected_components")(spark, dir)),
+      Seq(SqlSurface.q161ComponentsSql(spark, dir)))
+    parity("q217", Seq(SparkEntry.queries("q217_incremental_cc")(spark, dir)),
+      Seq(SqlSurface.q217IncrementalCcSql(spark, dir)))
   }
 
   test("SQL-driven warm cc bodies are plan-equal to ops'; q217 agrees") {
