@@ -44,179 +44,6 @@ object Bench {
     }
   }
 
-  /** The steal-dodge sampling loop (round-13, pure and spec-pinned
-    * in BenchGateSpec): draw timed samples from `run` — which
-    * returns (wall seconds, steal seconds measured around that run)
-    * — until `n` are KEPT, discarding a successful sample whose own
-    * window carried more than `thresholdS` of host-withheld CPU,
-    * bounded by `maxRetries` discards per query. Returns (kept,
-    * discarded) in draw order. Failed runs (wall < 0) are never
-    * dodged — a crash must surface in the kept array, not retry
-    * until the box is quiet.
-    */
-  private[graft] def stealDodge(run: () => (Double, Double), n: Int,
-      thresholdS: Double, maxRetries: Int)
-    : (Seq[(Double, Double)], Seq[(Double, Double)]) = {
-    var kept = Vector.empty[(Double, Double)]
-    var dodged = Vector.empty[(Double, Double)]
-    while (kept.size < n) {
-      val s @ (t, st) = run()
-      if (t >= 0 && st > thresholdS && dodged.size < maxRetries)
-        dodged :+= s
-      else kept :+= s
-    }
-    (kept, dodged)
-  }
-
-  /** First-TIMED-run tiered-compilation absorber (round-14, verdict
-    * item 2 — the q171/q175 false-positive class): the untimed
-    * warm-up does NOT absorb JIT for codegen-heavy queries, because
-    * tiered compilation promotes to C2 only after it, so the first
-    * timed run pays a measured C2 burst (q171 jit+48.8 s, q175
-    * jit+62.9 s in BenchProbe run1 at flat jobs/GC) and descends to
-    * steady by run 2-4. Min-of-runs already reports the true plan
-    * cost, but the descent inflates the intra-session spread past
-    * the 3x gate — a KNOWN false positive. This absorber removes
-    * exactly that signature and nothing else: it triggers only when
-    * the first sample is the maximum, the spread exceeds the gate's
-    * threshold, and the samples are multi-second (mirroring the
-    * gate's own floor); it then draws extra samples until a flat
-    * plateau (max/min <= flatRatio) of at least `minKept` samples
-    * forms at the TAIL, and reclassifies the strictly-above-plateau
-    * prefix as descent warm-up. Every discarded sample ships in
-    * bench_detail ("descent_runs") so the trim is auditable, and the
-    * plateau contains the global min, so the aggregate is unchanged.
-    * Shapes that are NOT a descent stay untouched and flag loudly:
-    * a tail spike (head != max, e.g. q211 r13 [2.13, 2.13, 10.91]),
-    * a fast outlier below the plateau, a plateau that never forms
-    * within `maxExtra` draws, or any crashed sample. Applied at
-    * measurement time AND after the drift-retry merge — r13's q175
-    * spread flag was CREATED by the merge (initial spread 2.53 was
-    * under the gate; appending three warmed tail retries pushed
-    * max/min to 3.92). Pure and spec-pinned (BenchGateSpec).
-    */
-  private[graft] def descentAbsorb(runs: Seq[Double], more: () => Double,
-      spreadThreshold: Double, flatRatio: Double, minSeconds: Double,
-      minKept: Int, maxExtra: Int): (Seq[Double], Seq[Double]) = {
-    // longest tail suffix whose max/min stays within flatRatio
-    def plateauLen(rs: Seq[Double]): Int = {
-      var i = rs.size - 1
-      var mx = rs.last; var mn = rs.last; var len = 1
-      var stop = false
-      while (i > 0 && !stop) {
-        val v = rs(i - 1)
-        val nmx = math.max(mx, v); val nmn = math.min(mn, v)
-        if (nmx / nmn <= flatRatio) { mx = nmx; mn = nmn; len += 1; i -= 1 }
-        else stop = true
-      }
-      len
-    }
-    if (runs.size < minKept || runs.exists(_ <= 0) ||
-        runs.max < minSeconds || runs.max / runs.min <= spreadThreshold ||
-        runs.head != runs.max)
-      (runs, Seq.empty)
-    else {
-      var all = runs.toVector
-      var extra = 0
-      while (extra < maxExtra && !all.exists(_ <= 0) &&
-          plateauLen(all) < minKept) {
-        all :+= more(); extra += 1
-      }
-      val pl = plateauLen(all)
-      val plat = all.takeRight(pl)
-      val prefix = all.dropRight(pl)
-      if (all.exists(_ <= 0) || pl < minKept ||
-          !prefix.forall(_ > plat.max))
-        (all, Seq.empty) // not the descent signature: ship it loud
-      else (plat, prefix)
-    }
-  }
-
-  /** Floor-extension sampling (round-15, verdict item 2): nine r14
-    * rows (q57, q204, q203, q185, q184, q130, q110, q01, q173)
-    * shipped min-of-runs from a run sequence STRICTLY DESCENDING at
-    * its last sample — the floor was never reached, so the pinned
-    * minimum is luck-sensitive (the q186 lucky-pin class) and
-    * apparent drift is inflated (the q57 re-open). The descent
-    * absorber cannot help: it correctly requires spread > 3x, and
-    * these tails descend 1.2-1.5x. This rule is the cheap
-    * complement: when the kept runs are strictly monotone decreasing
-    * AND the head/tail ratio says the descent is real (not
-    * noise-level monotonicity, which ~1/6 of flat queries show by
-    * chance), draw bounded extra samples until the sequence turns
-    * non-monotone — the first draw that fails to improve marks the
-    * floor. Extras ship IN the runs array (they are ordinary kept
-    * samples; min-of-runs is the stated aggregate, so deeper
-    * sampling is honest). A crashed extra surfaces in the array —
-    * same contract as the absorber.
-    *
-    * Bonus batch (round-16, verdict item 5): the r15 run of record
-    * still shipped q211_containment_join strictly descending after
-    * the full budget (4.452 → 1.930, a 2.3x unreached span) — the
-    * exact multi-second unreached-floor class this rule was built
-    * for, stopped short by the 3-draw cap. When the FIRST batch is
-    * exhausted with the row still descending, still ≥ `bonusMinS`
-    * at its last sample, and still spanning ≥ `bonusRatio`
-    * head-to-last, ONE further batch of `bonusExtra` draws is
-    * granted — bounded escalation, never repeated, and sub-second
-    * rows (the r15 q01 shape, tail 0.351 s) never escalate: their
-    * pinned minima are noise-floor-accurate already and the extra
-    * wall-clock would buy nothing. Pure and spec-pinned
-    * (BenchGateSpec).
-    */
-  private[graft] def extendDescending(runs: Seq[Double], more: () => Double,
-      minRatio: Double, maxExtra: Int, bonusMinS: Double = 1.0,
-      bonusRatio: Double = 1.3, bonusExtra: Int = 3): Seq[Double] = {
-    def desc(rs: Seq[Double]) = rs.size >= 2 &&
-      rs.zip(rs.tail).forall { case (a, b) => b < a }
-    if (runs.size < 2 || runs.exists(_ <= 0) || !desc(runs) ||
-        runs.head / runs.last < minRatio) runs
-    else {
-      var all = runs.toVector
-      var extra = 0
-      var budget = maxExtra
-      var bonused = false
-      while (extra < budget && all.last > 0 && desc(all.takeRight(2))) {
-        all :+= more(); extra += 1
-        if (extra == budget && !bonused && all.last >= bonusMinS &&
-            desc(all.takeRight(2)) && all.head / all.last >= bonusRatio) {
-          budget += bonusExtra; bonused = true
-        }
-      }
-      all
-    }
-  }
-
-  /** Post-merge re-absorption of one retried row (round-16, advice
-    * item 1): the merge itself can CREATE a descent (r13 q175) or a
-    * strictly-descending tail, so the absorber + floor extension run
-    * again after mergeRetries — but a crashed ABSORBER extra used to
-    * ship: descentAbsorb returns every sample loud on a crash
-    * (descent empty, the -1 inside the array), and the old inline
-    * code forwarded that array as the row, flipping a valid measured
-    * row to crashed min -1. The callers guarantee `runs` is
-    * crash-free (agg >= 0), so a -1 here can only come from an extra
-    * draw — same contract as mergeRetries: a crash must not mask the
-    * original timing, so the ORIGINAL runs ship unchanged. A crashed
-    * EXTENSION draw already discarded only the extension (the
-    * absorbed plateau is still valid). Returns (final runs, absorbed
-    * descent prefix, extension draw count). Pure and spec-pinned
-    * (BenchGateSpec).
-    */
-  private[graft] def postMergeAbsorb(runs: Seq[Double], more: () => Double,
-      spreadThreshold: Double, flatRatio: Double, minSeconds: Double,
-      minKept: Int, maxExtra: Int, extendMinRatio: Double,
-      maxExtendDraws: Int): (Seq[Double], Seq[Double], Int) = {
-    val (plat, descent) = descentAbsorb(runs, more,
-      spreadThreshold, flatRatio, minSeconds, minKept, maxExtra)
-    if (plat.exists(_ < 0)) (runs, Seq.empty, 0)
-    else {
-      val ext = extendDescending(plat, more, extendMinRatio, maxExtendDraws)
-      val fin = if (ext.exists(_ < 0)) plat else ext
-      (fin, descent, fin.size - plat.size)
-    }
-  }
-
   /** Merge isolation-retry samples into the result rows named by the
     * drift gate: min-of-runs is the stated aggregate, so appending
     * the tail samples is honest — a transient drift dissolves, a
@@ -312,97 +139,40 @@ object Bench {
     // guest on a shared host, and /proc/stat's steal column counts
     // ticks the host withheld. The r12 q193/q195/q205 spread
     // adjudication traced two ~55 s in-session windows of 3-8x
-    // inflated runs to exactly this class (flat ccache, 0 old-gen
-    // GC, tight tail retries, cumulative steal 264 s in 49 min of
-    // uptime) — recording the per-query delta makes the next such
-    // window a READ ("steal_s": 40) instead of an elimination
-    // argument. Linux-only; absent file -> field omitted.
-    // ONE /proc/stat parse for both telemetry columns (the aggregate
-    // "cpu " line: field 8 = steal, field 5 = iowait, 0-indexed
-    // after the "cpu" tag... here raw split indices)
+    // inflated runs to exactly this class — recording the per-query
+    // delta makes the next such window a READ ("steal_s": 40) instead
+    // of an elimination argument. Linux-only; absent file -> field
+    // omitted. ONE /proc/stat parse for both telemetry columns (the
+    // aggregate "cpu " line; raw split indices 8 = steal, 5 = iowait)
     def procStatTick(idx: Int): Long = try {
-      val l = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).getOrElse("")
+      val l = scala.util.Using.resource(scala.io.Source.fromFile("/proc/stat"))(
+        _.getLines().find(_.startsWith("cpu ")).getOrElse(""))
       val f = l.trim.split("\\s+")
       if (f.length > idx) f(idx).toLong else -1L
     } catch { case _: Throwable => -1L }
-    def stealTicks(): Long = procStatTick(8)
-    // I/O-wait per query (seconds, whole-VM, /proc/stat col 5): the
-    // r13 q211/q212 stall window (~18 s spanning a query boundary,
-    // run inflation 5-8x) carried only 0.1 s of steal — the steal
-    // column cannot see host-side I/O stalls or page-cache flushes,
-    // which park tasks in D-state and bill as iowait instead.
-    // Recording both makes the next zero-steal window a read. Summed
-    // over ALL timed draws of the query (kept + dodged + descent) —
-    // it is window telemetry, not a kept-run attribution.
-    def iowaitTicks(): Long = procStatTick(5)
+    // I/O-wait per query: the r13 q211/q212 stall window (~18 s
+    // spanning a query boundary, run inflation 5-8x) carried only
+    // 0.1 s of steal — host-side I/O stalls park tasks in D-state and
+    // bill as iowait instead, so both columns are recorded
     val hz = 100.0 // USER_HZ; universal on stock Linux
     var stealByQuery = Map.empty[String, Double]
     var iowaitByQuery = Map.empty[String, Double]
-    // STEAL DODGE (round-13, verdict item 5): the r12 telemetry made
-    // host-steal stripes readable after the fact; this pass makes the
-    // bench step OUT of them at the source. Each timed run samples
-    // steal around ITSELF (not around the whole query — round-12
-    // advice: steal0 before the warm-up billed warm-up-only bursts
-    // to the timed runs and misdirected spread adjudications); a
-    // successful run whose own window carries > StealRetryS of
-    // host-withheld CPU is DISCARDED and re-run, bounded per query.
-    // Kept runs therefore measure the plan, not the hypervisor; the
-    // discarded samples and their steal ship in bench_detail
-    // ("dodged_runs"/"dodged_steal_s") so the dodge is auditable,
-    // and steal_s becomes kept-timed-runs steal only. Failed runs
-    // (-1) are never dodged — a crash must surface, not retry.
-    val StealRetryS = 0.5
-    val MaxStealRetries = 3
-    // descent-absorber knobs: the spread gate's own threshold and
-    // multi-second floor (BenchDiff: 3.0 / 1.0 s), a 1.5x plateau
-    // tolerance (steady-state runs of one plan sit well inside it;
-    // adjacent C2-descent steps measured on q171/q175 are 1.6-2.1x),
-    // and at most 3 extra draws
-    val SpreadThreshold = 3.0
-    val FlatRatio = 1.5
-    val SpreadMinS = 1.0
-    val MaxDescentExtra = 3
-    // floor-extension knobs (see extendDescending): trigger only when
-    // the strictly-descending tail spans >= 1.15x head-to-last (the
-    // judge's r14 scan used 1.3x; 1.15 catches the shoulder cases
-    // like q01 without drawing extras for noise-level monotonicity),
-    // at most 3 extra draws
-    val ExtendMinRatio = 1.15
-    val MaxExtendDraws = 3
-    var dodgeByQuery = Map.empty[String, Seq[(Double, Double)]]
-    var descentByQuery = Map.empty[String, Seq[Double]]
-    var descentIoByQuery = Map.empty[String, Double]
-    var extendByQuery = Map.empty[String, Int]
-    // Dodge-screened draw for the retry/merge passes (r14 advice: the
-    // merge-path extras ran through raw timeOnce with no steal
-    // screening and no telemetry, leaving their audit trail
-    // incomplete). Same discipline as the measurement loop: steal
-    // sampled around the run, stolen successes discarded and re-drawn
-    // (bounded), kept steal and iowait accrue to the query's
-    // steal_s / iowait_s, discards to dodged_runs.
-    def retryDraw(name: String): Double = {
+    def accrue(m: Map[String, Double], name: String, t0: Long, t1: Long) =
+      if (t0 >= 0 && t1 >= 0) m + (name -> (m.getOrElse(name, 0.0) + (t1 - t0) / hz))
+      else m
+    // `n` timed runs of one query; steal and iowait are window
+    // telemetry summed over every timed run of the query (main pass
+    // and drift retries alike), not a per-run attribution. Both reads
+    // are guarded: a transient -1 must not accrue a negative delta.
+    def timedRuns(name: String, n: Int): Seq[Double] = {
       val fn = SparkEntry.queries(name)
-      def d(): (Double, Double) = {
-        val s0 = stealTicks(); val io0 = iowaitTicks()
-        val t = timeOnce(fn)
-        val io1 = iowaitTicks()
-        if (io0 >= 0 && io1 >= 0)
-          iowaitByQuery += (name ->
-            (iowaitByQuery.getOrElse(name, 0.0) + (io1 - io0) / hz))
-        val s1 = stealTicks()
-        (t, if (s0 >= 0 && s1 >= 0) (s1 - s0) / hz else 0.0)
-      }
-      val (k1, d1) = stealDodge(d _, 1, StealRetryS, MaxStealRetries)
-      if (d1.nonEmpty)
-        dodgeByQuery += (name -> (dodgeByQuery.getOrElse(name, Seq.empty) ++ d1))
-      if (stealTicks() >= 0)
-        stealByQuery += (name ->
-          (stealByQuery.getOrElse(name, 0.0) + k1.map(_._2).sum))
-      k1.head._1
+      val s0 = procStatTick(8); val io0 = procStatTick(5)
+      val runs = Seq.fill(n)(timeOnce(fn))
+      stealByQuery = accrue(stealByQuery, name, s0, procStatTick(8))
+      iowaitByQuery = accrue(iowaitByQuery, name, io0, procStatTick(5))
+      runs
     }
-    var results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = timeOnce(fn)
+    var results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val startS = (System.nanoTime() - tStart) / 1e9
       // ONE untimed warm-up run before the three timed runs: the
       // bench's stated target is the reproducible steady-state cost
@@ -412,64 +182,11 @@ object Bench {
       // run vs 3.4 s steady) — without a warm-up, min-of-3 measures
       // the warm-up curve, not the plan. At 100 TB warm-up is noise
       // against minutes-long stages; at sf0.1 it dominates.
-      once()
+      timeOnce(SparkEntry.queries(name))
       LoopStats.drain() // discard any counts from warm-up/prior query
-      val stealOk = stealTicks() >= 0 // no /proc/stat -> no dodge, field omitted
-      var ioSum = 0.0
-      // per-draw (wall, iowait) log: lets the absorber's trim be
-      // cross-checked against host-stall telemetry after the fact
-      // (r14 advice: the descent signature also matches an I/O-stall
-      // descent, which the absorber must not silently bless)
-      var drawIo = Vector.empty[(Double, Double)]
-      def draw(): (Double, Double) = {
-        val s0 = stealTicks(); val io0 = iowaitTicks()
-        val t = once()
-        // guard BOTH reads (r14 advice): a transient -1 on the post
-        // read must not accrue a bogus negative delta into iowait_s
-        val io1 = iowaitTicks()
-        val ioD = if (io0 >= 0 && io1 >= 0) (io1 - io0) / hz else 0.0
-        ioSum += ioD
-        drawIo :+= (t, ioD)
-        (t, if (stealOk) (stealTicks() - s0) / hz else 0.0)
-      }
-      val (kept, dodged) = stealDodge(draw _, 3, StealRetryS, MaxStealRetries)
-      var keptSteal = kept.map(_._2).sum
-      var dodgedAll = dodged
-      // one extra dodge-screened draw for the descent absorber /
-      // floor extension; its kept steal joins this query's steal_s
-      // like any kept run
-      def moreDraw(): Double = {
-        val (k1, d1) = stealDodge(draw _, 1, StealRetryS, MaxStealRetries)
-        dodgedAll ++= d1
-        keptSteal += k1.map(_._2).sum
-        k1.head._1
-      }
-      val (runs0, descent) = descentAbsorb(kept.map(_._1), moreDraw _,
-        SpreadThreshold, FlatRatio, SpreadMinS, 3, MaxDescentExtra)
-      // floor extension AFTER the absorber: a trimmed plateau is flat
-      // by construction, so extension only fires on un-absorbed
-      // strictly-descending tails (the q57/q204 class)
-      val runs = extendDescending(runs0, moreDraw _, ExtendMinRatio, MaxExtendDraws)
-      if (runs.size > runs0.size)
-        extendByQuery += (name -> (runs.size - runs0.size))
+      val runs = timedRuns(name, 3)
       val agg = if (runs.exists(_ < 0)) -1.0 else runs.min
       ccacheByQuery += (name -> codeCacheMb())
-      if (stealOk) stealByQuery += (name -> keptSteal)
-      if (iowaitTicks() >= 0) iowaitByQuery += (name -> ioSum)
-      if (dodgedAll.nonEmpty) dodgeByQuery += (name -> dodgedAll)
-      if (descent.nonEmpty) {
-        descentByQuery += (name -> descent)
-        // cross-check the trim against stall telemetry: sum the
-        // iowait recorded around the trimmed draws (matched by wall
-        // value — annotation-only, so a rare duplicate wall is
-        // harmless) and ship it beside descent_runs; a nonzero value
-        // tells an auditor the "C2 descent" coincided with host I/O
-        // stalls and deserves a second look
-        val dIo = descent.map(t => drawIo.find(_._1 == t).map(_._2).getOrElse(0.0)).sum
-        if (dIo > 0) descentIoByQuery += (name -> dIo)
-        if (dIo > 0.5) System.err.println(
-          f"[bench] descent trim on $name coincides with $dIo%.2f s iowait — audit descent_iowait_s in bench_detail")
-      }
       // round counts are data-driven and identical across the runs,
       // so the post-runs snapshot is THE count for this query
       (name, agg, runs, startS, LoopStats.drain())
@@ -520,32 +237,9 @@ object Bench {
         .map(v => ",\"steal_s\":" + fmt(v)).getOrElse("")
       val iowaitField = iowaitByQuery.get(k)
         .map(v => ",\"iowait_s\":" + fmt(v)).getOrElse("")
-      // steal-dodged samples: the runs the dodge discarded and the
-      // per-run steal that disqualified them — auditable evidence
-      // that a retry happened and why
-      val dodgeField = dodgeByQuery.get(k).map { d =>
-        ",\"dodged_runs\":" + d.map(x => fmt(x._1)).mkString("[", ",", "]") +
-          ",\"dodged_steal_s\":" + d.map(x => fmt(x._2)).mkString("[", ",", "]")
-      }.getOrElse("")
-      // descent-absorbed samples: the leading C2-warm-up descent the
-      // absorber reclassified after a flat plateau formed (see
-      // descentAbsorb) — every discarded sample ships for audit
-      val descentField = descentByQuery.get(k).map { d =>
-        ",\"descent_runs\":" + d.map(fmt).mkString("[", ",", "]")
-      }.getOrElse("")
-      // iowait observed around the trimmed descent draws: nonzero
-      // means the "C2 descent" coincided with host I/O stalls and the
-      // trim deserves auditor scrutiny (r14 advice)
-      val descentIoField = descentIoByQuery.get(k)
-        .map(v => ",\"descent_iowait_s\":" + fmt(v)).getOrElse("")
-      // count of floor-extension draws (extendDescending): the runs
-      // array holds them inline; the count marks WHY it exceeds 3
-      val extendField = extendByQuery.get(k)
-        .map(n => ",\"floor_extends\":" + n).getOrElse("")
       "\"" + k + "\":{\"start_s\":" + fmt(startS) +
         ",\"runs\":" + runs.map(fmt).mkString("[", ",", "]") +
-        spreadField + ccField + stealField + iowaitField + dodgeField +
-        descentField + descentIoField + extendField + roundsField + "}"
+        spreadField + ccField + stealField + iowaitField + roundsField + "}"
     }.mkString("{", ",", "}")
     // run metadata: separates plan changes from box noise when
     // comparing rounds (a loaded box shows up as GC time / load
@@ -592,10 +286,6 @@ object Bench {
         s""""ccache_used_mb":${fmt(codeCacheMb())},"ccache_max_mb":${fmt(ccMax)},""" +
         s""""steal_session_s":${fmt(stealByQuery.values.sum)},""" +
         s""""iowait_session_s":${fmt(iowaitByQuery.values.sum)},""" +
-        s""""steal_dodge_threshold_s":${fmt(StealRetryS)},""" +
-        s""""steal_dodged_runs":${dodgeByQuery.values.map(_.size).sum},""" +
-        s""""descent_absorbed_runs":${descentByQuery.values.map(_.size).sum},""" +
-        s""""floor_extend_draws":${extendByQuery.values.sum},""" +
         s""""gc":$gc,"wall_s":$wall,"data":$dataFp}"""
     }
     def detailLine =
@@ -654,45 +344,10 @@ object Bench {
       System.err.println(
         s"[bench] retrying ${retryNames.size} unadjudicated drifts: ${retryNames.mkString(", ")}")
       results = mergeRetries(results, retryNames, name => {
-        // dodge-screened with full steal/iowait accounting (r14
-        // advice) — a steal-inflated extra can only push toward
-        // ship-loud, but its audit trail must match the main pass
-        val extra = Seq(retryDraw(name), retryDraw(name), retryDraw(name))
+        val extra = timedRuns(name, 3)
         LoopStats.drain() // retries must not bleed loop counts forward
         extra
       })
-      // absorb any descent the merge itself CREATED (the r13 q175
-      // lesson: its initial spread 2.53 sat under the gate; merging
-      // three fully-warmed tail retries pushed max/min to 3.92 and
-      // manufactured the spread flag). Same signature test, same
-      // audit trail; extra draws run at the session tail, the
-      // quietest measurement point.
-      results = results.map {
-        case r @ (name, agg, runs, startS, loops)
-            if retryNames.contains(name) && agg >= 0 =>
-          def more(): Double = {
-            val t = retryDraw(name) // dodge-screened + telemetry (r14 advice)
-            LoopStats.drain()
-            t
-          }
-          // absorber + floor extension re-run on the merged array via
-          // the pure core (postMergeAbsorb) so its crash contract —
-          // a crashed absorber extra returns the ORIGINAL row, never
-          // a -1-bearing one (round-16 advice item 1) — is the same
-          // code path the spec pins
-          val (fin, descent, nExt) = postMergeAbsorb(runs, more _,
-            SpreadThreshold, FlatRatio, SpreadMinS, 3, MaxDescentExtra,
-            ExtendMinRatio, MaxExtendDraws)
-          if (descent.nonEmpty)
-            descentByQuery += (name ->
-              (descentByQuery.getOrElse(name, Seq.empty) ++ descent))
-          if (nExt > 0)
-            extendByQuery += (name ->
-              (extendByQuery.getOrElse(name, 0) + nExt))
-          if (descent.isEmpty && fin.size == runs.size) r
-          else (name, fin.min, fin, startS, loops)
-        case r => r
-      }
       writeAndDiff()
     }
     val stillDirty = unadjudicated()
@@ -706,10 +361,8 @@ object Bench {
     // spread gate (round-11): > 3x intra-session run spread on a
     // multi-second query with no adjudication ships LOUD. No retry
     // pass here — extra samples can never shrink an observed max/min
-    // spread, so the only honest exits are the descent absorber's
-    // audited trim (the ONE known-mechanism shape, see descentAbsorb),
-    // an adjudication entry (key "<query>:spread"), or a fix that
-    // stabilizes the query.
+    // spread, so the only honest exits are an adjudication entry (key
+    // "<query>:spread") or a fix that stabilizes the query.
     val dirtySpread = unadjudicatedIn("BENCH_DIFF.json", "spreads")
     val spreadField =
       if (dirtySpread.isEmpty) ""

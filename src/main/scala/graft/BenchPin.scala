@@ -15,8 +15,8 @@ import scala.jdk.CollectionConverters._
   * session can no longer pin an unreachable floor, while a genuine
   * plan improvement (reproduced in every session) still moves the
   * pin. Each source session's conditions (load, steal, iowait,
-  * dodge/absorb counts, wall, total) ship in meta.sessions so a
-  * future drift adjudication can compare measurement conditions, and
+  * wall, total) ship in meta.sessions so a future drift
+  * adjudication can compare measurement conditions, and
   * meta.pin_round arms BenchDiff's adjudication-staleness rule: an
   * "ADJUDICATED rN" with N < pin_round no longer silences a drift
   * row (its evidence was measured against a baseline that no longer
@@ -88,9 +88,6 @@ object BenchPin {
       s"""{"file":"${p.replaceAll("[\\\\\"]", "_")}","total_s":${g("/value")},""" +
         s""""load_avg":${g("/meta/load_avg")},"steal_session_s":${g("/meta/steal_session_s")},""" +
         s""""iowait_session_s":${g("/meta/iowait_session_s")},""" +
-        s""""steal_dodged_runs":${g("/meta/steal_dodged_runs")},""" +
-        s""""descent_absorbed_runs":${g("/meta/descent_absorbed_runs")},""" +
-        s""""floor_extend_draws":${g("/meta/floor_extend_draws")},""" +
         s""""wall_s":${g("/meta/wall_s")}}"""
     }.mkString("[", ",", "]")
     // same missing-node-to-null fallback as the per-session g():

@@ -57,12 +57,12 @@ object Loop {
   // window) — right at loop totals, indicative per round.
   private val ckWallNs = ThreadLocal.withInitial[AtomicLong](() => new AtomicLong())
   private val ckTaskMs = ThreadLocal.withInitial[AtomicLong](() => new AtomicLong())
-  private val taskMsTotal = new AtomicLong()
+  private[graft] val taskMsTotal = new AtomicLong()
   private val taskHooked =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]())
 
-  private def ensureTaskListener(s: SparkSession): Unit = {
+  private[graft] def ensureTaskListener(s: SparkSession): Unit = {
     val sc = s.sparkContext
     val needs = taskHooked.synchronized {
       if (taskHooked.containsKey(sc)) false

@@ -31,28 +31,20 @@ import graft.api.ops
   */
 object ScaleProbe {
 
-  /** Session-global executor task-ms meter for the floor-vs-work
-    * decomposition (round-11 verdict item 2): wall alone cannot say
-    * whether a leg lost to per-job FLOOR (scheduling/planning; wall
-    * >> task/cores) or to WORK (task-dominated). Listener totals are
-    * async, so per-leg splits are indicative, not exact — right at
-    * leg granularity, which is all the probe reports.
+  /** Executor task-ms meter for the floor-vs-work decomposition
+    * (round-11 verdict item 2): wall alone cannot say whether a leg
+    * lost to per-job FLOOR (scheduling/planning; wall >> task/cores)
+    * or to WORK (task-dominated). Reads Loop's session-global stage
+    * total; listener totals are async, so per-leg splits are
+    * indicative, not exact — right at leg granularity, which is all
+    * the probe reports.
     */
-  private val taskMs = new java.util.concurrent.atomic.AtomicLong()
-  private def hookTaskMeter(s: SparkSession): Unit =
-    s.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = ev.stageInfo.taskMetrics
-          if (m != null) taskMs.addAndGet(m.executorRunTime)
-        }
-      })
+  private def taskMs: Long = Loop.taskMsTotal.get()
   /** Run `f`, returning (result, wall seconds, ~executor task ms). */
   private def timedLeg[T](f: => T): (T, Double, Long) = {
-    val t0 = System.nanoTime(); val m0 = taskMs.get()
+    val t0 = System.nanoTime(); val m0 = taskMs
     val r = f
-    ((r, (System.nanoTime() - t0) / 1e9, taskMs.get() - m0))
+    ((r, (System.nanoTime() - t0) / 1e9, taskMs - m0))
   }
 
   /** One past the max node id — the replica stride. */
@@ -180,14 +172,14 @@ object ScaleProbe {
     */
   private def timeLoop(run: ((Int, DataFrame) => Unit) => Int): LoopRun = {
     val marks = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val t0 = System.nanoTime(); val m0 = taskMs.get()
+    val t0 = System.nanoTime(); val m0 = taskMs
     val probe = (_: Int, _: DataFrame) => {
       marks += (System.nanoTime() - t0) / 1e9; ()
     }
     val rounds = run(probe)
     val total = (System.nanoTime() - t0) / 1e9
     val roundS = marks.toSeq.zip(0.0 +: marks.toSeq).map { case (b, a) => b - a }
-    LoopRun(rounds, total, roundS, taskMs.get() - m0)
+    LoopRun(rounds, total, roundS, taskMs - m0)
   }
 
   private def fmt(v: Double): String =
@@ -206,7 +198,7 @@ object ScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    hookTaskMeter(spark)
+    Loop.ensureTaskListener(spark)
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     val base = graft.queries.Mining.sparseUnd(spark, sfDir)
@@ -302,9 +294,12 @@ object ScaleProbe {
       val seed: Column => Column = c => c < lit(n) && c % mod === 0L
       // BFS hops grow ~linearly with the chain length by
       // construction, so the FAILURE bound must scale with m too
-      val bfs = timeLoop(p =>
-        ops.bfsDistances(edges, "a", "b", seed, maxHops = 40 + 2 * m,
-          probe = p)._2)
+      val bfs = timeLoop { p =>
+        val (dist, hops) = ops.bfsDistances(edges, "a", "b", seed,
+          maxHops = 40 + 2 * m, probe = p)
+        graft.Ck.release(dist)
+        hops
+      }
       // capture the cold fixpoint ranks: the q178-core leg below
       // warm-starts from them (the ccLabels pattern)
       var prRanks: DataFrame = null
@@ -618,10 +613,10 @@ object ScaleProbe {
       val dBase = docsRep.filter(col("doc_id") % 8L =!= 0L)
       val dDelta = docsRep.filter(col("doc_id") % 8L === 0L)
       val lb0T0 = System.nanoTime()
-      val lb0Tms0 = taskMs.get()
+      val lb0Tms0 = taskMs
       val (ndLab0, ndCurve0) = ops.nearDupLabels(dBase, "doc_id", "text")
       val lb0S = (System.nanoTime() - lb0T0) / 1e9
-      val lb0Tms = taskMs.get() - lb0Tms0
+      val lb0Tms = taskMs - lb0Tms0
       // BAND-SHARE A/B (r17, verdict item 6 — the r16 day-job
       // mechanism measured at scale): the r16 dedup day jobs derive
       // the base corpus's shingle + 12-perm minhash band table ONCE
@@ -635,11 +630,11 @@ object ScaleProbe {
       // "scale evidence is plan-shaped, not measured" — this leg
       // converts it). bs_prep_s prices the scan itself.
       val bsPrepT0 = System.nanoTime()
-      val bsPrepTms0 = taskMs.get()
+      val bsPrepTms0 = taskMs
       val bsBands = ops.nearDupBands(dBase, "doc_id", "text")
         .localCheckpoint(true)
       val bsPrepS = (System.nanoTime() - bsPrepT0) / 1e9
-      val bsPrepTms = taskMs.get() - bsPrepTms0
+      val bsPrepTms = taskMs - bsPrepTms0
       val ((bsLabN), bsSharedS, bsSharedTms) = timedLeg {
         val (l, c) = ops.nearDupLabels(dBase, "doc_id", "text",
           precomputedBands = Some(bsBands))

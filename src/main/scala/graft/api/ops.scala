@@ -1387,8 +1387,8 @@ object ops {
     * Vassilvitskii — "Connected Components in MapReduce and Beyond",
     * SoCC'14) over the canonical (min, max) edge set. The round-10
     * engine was min-label propagation with a pointer jump
-    * (l(u) <- l(l(u))); the round-11 A/B (SURVEY.md §7.16; its dev
-    * harness is in git history) measured why that loses:
+    * (l(u) <- l(l(u))); the round-11 A/B (its write-up and dev
+    * harness are in git history) measured why that loses:
     * a pointer jump only doubles reach along label CHAINS, which
     * branchy graphs do not form, so the q161 graph at
     * sf0.1 needs 9 label-prop rounds where star contraction needs 5

@@ -706,7 +706,7 @@ object Mining {
   // O(log n) alternations: 5 at sf0.1 where the retired min-label-
   // propagation + pointer-jump engine took 9 (a jump only doubles
   // reach along label CHAINS, which branchy graphs don't form — the
-  // A/B that motivated the round-11 swap, SURVEY.md §7.16: cold
+  // A/B that motivated the round-11 swap, written up in git history: cold
   // 4.99 -> 2.32 s, warm 5.21 -> 2.77 s, labels bit-identical).
   // The alternation count is DATA-DRIVEN: the loop stops when zero
   // edges changed (a conservative per-group flag rides the round's

@@ -146,151 +146,6 @@ class BenchGateSpec extends AnyFunSuite {
     assert(merged("q_drift")._4 == 5.0 && merged("q_drift")._5 == loops)
   }
 
-  test("descent absorber: C2-descent trims to the plateau; spikes, outliers, and crashes stay loud") {
-    def scripted(samples: Double*): () => Double = {
-      val it = samples.iterator
-      () => it.next()
-    }
-    def absorb(runs: Seq[Double], more: () => Double) =
-      Bench.descentAbsorb(runs, more, spreadThreshold = 3.0,
-        flatRatio = 1.5, minSeconds = 1.0, minKept = 3, maxExtra = 3)
-    val noDraw: () => Double =
-      () => fail("absorber drew a sample for a non-descent shape")
-    // the r13 q175 post-merge shape: six samples already hold a
-    // 3-run plateau — trimmed with zero extra draws
-    val (k1, d1) = absorb(
-      Seq(16.082, 11.438, 6.366, 4.729, 4.368, 4.098), noDraw)
-    assert(k1 == Seq(4.729, 4.368, 4.098) &&
-      d1 == Seq(16.082, 11.438, 6.366), (k1, d1))
-    // the q171 initial shape: plateau forms after two extra draws;
-    // the kept tail contains the global min, so min-of-runs holds
-    val (k2, d2) = absorb(Seq(7.35, 3.53, 1.12), scripted(1.10, 1.15))
-    assert(k2 == Seq(1.12, 1.10, 1.15) && d2 == Seq(7.35, 3.53), (k2, d2))
-    // a TAIL spike (the r13 q211 shape) is not a descent — head is
-    // not the max; untouched, and no samples are drawn
-    val (k3, d3) = absorb(Seq(2.131, 2.129, 10.912), noDraw)
-    assert(k3 == Seq(2.131, 2.129, 10.912) && d3.isEmpty)
-    // sub-second arrays sit under the gate's own floor — never drawn
-    val (k4, d4) = absorb(Seq(0.6, 0.15, 0.15), noDraw)
-    assert(k4 == Seq(0.6, 0.15, 0.15) && d4.isEmpty)
-    // a fast OUTLIER below the eventual plateau is not a descent:
-    // all samples ship and the gate flags
-    val (k5, d5) = absorb(Seq(5.0, 1.0, 4.9), scripted(5.1, 5.0))
-    assert(k5 == Seq(5.0, 1.0, 4.9, 5.1, 5.0) && d5.isEmpty, (k5, d5))
-    // a plateau that never forms within maxExtra draws: keep all,
-    // flag loudly
-    val (k6, d6) = absorb(Seq(9.0, 3.0, 1.0), scripted(0.5, 0.2, 0.09))
-    assert(k6 == Seq(9.0, 3.0, 1.0, 0.5, 0.2, 0.09) && d6.isEmpty)
-    // a crash mid-extras surfaces in the kept array (same contract
-    // as stealDodge: a crash is never absorbed away)
-    val (k7, d7) = absorb(Seq(9.0, 3.0, 1.0), scripted(-1.0))
-    assert(k7 == Seq(9.0, 3.0, 1.0, -1.0) && d7.isEmpty)
-    // an already-flat multi-second array is untouched
-    val (k8, d8) = absorb(Seq(2.0, 1.9, 2.1), noDraw)
-    assert(k8 == Seq(2.0, 1.9, 2.1) && d8.isEmpty)
-  }
-
-  test("floor extension: strictly-descending tails draw bounded extras until non-monotone; flat, noisy, and failed arrays are untouched") {
-    def scripted(samples: Double*): () => Double = {
-      val it = samples.iterator
-      () => it.next()
-    }
-    def extend(runs: Seq[Double], more: () => Double) =
-      Bench.extendDescending(runs, more, minRatio = 1.15, maxExtra = 3)
-    val noDraw: () => Double =
-      () => fail("extension drew a sample for a non-descending shape")
-    // the r14 q57 shape [2.332, 1.706, 1.639]: still descending at
-    // the last sample — extras draw until a sample fails to improve,
-    // and the floor (1.55) lands IN the runs array for min-of-runs
-    assert(extend(Seq(2.332, 1.706, 1.639), scripted(1.55, 1.58)) ==
-      Seq(2.332, 1.706, 1.639, 1.55, 1.58))
-    // bounded: a tail that never turns stops at maxExtra draws —
-    // plus the round-16 bonus batch exactly once for a multi-second
-    // row still spanning >= 1.3x (see the bonus-batch test for the
-    // gating cases)
-    assert(extend(Seq(3.0, 2.5, 2.0), scripted(1.9, 1.8, 1.7, 1.6, 1.5, 1.4)) ==
-      Seq(3.0, 2.5, 2.0, 1.9, 1.8, 1.7, 1.6, 1.5, 1.4))
-    // noise-level monotonicity (head/last < minRatio) never triggers:
-    // ~1/6 of flat queries are strictly descending by chance
-    assert(extend(Seq(1.05, 1.03, 1.02), noDraw) == Seq(1.05, 1.03, 1.02))
-    // a non-monotone array already found its floor
-    assert(extend(Seq(2.0, 1.5, 1.6), noDraw) == Seq(2.0, 1.5, 1.6))
-    // failed runs are never extended
-    assert(extend(Seq(2.0, -1.0, 1.0), noDraw) == Seq(2.0, -1.0, 1.0))
-    // a crashed extra surfaces in the array and stops the extension
-    // (measurement path lets it flow to agg; merge path discards the
-    // extension — both keep the crash visible or the row intact)
-    assert(extend(Seq(3.0, 2.0, 1.5), scripted(-1.0)) ==
-      Seq(3.0, 2.0, 1.5, -1.0))
-    // first extra already non-improving: one draw, done
-    assert(extend(Seq(3.0, 2.0, 1.5), scripted(1.5)) ==
-      Seq(3.0, 2.0, 1.5, 1.5))
-  }
-
-  test("floor-extension bonus batch: multi-second unreached floors escalate once; sub-second and near-floor rows stop at the base budget") {
-    def scripted(samples: Double*): () => Double = {
-      val it = samples.iterator
-      () => it.next()
-    }
-    def extend(runs: Seq[Double], more: () => Double) =
-      Bench.extendDescending(runs, more, minRatio = 1.15, maxExtra = 3,
-        bonusMinS = 1.0, bonusRatio = 1.3, bonusExtra = 3)
-    // the r15 q211 shape: still descending after the base 3 draws,
-    // last sample multi-second, span 4.45/1.93 >= 1.3 -> ONE bonus
-    // batch of 3 more draws; the floor (1.52 repeated) lands in-array
-    assert(extend(Seq(4.452, 3.1, 2.4), scripted(2.2, 2.1, 1.93, 1.6, 1.52, 1.55)) ==
-      Seq(4.452, 3.1, 2.4, 2.2, 2.1, 1.93, 1.6, 1.52, 1.55))
-    // ...and the escalation is granted ONCE: a row still descending
-    // after base+bonus stops at 6 extras total
-    assert(extend(Seq(9.0, 8.0, 7.0), scripted(6.0, 5.0, 4.0, 3.0, 2.5, 2.0)) ==
-      Seq(9.0, 8.0, 7.0, 6.0, 5.0, 4.0, 3.0, 2.5, 2.0))
-    // the r15 q01 shape: sub-second tail (0.351 < bonusMinS) never
-    // escalates — base budget only
-    assert(extend(Seq(0.555, 0.48, 0.42), scripted(0.40, 0.38, 0.351)) ==
-      Seq(0.555, 0.48, 0.42, 0.40, 0.38, 0.351))
-    // multi-second but span already < 1.3 after the first batch
-    // (2.5/1.95 = 1.28): the floor is near, no bonus
-    assert(extend(Seq(2.5, 2.3, 2.1), scripted(2.05, 2.0, 1.95)) ==
-      Seq(2.5, 2.3, 2.1, 2.05, 2.0, 1.95))
-    // a row that turns non-monotone inside the base batch never
-    // reaches the bonus check
-    assert(extend(Seq(4.0, 3.0, 2.0), scripted(1.9, 1.9)) ==
-      Seq(4.0, 3.0, 2.0, 1.9, 1.9))
-  }
-
-  test("post-merge absorb: a crashed absorber extra returns the ORIGINAL row; extension crashes keep the plateau; real descents still trim") {
-    def scripted(samples: Double*): () => Double = {
-      val it = samples.iterator
-      () => it.next()
-    }
-    def pma(runs: Seq[Double], more: () => Double) =
-      Bench.postMergeAbsorb(runs, more, spreadThreshold = 3.0,
-        flatRatio = 1.5, minSeconds = 1.0, minKept = 3, maxExtra = 3,
-        extendMinRatio = 1.15, maxExtendDraws = 3)
-    // the advice-item-1 hole: descent signature present, the extra
-    // draw CRASHES -> descentAbsorb returns the -1-bearing array
-    // loud; the old inline code shipped it and the row flipped to
-    // crashed. The contract is mergeRetries': original runs, no
-    // trim, no extension
-    assert(pma(Seq(9.0, 3.0, 1.0), scripted(-1.0)) ==
-      ((Seq(9.0, 3.0, 1.0), Seq.empty, 0)))
-    // a real post-merge descent still trims to the plateau (the
-    // plateau here is non-monotone, so the follow-on floor extension
-    // correctly stays quiet too)
-    val (f2, d2, e2) = pma(
-      Seq(16.082, 11.438, 6.366, 4.729, 4.098, 4.368),
-      () => fail("plateau already present — no draw"))
-    assert(f2 == Seq(4.729, 4.098, 4.368) &&
-      d2 == Seq(16.082, 11.438, 6.366) && e2 == 0)
-    // a crashed EXTENSION draw discards only the extension — the
-    // (non-descent) merged array survives as-is with 0 extensions
-    assert(pma(Seq(3.0, 2.0, 1.5), scripted(-1.0)) ==
-      ((Seq(3.0, 2.0, 1.5), Seq.empty, 0)))
-    // a merge-created strictly-descending tail extends to its floor
-    val (f4, d4, e4) = pma(Seq(3.0, 2.0, 1.5), scripted(1.5))
-    assert(f4 == Seq(3.0, 2.0, 1.5, 1.5) && d4.isEmpty && e4 == 1)
-  }
-
   test("adjudication staleness: with a pinned-round baseline, pre-pin adjudications read as unadjudicated; current ones still silence") {
     val dir = Files.createTempDirectory("benchgate4")
     val cur = dir.resolve("cur.json")
@@ -401,8 +256,7 @@ class BenchGateSpec extends AnyFunSuite {
       Files.writeString(path,
         s"""{"metric":"total","value":9.9,"unit":"sec","queries":{$queries},""" +
           s""""sf":"x","meta":{"cpus":4,"load_avg":1.5,"steal_session_s":0.2,""" +
-          s""""iowait_session_s":0.1,"steal_dodged_runs":2,""" +
-          s""""descent_absorbed_runs":0,"floor_extend_draws":1,"wall_s":100.0,""" +
+          s""""iowait_session_s":0.1,"wall_s":100.0,""" +
           s""""data":{"hash":"$hash","bytes":1}}}""")
     }
     val s1 = dir.resolve("s1.json"); val s2 = dir.resolve("s2.json")
@@ -475,38 +329,5 @@ class BenchGateSpec extends AnyFunSuite {
     val d = diff()
     assert(d.get("comparable").asBoolean() && d.get("comparable_reason").isNull, d.toString)
     assert(Bench.unadjudicatedIn(out.toString, "drifts") == Seq("q_slow"))
-  }
-
-  test("steal dodge: stolen runs discard and re-draw; crashes and quiet runs keep") {
-    // scripted sample stream: (wall, steal) pairs drawn in order
-    def scripted(samples: (Double, Double)*): () => (Double, Double) = {
-      val it = samples.iterator
-      () => it.next()
-    }
-    // a stolen successful run is discarded and re-drawn; kept stays 3
-    val (k1, d1) = Bench.stealDodge(
-      scripted((1.0, 0.0), (9.0, 2.4), (1.1, 0.1), (1.0, 0.2)),
-      n = 3, thresholdS = 0.5, maxRetries = 3)
-    assert(k1 == Seq((1.0, 0.0), (1.1, 0.1), (1.0, 0.2)), k1)
-    assert(d1 == Seq((9.0, 2.4)), d1)
-    // a FAILED run is never dodged, however stolen its window — the
-    // crash must surface in the kept array
-    val (k2, d2) = Bench.stealDodge(
-      scripted((1.0, 0.0), (-1.0, 3.0), (1.0, 0.0)),
-      n = 3, thresholdS = 0.5, maxRetries = 3)
-    assert(k2 == Seq((1.0, 0.0), (-1.0, 3.0), (1.0, 0.0)), k2)
-    assert(d2.isEmpty, d2)
-    // the retry budget bounds a stormy box: past maxRetries, stolen
-    // runs are KEPT (the bench must terminate and report honestly)
-    val (k3, d3) = Bench.stealDodge(
-      scripted((5.0, 1.0), (5.1, 1.1), (5.2, 1.2), (5.3, 1.3), (5.4, 1.4)),
-      n = 3, thresholdS = 0.5, maxRetries = 2)
-    assert(d3 == Seq((5.0, 1.0), (5.1, 1.1)), d3)
-    assert(k3 == Seq((5.2, 1.2), (5.3, 1.3), (5.4, 1.4)), k3)
-    // a quiet session draws exactly n samples, zero discards
-    val (k4, d4) = Bench.stealDodge(
-      scripted((0.5, 0.0), (0.5, 0.0), (0.5, 0.0)),
-      n = 3, thresholdS = 0.5, maxRetries = 3)
-    assert(k4.size == 3 && d4.isEmpty)
   }
 }

@@ -73,6 +73,25 @@ class LoopRiderSpec extends SparkSpec {
       "the guard path left checkpoint blocks behind")
   }
 
+  test("fixpoint records <name>, <name>_wms and <name>_tms; drain returns them, then clears") {
+    // perfbench's Batch.rounds counts a LoopStats key as a loop's
+    // rounds only when its `_wms` twin exists, so the three keys are
+    // a contract, not a detail
+    LoopStats.drain()
+    // ids climb by one and stop at 3: 2, 1, then 0 rows below 3
+    val (st, curve) = Loop.fixpoint("stats_probe",
+      spark.range(1000000L).toDF("id"), count_if(col("id") < 3L), maxRounds = 10)(
+      s => s.select(least(col("id") + 1L, lit(3L)).as("id")))
+    Ck.release(st)
+    assert(curve.map(_._2) == Seq(2L, 1L, 0L), curve)
+    val stats = LoopStats.drain()
+    assert(stats.keySet == Set("stats_probe", "stats_probe_wms", "stats_probe_tms"), stats)
+    assert(stats("stats_probe") == 3L, stats)
+    assert(stats("stats_probe_wms") > 0L, stats)
+    assert(stats("stats_probe_tms") > 0L, "rounds that ran tasks metered no task time")
+    assert(LoopStats.drain().isEmpty)
+  }
+
   test("two cc loops at once, in two sessions on two threads, both match the oracle") {
     // union-find over the driver-side edge list: the component label
     // is the smallest member id, as ops.connectedComponents defines it
