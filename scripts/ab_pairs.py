@@ -12,7 +12,10 @@ quartiles, the pairs the change won (ties count for neither side) and whether
 a gain may be claimed: the change wins at least nine tenths of all pairs run
 and the medians differ, in the metric's better direction, by more than the
 parent's interquartile range. Runs that fail or read incorrect are reported
-and their pairs count as not won.
+and their pairs count as not won. For a batch workload it also prints each
+query's median CPU per side (the query's mean over a run's timed passes, from
+the run's `notes.query_cpu_ms`), so a batch result can name the query that
+moved.
 
 The script only runs the benchmark; it writes nothing into either checkout
 beyond what perfbench/run.py itself leaves under .bench_build/.
@@ -37,6 +40,26 @@ def build(checkout):
                    stdout=subprocess.DEVNULL)
 
 
+def query_cpu(checkout, workload, seed):
+    """Per-query CPU ms of one untraced run: the mean over its timed passes.
+    notes.query_cpu_ms reads "q161:8210/1114/902 q23_:..." and each query's
+    first value is its untimed warm pass."""
+    path = os.path.join(checkout, ".bench_build", "perfbench", "results",
+                        f"{workload}-s{seed}-t0.json")
+    try:
+        with open(path) as fh:
+            notes = json.load(fh).get("notes", {})
+    except (OSError, ValueError):
+        return {}
+    out = {}
+    for item in notes.get("query_cpu_ms", "").split():
+        name, _, vals = item.partition(":")
+        timed = [float(v) for v in vals.split("/")[1:] if v]
+        if timed:
+            out[name] = statistics.mean(timed)
+    return out
+
+
 def run(checkout, workload, seed, seconds):
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -46,7 +69,8 @@ def run(checkout, workload, seed, seconds):
         return {"ok": False, "error": (p.stderr.strip().splitlines() or ["no output"])[-1]}
     r = json.loads(lines[-1])
     return {"ok": bool(r["correct"]), "failed": r["failed"], "attempted": r["attempted"],
-            "metrics": {k: v["value"] for k, v in r["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in r["metrics"].items()},
+            "query_cpu_ms": query_cpu(checkout, workload, seed)}
 
 
 def main():
@@ -103,6 +127,19 @@ def main():
         print(f"{name:<24}{cell['parent']:>34}{cell['change']:>34}"
               f"{med['change'] / med['parent']:>8.3f}{won:>5}/{len(pairs):<2}  "
               f"{'holds' if claim else 'not met'} (gap {gap:.4g} vs parent IQR {iqr:.4g})")
+
+    queries = sorted({q for p in pairs for s in ("parent", "change") if p[s]["ok"]
+                      for q in p[s].get("query_cpu_ms", {})})
+    if queries:
+        print(f"{'query cpu ms':<24}{'parent median':>16}{'change median':>16}{'ratio':>8}{'won':>8}")
+    for q in queries:
+        both = [p for p in pairs if all(p[s]["ok"] and q in p[s]["query_cpu_ms"] for s in ("parent", "change"))]
+        if not both:
+            continue
+        med = {s: statistics.median(p[s]["query_cpu_ms"][q] for p in both) for s in ("parent", "change")}
+        won = sum(1 for p in both if p["change"]["query_cpu_ms"][q] < p["parent"]["query_cpu_ms"][q])
+        print(f"{q:<24}{med['parent']:>16.1f}{med['change']:>16.1f}"
+              f"{med['change'] / med['parent']:>8.3f}{won:>5}/{len(both):<2}")
 
 
 if __name__ == "__main__":

@@ -172,6 +172,12 @@ object Bench {
       iowaitByQuery = accrue(iowaitByQuery, name, io0, procStatTick(5))
       runs
     }
+    // the Profile of each query's three timed runs (sums over them,
+    // and the five slowest jobs): which layer a drift moved — jobs,
+    // stages, tasks, task time, shuffle — and which job got slow
+    var profileByQuery = Map.empty[String, Profile.Group]
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
     var results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val startS = (System.nanoTime() - tStart) / 1e9
       // ONE untimed warm-up run before the three timed runs: the
@@ -184,7 +190,8 @@ object Bench {
       // against minutes-long stages; at sf0.1 it dominates.
       timeOnce(SparkEntry.queries(name))
       LoopStats.drain() // discard any counts from warm-up/prior query
-      val runs = timedRuns(name, 3)
+      val (runs, profile) = Profile.run(spark, s"bench_$name")(timedRuns(name, 3))
+      profileByQuery += (name -> profile)
       val agg = if (runs.exists(_ < 0)) -1.0 else runs.min
       ccacheByQuery += (name -> codeCacheMb())
       // round counts are data-driven and identical across the runs,
@@ -237,9 +244,13 @@ object Bench {
         .map(v => ",\"steal_s\":" + fmt(v)).getOrElse("")
       val iowaitField = iowaitByQuery.get(k)
         .map(v => ",\"iowait_s\":" + fmt(v)).getOrElse("")
+      val profileField = profileByQuery.get(k).map(g => ",\"profile\":" +
+        json.writeValueAsString(Map("counters" -> g.counters,
+          "slow_jobs" -> g.jobs.sortBy(j => (-j.wallMs, j.id)).take(5)))).getOrElse("")
       "\"" + k + "\":{\"start_s\":" + fmt(startS) +
         ",\"runs\":" + runs.map(fmt).mkString("[", ",", "]") +
-        spreadField + ccField + stealField + iowaitField + roundsField + "}"
+        spreadField + ccField + stealField + iowaitField + roundsField +
+        profileField + "}"
     }.mkString("{", ",", "}")
     // run metadata: separates plan changes from box noise when
     // comparing rounds (a loaded box shows up as GC time / load

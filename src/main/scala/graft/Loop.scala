@@ -48,47 +48,6 @@ object Loop {
     * the second-job fallback. */
   private val RiderWait: FiniteDuration = 500.millis
   private val seq = new AtomicLong()
-  // per-loop cost split (bench_detail "rounds" side channel): wall ns
-  // spent inside checkpoint actions vs executor task ms burned
-  // during them. Thread-local because loops are driver-side
-  // sequential per query; the SparkListener total is session-global
-  // and its bus is ASYNC, so the task split is approximate (a stage
-  // completing around a round boundary may land in the neighbor's
-  // window) — right at loop totals, indicative per round.
-  private val ckWallNs = ThreadLocal.withInitial[AtomicLong](() => new AtomicLong())
-  private val ckTaskMs = ThreadLocal.withInitial[AtomicLong](() => new AtomicLong())
-  private[graft] val taskMsTotal = new AtomicLong()
-  private val taskHooked =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean]())
-
-  private[graft] def ensureTaskListener(s: SparkSession): Unit = {
-    val sc = s.sparkContext
-    val needs = taskHooked.synchronized {
-      if (taskHooked.containsKey(sc)) false
-      else { taskHooked.put(sc, java.lang.Boolean.TRUE); true }
-    }
-    if (needs) sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = ev.stageInfo.taskMetrics
-        if (m != null) taskMsTotal.addAndGet(m.executorRunTime)
-      }
-    })
-  }
-
-  /** Snapshot-and-reset the calling thread's accumulated checkpoint
-    * cost: (wall ms inside checkpoint actions, executor task ms
-    * during them). LoopStats.recordLoop drains this per named loop
-    * so bench_detail can split a loop query's fixed per-round floor
-    * (wall >> task/cores) from its data cost (task-dominated).
-    */
-  def drainTimes(): (Long, Long) = {
-    val w = ckWallNs.get().getAndSet(0L) / 1000000L
-    val t = ckTaskMs.get().getAndSet(0L)
-    (w, t)
-  }
-
   /** Run `body` with adaptive execution OFF, restoring the previous
     * setting after (r16). WHY a fixpoint loop wants this for its
     * round materializations: `LogicalRDD.fromDataset` (the
@@ -106,7 +65,7 @@ object Loop {
     * layout reuse the loop wants, sized by the ONE-TIME repartition
     * that established it (shuffle.partitions at scale). Session-conf
     * swap is safe here because loops drive their rounds sequentially
-    * on one thread (the LoopStats thread-local contract).
+    * on one thread.
     */
   private def noAdaptive[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.enabled"
@@ -199,35 +158,33 @@ object Loop {
     * ([[noAdaptive]]). The checkpoint carries measured statistics:
     * a round body that joins the previous round would otherwise
     * compound the inherited size estimate into a BigInt the planner
-    * hangs on past ~12 rounds.
+    * hangs on past ~12 rounds. The whole call is one [[Profile.round]]:
+    * its jobs, the fallback's included, land in the round trace that
+    * `LoopStats.recordLoop` reads.
     */
   def checkpoint(frame: DataFrame, metric: Column,
-      keepLayout: Boolean = false): (DataFrame, Long) = {
-    ensureTaskListener(frame.sparkSession)
-    val value = coalesce(metric, lit(0L)).as("mv")
-    val obs = Observation(s"graft_loop_${seq.incrementAndGet()}")
-    val t0 = System.nanoTime()
-    val task0 = taskMsTotal.get()
-    def materialize(): DataFrame =
-      org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
-        frame.observe(obs, value).localCheckpoint(true))
-    val ck =
-      if (keepLayout) noAdaptive(frame.sparkSession)(materialize())
-      else materialize()
-    val n =
-      try {
-        val row = Await.result(obs.future, RiderWait)
-        rides.incrementAndGet()
-        row.getLong(0)
-      } catch {
-        case _: TimeoutException =>
-          fallbacks.incrementAndGet()
-          secondJob(ck, metric)
-      }
-    ckWallNs.get().addAndGet(System.nanoTime() - t0)
-    ckTaskMs.get().addAndGet(math.max(0L, taskMsTotal.get() - task0))
-    (ck, n)
-  }
+      keepLayout: Boolean = false): (DataFrame, Long) =
+    Profile.round(frame.sparkSession) {
+      val value = coalesce(metric, lit(0L)).as("mv")
+      val obs = Observation(s"graft_loop_${seq.incrementAndGet()}")
+      def materialize(): DataFrame =
+        org.apache.spark.sql.GraftPlanStats.withMeasuredStats(
+          frame.observe(obs, value).localCheckpoint(true))
+      val ck =
+        if (keepLayout) noAdaptive(frame.sparkSession)(materialize())
+        else materialize()
+      val n =
+        try {
+          val row = Await.result(obs.future, RiderWait)
+          rides.incrementAndGet()
+          row.getLong(0)
+        } catch {
+          case _: TimeoutException =>
+            fallbacks.incrementAndGet()
+            secondJob(ck, metric)
+        }
+      (ck, n)
+    }
 
   /** The fallback: `metric` recomputed by a second job over the
     * checkpointed rows. */

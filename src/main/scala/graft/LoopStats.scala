@@ -1,13 +1,10 @@
 package graft
 
-/** Round-count side channel for the convergence-loop drivers
-  * (connected components, BFS, PageRank, k-means, label propagation).
-  * The loops stop on DATA-driven conditions, so their bench times are
-  * rounds x per-round cost; recording the round count next to the
-  * time makes a future drift attributable to "more rounds" vs
-  * "slower rounds" without a re-run (round-5 verdict, What's wrong
-  * item 3). Driver-side only, trivially small (one int per loop per
-  * query), and cleared by the bench harness between queries.
+/** Round counts of the convergence loops, per query. The loops stop
+  * on data-driven conditions, so a loop query's time is rounds x
+  * per-round cost, and the count tells "more rounds" from "slower
+  * rounds" without a re-run. Harnesses (Bench, perfbench) drain it
+  * between queries.
   */
 object LoopStats {
   private val counts =
@@ -21,39 +18,29 @@ object LoopStats {
     */
   def peek(loop: String): Long = counts.getOrDefault(loop, 0L)
 
-  /** Record a loop's round count PLUS its checkpoint cost split
-    * ([[Loop.drainTimes]] accumulated since the previous drain):
-    * `<loop>_wms` = wall ms inside the per-round checkpoint actions,
-    * `<loop>_tms` = executor task ms burned during them (async
-    * listener totals — approximate at round boundaries, right in
-    * sum). The judge-facing point (round-8 verdict item 7): at sf0.1
-    * wall >> task/cores means the loop's cost is per-round
-    * scheduling+planning floor, not data — the split makes that
-    * readable straight from bench_detail without a re-run. Values
-    * are from the LAST bench run of a query (record overwrites).
+  /** Record a loop's round count plus its checkpoint cost split from
+    * the calling thread's [[Profile]] rounds since the previous record
+    * or drain: `<loop>_wms` = driver wall ms inside the checkpoint
+    * actions, `<loop>_tms` = executor task ms of their jobs. Wall >>
+    * task/cores means the loop pays a per-round floor, not data.
     */
   def recordLoop(loop: String, rounds: Long): Unit = {
+    val trace = Profile.takeRounds()
     counts.put(loop, rounds)
-    val (wallMs, taskMs) = Loop.drainTimes()
-    counts.put(s"${loop}_wms", wallMs)
-    counts.put(s"${loop}_tms", taskMs)
+    counts.put(s"${loop}_wms", trace.map(_.wallNs).sum / 1000000L)
+    counts.put(s"${loop}_tms", trace.map(_.counters.taskRunMs).sum)
   }
 
-  /** Snapshot and clear — the bench calls this after each query's
-    * runs, so counts never leak across queries. Also resets the
-    * CALLING THREAD's Loop time accumulators so an un-drained loop
-    * (or a stray Loop.checkpoint outside any recordLoop scope) cannot bleed
-    * cost into the next query's first recorded loop. The time
-    * accumulators are ThreadLocal, so this reset only covers
-    * harnesses that run queries and drain on the SAME thread (all
-    * of Bench/BenchOne/ScaleProbe today) — a harness that runs
-    * queries on worker threads must drain on those threads.
+  /** Snapshot and clear, and forget the calling thread's unrecorded
+    * rounds, so a stray Loop.checkpoint cannot bleed cost into the next
+    * query's first recorded loop (rounds belong to the thread that ran
+    * them: drain on the thread that runs the queries).
     */
   def drain(): Map[String, Long] = {
     import scala.jdk.CollectionConverters._
     val snap = counts.asScala.toMap
     counts.clear()
-    Loop.drainTimes()
+    Profile.takeRounds()
     snap
   }
 }

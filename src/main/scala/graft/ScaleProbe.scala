@@ -31,20 +31,21 @@ import graft.api.ops
   */
 object ScaleProbe {
 
-  /** Executor task-ms meter for the floor-vs-work decomposition
-    * (round-11 verdict item 2): wall alone cannot say whether a leg
-    * lost to per-job FLOOR (scheduling/planning; wall >> task/cores)
-    * or to WORK (task-dominated). Reads Loop's session-global stage
-    * total; listener totals are async, so per-leg splits are
-    * indicative, not exact — right at leg granularity, which is all
-    * the probe reports.
+  private val legs = new java.util.concurrent.atomic.AtomicLong()
+  /** Run `f` as one leg, returning (result, wall seconds, executor task
+    * ms) — the floor-vs-work decomposition: wall alone cannot say
+    * whether a leg lost to per-job FLOOR (scheduling/planning; wall >>
+    * task/cores) or to WORK (task-dominated). The task ms are exactly
+    * the leg's jobs, read from its [[Profile]] job group.
     */
-  private def taskMs: Long = Loop.taskMsTotal.get()
-  /** Run `f`, returning (result, wall seconds, ~executor task ms). */
   private def timedLeg[T](f: => T): (T, Double, Long) = {
-    val t0 = System.nanoTime(); val m0 = taskMs
-    val r = f
-    ((r, (System.nanoTime() - t0) / 1e9, taskMs - m0))
+    val ((r, wallS), g) =
+      Profile.run(SparkSession.active, s"scaleprobe_${legs.incrementAndGet()}") {
+        val t0 = System.nanoTime()
+        val r = f
+        (r, (System.nanoTime() - t0) / 1e9)
+      }
+    (r, wallS, g.counters.taskRunMs)
   }
 
   /** One past the max node id — the replica stride. */
@@ -161,25 +162,21 @@ object ScaleProbe {
   final case class LoopRun(rounds: Int, totalS: Double, roundS: Seq[Double],
       taskMs: Long)
 
-  /** Run a probe-accepting loop, timing round boundaries: the loops
-    * localCheckpoint(eager) each round before invoking the probe, so
-    * probe-to-probe deltas ARE the per-round materialization costs.
-    * Also meters executor task-ms across the leg (round-15, verdict
-    * item 6): wall at these sizes is per-job-floor-dominated, so the
-    * scale exponent the 100-TB claim rests on is TASK-TIME growth vs
-    * edge growth — expect ~linear task-time while rounds track the
-    * graph's structure.
+  /** Run a probe-accepting loop as one [[timedLeg]], timing round
+    * boundaries: the loops checkpoint each round before invoking the
+    * probe, so probe-to-probe deltas ARE the per-round costs. Wall at
+    * these sizes is per-job floor, so the scale exponent the 100-TB
+    * claim rests on is the leg's task-ms growth against edge growth.
     */
   private def timeLoop(run: ((Int, DataFrame) => Unit) => Int): LoopRun = {
     val marks = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val t0 = System.nanoTime(); val m0 = taskMs
+    val t0 = System.nanoTime()
     val probe = (_: Int, _: DataFrame) => {
       marks += (System.nanoTime() - t0) / 1e9; ()
     }
-    val rounds = run(probe)
-    val total = (System.nanoTime() - t0) / 1e9
+    val (rounds, total, tms) = timedLeg(run(probe))
     val roundS = marks.toSeq.zip(0.0 +: marks.toSeq).map { case (b, a) => b - a }
-    LoopRun(rounds, total, roundS, taskMs - m0)
+    LoopRun(rounds, total, roundS, tms)
   }
 
   private def fmt(v: Double): String =
@@ -198,7 +195,6 @@ object ScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Loop.ensureTaskListener(spark)
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup
 
     val base = graft.queries.Mining.sparseUnd(spark, sfDir)
@@ -244,14 +240,10 @@ object ScaleProbe {
         .select(col("x").as("a"), (col("x") + 1L).as("b"))
       val ccDelta = edges.join(ccDels, Seq("a", "b"), "left_anti")
         .unionByName(ccIns).distinct().localCheckpoint(true)
-      val warmT0 = System.nanoTime()
-      val (warmLab, warmCurve) =
-        ops.incrementalConnectedComponents(ccLabels, ccDelta, ccDels, "a", "b")
-      val warmS = (System.nanoTime() - warmT0) / 1e9
-      val coldT0 = System.nanoTime()
-      val (coldLab, coldCurve) =
-        ops.connectedComponentsCurve(ccDelta, "a", "b")
-      val coldS = (System.nanoTime() - coldT0) / 1e9
+      val ((warmLab, warmCurve), warmS, _) = timedLeg(
+        ops.incrementalConnectedComponents(ccLabels, ccDelta, ccDels, "a", "b"))
+      val ((coldLab, coldCurve), coldS, _) =
+        timedLeg(ops.connectedComponentsCurve(ccDelta, "a", "b"))
       val agree = warmLab.join(coldLab, Seq("id"))
         .filter(warmLab("component") =!= coldLab("component")).isEmpty
       require(agree, "warm-start cc labels diverge from the cold rerun")
@@ -267,14 +259,10 @@ object ScaleProbe {
       // component; this leg shows the advantage the warm start
       // exists for.
       val insDelta = edges.unionByName(ccIns).distinct().localCheckpoint(true)
-      val insT0 = System.nanoTime()
-      val (insLab, insCurve) = ops.incrementalConnectedComponents(
-        ccLabels, insDelta, edges.filter(lit(false)), "a", "b")
-      val insS = (System.nanoTime() - insT0) / 1e9
-      val coldInsT0 = System.nanoTime()
-      val (coldInsLab, coldInsCurve) =
-        ops.connectedComponentsCurve(insDelta, "a", "b")
-      val coldInsS = (System.nanoTime() - coldInsT0) / 1e9
+      val ((insLab, insCurve), insS, _) = timedLeg(ops.incrementalConnectedComponents(
+        ccLabels, insDelta, edges.filter(lit(false)), "a", "b"))
+      val ((coldInsLab, coldInsCurve), coldInsS, _) =
+        timedLeg(ops.connectedComponentsCurve(insDelta, "a", "b"))
       val agreeIns = insLab.join(coldInsLab, Seq("id"))
         .filter(insLab("component") =!= coldInsLab("component")).isEmpty
       require(agreeIns, "inserts-only warm cc labels diverge from the cold rerun")
@@ -321,15 +309,11 @@ object ScaleProbe {
       // (8 fixed half-steps; no per-half-step edge re-shuffle to
       // grow quadratically in block count — guide §2.2's failure
       // shape). Wall at these sizes is per-job floor; read task_ms.
-      val (hitsN, hitsS, hitsTms) = {
-        graft.LoopStats.drain()
-        val ((n), w, tms) = timedLeg {
-          val out = ops.hits(edges, "a", "b")
-          val c = out.count()
-          graft.Ck.release(out)
-          c
-        }
-        (n, w, tms)
+      val (hitsN, hitsS, hitsTms) = timedLeg {
+        val out = ops.hits(edges, "a", "b")
+        val c = out.count()
+        graft.Ck.release(out)
+        c
       }
       val hitsJson =
         s"""{"nodes_scored":$hitsN,"wall_s":${fmt(hitsS)},"task_ms":$hitsTms}"""
@@ -347,13 +331,9 @@ object ScaleProbe {
           .select(col("b").as("src"), col("a").as("dst")))
         .distinct().localCheckpoint(true)
       graft.LoopStats.drain()
-      val (nScc, sccS, sccTms) = {
-        val ((labels, n), w, tms) = timedLeg {
-          val l = ops.scc(dirE, "src", "dst")
-          (l, l.select(col("scc")).distinct().count())
-        }
-        graft.Ck.release(labels)
-        (n, w, tms)
+      val (nScc, sccS, sccTms) = timedLeg {
+        val l = ops.scc(dirE, "src", "dst")
+        try l.select(col("scc")).distinct().count() finally graft.Ck.release(l)
       }
       graft.Ck.release(dirE)
       val sccStats = graft.LoopStats.drain()
@@ -378,13 +358,9 @@ object ScaleProbe {
         .localCheckpoint(true)
       val nRing = ring.count()
       graft.LoopStats.drain()
-      val (nRingScc, ringS, ringTms) = {
-        val ((labels, n), w, tms) = timedLeg {
-          val l = ops.scc(ring, "src", "dst")
-          (l, l.select(col("scc")).distinct().count())
-        }
-        graft.Ck.release(labels)
-        (n, w, tms)
+      val (nRingScc, ringS, ringTms) = timedLeg {
+        val l = ops.scc(ring, "src", "dst")
+        try l.select(col("scc")).distinct().count() finally graft.Ck.release(l)
       }
       graft.Ck.release(ring)
       val ringStats = graft.LoopStats.drain()
@@ -400,13 +376,8 @@ object ScaleProbe {
       // exponent is what the 100-TB claim rests on. maxHops scales
       // with m like the BFS leg (the diameter genuinely grows).
       graft.LoopStats.drain()
-      val (diamRow, diamS, diamTms) = {
-        val ((_, r), w, tms) = timedLeg {
-          val d = ops.diameterSweep(edges, "a", "b", maxHops = 40 + 2 * m)
-          (d, d.head())
-        }
-        (r, w, tms)
-      }
+      val (diamRow, diamS, diamTms) =
+        timedLeg(ops.diameterSweep(edges, "a", "b", maxHops = 40 + 2 * m).head())
       val diamStats = graft.LoopStats.drain()
       val diameterJson =
         s"""{"cc_rounds":${diamStats.getOrElse("cc", -1L)},""" +
@@ -423,7 +394,6 @@ object ScaleProbe {
       // predicate), so the per-seed frontiers must walk the bridge
       // chain — hops track the chain diameter while task-ms tracks
       // nodes × (fixed) seeds.
-      graft.LoopStats.drain()
       val ((clCensus, clHops), clS, clTms) = timedLeg {
         val (cent, h) = graft.api.ops.closenessSample(
           edges, "a", "b", c => c < lit(n) && c % mod === 0L,
@@ -446,19 +416,14 @@ object ScaleProbe {
       // claims: warm movement tracks the delta's disturbance (not
       // corpus size) at every scale, and cold task-ms carries the
       // edge-growth exponent.
-      val ((prWarmRes, prWarmS, prWarmTms),
-           (prColdRes, prColdS, prColdTms)) = {
-        def leg(init: Option[DataFrame]) = {
-          val ((ranks, r), w, tms) = timedLeg {
-            val (r1, c1, n1) = ops.pagerank(ccDelta, "a", "b",
-              epsPerNode = 1000L, maxRounds = 60, init = init)
-            (r1, (n1, c1))
-          }
-          graft.Ck.release(ranks)
-          (r, w, tms)
-        }
-        (leg(Some(prRanks)), leg(None))
+      def prLeg(init: Option[DataFrame]) = timedLeg {
+        val (ranks, curve, rounds) = ops.pagerank(ccDelta, "a", "b",
+          epsPerNode = 1000L, maxRounds = 60, init = init)
+        graft.Ck.release(ranks)
+        (rounds, curve)
       }
+      val (prWarmRes, prWarmS, prWarmTms) = prLeg(Some(prRanks))
+      val (prColdRes, prColdS, prColdTms) = prLeg(None)
       graft.Ck.release(prRanks)
       graft.Ck.release(ccDelta)
       val prWarmJson =
@@ -612,11 +577,8 @@ object ScaleProbe {
       val nDocs = docsRep.count()
       val dBase = docsRep.filter(col("doc_id") % 8L =!= 0L)
       val dDelta = docsRep.filter(col("doc_id") % 8L === 0L)
-      val lb0T0 = System.nanoTime()
-      val lb0Tms0 = taskMs
-      val (ndLab0, ndCurve0) = ops.nearDupLabels(dBase, "doc_id", "text")
-      val lb0S = (System.nanoTime() - lb0T0) / 1e9
-      val lb0Tms = taskMs - lb0Tms0
+      val ((ndLab0, ndCurve0), lb0S, lb0Tms) =
+        timedLeg(ops.nearDupLabels(dBase, "doc_id", "text"))
       // BAND-SHARE A/B (r17, verdict item 6 — the r16 day-job
       // mechanism measured at scale): the r16 dedup day jobs derive
       // the base corpus's shingle + 12-perm minhash band table ONCE
@@ -629,12 +591,8 @@ object ScaleProbe {
       // bench hides it under the per-job floor (r16 verdict item 5:
       // "scale evidence is plan-shaped, not measured" — this leg
       // converts it). bs_prep_s prices the scan itself.
-      val bsPrepT0 = System.nanoTime()
-      val bsPrepTms0 = taskMs
-      val bsBands = ops.nearDupBands(dBase, "doc_id", "text")
-        .localCheckpoint(true)
-      val bsPrepS = (System.nanoTime() - bsPrepT0) / 1e9
-      val bsPrepTms = taskMs - bsPrepTms0
+      val (bsBands, bsPrepS, bsPrepTms) = timedLeg(
+        ops.nearDupBands(dBase, "doc_id", "text").localCheckpoint(true))
       val ((bsLabN), bsSharedS, bsSharedTms) = timedLeg {
         val (l, c) = ops.nearDupLabels(dBase, "doc_id", "text",
           precomputedBands = Some(bsBands))
@@ -650,41 +608,36 @@ object ScaleProbe {
           s""""shared_s":${fmt(bsSharedS)},"shared_tms":$bsSharedTms,""" +
           s""""prep_s":${fmt(bsPrepS)},"prep_tms":$bsPrepTms,""" +
           s""""labels":$bsLabN}"""
-      val pdT0 = System.nanoTime()
-      val pdCount = ops.incrementalNearDupPairs(
-        dBase, dDelta, "doc_id", "text", 0.5).count()
-      val pdS = (System.nanoTime() - pdT0) / 1e9
+      val (pdCount, pdS, _) = timedLeg(ops.incrementalNearDupPairs(
+        dBase, dDelta, "doc_id", "text", 0.5).count())
       // same pass with the delta-proportional verify (pinCandidates):
       // the candidate endpoint ids broadcast-semi-filter the shingle
       // scan map-side, so the verify exchanges carry candidate-
       // adjacent docs instead of the corpus. Runs after the default
       // pass in the same JVM (warmer), so read the ratio as an upper
       // bound on the win.
-      val pdPinT0 = System.nanoTime()
-      val (pdPin, pdPinned) = ops.incrementalNearDupPairsEx(
-        dBase, dDelta, "doc_id", "text", 0.5, None, pinCandidates = true)
-      val pdPinCount = pdPin.count()
-      val pdPinS = (System.nanoTime() - pdPinT0) / 1e9
+      val ((pdPinned, pdPinCount), pdPinS, _) = timedLeg {
+        val (pdPin, pinned) = ops.incrementalNearDupPairsEx(
+          dBase, dDelta, "doc_id", "text", 0.5, None, pinCandidates = true)
+        (pinned, pdPin.count())
+      }
       require(pdPinCount == pdCount,
         s"pinned delta pairs $pdPinCount != default $pdCount")
       // release the precise handle — Ck.release(pdPin) would walk the
       // whole plan into docsRep's checkpoint (the shingle side reads
       // the replicated corpus), killing every later leg
       pdPinned.foreach(graft.Ck.release)
-      val fpT0 = System.nanoTime()
-      val fullPairs = ops.nearDupPairs(docsRep, "doc_id", "text", 0.5).count()
-      val fpS = (System.nanoTime() - fpT0) / 1e9
-      val ndWarmT0 = System.nanoTime()
+      val (fullPairs, fpS, _) =
+        timedLeg(ops.nearDupPairs(docsRep, "doc_id", "text", 0.5).count())
       // pinCandidates = false: pinning is the wrapper DEFAULT since
       // round 10, so the A/B baseline forces the cold verify shape
-      val (ndKept, ndLab1, ndCurve1) = ops.nearDupDedupIncremental(
-        dBase, dDelta, "doc_id", "text", ndLab0, pinCandidates = false)
-      val ndKeptN = ndKept.count()
-      val ndWarmS = (System.nanoTime() - ndWarmT0) / 1e9
-      val ndColdT0 = System.nanoTime()
-      val (ndColdLab, ndColdCurve) =
-        ops.nearDupLabels(docsRep, "doc_id", "text")
-      val ndColdS = (System.nanoTime() - ndColdT0) / 1e9
+      val ((ndLab1, ndCurve1, ndKeptN), ndWarmS, _) = timedLeg {
+        val (kept, lab, curve) = ops.nearDupDedupIncremental(
+          dBase, dDelta, "doc_id", "text", ndLab0, pinCandidates = false)
+        (lab, curve, kept.count())
+      }
+      val ((ndColdLab, ndColdCurve), ndColdS, _) =
+        timedLeg(ops.nearDupLabels(docsRep, "doc_id", "text"))
       // exact SET equality (two anti-joins), not count+intersection:
       // a warm run dropping node X while cold drops node Y keeps the
       // counts equal and the intersection agreeing — the weaker check
@@ -695,11 +648,11 @@ object ScaleProbe {
       require(sameLabels(ndLab1, ndColdLab),
         "incremental dedup labels diverge from the cold rerun")
       // warm insert day again with the delta-proportional verify
-      val ndPinT0 = System.nanoTime()
-      val (ndKeptP, ndLabP, _) = ops.nearDupDedupIncremental(
-        dBase, dDelta, "doc_id", "text", ndLab0, pinCandidates = true)
-      val ndKeptPN = ndKeptP.count()
-      val ndPinS = (System.nanoTime() - ndPinT0) / 1e9
+      val ((ndLabP, ndKeptPN), ndPinS, _) = timedLeg {
+        val (kept, lab, _) = ops.nearDupDedupIncremental(
+          dBase, dDelta, "doc_id", "text", ndLab0, pinCandidates = true)
+        (lab, kept.count())
+      }
       require(ndKeptPN == ndKeptN, s"pinned kept $ndKeptPN != $ndKeptN")
       require(sameLabels(ndLabP, ndColdLab),
         "pinned incremental dedup labels diverge from the cold rerun")
@@ -738,12 +691,11 @@ object ScaleProbe {
       require(sameLabels(delLab, delColdLab),
         "takedown dedup labels diverge from the cold rerun")
       // full-CDC day again with the delta-proportional verify
-      val delPinT0 = System.nanoTime()
-      val (delKeptP, delLabP, _) = ops.nearDupDedupDelta(
-        dBase, dDelta, ndDel, "doc_id", "text", ndLab0,
-        pinCandidates = true)
-      val delKeptPN = delKeptP.count()
-      val delPinS = (System.nanoTime() - delPinT0) / 1e9
+      val ((delLabP, delKeptPN), delPinS, _) = timedLeg {
+        val (kept, lab, _) = ops.nearDupDedupDelta(
+          dBase, dDelta, ndDel, "doc_id", "text", ndLab0, pinCandidates = true)
+        (lab, kept.count())
+      }
       require(delKeptPN == delKeptN, s"pinned del kept $delKeptPN != $delKeptN")
       require(sameLabels(delLabP, delColdLab),
         "pinned takedown dedup labels diverge from the cold rerun")
@@ -758,10 +710,8 @@ object ScaleProbe {
       // del_warm_pin_s + the band composition), its labels equal the
       // cold rerun at every scale (loud), and its band artifact is
       // exactly the surviving corpus's band count.
-      val bandsPrepT0 = System.nanoTime()
-      val bandsRep = ops.nearDupBands(dBase, "doc_id", "text")
-        .localCheckpoint(true)
-      val bandsPrepS = (System.nanoTime() - bandsPrepT0) / 1e9
+      val (bandsRep, bandsPrepS, _) = timedLeg(
+        ops.nearDupBands(dBase, "doc_id", "text").localCheckpoint(true))
       // STEADY-STATE takedown day (round-11 verdict item 2): the
       // uncomposed nearDupDedupDelta call as a production day makes
       // it — yesterday's materialized band table handed in (its
@@ -780,11 +730,11 @@ object ScaleProbe {
       require(sameLabels(delBandsRun, delColdLab),
         "steady-state takedown labels diverge from the cold rerun")
       graft.Ck.release(delBandsRun)
-      val cdT0 = System.nanoTime()
-      val day = ops.corpusDay(dBase, dDelta, ndDel, "doc_id", "text",
-        ndLab0, oldBands = Some(bandsRep))
-      val cdKeptN = day.kept.count()
-      val cdS = (System.nanoTime() - cdT0) / 1e9
+      val ((day, cdKeptN), cdS, _) = timedLeg {
+        val d = ops.corpusDay(dBase, dDelta, ndDel, "doc_id", "text",
+          ndLab0, oldBands = Some(bandsRep))
+        (d, d.kept.count())
+      }
       require(cdKeptN == delKeptN, s"corpusDay kept $cdKeptN != $delKeptN")
       require(sameLabels(day.labels, delColdLab),
         "corpusDay labels diverge from the cold rerun")

@@ -67,11 +67,13 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = table(s, d, "events")
-    val norm = df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampType => df
-      case _ => df.withColumn("ts", col("ts").cast(TimestampType))
+    def norm = {
+      val df = table(s, d, "events")
+      df.schema("ts").dataType match {
+        case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        case TimestampType => df
+        case _ => df.withColumn("ts", col("ts").cast(TimestampType))
+      }
     }
     // Spread like documents/embeddings: events also ships as ONE row
     // group, so without this every events consumer runs its scan +
@@ -100,6 +102,8 @@ object Tables {
     * condition is false and this is a no-op: no copy, no exchange,
     * nothing at 100 TB. The copy also inherits any normalization the
     * caller applied first (events' ts widening), so re-reads skip it.
+    * `df` is by-name: only the first call, which writes the copy (or
+    * finds the layout fine), builds and analyzes the source frame.
     *
     * CONTRACT: keyed on (path, mtime, size, target) — a testdata
     * regeneration under the same path gets a fresh copy; the copy
@@ -107,23 +111,24 @@ object Tables {
     * OS's past that). Concurrent first consumers in one JVM
     * serialize on the memo; separate JVMs write separate copies.
     */
-  private def spread(s: SparkSession, df: DataFrame, key: String): DataFrame = {
+  private def spread(s: SparkSession, df: => DataFrame, key: String): DataFrame = {
     val target = s.sparkContext.defaultParallelism
     val src = new java.io.File(key + ".parquet")
     val fp = s"${src.length}:${src.lastModified / 1000}:$target"
     val memoKey = s"$key@$fp"
+    lazy val frame = df
     val copy = spreadCopies.computeIfAbsent(memoKey, { _ =>
       // one driver-side plan cycle decides whether the scan already
       // yields enough splits (production layout: yes -> no-op)
-      if (df.rdd.getNumPartitions >= target) ""
+      if (frame.rdd.getNumPartitions >= target) ""
       else {
         val dir = java.nio.file.Files
           .createTempDirectory("graft_spread_").toString
-        df.repartition(target).write.mode("overwrite").parquet(dir)
+        frame.repartition(target).write.mode("overwrite").parquet(dir)
         dir
       }
     })
-    if (copy.isEmpty) df else read(s, copy)
+    if (copy.isEmpty) frame else read(s, copy)
   }
 
   // (memoKey -> copy dir, "" = layout already fine). JVM-global on

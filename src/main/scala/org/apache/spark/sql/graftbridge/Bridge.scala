@@ -73,4 +73,9 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(name, info, builder)
+
+  /** Post an event on the context's listener bus (private[spark]). */
+  def post(sc: org.apache.spark.SparkContext,
+      e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    sc.listenerBus.post(e)
 }

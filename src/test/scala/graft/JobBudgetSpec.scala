@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
 /** Job-count budgets for the mining-family bench creepers (round-12
   * verdict item 6: q165 +24%, q195 +31%, q196 +49% over two rounds —
   * every step under the 1.5x drift gate, so nothing ever flagged).
@@ -9,8 +7,8 @@ import java.util.concurrent.atomic.AtomicLong
   * the fact; this spec makes a plan-shape or job-count regression
   * FAIL A TEST at build time instead of hiding under the gate.
   *
-  * Method: count SparkListenerJobStart events whose job-group
-  * property matches a per-query group set around the run — group
+  * Method: the jobs of a per-query job group set around the run, read
+  * from graft.Profile once the listener bus delivered them — group
   * filtering keeps the count clean under sbt's parallel suite
   * execution, and local properties propagate to broadcast-exchange
   * threads (SQLExecution captures them), so broadcast jobs are
@@ -23,15 +21,6 @@ import java.util.concurrent.atomic.AtomicLong
 class JobBudgetSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  private val started = new AtomicLong()
-
-  /** One measured run of `name`: warm-up run first (the first
-    * consumer of a small table pays the one-off multi-split copy
-    * job — see Tables.spread — and the first read of each parquet
-    * file pays its one-off schema-inference job, which fills the
-    * Tables schema memo), then the counted run, with rider
-    * fallbacks measured over the counted window.
-    */
   /** Run `body`, then unpersist only the RDDs it newly registered
     * (id-diff against a before-snapshot). The previous cleanup
     * (clearCache() + unpersist-ALL on the shared session) could evict
@@ -53,14 +42,21 @@ class JobBudgetSpec extends SparkSpec {
       .values.foreach(_.unpersist(blocking = false))
   }
 
-  private def jobsOf(name: String): (Long, Long) = {
+  /** One measured run of `name`: warm-up run first (the first
+    * consumer of a small table pays the one-off multi-split copy
+    * job — see Tables.spread — and the first read of each parquet
+    * file pays its one-off schema-inference job, which fills the
+    * Tables schema memo), then the counted run's profile, with rider
+    * fallbacks measured over the counted window.
+    */
+  private def jobsOf(name: String): (Profile.Group, Long) = {
     scoped { SparkEntry.queries(name)(spark, dir).count() } // warm-up
     scoped {
       val fb0 = Loop.fallbacks.get()
-      val n = countJobs(s"jobbudget_$name${started.incrementAndGet()}") {
+      val (_, g) = Profile.run(spark, s"jobbudget_$name") {
         SparkEntry.queries(name)(spark, dir).count()
       }
-      (n, Loop.fallbacks.get() - fb0)
+      (g, Loop.fallbacks.get() - fb0)
     }
   }
 
@@ -74,10 +70,11 @@ class JobBudgetSpec extends SparkSpec {
     * slack uses the structural rider count instead).
     */
   private def pin(name: String, expected: Long, riders: Long): Unit = {
-    val (jobs, fb) = jobsOf(name)
+    val (g, fb) = jobsOf(name)
+    val jobs = g.counters.jobs
     assert(jobs >= expected && jobs <= expected + riders,
       s"$name: $jobs jobs (expected $expected..${expected + riders}; " +
-        s"global fallback delta $fb)")
+        s"global fallback delta $fb); by call site: ${SparkSpec.sites(g)}")
   }
 
   test("q196 HITS: 8 fused half-step jobs + setup, never the 3-job half-step shape") {

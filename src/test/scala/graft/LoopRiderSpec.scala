@@ -92,6 +92,29 @@ class LoopRiderSpec extends SparkSpec {
     assert(LoopStats.drain().isEmpty)
   }
 
+  // the other recordLoop callers keep the contract: ops.bfsDistances
+  // (q172's `bfs`, through ops.bfsLevels) and ops.scc (q199's `scc`,
+  // through Mining.sccAssign); perfbench's loop.rounds sums exactly the
+  // keys with a `_wms` twin
+  Seq[(String, DataFrame => DataFrame)](
+    "bfs" -> (e => graft.api.ops.bfsDistances(e, "src", "dst", _ === lit(0L))._1),
+    "scc" -> (e => graft.api.ops.scc(e, "src", "dst"))
+  ).foreach { case (loop, run) =>
+    test(s"$loop records $loop, ${loop}_wms and ${loop}_tms") {
+      // a binary tree with edges both ways: 14 hops deep, one component
+      val down = spark.range(1L, 1L << 14).select((col("id") / 2L).cast("long").as("src"),
+        col("id").as("dst"))
+      val edges = down.unionByName(down.select(col("dst").as("src"), col("src").as("dst")))
+      LoopStats.drain()
+      val out = run(edges)
+      try out.count() finally Ck.release(out)
+      val stats = LoopStats.drain()
+      assert(stats.keySet.filter(k => stats.contains(s"${k}_wms")) == Set(loop), stats)
+      assert(stats(loop) > 0L && stats(s"${loop}_wms") > 0L, stats)
+      assert(stats(s"${loop}_tms") > 0L, s"$loop rounds that ran tasks metered no task time: $stats")
+    }
+  }
+
   test("two cc loops at once, in two sessions on two threads, both match the oracle") {
     // union-find over the driver-side edge list: the component label
     // is the smallest member id, as ops.connectedComponents defines it

@@ -1054,15 +1054,11 @@ class PlanQualitySpec extends SparkSpec {
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     })
     // the executed plans of every query `body` runs in the child
-    // session (the listener bus is async: poll to quiescence)
+    // session, once the (async) listener bus delivered them
     def planned(body: => Unit): Seq[SparkPlan] = {
       seen.clear()
       body
-      var prev = -1
-      var tries = 0
-      while (prev != seen.size && tries < 20) {
-        prev = seen.size; tries += 1; Thread.sleep(100L)
-      }
+      Profile.drain(cs)
       seen.toArray(Array.empty[SparkPlan]).toSeq
     }
     def sortMergeJoins(plans: Seq[SparkPlan]): Int =

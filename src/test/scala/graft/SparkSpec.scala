@@ -1,49 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites (small parallelism — these
   * are semantics tests, not perf tests).
   */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-
-  /** Jobs `body` starts, counted as SparkListenerJobStart events whose
-    * job-group property is `group` — group filtering keeps the count
-    * clean of other suites' jobs, and local properties propagate to
-    * broadcast-exchange threads (SQLExecution captures them), so
-    * broadcast jobs are counted too.
-    */
-  protected def countJobs(group: String)(body: => Unit): Long = {
-    val sc = spark.sparkContext
-    val counter = new AtomicLong()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (group == e.properties.getProperty("spark.jobGroup.id"))
-          counter.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      // the bus is async: starts are normally delivered well before
-      // the last job's RESULT returns, but don't gamble — poll to
-      // quiescence (two equal reads 100 ms apart, bounded)
-      var prev = -1L
-      var tries = 0
-      while (prev != counter.get() && tries < 20) {
-        prev = counter.get(); tries += 1; Thread.sleep(100L)
-      }
-      counter.get()
-    } finally sc.removeSparkListener(l)
-  }
-
-  override def afterAll(): Unit = super.afterAll()
 }
 
 object SparkSpec {
@@ -59,4 +23,10 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A profiled group's job count per call site, for failure messages
+    * that name the job a pin gained or lost. */
+  def sites(g: Profile.Group): String =
+    g.jobs.groupBy(_.callSite).toSeq.sortBy(_._1)
+      .map { case (site, js) => s"$site x${js.size}" }.mkString(", ")
 }

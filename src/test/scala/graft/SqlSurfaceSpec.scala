@@ -41,19 +41,19 @@ class SqlSurfaceSpec extends SparkSpec {
     * warm-up run that fills the schema memo and the spread copies
     * (JobBudgetSpec's method); both runs' frames are released.
     */
-  private def jobs(name: String)(run: => Seq[DataFrame]): Long = {
+  private def jobs(name: String)(run: => Seq[DataFrame]): Profile.Group = {
     run.foreach(Ck.release) // warm-up
-    var out: Seq[DataFrame] = Nil
-    val n = countJobs(s"sqlsurface_$name") {
-      out = run; out.foreach(_.count())
+    val (out, g) = Profile.run(spark, s"sqlsurface_$name") {
+      val out = run; out.foreach(_.count()); out
     }
     out.foreach(Ck.release)
-    n
+    g
   }
 
   /** The SQL surface's form of `name` runs as many jobs as the
     * DataFrame form; the slack is the rider fallbacks counted over
     * both windows (each fallback is one extra job on the same thread).
+    * A failure names the call sites whose job counts differ.
     */
   private def parity(name: String, df: => Seq[DataFrame],
       sql: => Seq[DataFrame]): Unit = {
@@ -61,8 +61,10 @@ class SqlSurfaceSpec extends SparkSpec {
     val d = jobs(s"${name}_df")(df)
     val q = jobs(s"${name}_sql")(sql)
     val fb = Loop.fallbacks.get() - fb0
-    assert(math.abs(d - q) <= fb,
-      s"SQL-driven $name ran $q jobs, its DataFrame form $d (rider fallbacks $fb)")
+    assert(math.abs(d.counters.jobs - q.counters.jobs) <= fb,
+      s"SQL-driven $name ran ${q.counters.jobs} jobs, its DataFrame form " +
+        s"${d.counters.jobs} (rider fallbacks $fb); DataFrame by call site: " +
+        s"${SparkSpec.sites(d)}; SQL by call site: ${SparkSpec.sites(q)}")
   }
 
   test("q01/q23/q88 SQL texts are plan-equal to the DataFrame forms") {

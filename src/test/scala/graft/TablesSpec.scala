@@ -23,9 +23,12 @@ class TablesSpec extends SparkSpec {
   test("the second read of a file starts no job; a rewrite re-infers") {
     val tmp = Files.createTempDirectory("graft_tables_")
     copyTo(tmp, "nation", Path.of(s"$dir/nation.parquet"))
-    var first, second: StructType = null
-    val j1 = countJobs("tablesspec_first") { first = Tables.nation(spark, tmp.toString).schema }
-    val j2 = countJobs("tablesspec_second") { second = Tables.nation(spark, tmp.toString).schema }
+    def read(group: String): (StructType, Long) = {
+      val (schema, g) = Profile.run(spark, group)(Tables.nation(spark, tmp.toString).schema)
+      (schema, g.counters.jobs)
+    }
+    val (first, j1) = read("tablesspec_first")
+    val (second, j2) = read("tablesspec_second")
     assert(j1 >= 1, "the first read must infer the schema with a job")
     assert(j2 == 0, s"the second read started $j2 jobs")
     assert(second == first)
