@@ -297,10 +297,16 @@ object ScaleProbe {
         prRanks = r0
         rounds0
       }
-      // peel depth is a degeneracy-layer count — a LOCAL property the
-      // chain replication leaves flat (the evidence: rounds stay ~
-      // constant while per-round cost tracks edges)
-      val kc = timeLoop(p => ops.kcore(edges, "a", "b", 2, probe = p)._2)
+      // peel depth is flat in m only when the bridge anchors sit in
+      // the 2-core (sf0.1: 4 rounds at m=1/10/100). An anchor outside
+      // it becomes a bridge chain x_0..x_{m-1} that loses only its end
+      // nodes each round: at sf0.001 (15 nodes, 3 edges, anchor mod 7)
+      // the m=100 survivor curve falls 200, 196, ..., 4, 0 — four per
+      // round, two chains with two ends each — and settles in 52
+      // rounds (m=10: 7). Two chains joined through a base path peel
+      // in up to ~2m rounds, so the bound scales with m like BFS's.
+      val kc = timeLoop(p =>
+        ops.kcore(edges, "a", "b", 2, maxRounds = 40 + 2 * m, probe = p)._2)
       // q196-CORE leg (r17, verdict item 6): HITS on the replicated
       // graph — the r16 dual-orientation caches + id-partitioned
       // score checkpoints make every half-step's aggregation

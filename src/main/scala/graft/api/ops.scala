@@ -28,6 +28,10 @@ final case class CorpusDayResult(
 /** The composable, user-facing operator library — the parameterized
   * forms of the pipeline shapes the qNN queries demonstrate, so a
   * user can run them on THEIR frames instead of the testdata tables.
+  * Where a query's pipeline is exactly a transform here, the query
+  * calls it instead of keeping a copy (q154, q159, q160, q173, q182,
+  * q197, q200, as the loop queries call their drivers): the oracle
+  * gates the one body.
   * Everything is a DataFrame-in/DataFrame-out transform built from
   * the same scale shapes: window passes, banded LSH blocking,
   * broadcast query sides, native heap top-k. Native join/top-k
@@ -472,7 +476,7 @@ object ops {
   }
 
   /** Greedy MMR (maximal marginal relevance) diversified top-k with
-    * lambda = 1/2 (q182's parameterized form): re-ranks each query's
+    * lambda = 1/2 (q182 runs it): re-ranks each query's
     * top-`nCandidates` exact-cosine candidates into `k` results that
     * trade relevance against redundancy — pick 1 maximizes rel(d),
     * pick i maximizes rel(d) - max_{s in picked} sim(d, s). Both
@@ -630,8 +634,8 @@ object ops {
       .drop("__c", "__num", "__den")
   }
 
-  /** Bag-of-words duplicate audit per `group` (q154's parameterized
-    * form): canonicalizes each text to the md5 of its SORTED token
+  /** Bag-of-words duplicate audit per `group` (q154 runs it per
+    * source): canonicalizes each text to the md5 of its SORTED token
     * sequence, then reports per group the doc count, distinct bag
     * count, distinct byte-text count, and the two derived dup
     * signals (`bag_dup_docs`, and `shuffle_only_texts` — distinct
@@ -1278,7 +1282,7 @@ object ops {
         countDistinct(col("__db")).as("n_docs_b"))
   }
 
-  /** Context-length packing curve (q159's parameterized form): for
+  /** Context-length packing curve (q159 runs it per lang): for
     * each candidate context length, the chunk-and-pad batching cost
     * of the `nTokens` column per `group` — docs that fit whole,
     * ceil-division chunk count, padding waste, and fill rate (exact
@@ -1303,12 +1307,12 @@ object ops {
           "(2 * n_chunks * ctx)") / 10000.0)
   }
 
-  /** Embedding-dimension Pearson correlation matrix (q160's
-    * parameterized form): the first `dims` components of `vec`,
-    * quantized to int64 at `scale` so every sufficient statistic is
-    * exact and order-independent, correlated pairwise from ONE grand
-    * aggregate (all sums map-side combined — the exchange carries one
-    * partial row per task). Returns (dim_i, dim_j, corr) for the
+  /** Embedding-dimension Pearson correlation matrix (q160 runs
+    * it): the first `dims` components of `vec`, quantized to int64
+    * at `scale` so every sufficient statistic is exact and
+    * order-independent, correlated pairwise from ONE grand aggregate
+    * (all sums map-side combined — the exchange carries one partial
+    * row per task). Returns (dim_i, dim_j, corr) for the
     * upper triangle, corr on the 4-dp grid. Envelope: n · (|v|·scale)²
     * must stay inside int64; widen the sums to decimal(38) past that.
     */
@@ -1727,8 +1731,8 @@ object ops {
         lit(shards.toLong))
   }
 
-  /** One-pass multi-pattern blocklist audit (q173's parameterized
-    * form): per-needle occurrence totals and docs-hit over a text
+  /** One-pass multi-pattern blocklist audit (q173 runs it):
+    * per-needle occurrence totals and docs-hit over a text
     * column via the compiled Aho-Corasick expression
     * (`functions/MultiMatch.scala`) — the corpus is read ONCE for the
     * whole needle set, never once per needle. Overlapping and nested
@@ -1740,6 +1744,12 @@ object ops {
       needles: Seq[String]): DataFrame = {
     require(needles.nonEmpty, "blocklistAudit needs at least one needle")
     val ids = needles.indices
+    // the per-needle element_at fan-out keeps the kernel un-inlined
+    // (CollapseProject never duplicates a multiply-referenced alias),
+    // and with no explode over the corpus InferFiltersFromGenerate
+    // has no pre-generate filter to re-run the automaton in — the
+    // trap the posexplode shape falls into (pinned on q173 in
+    // PlanQualitySpec)
     val perDoc = df
       .select(graft.functions.scrub
         .multiMatchCount(col(text), needles).as("__c"))
@@ -2618,8 +2628,8 @@ object ops {
       key, orderCols)
   }
 
-  /** Vocabulary-growth (Heaps-law) curve (q197's parameterized
-    * form): per `group`, cumulative token count, cumulative
+  /** Vocabulary-growth (Heaps-law) curve (q197 runs it per
+    * source): per `group`, cumulative token count, cumulative
     * distinct-type count, and type-token ratio at each decile of the
     * stream ordered by `orderCol` — the corpus-saturation signal
     * that demotes self-repeating sources before pairwise dedup can
@@ -2658,7 +2668,7 @@ object ops {
   }
 
   /** Mergeable hash-sample quantile sketch with its accuracy audit
-    * (q200's parameterized form): per `key`, p50/p90/p99 of
+    * (q200 runs it per event_type): per `key`, p50/p90/p99 of
     * `valueCents` estimated from the deterministic md5 bottom-sample
     * (rate 1/`denom`) next to the exact rank-cut and the absolute
     * error. `orderId` must totally order rows in a key (ties would

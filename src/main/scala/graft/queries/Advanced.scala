@@ -683,36 +683,20 @@ object Advanced {
   // ---------------------------------------------------------------
   // q159: context-length PACKING CURVE — the tuning sweep next to
   // q62's greedy packer: for each candidate context length, what does
-  // chunk-and-pad batching cost? Per (lang, ctx): docs that fit
-  // whole, chunks produced under ceil-division splitting, and the
-  // padding waste `n_chunks·ctx − n_tokens` (every chunk padded to
-  // ctx), with fill_rate = tokens/capacity. All quantities are exact
-  // int64 (ceil-div via `(tok + ctx − 1) DIV ctx`), so the curve is
-  // hash-match gated, unlike a float-modeled estimate. Scale shape:
-  // one token-count map stage, a ×|ctxs| bounded explode (4 here),
-  // one partially-aggregated groupBy on (lang, ctx) — output is
-  // O(langs·ctxs) regardless of corpus size, and the explode
-  // multiplies a 3-column frame, not the text.
+  // chunk-and-pad batching cost? Runs ops.packingCurve per lang. All
+  // quantities are exact int64 (ceil-div), so the curve is hash-match
+  // gated, unlike a float-modeled estimate. Scale shape: one
+  // token-count map stage, a ×|ctxs| bounded explode (4 here), one
+  // partially-aggregated groupBy on (lang, ctx) — output is
+  // O(langs·ctxs) regardless of corpus size.
   // ---------------------------------------------------------------
   private val PackCtxs = Seq(256L, 512L, 1024L, 2048L)
 
-  def q159PackingCurve(s: SparkSession, dir: String): DataFrame = {
-    val toks = documents(s, dir)
-      .select(col("lang"), size(words(col("text"))).cast("long").as("tok"))
-    toks
-      .withColumn("ctx", explode(array(PackCtxs.map(lit): _*)))
-      .withColumn("chunks",
-        Relational.ldiv(col("tok") + col("ctx") - 1L, col("ctx")))
-      .groupBy(col("lang"), col("ctx"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("tok") <= col("ctx"), 1L).otherwise(0L)).as("n_fit"),
-        sum(col("chunks")).cast("long").as("n_chunks"),
-        sum(col("tok")).cast("long").as("n_tokens"))
-      .withColumn("pad_waste", col("n_chunks") * col("ctx") - col("n_tokens"))
-      .withColumn("fill_rate",
-        Relational.ratio4(col("n_tokens"), col("n_chunks") * col("ctx")))
+  def q159PackingCurve(s: SparkSession, dir: String): DataFrame =
+    graft.api.ops.packingCurve(
+      documents(s, dir).select(col("lang"), size(words(col("text"))).as("tok")),
+      "lang", "tok", PackCtxs)
       .orderBy("lang", "ctx")
-  }
 
   val q159Sql: String = {
     val ctxList = PackCtxs.mkString(", ")

@@ -1478,28 +1478,15 @@ object Dedup {
   // near-dup class exact dedup (q22) misses and shingling (q23/q25)
   // only scores partially: documents built from the SAME word
   // multiset in a different order (template reshuffles, scraped
-  // listings re-sorted by a site). The canonical key is the md5 of
-  // the doc's SORTED token sequence, so detection is one hash
-  // groupBy on a 128-bit key — identical scale shape to q22: no
-  // joins, no pairs, per-row work bounded by doc length (sort of
-  // ~100 tokens). Reported as a per-source audit (q22's per-lang
-  // summary shape, with bag and byte granularities side by side) so
-  // the result is non-degenerate at every SF: `n_texts - n_bags` is
-  // the count of distinct texts that collapse under bag
-  // canonicalization — the pure word-order shuffles; byte-identical
-  // copy groups are q22's catch.
+  // listings re-sorted by a site). Runs ops.bagDedupAudit per source:
+  // one hash groupBy on the md5 of the sorted token sequence —
+  // identical scale shape to q22: no joins, no pairs, per-row work
+  // bounded by doc length. The per-source audit (q22's per-lang
+  // summary shape) keeps the result non-degenerate at every SF;
+  // byte-identical copy groups are q22's catch.
   // ---------------------------------------------------------------
   def q154BowDup(s: SparkSession, dir: String): DataFrame =
-    documents(s, dir)
-      .select(col("source"),
-        md5(array_join(array_sort(split(col("text"), " ")), " ")).as("bow"),
-        md5(col("text")).as("txt"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("bow")).as("n_bags"),
-        countDistinct(col("txt")).as("n_texts"))
-      .withColumn("bag_dup_docs", col("n_docs") - col("n_bags"))
-      .withColumn("shuffle_only_texts", col("n_texts") - col("n_bags"))
+    graft.api.ops.bagDedupAudit(documents(s, dir), "source", "text")
       .orderBy("source")
 
   val q154Sql: String =

@@ -644,13 +644,13 @@ object Events {
   // audit — the sketch algebra's missing member: HLL counts distinct
   // (q191), Count-Min counts frequency (q170), Misra-Gries holds
   // top-k (q102), MinHash measures similarity (q23); none answers
-  // "what is p99?". The sketch here is the DETERMINISTIC-HASH
-  // bottom-sample: keep rows whose md5-derived 28-bit key falls
-  // under 1/10 of the space (q47's sampling discipline), estimate
-  // p50/p90/p99 by exact rank-cut over the sample (q190's
-  // nearest-rank convention), and report the FULL-data rank-cut
-  // next to each estimate with the absolute error — the q143/q191
-  // audit-before-trusting rule. Why hash-sample instead of KLL/
+  // "what is p99?". The sketch (ops.quantileSketch) is the
+  // DETERMINISTIC-HASH bottom-sample: keep rows whose md5-derived
+  // 28-bit key falls under 1/10 of the space (q47's sampling
+  // discipline), estimate p50/p90/p99 by exact rank-cut over the
+  // sample (q190's nearest-rank convention), and report the
+  // FULL-data rank-cut next to each estimate with the absolute
+  // error — the q143/q191 audit-before-trusting rule. Why hash-sample instead of KLL/
   // t-digest: the sample is MERGEABLE BY UNION (shards/epochs merge
   // with zero logic, re-deliveries are idempotent because membership
   // is a pure function of the row id) and the estimate is
@@ -665,39 +665,9 @@ object Events {
   // the rate); the sample unions across shards and re-ranks in one
   // key-bounded pass.
   // ---------------------------------------------------------------
-  def q200QuantileSketch(s: SparkSession, dir: String): DataFrame = {
-    val base = events(s, dir)
-      .select(col("event_type"), col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-    def rankCuts(df: DataFrame, nName: String, suffix: String): DataFrame = {
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("cents"), col("event_id"))
-      df.withColumn("r", row_number().over(w))
-        .withColumn("cnt",
-          count(lit(1)).over(Window.partitionBy(col("event_type"))))
-        .groupBy(col("event_type"))
-        .agg(max(col("cnt")).as(nName),
-          min(when(col("r") * 2 >= col("cnt"), col("cents")))
-            .as(s"p50_$suffix"),
-          min(when(col("r") * 10 >= col("cnt") * 9, col("cents")))
-            .as(s"p90_$suffix"),
-          min(when(col("r") * 100 >= col("cnt") * 99, col("cents")))
-            .as(s"p99_$suffix"))
-    }
-    val full = rankCuts(base, "n_events", "exact")
-    val samp = rankCuts(
-      base.filter(Hashing.hash28(col("event_id").cast("string"))
-        < (1L << 28) / 10),
-      "n_sample", "est")
-    full.join(samp, Seq("event_type"), "left")
-      .select(col("event_type"), col("n_events"), col("n_sample"),
-        expr("""stack(3, 50L, p50_est, p50_exact,
-                        90L, p90_est, p90_exact,
-                        99L, p99_est, p99_exact)
-                AS (pct, est_cents, exact_cents)"""))
-      .withColumn("err_cents", abs(col("est_cents") - col("exact_cents")))
-      .orderBy("event_type", "pct")
-  }
+  def q200QuantileSketch(s: SparkSession, dir: String): DataFrame =
+    graft.api.ops.quantileSketch(events(s, dir), "event_type",
+      col("event_id"), round(col("value") * 100))
 
   val q200Sql: String = {
     val inS =

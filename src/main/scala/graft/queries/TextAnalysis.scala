@@ -1463,11 +1463,9 @@ object TextAnalysis {
   // blocklist/PII/compliance scrub: per-needle total occurrences and
   // docs-hit over the corpus with the text read ONCE, where the
   // naive form re-reads the 100-TB corpus once per needle (regex or
-  // replace per blocklist entry). Needles are config (a blocklist),
-  // compiled into the expression at construction — no joins. The
-  // per-doc count vector aggregates through a bounded ×|needles|
-  // posexplode (q130's bounded-explode shape), partially aggregated
-  // before the exchange. Nested needles ("hash join" vs "join")
+  // replace per blocklist entry). Runs ops.blocklistAudit: needles
+  // are config (a blocklist), compiled into the expression at
+  // construction — no joins. Nested needles ("hash join" vs "join")
   // count independently via the automaton's fail-link output
   // closure; overlapping occurrences all count — matching the
   // position-scan oracle exactly.
@@ -1477,33 +1475,9 @@ object TextAnalysis {
     "big table", "small batch", "data stream", "key value",
     "row group", "window agg", "scan scan")
 
-  def q173BlocklistScan(s: SparkSession, dir: String): DataFrame = {
-    val ids = BlockNeedles.indices
-    // per-needle columns off ONE kernel evaluation per row (the 12-way
-    // element_at fan-out keeps the non-cheap expression un-inlined —
-    // CollapseProject never duplicates a multiply-referenced alias),
-    // then a single global partial-aggregated pass: no row-multiplying
-    // explode over the corpus, and no InferFiltersFromGenerate
-    // re-evaluating the automaton in a pre-generate filter (the trap
-    // the posexplode shape falls into — pinned in PlanQualitySpec)
-    val perDoc = documents(s, dir)
-      .select(graft.functions.scrub
-        .multiMatchCount(col("text"), BlockNeedles).as("c"))
-      .select(ids.map(i => element_at(col("c"), i + 1).as(s"m$i")): _*)
-    val aggs = ids.flatMap(i => Seq(
-      sum(col(s"m$i")).as(s"s$i"),
-      count(when(col(s"m$i") > 0L, 1)).as(s"d$i")))
-    val rows = array(ids.map(i => struct(
-      lit(i.toLong).as("needle_id"),
-      lit(BlockNeedles(i)).as("needle"),
-      col(s"d$i").as("n_docs"),
-      col(s"s$i").as("n_matches"))): _*)
-    perDoc.agg(aggs.head, aggs.tail: _*)
-      .select(explode(rows).as("r"))
-      .select(col("r.needle_id"), col("r.needle"),
-        col("r.n_docs"), col("r.n_matches"))
+  def q173BlocklistScan(s: SparkSession, dir: String): DataFrame =
+    graft.api.ops.blocklistAudit(documents(s, dir), "text", BlockNeedles)
       .orderBy("needle_id")
-  }
 
   val q173Sql: String = {
     val values = BlockNeedles.zipWithIndex
@@ -1537,50 +1511,24 @@ object TextAnalysis {
   // ACCUMULATES over ingestion order, per source: at each decile of
   // the source's doc stream (ordered by doc_id), the cumulative
   // token count, cumulative distinct-type count, and type-token
-  // ratio. The curve is the corpus-curation saturation signal: a
-  // source whose growth curve flattens early is repeating itself
-  // (crawl loops, boilerplate farms) and deserves a lower mixture
-  // weight (q150) long before near-dup dedup (q23) would prove it
-  // pairwise. New-type attribution is exact and order-deterministic:
-  // a type counts at the FIRST position (row_number by doc_id) it
-  // appears in, so cum_vocab at position p is a plain running sum of
-  // per-position first-occurrence counts — no windowed
-  // count-distinct anywhere.
+  // ratio (ops.vocabGrowth). The curve is the corpus-curation
+  // saturation signal: a source whose growth curve flattens early is
+  // repeating itself (crawl loops, boilerplate farms) and deserves a
+  // lower mixture weight (q150) long before near-dup dedup (q23)
+  // would prove it pairwise. New-type attribution is exact and
+  // order-deterministic: a type counts at the FIRST position
+  // (row_number by doc_id) it appears in, so cum_vocab is a plain
+  // running sum — no windowed count-distinct anywhere.
   //
   // Scale shape: one exchange on `source` carries the position
   // window and both running sums; the first-occurrence table is one
-  // partial-aggregated (source, type) min — the same shuffle
-  // geometry as a term-frequency build. The decile explode (×10)
+  // partial-aggregated (source, type) min. The decile explode (×10)
   // happens AFTER the per-position frame is reduced to one row per
   // doc. Output is 10 rows per source at any corpus size.
   // ---------------------------------------------------------------
-  def q197VocabGrowth(s: SparkSession, dir: String): DataFrame = {
-    val wPos = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-    val wCum = Window.partitionBy(col("source")).orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val docs = documents(s, dir)
-      .select(col("source"), col("doc_id"),
-        Hashing.words(col("text")).as("ws"))
-      .withColumn("pos", row_number().over(wPos).cast("long"))
-      .withColumn("tokcnt", size(col("ws")).cast("long"))
-    val newTypes = docs
-      .select(col("source"), col("pos"), explode(col("ws")).as("w"))
-      .groupBy(col("source"), col("w")).agg(min(col("pos")).as("fpos"))
-      .groupBy(col("source"), col("fpos")).agg(count(lit(1)).as("nt"))
-    docs.select(col("source"), col("pos"), col("tokcnt"))
-      .join(newTypes.select(col("source"), col("fpos").as("pos"),
-        col("nt")), Seq("source", "pos"), "left")
-      .withColumn("cum_tokens", sum(col("tokcnt")).over(wCum))
-      .withColumn("cum_vocab", sum(coalesce(col("nt"), lit(0L))).over(wCum))
-      .withColumn("d_total",
-        count(lit(1)).over(Window.partitionBy(col("source"))))
-      .withColumn("decile", explode(sequence(lit(1L), lit(10L))))
-      .filter(col("pos") === expr("(decile * d_total) div 10"))
-      .select(col("source"), col("decile"), col("pos").as("n_docs"),
-        col("cum_tokens"), col("cum_vocab"),
-        Relational.ratio4(col("cum_vocab"), col("cum_tokens")).as("ttr_4"))
-      .orderBy("source", "decile")
-  }
+  def q197VocabGrowth(s: SparkSession, dir: String): DataFrame =
+    graft.api.ops.vocabGrowth(documents(s, dir), "source", col("doc_id"),
+      col("text"))
 
   val q197Sql: String =
     """WITH d AS (

@@ -1167,48 +1167,22 @@ object Vectors {
   // q160: embedding-dimension CORRELATION MATRIX — the feature audit
   // run before indexing or training on a vector column: strongly
   // correlated dimensions mean wasted index capacity (and tell you
-  // whether a PCA/OPQ rotation is worth it). Pearson correlation over
-  // the first 8 dimensions, computed from sufficient statistics in
-  // ONE pass: every Σq, Σq·q rides a single grand aggregate (44 sums,
-  // all map-side combined — the exchange carries one partial row per
-  // task whatever the corpus size), and the 28 upper-triangle pairs
-  // are exploded from the single aggregated row. Oracle parity: each
-  // value is first QUANTIZED to exact int64 (round(x·1000)) so every
-  // sum is exact in both engines — the raw-float sums would differ in
-  // the 15th digit from accumulation order alone; the final corr is
-  // identical double math from identical int64 inputs. Magnitudes:
-  // |q| ≤ ~580 here, so Σq·q ≤ n·3.4e5 — exact past 1e10 rows; a
-  // larger corpus widens the sums to decimal(38), nothing else
-  // changes.
+  // whether a PCA/OPQ rotation is worth it). Runs
+  // ops.dimensionCorrelation over the first 8 dimensions: every
+  // sufficient statistic rides ONE grand aggregate (44 sums, all
+  // map-side combined — the exchange carries one partial row per
+  // task whatever the corpus size). Oracle parity: each value is
+  // first QUANTIZED to exact int64 (round(x·1000)) so every sum is
+  // exact in both engines — the raw-float sums would differ in the
+  // 15th digit from accumulation order alone. Magnitudes: |q| ≤ ~580
+  // here, so Σq·q ≤ n·3.4e5 — exact past 1e10 rows.
   // ---------------------------------------------------------------
   private val CorrDims = 8
 
-  def q160EmbeddingCorrelation(s: SparkSession, dir: String): DataFrame = {
-    val qs = (0 until CorrDims).map { i =>
-      round(element_at(col("embedding"), i + 1).cast("double") * 1000.0, 0)
-        .cast("long").as(s"q$i")
-    }
-    val base = embeddings(s, dir).select(qs: _*)
-    val aggs: Seq[Column] =
-      Seq(count(lit(1)).as("n")) ++
-        (0 until CorrDims).map(i => sum(col(s"q$i")).as(s"s$i")) ++
-        (for { i <- 0 until CorrDims; j <- i until CorrDims }
-          yield sum(col(s"q$i") * col(s"q$j")).as(s"p${i}_$j"))
-    val g = base.agg(aggs.head, aggs.tail: _*)
-    val pairs = for { i <- 0 until CorrDims; j <- i + 1 until CorrDims } yield {
-      val num = (col("n") * col(s"p${i}_$j") - col(s"s$i") * col(s"s$j"))
-        .cast("double")
-      val di = (col("n") * col(s"p${i}_$i") - col(s"s$i") * col(s"s$i"))
-        .cast("double")
-      val dj = (col("n") * col(s"p${j}_$j") - col(s"s$j") * col(s"s$j"))
-        .cast("double")
-      struct(lit(i.toLong).as("dim_i"), lit(j.toLong).as("dim_j"),
-        round(num / sqrt(di * dj), 4).as("corr"))
-    }
-    g.select(explode(array(pairs: _*)).as("p"))
-      .select(col("p.dim_i"), col("p.dim_j"), col("p.corr"))
+  def q160EmbeddingCorrelation(s: SparkSession, dir: String): DataFrame =
+    graft.api.ops.dimensionCorrelation(embeddings(s, dir), "embedding",
+        CorrDims, 1000L)
       .orderBy("dim_i", "dim_j")
-  }
 
   val q160Sql: String = {
     val dims = 0 until CorrDims
@@ -1449,82 +1423,23 @@ object Vectors {
   // q182: MMR (maximal marginal relevance) DIVERSIFIED re-ranking —
   // the retrieval property recall@k and rank agreement (q117/q151)
   // cannot see: a top-k of near-duplicate passages is "accurate" yet
-  // useless to a RAG prompt. Greedy MMR with lambda = 1/2 re-ranks
-  // each query's top-8 exact-cosine candidates, picking 3 results
-  // that trade relevance against redundancy:
-  //   pick_1 = argmax rel(d);  pick_i = argmax [rel(d) - max_{s in S} sim(d, s)]
-  // (lambda = 1/2 scales both terms equally, so 2*MMR = rel - maxsim
-  // stays in EXACT scaled int64 — rel and sim are the x10000-rounded
-  // cosines, the q26/q133 grid treatment, and the selection is pure
-  // integer comparison with a vec_id tiebreak: both engines pick
-  // identical chains, no float drift can flip a pick). The greedy
-  // recursion is unrolled k=3 times as dataframe rounds (anti-join
-  // the picked set, max-sim join against it, one row_number per
-  // round) — k is a serving-side constant, so the unroll IS the
-  // scale shape. Scale: query side broadcast against one corpus scan
-  // (q27's layout), candidate frame is |queries| x 8 rows, the
-  // pairwise sim frame |queries| x 56 — both persisted once and
-  // bounded by the candidate count, never the corpus; every
-  // selection window partitions by q_id.
+  // useless to a RAG prompt. Runs ops.mmrRerank (lambda = 1/2): each
+  // sampled query's top-8 exact-cosine candidates re-ranked into 3
+  // picks that trade relevance against redundancy, in exact scaled
+  // int64 with a vec_id tiebreak, so both engines pick identical
+  // chains. Scale: query side broadcast against one corpus scan
+  // (q27's layout); the candidate and pairwise-sim frames are
+  // bounded by |queries| x 8, never the corpus.
   // ---------------------------------------------------------------
   private val MmrCands = 8
   private val MmrK = 3
 
   def q182MmrRerank(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = embeddings(s, dir)
-      .select(col("vec_id"), normalized(emb(col("embedding"))).as("e"))
-    val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("rel").desc, col("vec_id"))
-    val cand = broadcast(q).join(e, col("q_id") =!= col("vec_id"))
-      .withColumn("rel", round(dot(col("qe"), col("e")) * 10000).cast("long"))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= MmrCands)
-      .persist(MEMORY_AND_DISK)
-    val x = cand.alias("x")
-    val y = cand.alias("y")
-    val sims = x.join(y, col("x.q_id") === col("y.q_id") &&
-        col("x.vec_id") =!= col("y.vec_id"))
-      .select(col("x.q_id").as("q_id"), col("x.vec_id").as("d"),
-        col("y.vec_id").as("s"),
-        round(dot(col("x.e"), col("y.e")) * 10000).cast("long").as("sim"))
-      .persist(MEMORY_AND_DISK)
-    // pick 1: pure relevance (the diversity term is empty)
-    var picks = cand.filter(col("rk") === 1)
-      .select(col("q_id"), lit(1).as("pos"), col("vec_id").as("pick_id"),
-        col("rel"), col("rel").as("mmr2x"))
-    (2 to MmrK).foreach { pos =>
-      val rest = cand.join(
-        picks.select(col("q_id"), col("pick_id").as("vec_id")),
-        Seq("q_id", "vec_id"), "left_anti")
-      val ms = sims
-        .join(picks.select(col("q_id"), col("pick_id").as("s")), Seq("q_id", "s"))
-        .groupBy(col("q_id"), col("d"))
-        .agg(max(col("sim")).as("msim"))
-        .withColumnRenamed("d", "vec_id")
-      val wSel = Window.partitionBy(col("q_id"))
-        .orderBy(col("mmr2x").desc, col("vec_id"))
-      val next = rest.join(ms, Seq("q_id", "vec_id"))
-        .withColumn("mmr2x", col("rel") - col("msim"))
-        .withColumn("r", row_number().over(wSel))
-        .filter(col("r") === 1)
-        .select(col("q_id"), lit(pos).as("pos"), col("vec_id").as("pick_id"),
-          col("rel"), col("mmr2x"))
-      // checkpoint: each round references picks 3x (anti-join,
-      // max-sim join, union) — unchecked the plan grows ~3^k
-      val np = picks.unionByName(next).localCheckpoint(true)
-      graft.Ck.release(picks) // no-op in round 2 (picks is a lazy plan)
-      picks = np
-    }
-    // |queries| x 3 rows: eager-materialize, then release the
-    // candidate/sim persists AND the last round's picks checkpoint
-    val out = picks.orderBy("q_id", "pos").localCheckpoint(true)
-    graft.Ck.release(picks)
-    cand.unpersist(blocking = false)
-    sims.unpersist(blocking = false)
-    out
+    val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    graft.api.ops.mmrRerank(e, e.filter(col("vec_id") % 100 === 0),
+        MmrCands, MmrK)
+      .withColumnsRenamed(Map("qid" -> "q_id", "id" -> "pick_id"))
+      .orderBy("q_id", "pos")
   }
 
   val q182Sql: String = {

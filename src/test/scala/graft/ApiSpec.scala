@@ -8,7 +8,9 @@ import graft.api.ops
 /** The composable API surface: semantics unit-checked on small
   * frames, and the LSH/ANN transforms cross-checked against the
   * corresponding oracle-gated queries (same pipelines, parameterized
-  * inputs).
+  * inputs). q173, q182, q197 and q200 now run their ops transform,
+  * so their parity tests check the query's projection (table read,
+  * renames, order) rather than a second copy of the pipeline.
   */
 class ApiSpec extends SparkSpec {
 
@@ -697,13 +699,20 @@ class ApiSpec extends SparkSpec {
     // different. Plain top-2 = (1, 2); MMR scores doc 2 at
     // rel - sim(2,1) = 9939 - 10000 = -61 against doc 3's
     // 6000 - 5963 = 37, so the second pick flips to doc 3.
+    // zero-norm rows (corpus 4, query 200) have no direction: both
+    // are dropped, never picked and never queried
     val corpus = Seq(
       (1L, Seq(0.9, 0.1, 0.0)),
       (2L, Seq(0.9, 0.1, 0.001)),
-      (3L, Seq(0.6, 0.0, 0.8))).toDF("id", "vec")
-    val queries = Seq((100L, Seq(1.0, 0.0, 0.0))).toDF("id", "vec")
-    val out = ops.mmrRerank(corpus, queries, nCandidates = 3, k = 2)
-      .orderBy("pos").collect().map(r => (r.getInt(1), r.getLong(2)))
+      (3L, Seq(0.6, 0.0, 0.8)),
+      (4L, Seq(0.0, 0.0, 0.0))).toDF("id", "vec")
+    val queries = Seq((100L, Seq(1.0, 0.0, 0.0)),
+      (200L, Seq(0.0, 0.0, 0.0))).toDF("id", "vec")
+    val rows = ops.mmrRerank(corpus, queries, nCandidates = 3, k = 2)
+      .orderBy("pos").collect()
+    assert(rows.forall(r => r.getLong(0) == 100L && r.getLong(2) != 4L),
+      rows.mkString(","))
+    val out = rows.map(r => (r.getInt(1), r.getLong(2)))
     assert(out.toSeq == Seq((1, 1L), (2, 3L)), out.mkString(","))
     intercept[IllegalArgumentException](
       ops.mmrRerank(corpus, queries, nCandidates = 1, k = 2))
@@ -719,6 +728,66 @@ class ApiSpec extends SparkSpec {
         col("rel"), col("mmr2x"))
     val q182 = SparkEntry.queries("q182_mmr_rerank")(spark, d01)
     assert(api.except(q182).count() === 0 && q182.except(api).count() === 0)
+  }
+
+  test("packingCurve counts fits, ceil-div chunks, padding and fill per context") {
+    val s = spark
+    import s.implicits._
+    val toks = Seq(("a", 100), ("a", 300), ("a", 600), ("b", 256))
+      .toDF("g", "tok")
+    val out = ops.packingCurve(toks, "g", "tok", Seq(256L, 512L))
+      .orderBy("g", "ctx").collect().map(_.toSeq).toSeq
+    // a @256: chunks 1+2+3 = 6, capacity 1536, waste 536, fill
+    // 1000/1536 = 0.65104 -> 0.651; a @512: chunks 1+1+2 = 4,
+    // capacity 2048, fill 0.48828 -> 0.4883 (half-up)
+    assert(out === Seq(
+      Seq("a", 256L, 3L, 1L, 6L, 1000L, 536L, 0.651),
+      Seq("a", 512L, 3L, 2L, 4L, 1000L, 1048L, 0.4883),
+      Seq("b", 256L, 1L, 1L, 1L, 256L, 0L, 1.0),
+      Seq("b", 512L, 1L, 1L, 1L, 256L, 256L, 0.5)))
+  }
+
+  test("dimensionCorrelation scores a doubled dimension 1 and a negated one -1") {
+    val s = spark
+    import s.implicits._
+    // dim 1 = 2 x dim 0, dim 2 = -dim 0 (values exact on the 1e-3 grid)
+    val vecs = Seq(0.5, 0.25, -0.75, 1.0).map(x => Seq(x, 2 * x, -x))
+      .toDF("v")
+    val out = ops.dimensionCorrelation(vecs, "v", dims = 3)
+      .orderBy("dim_i", "dim_j").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(out === Seq((0L, 1L, 1.0), (0L, 2L, -1.0), (1L, 2L, -1.0)))
+  }
+
+  test("labelPropagationRound: a triangle plus a pendant node") {
+    val s = spark
+    import s.implicits._
+    // triangle 1-2-3, pendant 4 on 3. Nodes 1 and 2 see one 10 and
+    // one 30 (tie -> smaller label); 3 sees 10, 10, 40; 4 sees 30
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("u", "v")
+    val labels = Seq((1L, 10L), (2L, 10L), (3L, 30L), (4L, 40L))
+      .toDF("node", "lbl")
+    val out = ops.labelPropagationRound(edges, "u", "v", labels, "node", "lbl")
+      .orderBy("node").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(out === Seq((1L, 10L, 10L), (2L, 10L, 10L), (3L, 30L, 10L),
+      (4L, 40L, 30L)))
+  }
+
+  test("sourceNeardupMatrix: one planted cross-source near-dup is one row") {
+    val s = spark
+    import s.implicits._
+    def text(p: String) = (1 to 30).map(i => s"$p$i").mkString(" ")
+    // doc 2 is doc 1 with its last word changed (Jaccard 27/29); the
+    // pair canonicalizes to (books, web) with doc 2 on the books side
+    val docs = Seq(
+      (1L, "web", text("w")),
+      (2L, "books", text("w").replace("w30", "zz")),
+      (3L, "web", text("x")),
+      (4L, "books", text("y"))).toDF("doc_id", "source", "text")
+    val out = ops.sourceNeardupMatrix(docs, "doc_id", "source", "text")
+      .collect().map(_.toSeq).toSeq
+    assert(out === Seq(Seq("books", "web", 1L, 1L, 1L)))
   }
 
   // triangle {1,2,3} with a 2-hop tail 3-4-5: k=2 peels 5 (deg 1),
