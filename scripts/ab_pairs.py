@@ -11,11 +11,13 @@ end-to-end metric of BENCHMARK.json it prints both sides' median and
 quartiles, the pairs the change won (ties count for neither side) and whether
 a gain may be claimed: the change wins at least nine tenths of all pairs run
 and the medians differ, in the metric's better direction, by more than the
-parent's interquartile range. Runs that fail or read incorrect are reported
-and their pairs count as not won. For a batch workload it also prints each
-query's median CPU per side (the query's mean over a run's timed passes, from
-the run's `notes.query_cpu_ms`), so a batch result can name the query that
-moved.
+parent's interquartile range. It also prints whether the change's median is
+worse than the parent's by more than the metric's `bound` in BENCHMARK.json,
+taken as a fraction of the parent's median. Runs that fail or read incorrect
+are reported and their pairs count as not won. For a batch workload it also
+prints each query's median CPU per side (the query's mean over a run's timed
+passes, from the run's `notes.query_cpu_ms`), so a batch result can name the
+query that moved.
 
 The script only runs the benchmark; it writes nothing into either checkout
 beyond what perfbench/run.py itself leaves under .bench_build/.
@@ -108,7 +110,7 @@ def main():
     print(f"{a.workload}: {len(pairs)} pairs, {seconds} s runs, failed or incorrect runs "
           f"parent {failed['parent']} change {failed['change']}")
     print(f"{'metric':<24}{'parent median [q1, q3]':>34}{'change median [q1, q3]':>34}"
-          f"{'ratio':>8}{'won':>8}  claim")
+          f"{'ratio':>8}{'won':>8}  claim; bound")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         vals = {s: [p[s]["metrics"][name] for p in pairs if p[s]["ok"]] for s in ("parent", "change")}
@@ -123,10 +125,13 @@ def main():
         iqr = q["parent"][1] - q["parent"][0]
         gap = med["parent"] - med["change"] if lower else med["change"] - med["parent"]
         claim = won >= 0.9 * len(pairs) and gap > iqr
+        worse = -gap / med["parent"]
         cell = {s: f"{med[s]:.4g} [{q[s][0]:.4g}, {q[s][1]:.4g}]" for s in med}
         print(f"{name:<24}{cell['parent']:>34}{cell['change']:>34}"
               f"{med['change'] / med['parent']:>8.3f}{won:>5}/{len(pairs):<2}  "
-              f"{'holds' if claim else 'not met'} (gap {gap:.4g} vs parent IQR {iqr:.4g})")
+              f"{'holds' if claim else 'not met'} (gap {gap:.4g} vs parent IQR {iqr:.4g}); "
+              f"{'WORSE than' if worse > m['bound'] else 'within'} bound {m['bound']:g} "
+              f"(worse by {worse:+.3f})")
 
     queries = sorted({q for p in pairs for s in ("parent", "change") if p[s]["ok"]
                       for q in p[s].get("query_cpu_ms", {})})

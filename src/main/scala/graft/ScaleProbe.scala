@@ -19,8 +19,10 @@ import graft.api.ops
   * PageRank rounds 11/14/32 — the chain mixes slower) while
   * per-round cost grows sub-linearly in edges at these sizes
   * (overhead-dominated below ~1M edges), i.e. the loops scale the
-  * way the 100-TB story claims. Output: `SCALE_PROBE.json` at
-  * the repo root plus one summary line per run on stdout.
+  * way the 100-TB story claims. Output: `SCALE_PROBE.<sf>.json` in
+  * the working directory, named after the last path element of the
+  * scale directory read (`SCALE_PROBE.sf0.1.json` for the default
+  * sf0.1 directory), plus one summary line per scale on stdout.
   *
   * Chain replication (not disjoint copies): replica r shifts every
   * node id by r*n; bridge edges tie node x in replica r to the same
@@ -32,20 +34,32 @@ import graft.api.ops
 object ScaleProbe {
 
   private val legs = new java.util.concurrent.atomic.AtomicLong()
+  // the current scale's leg rows, in run order (see [[timedLeg]])
+  private val legRows = scala.collection.mutable.ArrayBuffer.empty[String]
+
   /** Run `f` as one leg, returning (result, wall seconds, executor task
     * ms) — the floor-vs-work decomposition: wall alone cannot say
     * whether a leg lost to per-job FLOOR (scheduling/planning; wall >>
-    * task/cores) or to WORK (task-dominated). The task ms are exactly
-    * the leg's jobs, read from its [[Profile]] job group.
+    * task/cores) or to WORK (task-dominated). The leg's counters are
+    * exactly its jobs, read from its [[Profile]] job group; each leg
+    * also leaves a row under its `name` in the scale's `legs` object:
+    * wall, jobs, stages, tasks, task ms and shuffle read/write bytes
+    * and records — the counters whose growth the 100-TB claim rests on.
     */
-  private def timedLeg[T](f: => T): (T, Double, Long) = {
+  private def timedLeg[T](name: String)(f: => T): (T, Double, Long) = {
     val ((r, wallS), g) =
       Profile.run(SparkSession.active, s"scaleprobe_${legs.incrementAndGet()}") {
         val t0 = System.nanoTime()
         val r = f
         (r, (System.nanoTime() - t0) / 1e9)
       }
-    (r, wallS, g.counters.taskRunMs)
+    val c = g.counters
+    legRows += s""""$name":{"wall_s":${fmt(wallS)},"jobs":${c.jobs},""" +
+      s""""stages":${c.stages},"tasks":${c.tasks},"task_ms":${c.taskRunMs},""" +
+      s""""shuffle_read_bytes":${c.shuffleReadBytes},""" +
+      s""""shuffle_write_bytes":${c.shuffleWriteBytes},""" +
+      s""""shuffle_records":${c.shuffleRecords}}"""
+    (r, wallS, c.taskRunMs)
   }
 
   /** One past the max node id — the replica stride. */
@@ -168,13 +182,14 @@ object ScaleProbe {
     * these sizes is per-job floor, so the scale exponent the 100-TB
     * claim rests on is the leg's task-ms growth against edge growth.
     */
-  private def timeLoop(run: ((Int, DataFrame) => Unit) => Int): LoopRun = {
+  private def timeLoop(name: String)(
+      run: ((Int, DataFrame) => Unit) => Int): LoopRun = {
     val marks = scala.collection.mutable.ArrayBuffer.empty[Double]
     val t0 = System.nanoTime()
     val probe = (_: Int, _: DataFrame) => {
       marks += (System.nanoTime() - t0) / 1e9; ()
     }
-    val (rounds, total, tms) = timedLeg(run(probe))
+    val (rounds, total, tms) = timedLeg(name)(run(probe))
     val roundS = marks.toSeq.zip(0.0 +: marks.toSeq).map { case (b, a) => b - a }
     LoopRun(rounds, total, roundS, tms)
   }
@@ -221,7 +236,7 @@ object ScaleProbe {
         .localCheckpoint(true)
       val nNodes = nodeSet.count()
       var ccLabels: DataFrame = null
-      val cc = timeLoop { p =>
+      val cc = timeLoop("cc") { p =>
         val (l, curve) = ops.connectedComponentsCurve(edges, "a", "b", probe = p)
         ccLabels = l
         curve.length
@@ -240,10 +255,10 @@ object ScaleProbe {
         .select(col("x").as("a"), (col("x") + 1L).as("b"))
       val ccDelta = edges.join(ccDels, Seq("a", "b"), "left_anti")
         .unionByName(ccIns).distinct().localCheckpoint(true)
-      val ((warmLab, warmCurve), warmS, _) = timedLeg(
+      val ((warmLab, warmCurve), warmS, _) = timedLeg("cc_warm")(
         ops.incrementalConnectedComponents(ccLabels, ccDelta, ccDels, "a", "b"))
       val ((coldLab, coldCurve), coldS, _) =
-        timedLeg(ops.connectedComponentsCurve(ccDelta, "a", "b"))
+        timedLeg("cc_cold")(ops.connectedComponentsCurve(ccDelta, "a", "b"))
       val agree = warmLab.join(coldLab, Seq("id"))
         .filter(warmLab("component") =!= coldLab("component")).isEmpty
       require(agree, "warm-start cc labels diverge from the cold rerun")
@@ -259,10 +274,10 @@ object ScaleProbe {
       // component; this leg shows the advantage the warm start
       // exists for.
       val insDelta = edges.unionByName(ccIns).distinct().localCheckpoint(true)
-      val ((insLab, insCurve), insS, _) = timedLeg(ops.incrementalConnectedComponents(
+      val ((insLab, insCurve), insS, _) = timedLeg("cc_ins")(ops.incrementalConnectedComponents(
         ccLabels, insDelta, edges.filter(lit(false)), "a", "b"))
       val ((coldInsLab, coldInsCurve), coldInsS, _) =
-        timedLeg(ops.connectedComponentsCurve(insDelta, "a", "b"))
+        timedLeg("cc_ins_cold")(ops.connectedComponentsCurve(insDelta, "a", "b"))
       val agreeIns = insLab.join(coldInsLab, Seq("id"))
         .filter(insLab("component") =!= coldInsLab("component")).isEmpty
       require(agreeIns, "inserts-only warm cc labels diverge from the cold rerun")
@@ -282,7 +297,7 @@ object ScaleProbe {
       val seed: Column => Column = c => c < lit(n) && c % mod === 0L
       // BFS hops grow ~linearly with the chain length by
       // construction, so the FAILURE bound must scale with m too
-      val bfs = timeLoop { p =>
+      val bfs = timeLoop("bfs") { p =>
         val (dist, hops) = ops.bfsDistances(edges, "a", "b", seed,
           maxHops = 40 + 2 * m, probe = p)
         graft.Ck.release(dist)
@@ -291,7 +306,7 @@ object ScaleProbe {
       // capture the cold fixpoint ranks: the q178-core leg below
       // warm-starts from them (the ccLabels pattern)
       var prRanks: DataFrame = null
-      val pr = timeLoop { p =>
+      val pr = timeLoop("pr") { p =>
         val (r0, _, rounds0) = ops.pagerank(edges, "a", "b",
           epsPerNode = 1000L, maxRounds = 60, probe = p)
         prRanks = r0
@@ -305,7 +320,7 @@ object ScaleProbe {
       // round, two chains with two ends each — and settles in 52
       // rounds (m=10: 7). Two chains joined through a base path peel
       // in up to ~2m rounds, so the bound scales with m like BFS's.
-      val kc = timeLoop(p =>
+      val kc = timeLoop("kcore")(p =>
         ops.kcore(edges, "a", "b", 2, maxRounds = 40 + 2 * m, probe = p)._2)
       // q196-CORE leg (r17, verdict item 6): HITS on the replicated
       // graph — the r16 dual-orientation caches + id-partitioned
@@ -315,7 +330,7 @@ object ScaleProbe {
       // (8 fixed half-steps; no per-half-step edge re-shuffle to
       // grow quadratically in block count — guide §2.2's failure
       // shape). Wall at these sizes is per-job floor; read task_ms.
-      val (hitsN, hitsS, hitsTms) = timedLeg {
+      val (hitsN, hitsS, hitsTms) = timedLeg("hits") {
         val out = ops.hits(edges, "a", "b")
         val c = out.count()
         graft.Ck.release(out)
@@ -337,7 +352,7 @@ object ScaleProbe {
           .select(col("b").as("src"), col("a").as("dst")))
         .distinct().localCheckpoint(true)
       graft.LoopStats.drain()
-      val (nScc, sccS, sccTms) = timedLeg {
+      val (nScc, sccS, sccTms) = timedLeg("scc") {
         val l = ops.scc(dirE, "src", "dst")
         try l.select(col("scc")).distinct().count() finally graft.Ck.release(l)
       }
@@ -364,7 +379,7 @@ object ScaleProbe {
         .localCheckpoint(true)
       val nRing = ring.count()
       graft.LoopStats.drain()
-      val (nRingScc, ringS, ringTms) = timedLeg {
+      val (nRingScc, ringS, ringTms) = timedLeg("giant_scc") {
         val l = ops.scc(ring, "src", "dst")
         try l.select(col("scc")).distinct().count() finally graft.Ck.release(l)
       }
@@ -383,7 +398,7 @@ object ScaleProbe {
       // with m like the BFS leg (the diameter genuinely grows).
       graft.LoopStats.drain()
       val (diamRow, diamS, diamTms) =
-        timedLeg(ops.diameterSweep(edges, "a", "b", maxHops = 40 + 2 * m).head())
+        timedLeg("diameter")(ops.diameterSweep(edges, "a", "b", maxHops = 40 + 2 * m).head())
       val diamStats = graft.LoopStats.drain()
       val diameterJson =
         s"""{"cc_rounds":${diamStats.getOrElse("cc", -1L)},""" +
@@ -400,7 +415,7 @@ object ScaleProbe {
       // predicate), so the per-seed frontiers must walk the bridge
       // chain — hops track the chain diameter while task-ms tracks
       // nodes × (fixed) seeds.
-      val ((clCensus, clHops), clS, clTms) = timedLeg {
+      val ((clCensus, clHops), clS, clTms) = timedLeg("closeness") {
         val (cent, h) = graft.api.ops.closenessSample(
           edges, "a", "b", c => c < lit(n) && c % mod === 0L,
           maxHops = 40 + 2 * m)
@@ -422,14 +437,14 @@ object ScaleProbe {
       // claims: warm movement tracks the delta's disturbance (not
       // corpus size) at every scale, and cold task-ms carries the
       // edge-growth exponent.
-      def prLeg(init: Option[DataFrame]) = timedLeg {
+      def prLeg(name: String, init: Option[DataFrame]) = timedLeg(name) {
         val (ranks, curve, rounds) = ops.pagerank(ccDelta, "a", "b",
           epsPerNode = 1000L, maxRounds = 60, init = init)
         graft.Ck.release(ranks)
         (rounds, curve)
       }
-      val (prWarmRes, prWarmS, prWarmTms) = prLeg(Some(prRanks))
-      val (prColdRes, prColdS, prColdTms) = prLeg(None)
+      val (prWarmRes, prWarmS, prWarmTms) = prLeg("pr_warm", Some(prRanks))
+      val (prColdRes, prColdS, prColdTms) = prLeg("pr_cold", None)
       graft.Ck.release(prRanks)
       graft.Ck.release(ccDelta)
       val prWarmJson =
@@ -486,7 +501,7 @@ object ScaleProbe {
       graft.Ck.release(vecsBase)
       val sdBook = graft.queries.Vectors.semCodebookOf(sdCorpus)
       val sdTau = 0.9
-      val ((sdCensus, sdRounds), sdS, sdTms) = timedLeg {
+      val ((sdCensus, sdRounds), sdS, sdTms) = timedLeg("semdedup") {
         val (sdKept, c, r) = ops.semDedup(
           sdCorpus, sdBook, "vec_id", "embedding", sdTau)
         graft.Ck.release(sdKept)
@@ -552,7 +567,7 @@ object ScaleProbe {
       val mmB = mmRep.filter(col("vec_id") % 2 === 1L)
       val mmNa = mmA.count(); val mmNb = mmB.count()
       val mmPlanes = ops.autoPlanes(math.max(mmNa, mmNb))
-      val (mmMined, mmS, mmTms) = timedLeg {
+      val (mmMined, mmS, mmTms) = timedLeg("margin_mine") {
         // the production path: planes resolve to mmPlanes internally
         ops.marginMine(mmA, mmB, "vec_id", "embedding").count()
       }
@@ -584,7 +599,7 @@ object ScaleProbe {
       val dBase = docsRep.filter(col("doc_id") % 8L =!= 0L)
       val dDelta = docsRep.filter(col("doc_id") % 8L === 0L)
       val ((ndLab0, ndCurve0), lb0S, lb0Tms) =
-        timedLeg(ops.nearDupLabels(dBase, "doc_id", "text"))
+        timedLeg("nd_base")(ops.nearDupLabels(dBase, "doc_id", "text"))
       // BAND-SHARE A/B (r17, verdict item 6 — the r16 day-job
       // mechanism measured at scale): the r16 dedup day jobs derive
       // the base corpus's shingle + 12-perm minhash band table ONCE
@@ -597,9 +612,9 @@ object ScaleProbe {
       // bench hides it under the per-job floor (r16 verdict item 5:
       // "scale evidence is plan-shaped, not measured" — this leg
       // converts it). bs_prep_s prices the scan itself.
-      val (bsBands, bsPrepS, bsPrepTms) = timedLeg(
+      val (bsBands, bsPrepS, bsPrepTms) = timedLeg("band_share_prep")(
         ops.nearDupBands(dBase, "doc_id", "text").localCheckpoint(true))
-      val ((bsLabN), bsSharedS, bsSharedTms) = timedLeg {
+      val ((bsLabN), bsSharedS, bsSharedTms) = timedLeg("band_share") {
         val (l, c) = ops.nearDupLabels(dBase, "doc_id", "text",
           precomputedBands = Some(bsBands))
         require(c.map(_._2).sum == ndCurve0.map(_._2).sum,
@@ -614,7 +629,7 @@ object ScaleProbe {
           s""""shared_s":${fmt(bsSharedS)},"shared_tms":$bsSharedTms,""" +
           s""""prep_s":${fmt(bsPrepS)},"prep_tms":$bsPrepTms,""" +
           s""""labels":$bsLabN}"""
-      val (pdCount, pdS, _) = timedLeg(ops.incrementalNearDupPairs(
+      val (pdCount, pdS, _) = timedLeg("nd_delta_pairs")(ops.incrementalNearDupPairs(
         dBase, dDelta, "doc_id", "text", 0.5).count())
       // same pass with the delta-proportional verify (pinCandidates):
       // the candidate endpoint ids broadcast-semi-filter the shingle
@@ -622,7 +637,7 @@ object ScaleProbe {
       // adjacent docs instead of the corpus. Runs after the default
       // pass in the same JVM (warmer), so read the ratio as an upper
       // bound on the win.
-      val ((pdPinned, pdPinCount), pdPinS, _) = timedLeg {
+      val ((pdPinned, pdPinCount), pdPinS, _) = timedLeg("nd_delta_pairs_pin") {
         val (pdPin, pinned) = ops.incrementalNearDupPairsEx(
           dBase, dDelta, "doc_id", "text", 0.5, None, pinCandidates = true)
         (pinned, pdPin.count())
@@ -634,16 +649,16 @@ object ScaleProbe {
       // the replicated corpus), killing every later leg
       pdPinned.foreach(graft.Ck.release)
       val (fullPairs, fpS, _) =
-        timedLeg(ops.nearDupPairs(docsRep, "doc_id", "text", 0.5).count())
+        timedLeg("nd_full_pairs")(ops.nearDupPairs(docsRep, "doc_id", "text", 0.5).count())
       // pinCandidates = false: pinning is the wrapper DEFAULT since
       // round 10, so the A/B baseline forces the cold verify shape
-      val ((ndLab1, ndCurve1, ndKeptN), ndWarmS, _) = timedLeg {
+      val ((ndLab1, ndCurve1, ndKeptN), ndWarmS, _) = timedLeg("nd_warm") {
         val (kept, lab, curve) = ops.nearDupDedupIncremental(
           dBase, dDelta, "doc_id", "text", ndLab0, pinCandidates = false)
         (lab, curve, kept.count())
       }
       val ((ndColdLab, ndColdCurve), ndColdS, _) =
-        timedLeg(ops.nearDupLabels(docsRep, "doc_id", "text"))
+        timedLeg("nd_cold")(ops.nearDupLabels(docsRep, "doc_id", "text"))
       // exact SET equality (two anti-joins), not count+intersection:
       // a warm run dropping node X while cold drops node Y keeps the
       // counts equal and the intersection agreeing — the weaker check
@@ -654,7 +669,7 @@ object ScaleProbe {
       require(sameLabels(ndLab1, ndColdLab),
         "incremental dedup labels diverge from the cold rerun")
       // warm insert day again with the delta-proportional verify
-      val ((ndLabP, ndKeptPN), ndPinS, _) = timedLeg {
+      val ((ndLabP, ndKeptPN), ndPinS, _) = timedLeg("nd_warm_pin") {
         val (kept, lab, _) = ops.nearDupDedupIncremental(
           dBase, dDelta, "doc_id", "text", ndLab0, pinCandidates = true)
         (lab, kept.count())
@@ -681,7 +696,7 @@ object ScaleProbe {
       // cost a day-0 caller pays; the steady-state day is the
       // `del_warm_bands` leg below. Cold verify shape forced
       // (pinning is the default since r10).
-      val ((delRun, delKeptN), delWarmS, delWarmTms) = timedLeg {
+      val ((delRun, delKeptN), delWarmS, delWarmTms) = timedLeg("nd_del_warm") {
         val (delKept, delLab, delCurve) = ops.nearDupDedupDelta(
           dBase, dDelta, ndDel, "doc_id", "text", ndLab0,
           pinCandidates = false)
@@ -689,7 +704,7 @@ object ScaleProbe {
       }
       val (delLab, delCurve) = delRun
       val surv = docsRep.join(ndDel, Seq("doc_id"), "left_anti")
-      val ((delColdRun, _), delColdS, delColdTms) = timedLeg {
+      val ((delColdRun, _), delColdS, delColdTms) = timedLeg("nd_del_cold") {
         val (l, c) = ops.nearDupLabels(surv, "doc_id", "text")
         ((l, c), l.count())
       }
@@ -697,7 +712,7 @@ object ScaleProbe {
       require(sameLabels(delLab, delColdLab),
         "takedown dedup labels diverge from the cold rerun")
       // full-CDC day again with the delta-proportional verify
-      val ((delLabP, delKeptPN), delPinS, _) = timedLeg {
+      val ((delLabP, delKeptPN), delPinS, _) = timedLeg("nd_del_warm_pin") {
         val (kept, lab, _) = ops.nearDupDedupDelta(
           dBase, dDelta, ndDel, "doc_id", "text", ndLab0, pinCandidates = true)
         (lab, kept.count())
@@ -716,7 +731,7 @@ object ScaleProbe {
       // del_warm_pin_s + the band composition), its labels equal the
       // cold rerun at every scale (loud), and its band artifact is
       // exactly the surviving corpus's band count.
-      val (bandsRep, bandsPrepS, _) = timedLeg(
+      val (bandsRep, bandsPrepS, _) = timedLeg("nd_bands_prep")(
         ops.nearDupBands(dBase, "doc_id", "text").localCheckpoint(true))
       // STEADY-STATE takedown day (round-11 verdict item 2): the
       // uncomposed nearDupDedupDelta call as a production day makes
@@ -725,7 +740,7 @@ object ScaleProbe {
       // bootstrap leg above quantifies what the handoff saves; the
       // task-ms split attributes the gap to WORK (corpus signature
       // re-derivation), not per-job floor.
-      val ((delBandsRun, delBandsKeptN), delBandsS, delBandsTms) = timedLeg {
+      val ((delBandsRun, delBandsKeptN), delBandsS, delBandsTms) = timedLeg("nd_del_warm_bands") {
         val (k, l, _) = ops.nearDupDedupDelta(
           dBase, dDelta, ndDel, "doc_id", "text", ndLab0,
           oldBands = Some(bandsRep), pinCandidates = false)
@@ -736,7 +751,7 @@ object ScaleProbe {
       require(sameLabels(delBandsRun, delColdLab),
         "steady-state takedown labels diverge from the cold rerun")
       graft.Ck.release(delBandsRun)
-      val ((day, cdKeptN), cdS, _) = timedLeg {
+      val ((day, cdKeptN), cdS, _) = timedLeg("corpusday") {
         val d = ops.corpusDay(dBase, dDelta, ndDel, "doc_id", "text",
           ndLab0, oldBands = Some(bandsRep))
         (d, d.kept.count())
@@ -791,7 +806,9 @@ object ScaleProbe {
         s""""total_s":${fmt(ringS)},"task_ms":$ringTms,"n_sccs":$nRingScc},""" +
         s""""diameter":$diameterJson,""" +
         s""""closeness":$closenessJson,""" +
-        s""""pr_warm":$prWarmJson}"""
+        s""""pr_warm":$prWarmJson,""" +
+        s""""legs":{${legRows.mkString(",")}}}"""
+      legRows.clear()
       // one human-readable summary per scale as the run progresses
       println(s"[scale-probe] m=$m edges=$nEdges cc=${cc.rounds}r/" +
         s"${fmt(cc.totalS)}s ccwarm=${warmCurve.length}r/" +
@@ -820,8 +837,11 @@ object ScaleProbe {
     graft.Ck.release(docsBase)
     val json = s"""{"sf_dir":"$sfDir","cpus":$cpus,"stride":$n,"anchor_mod":$mod,""" +
       s""""scales":[${scales.mkString(",")}]}"""
+    // named after the scale read, so a small-scale run never
+    // overwrites another scale's artifact
+    val sf = java.nio.file.Paths.get(sfDir).getFileName
     java.nio.file.Files.write(
-      java.nio.file.Paths.get("SCALE_PROBE.json"),
+      java.nio.file.Paths.get(s"SCALE_PROBE.$sf.json"),
       (json + "\n").getBytes("UTF-8"))
     println(json)
     spark.stop()

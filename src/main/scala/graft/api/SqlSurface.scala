@@ -80,7 +80,7 @@ object SqlSurface {
        |GROUP BY l_returnflag, l_linestatus
        |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  // ----- q23: dedup family (MinHash sig -> banded LSH -> verify) ---
+  // ----- q23: dedup family (MinHash sig -> band buckets -> verify) -
 
   /** Hashing.bandStructs in SQL text: 4 bands of 3 signature rows,
     * one md5 band key each.
@@ -94,32 +94,9 @@ object SqlSurface {
     }.mkString("array(\n    ", ",\n    ", ")")
   }
 
-  private val bandsSub: String =
-    s"""SELECT doc_id, bk.band_idx AS band_idx, bk.band_key AS band_key
-       |FROM (
-       |  SELECT doc_id, explode($bandArray) AS bk
-       |  FROM (SELECT doc_id, minhash_sig(text) AS msig FROM documents)
-       |)""".stripMargin
-
-  private val shSub: String =
-    "SELECT doc_id, word_shingles(text, 3) AS sh FROM documents"
-
   val q23Sql: String =
-    s"""SELECT i, j, round(jac, 4) AS jaccard
-       |FROM (
-       |  SELECT i, j,
-       |    CAST(array_intersect_size(sha, shb) AS DOUBLE) /
-       |    CAST(array_union_size(sha, shb) AS DOUBLE) AS jac
-       |  FROM (
-       |    SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-       |    FROM ($bandsSub) a JOIN ($bandsSub) b
-       |      ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-       |     AND a.doc_id < b.doc_id
-       |  )
-       |  JOIN (SELECT doc_id AS i, sh AS sha FROM ($shSub)) USING (i)
-       |  JOIN (SELECT doc_id AS j, sh AS shb FROM ($shSub)) USING (j)
-       |)
-       |WHERE jac >= 0.5
+    s"""SELECT i, j, round(jaccard, 4) AS jaccard
+       |FROM (${ndPairsSql("documents")})
        |ORDER BY i, j""".stripMargin
 
   // ----- q88: retrieval family (BM25 over one corpus pass) ---------
@@ -517,8 +494,9 @@ object SqlSurface {
   // the day — cold base labeling, delta-restricted candidates, star
   // compression, the warm fixpoint, the survivor anti-join — is a
   // Spark SQL text or the SQL-driven cc loop, composed row-equal to
-  // the DataFrame q218. The pair texts reuse q23Sql's band/shingle
-  // derivations (plan-equal-pinned there) parameterized by view.)
+  // the DataFrame q218. The cold pair text is q23Sql's own body
+  // (ndPairsSql, plan-equal-pinned through q23); the delta and
+  // takedown pair texts reuse its band-key derivation per view.)
 
   private def ndShSub(view: String): String =
     s"SELECT doc_id, word_shingles(text, 3) AS sh FROM $view"
@@ -530,24 +508,42 @@ object SqlSurface {
        |  FROM (SELECT doc_id, minhash_sig(text) AS msig FROM $view)
        |)""".stripMargin
 
-  /** Verified near-dup pairs (i < j, 3-shingle Jaccard >= 0.5) over
-    * one doc view — q23's pipeline parameterized (the cold base pair
-    * graph of the warm dedup day).
+  /** Verified near-dup pairs (i, j, jaccard), i < j, 3-shingle
+    * Jaccard >= 0.5, over one doc view: ops.nearDupPairs' bucket body
+    * in SQL text (plan-equal to it through q23, pinned in
+    * SqlSurfaceSpec) — each band bucket grouped once with its members'
+    * text, the pairs formed and verified inside it. q23's pipeline and
+    * the cold base pair graph of the warm dedup day.
     */
   def ndPairsSql(view: String): String =
-    s"""SELECT i, j FROM (
-       |  SELECT i, j,
-       |    CAST(array_intersect_size(sha, shb) AS DOUBLE) /
-       |    CAST(array_union_size(sha, shb) AS DOUBLE) AS jac
+    s"""SELECT DISTINCT i, j, jaccard FROM (
+       |  SELECT least(a.id, b.id) AS i, greatest(a.id, b.id) AS j,
+       |    CAST(array_intersect_size(a.sh, b.sh) AS DOUBLE) /
+       |    CAST(array_union_size(a.sh, b.sh) AS DOUBLE) AS jaccard
        |  FROM (
-       |    SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-       |    FROM (${ndBandsSub(view)}) a JOIN (${ndBandsSub(view)}) b
-       |      ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-       |     AND a.doc_id < b.doc_id
+       |    SELECT a, explode(slice(ms, k + 2, size(ms) - k - 1)) AS b
+       |    FROM (
+       |      SELECT ms, posexplode(slice(ms, 1, size(ms) - 1)) AS (k, a)
+       |      FROM (
+       |        SELECT transform(ms,
+       |          m -> named_struct('id', m.id, 'sh', word_shingles(m.text, 3))) AS ms
+       |        FROM (
+       |          SELECT collect_list(named_struct('id', __id, 'text', __t)) AS ms
+       |          FROM (
+       |            SELECT __id, __t, bk.band_idx AS band_idx, bk.band_key AS band_key
+       |            FROM (
+       |              SELECT __id, __t, explode($bandArray) AS bk
+       |              FROM (SELECT doc_id AS __id, text AS __t, minhash_sig(text) AS msig
+       |                    FROM $view WHERE text IS NOT NULL)
+       |            )
+       |          )
+       |          GROUP BY band_idx, band_key
+       |        )
+       |        WHERE size(ms) > 1
+       |      )
+       |    )
        |  )
-       |  JOIN (SELECT doc_id AS i, sh AS sha FROM (${ndShSub(view)})) USING (i)
-       |  JOIN (SELECT doc_id AS j, sh AS shb FROM (${ndShSub(view)})) USING (j)
-       |) WHERE jac >= 0.5""".stripMargin
+       |) WHERE i < j AND jaccard >= 0.5""".stripMargin
 
   /** The DELTA pairs an inserts-only changelog introduces: candidates
     * only from band buckets a NEW doc touches (new-side bands against
@@ -657,7 +653,7 @@ object SqlSurface {
     val emptyLabels = Seq.empty[(Long, Long)].toDF("id", "component")
     val emptyDels = Seq.empty[(Long, Long)].toDF("i", "j")
     val (lab0, curve0) = ccWarmLoopSqlOn(s, emptyLabels,
-      s.sql(ndPairsSql("nd_base")), emptyDels, "i", "j")
+      s.sql(s"SELECT i, j FROM (${ndPairsSql("nd_base")})"), emptyDels, "i", "j")
     lab0.select(col("node").as("id"), col("lbl").as("component"))
       .createOrReplaceTempView("nd_prev")
     // the changelog: takedowns drawn from the labeled dup subset
@@ -759,7 +755,7 @@ object SqlSurface {
       // phase 0: the cold fixpoint = the warm loop from an empty
       // previous labeling (every node seeds to identity)
       val (lab0, curve0) = ccWarmLoopSqlOn(s, emptyLabels,
-        s.sql(ndPairsSql("nd_base")), emptyDels, "i", "j")
+        s.sql(s"SELECT i, j FROM (${ndPairsSql("nd_base")})"), emptyDels, "i", "j")
       lab0.select(col("node").as("id"), col("lbl").as("component"))
         .createOrReplaceTempView("nd_prev")
       // warm edge set: yesterday's graph star-compressed + the delta

@@ -83,63 +83,109 @@ object ops {
     df.filter(h * 1000000L < lit(keepPerMillion) * 1048576L)
   }
 
-  /** (id, band_idx, band_key) rows for a text frame — the banded-LSH
-    * blocking key every near-dup consumer here shares. Geometry
-    * (signature width, bands x rows) comes from [[Hashing.MinhashK]]/
-    * [[Hashing.bandStructs]] — the single source of truth also used by
-    * the oracle-gated q23/q120/q142 plans, so the API can never drift
-    * from them.
+  /** (__id, band_idx, band_key) rows for a text frame — the banded-LSH
+    * blocking key every near-dup consumer here shares.
     */
   private def bandsOf(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(col(id).as("__id"),
-        explode(Hashing.bandStructs(
-          graft.functions.texthash.minhashSig(col(text)))).as("bk"))
-      .select(col("__id"), col("bk.band_idx"), col("bk.band_key"))
+    keyedBands(df.select(col(id).as("__id"), col(text).as("__t"))).drop("__t")
+
+  /** A (__id, __t) doc frame with one row per LSH band of each doc:
+    * (__id, __t, band_idx, band_key). Geometry (signature width,
+    * bands x rows) comes from [[Hashing.MinhashK]]/
+    * [[Hashing.bandStructs]] — the single source of truth also used by
+    * the oracle-gated q120/q142 plans, so the API can never drift
+    * from them. The signature is its own projection: written inside
+    * the explode, the Generate would carry 12 copies of it, one per
+    * band-key `get`.
+    */
+  private def keyedBands(docs: DataFrame): DataFrame =
+    docs.withColumn("msig", graft.functions.texthash.minhashSig(col("__t")))
+      .select(col("__id"), col("__t"),
+        explode(Hashing.bandStructs(col("msig"))).as("bk"))
+      .select(col("__id"), col("__t"), col("bk.band_idx"), col("bk.band_key"))
+
+  /** Every unordered member pair (a, b) of every band bucket of
+    * `keyed` (rows carrying band_idx, band_key) that holds more than
+    * one member. Each bucket is grouped once, `prep` maps its member
+    * list, and the pairs are formed inside the bucket: no self-join.
+    * A pair that shares several bands appears once per shared band.
+    * Member k pairs with members k+1.. and the last member starts no
+    * pair, so the posexplode reads a slice: over the bare `ms` column
+    * InferFiltersFromGenerate would add a `size(ms) > 0` filter below
+    * the generate and re-run `prep` in it.
+    */
+  private def bucketPairs(keyed: DataFrame, member: Column,
+      prep: Column => Column): DataFrame = {
+    val ms = col("ms")
+    val k = col("k")
+    keyed.groupBy(col("band_idx"), col("band_key"))
+      .agg(collect_list(member).as("ms"))
+      .filter(size(ms) > 1)
+      .select(prep(ms).as("ms"))
+      .select(ms, posexplode(slice(ms, lit(1), size(ms) - 1)).as(Seq("k", "a")))
+      .select(col("a"), explode(slice(ms, k + 2, size(ms) - k - 1)).as("b"))
+  }
 
   /** MinHash-LSH near-dup CANDIDATE pairs (i, j) with i < j: the
     * banded 12-perm signature (native codegen expression, zero
     * shuffle) split 4 bands x 3 rows; docs sharing any band bucket
-    * become candidates. Candidate fan-out is bucket-bounded — never
-    * all-pairs.
+    * become candidates. Each bucket's ids are grouped once and paired
+    * inside the bucket ([[nearDupPairs]]' bucket rule, carrying ids
+    * only), so fan-out is bucket-bounded — never all-pairs.
+    * `precomputedBands` ([[nearDupBands]] rows) replaces the
+    * signature scan.
     */
   def nearDupCandidates(df: DataFrame, id: String, text: String,
-      precomputedBands: Option[DataFrame] = None): DataFrame = {
-    // r16: a caller composing several passes over ONE corpus (the
-    // q218/q219/q221 day jobs run a cold labels pass AND a warm pass
-    // AND materialize tomorrow's band table) can hand the band rows
-    // in, so the signature scan (shingle + 12-perm minhash over the
-    // full text) runs once per corpus instead of once per consumer —
-    // at 100 TB that pass IS the dominant map cost. Values are
-    // identical by construction (bandsOf is per-doc pure).
-    val bands = precomputedBands.getOrElse(bandsOf(df, id, text))
-    val a = bands.alias("a")
-    val b = bands.alias("b")
-    a.join(b, col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("i"), col("b.__id").as("j"))
+      precomputedBands: Option[DataFrame] = None): DataFrame =
+    bucketPairs(precomputedBands.getOrElse(bandsOf(df, id, text)),
+        col("__id"), identity)
+      .select(least(col("a"), col("b")).as("i"),
+        greatest(col("a"), col("b")).as("j"))
+      .filter(col("i") < col("j"))
       .distinct()
-  }
 
-  /** Near-dup PAIRS: LSH candidates verified by exact 3-shingle
-    * Jaccard >= `minJaccard`. Returns (i, j, jaccard). The shingle
-    * frame is recomputed for each verify-join side rather than
-    * persisted: a library call must not leave cached partitions
-    * behind for the session's lifetime (the caller holds no handle to
-    * unpersist), and the extra scan is a pure codegen map stage.
-    * Callers iterating many times can pre-cache `df` themselves.
+  /** Near-dup PAIRS: docs sharing an LSH band bucket, verified by
+    * exact 3-shingle Jaccard >= `minJaccard`. Returns (i, j, jaccard)
+    * with i < j; docs with a null text pair with nothing.
+    *
+    * One shuffle: a scan computes each doc's signature, explodes its
+    * 4 band keys and groups by (band_idx, band_key), collecting
+    * struct(id, text) and keeping buckets with more than one member.
+    * Inside a bucket each member's shingles are computed once, every
+    * i < j pair gets its Jaccard, and a `distinct` on
+    * (i, j, jaccard) removes the pairs that met in several bands. No
+    * self-join, no verify join and nothing persisted — a library call
+    * leaves no cached partitions behind.
+    *
+    * Scale: the bucket shuffle carries 4 x the text bytes. The
+    * candidate-join form it replaces shuffled the shingle frame
+    * (about 3 x text) once per verify side plus one shingle array per
+    * candidate pair. A bucket of c members holds O(c x text) bytes,
+    * but its pair step is O(c^2) in either form, so any bucket that
+    * can finish its pairs holds a small list.
+    *
+    * `precomputedBands` ([[nearDupBands]] rows over the same `df`)
+    * replaces the signature scan: the band rows are joined once to
+    * (id, text) and run the same bucket body. A caller composing
+    * several passes over one corpus (the q218/q219/q221 day jobs)
+    * then runs the shingle + 12-perm minhash map once per corpus
+    * instead of once per consumer — at 100 TB that pass is the
+    * dominant map cost.
     */
   def nearDupPairs(df: DataFrame, id: String, text: String,
       minJaccard: Double,
       precomputedBands: Option[DataFrame] = None): DataFrame = {
-    val sh = df.select(col(id).as("__id"),
-      Hashing.shingles(col(text), 3).as("__sh"))
-    nearDupCandidates(df, id, text, precomputedBands)
-      .join(sh.select(col("__id").as("i"), col("__sh").as("__sha")), "i")
-      .join(sh.select(col("__id").as("j"), col("__sh").as("__shb")), "j")
-      .withColumn("jaccard", Hashing.jaccard(col("__sha"), col("__shb")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("i"), col("j"), col("jaccard"))
+    val docs = df.select(col(id).as("__id"), col(text).as("__t"))
+      .filter(col("__t").isNotNull)
+    val keyed = precomputedBands.fold(keyedBands(docs))(_.join(docs, "__id"))
+    val (a, b) = (col("a"), col("b"))
+    bucketPairs(keyed, struct(col("__id").as("id"), col("__t").as("text")),
+        ms => transform(ms, m =>
+          struct(m("id").as("id"), Hashing.shingles(m("text"), 3).as("sh"))))
+      .select(least(a("id"), b("id")).as("i"), greatest(a("id"), b("id")).as("j"),
+        Hashing.jaccard(a("sh"), b("sh")).as("jaccard"))
+      .filter(col("i") < col("j") && col("jaccard") >= minJaccard)
+      .distinct()
   }
 
   /** Overlapping-window token chunking (the RAG splitter): one row
@@ -1261,8 +1307,8 @@ object ops {
     * `minJaccard`, attributed to the canonicalized (group_a, group_b)
     * pair. Diagonal rows are within-group dup mass; off-diagonal is
     * cross-group leakage (mirrors, syndication). Output is
-    * O(groups^2) whatever the corpus size; the only non-equi work is
-    * the band-bucket self-join nearDupCandidates already bounds.
+    * O(groups^2) whatever the corpus size; the only pair work is
+    * inside the band buckets [[nearDupPairs]] already bounds.
     */
   def sourceNeardupMatrix(df: DataFrame, id: String, group: String,
       text: String, minJaccard: Double = 0.5): DataFrame = {

@@ -52,8 +52,11 @@ object Dedup {
   // q23: MinHash + LSH near-dup pairs. 12 MinHash values over word
   // 3-gram shingles, banded 4 x 3; candidate pairs share at least one
   // band key; candidates are verified with exact Jaccard >= 0.5.
-  // Plan: signature map stage -> explode 4 band keys -> shuffle by
-  // band key -> self-join -> verify. No all-pairs stage.
+  // Plan (ops.nearDupPairs): one scan computes the native signature
+  // and explodes the 4 band keys, one shuffle groups each band bucket
+  // with its members' text, the pairs are formed and verified inside
+  // the bucket, and a distinct drops pairs that met in several bands.
+  // No self-join, no verify join, no all-pairs stage.
   // ---------------------------------------------------------------
   // band geometry lives in Hashing (single source of truth shared
   // with api.ops); these aliases keep the query code terse
@@ -71,43 +74,10 @@ object Dedup {
       s"SELECT doc_id, $b AS band_idx, md5(${parts.mkString(" || ',' || ")}) AS band_key FROM $fromCte"
     }.mkString("\n  UNION ALL\n  ")
 
-  def q23MinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    // cached: BOTH sides of the verify join read the shingle arrays —
-    // materialize once (eagerly: the two join-side scans would
-    // otherwise race to compute-and-cache the same partitions)
-    val sh = documents(s, dir)
-      .select(col("doc_id"), shingles(col("text"), 3).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    touch(sh)
-    // signatures via the NATIVE MinHashSig expression: the full
-    // 12-value signature is computed per row inside the scan's
-    // codegen loop (one md5 + 12 muladds per distinct shingle, all
-    // JVM-local) — ZERO shuffle, vs the declarative explode +
-    // groupBy(doc_id) twin that exchanges every shingle in the
-    // corpus (the dominant cost of this pipeline at 100 TB;
-    // TextHashExpressionsSpec pins the two forms equal).
-    val sig = documents(s, dir)
-      .select(col("doc_id"),
-        graft.functions.texthash.minhashSig(col("text")).as("msig"))
-    val bands = sig.select(col("doc_id"),
-      explode(bandStructsOf(col("msig"))).as("bk"))
-      .select(col("doc_id"), col("bk.band_idx"), col("bk.band_key"))
-    val a = bands.alias("a")
-    val b = bands.alias("b")
-    val cand = a.join(b,
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
-    val sa = sh.select(col("doc_id").as("i"), col("sh").as("sha"))
-    val sb = sh.select(col("doc_id").as("j"), col("sh").as("shb"))
-    cand.join(sa, "i").join(sb, "j")
-      .withColumn("jac", jaccard(col("sha"), col("shb")))
-      .filter(col("jac") >= 0.5)
-      .select(col("i"), col("j"), round(col("jac"), 4).as("jaccard"))
+  def q23MinhashLsh(s: SparkSession, dir: String): DataFrame =
+    graft.api.ops.nearDupPairs(documents(s, dir), "doc_id", "text", 0.5)
+      .select(col("i"), col("j"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy("i", "j")
-  }
 
   val q23Sql: String = {
     val minAggs = (0 until K).map(i => s"${sqlMinhashPerm("h", i)} AS m$i")
@@ -193,7 +163,7 @@ object Dedup {
   // fan-out stays tiny at any scale (vs 25M all-pairs at sf0.1).
   // ---------------------------------------------------------------
   def q25NgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    // cached: both sides of the self-join read it (see q23 note).
+    // cached: both sides of the self-join read it.
     // Materialized EAGERLY: without the count(), the join's two scan
     // tasks race to compute-and-cache the same partitions ("Block
     // rdd_N already exists" churn + duplicated shingle work).

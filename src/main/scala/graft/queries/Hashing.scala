@@ -47,9 +47,16 @@ object Hashing {
   // ----- banded LSH keys (single source of truth for the geometry) -
 
   /** Signature width / band geometry shared by every banded-LSH
-    * consumer (q23/q120/q142/q143/q145, `api.ops.nearDupCandidates`,
-    * `api.ops.fuzzyDecontaminate`) — change HERE or band keys silently
-    * diverge between the library API and the oracle-gated plans.
+    * consumer — change HERE or band keys silently diverge between the
+    * library API and the oracle-gated plans:
+    *  - band buckets grouped once, pairs formed inside each bucket:
+    *    `api.ops.nearDupPairs` (q23, the cold labels of q218/q219/
+    *    q221) and `api.ops.nearDupCandidates` (ids only);
+    *  - band-key equi-joins: the delta and takedown pair passes in
+    *    `api.ops`, `api.ops.fuzzyDecontaminate`, and q120, q142, q143,
+    *    q145, q158, q206;
+    *  - the streaming key space ([[bandKeyStrings]]) and the SQL texts
+    *    of `api.SqlSurface`.
     */
   val MinhashK = 12 // minhash values per signature
   val BandRows = 3 // signature rows per band

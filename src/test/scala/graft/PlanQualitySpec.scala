@@ -114,6 +114,24 @@ class PlanQualitySpec extends SparkSpec {
     assert(p23.contains("minhash_sig"), p23)
   }
 
+  test("q23: one bucket shuffle — no cache, no broadcast, one signature scan") {
+    // the executed (final AQE) plan: the pairs come out of the band
+    // buckets, not a persisted shingle frame joined back twice
+    val df = SparkEntry.queries("q23_minhash_lsh")(spark, dir)
+    df.collect()
+    val p = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString
+      case other => other.toString
+    }
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"), p)
+    assert(!p.contains("BroadcastExchange") && !p.contains("Join"), p)
+    assert("minhash_sig\\(".r.findAllIn(p).size === 1, p)
+    // shingles once per bucket member: no inferred pre-generate filter
+    // re-runs the transform
+    assert("word_shingles\\(".r.findAllIn(p).size === 1, p)
+  }
+
   test("q218: delta candidates stay a band-key equi-join; drop anti-join broadcasts") {
     import org.apache.spark.sql.execution.FormattedMode
     import org.apache.spark.sql.functions.col
